@@ -44,8 +44,23 @@ def snapshot_bytes(table) -> int:
     return dir_bytes(os.path.join(table.root, h[-1].data or f"v={h[-1].version:06d}"))
 
 
-def _rows_changed(metrics: dict) -> int:
-    return int(sum(metrics.get(k, 0) or 0 for k in ("inserted", "updated", "upserts", "deletes")))
+def _rows(table, commit) -> int:
+    """Rows in the data a commit wrote, from the parquet footers."""
+    d = os.path.join(table.root, commit.data or f"v={commit.version:06d}")
+    return sum(
+        pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
+        for f in os.listdir(d) if f.endswith(".parquet")
+    )
+
+
+def _rows_changed(commit, written: int, prev_written: int) -> int:
+    """Rows a commit changed. An append records only the table's new
+    row count, so its change is the rows it added to the previous
+    version."""
+    if commit.action == "append":
+        return written - prev_written
+    m = commit.metrics
+    return int(sum(m.get(k, 0) or 0 for k in ("inserted", "updated", "upserts", "deletes")))
 
 
 @dataclass
@@ -162,15 +177,15 @@ class Tracer:
         for t in tables:
             v0, b0 = before[t.root]
             written += dir_bytes(t.root) - b0
+            prev = None
             for c in t.history():
-                if v0 is not None and c.version <= v0:
+                if v0 is not None and c.version < v0:
                     continue
-                changed += _rows_changed(c.metrics)
-                d = os.path.join(t.root, c.data or f"v={c.version:06d}")
-                rows_written += sum(
-                    pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
-                    for f in os.listdir(d) if f.endswith(".parquet")
-                )
+                n = _rows(t, c)
+                if v0 is None or c.version > v0:
+                    changed += _rows_changed(c, n, prev or 0)
+                    rows_written += n
+                prev = n
         s.stats.update(bytes_written=written, rows_written=rows_written, rows_changed=changed)
 
     # ---- report ---------------------------------------------------------

@@ -43,7 +43,8 @@ def run_once(cmd, workload, seed, seconds, trace) -> dict:
 def summarize(values: list[float]) -> dict:
     q1, med, q3 = statistics.quantiles(values, n=4)
     return {"median": statistics.median(values), "q1": q1, "q3": q3,
-            "spread": (q3 - q1) / statistics.median(values), "n": len(values)}
+            "spread": (q3 - q1) / statistics.median(values), "n": len(values),
+            "values": values}
 
 
 def main() -> int:

@@ -21,6 +21,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path[:0] = [HERE, ROOT]
 
+import gen  # noqa: E402
 import run  # noqa: E402
 import workloads  # noqa: E402
 
@@ -31,6 +32,7 @@ def sf0001(monkeypatch):
     monkeypatch.setattr(workloads.Ingest, "backfill_per_site", 20)
     monkeypatch.setattr(workloads.SearchIndex, "n_orders", 1500)
     monkeypatch.setattr(workloads.CorpusQueries, "n_docs", 60)
+    monkeypatch.setattr(workloads.CorpusQueries, "warm_docs", 20)
 
 
 @pytest.fixture
@@ -52,7 +54,6 @@ def test_traced_run_shape(name, sf0001, contract, tmp_path):
 
     span_names = {s["name"] for s in out["spans"]}
     sites = workloads.WORKLOADS[name].sites
-    # the night's sites run after the window, in finish()
     assert set(sites) <= span_names
     for s in out["spans"]:
         assert s["end"] >= s["start"]
@@ -69,3 +70,22 @@ def test_traced_run_shape(name, sf0001, contract, tmp_path):
     assert line["correct"] is True
     want = {m["name"]: m["unit"] for m in contract["per_layer"]}
     assert {k: v["unit"] for k, v in line["metrics"].items()} == want
+
+
+def test_containment_reference_is_the_twin(tmp_path):
+    """At sizes where the DuckDB twin's all-pairs join is quick, the
+    reference that checks dd_containment at full size gives its result."""
+    import duckdb
+
+    import __spark_entry__
+
+    docs = gen.documents(7, 400)
+    gen.write_tables({"documents": docs}, str(tmp_path))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')")
+    res = con.execute(__spark_entry__.oracle_sql()["dd_containment"])
+    twin = workloads.digest([d[0] for d in res.description], res.fetchall())
+    con.close()
+    ref = workloads.containment_pairs(docs)
+    assert len(ref) > 10  # planted fragments are found
+    assert workloads.digest(["id_a", "id_b", "containment"], ref) == twin
