@@ -34,9 +34,6 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.getcwd()
 
-SETUP_REPS = 2
-
-
 def _args(argv):
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--workload", required=True)
@@ -95,13 +92,13 @@ class Ctx:
 E2E = (("setup_s", "s"), ("cycle_s", "s"), ("space_amp", "ratio"))
 
 
-def measure(name: str, seed: int, seconds: float, trace: bool, work: str,
-            setup_reps: int = SETUP_REPS) -> dict:
-    """Set ``name`` up ``setup_reps`` times, run its closed loop for
-    ``seconds`` (and at least one full cycle of operations) on the last
-    set-up, check its outputs, and return the counts, end-to-end
-    numbers, sample counts and, when tracing, per-layer numbers and
-    spans."""
+def measure(name: str, seed: int, seconds: float, trace: bool, work: str) -> dict:
+    """Set ``name`` up, run its closed loop for ``seconds`` (and at
+    least one full cycle of operations), check its outputs, and return
+    the counts, end-to-end numbers, sample counts and, when tracing,
+    per-layer numbers and spans. Set-up time runs from the process's
+    first call into the program: session start (which launches the
+    JVM), input generation, source load and warm-up."""
     t_start = time.time()
     import bench
 
@@ -112,19 +109,9 @@ def measure(name: str, seed: int, seconds: float, trace: bool, work: str,
     ctx = Ctx(bench.build_session(str(cpus)), cpus, seed, work)
     try:
         wl = WORKLOADS[name](ctx)
-        setups = []
-        for rep in range(setup_reps):
-            t0 = t_start
-            if rep:
-                # every set-up starts its own session; the first also
-                # launched the JVM
-                shutil.rmtree(os.path.join(work, f"setup{rep - 1}"))
-                t0 = time.time()
-                ctx.spark.stop()
-                ctx.spark = bench.build_session(str(cpus))
-            ctx.tracer = Tracer(ctx.spark, cpus, enabled=False)
-            wl.setup(os.path.join(work, f"setup{rep}"))
-            setups.append(time.time() - t0)
+        ctx.tracer = Tracer(ctx.spark, cpus, enabled=False)
+        wl.setup(os.path.join(work, "setup"))
+        setup_s = time.time() - t_start
         ctx.tracer = tracer = Tracer(ctx.spark, cpus, enabled=trace)
         attempted = failed = 0
         t0 = time.time()
@@ -150,11 +137,11 @@ def measure(name: str, seed: int, seconds: float, trace: bool, work: str,
             print(f"CHECK FAILED {p}", file=sys.stderr)
         failed += 1 if problems else 0
         check_s = time.time() - t_check
-        e2e = {"setup_s": statistics.median(setups), **wl.end_to_end()}
+        e2e = {"setup_s": setup_s, **wl.end_to_end()}
         out = {
             "workload": name, "seed": seed, "cpus": cpus, "trace": int(trace),
             "attempted": attempted, "failed": failed, "error_rate": failed / attempted,
-            "setups_s": setups, "window_s": window_s, "check_s": check_s,
+            "window_s": window_s, "check_s": check_s,
             "ops": wl.n_ops, "e2e": e2e, "details": wl.details(),
         }
         if trace:

@@ -46,7 +46,7 @@ def test_traced_run_shape(name, sf0001, contract, tmp_path):
     work = str(tmp_path / "work")
     os.makedirs(work)
     run._isolate(work)
-    out = run.measure(name, seed=7, seconds=0, trace=True, work=work, setup_reps=1)
+    out = run.measure(name, seed=7, seconds=0, trace=True, work=work)
 
     assert out["failed"] == 0 and out["attempted"] >= 2
     assert set(out["e2e"]) == {m["name"] for m in contract["end_to_end"]}
