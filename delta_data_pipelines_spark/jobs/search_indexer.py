@@ -40,7 +40,8 @@ both. Replayed ticks re-derive the same scoped recompute and
 apply_changes is content-idempotent on it.
 
 100 TB posture: the per-tick cost is (change-feed diff) + (index plan
-over affected keys only). On BucketedTable sources ``changes()`` reads
+over affected keys only). On VersionedTable sources ``changes()`` reads
+the change rows the span's commits recorded, on BucketedTable sources
 only moved buckets; the users→fact mapping is one broadcast semi-join
 against the fact (bucket-prunable further when the fact is bucketed by
 customer key). The index apply touches only fed buckets when the index
@@ -54,6 +55,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.staging import release_staged
 from ..queries.search_index import (
     FULL_REBUILD_SINCE,
     FULL_REBUILD_STATUS,
@@ -207,7 +209,9 @@ class ContinuousSearchIndexer:
 
     def tick(self) -> dict[str, Any]:
         """Catch the index up to the sources' current versions; no-op
-        when nothing moved."""
+        when nothing moved. ``upserts`` counts index rows written,
+        ``deletes`` the index ids actually removed: the feed deletes
+        only affected ids the index holds."""
         latest = {
             name: _latest_version(t) for name, t in self.sources.items()
         }
@@ -235,31 +239,40 @@ class ContinuousSearchIndexer:
                 "indexed_versions": latest,
             }
 
+        indexed = self.index.read().select(F.col("id").alias("o_orderkey"))
         dims_moved = any(latest[d] != applied[d] for d in _DIMS)
         if dims_moved:
             # nightly-full fallback inside the same protocol: recompute
             # everything, delete index ids that no longer qualify
             scope = None
-            stale_universe = self.index.read().select(
-                F.col("id").alias("o_orderkey")
-            )
+            stale_universe = indexed
         else:
             scope = self._affected_keys(applied, latest, snaps)
             scope = scope.localCheckpoint(eager=True)  # staged: 3 consumers
-            stale_universe = scope
-        rebuilt = self._build(snaps, scope)
-        ups = rebuilt.withColumn("_change_type", F.lit("insert"))
-        # affected keys whose recompute produced no row: their fact row
-        # was deleted or disqualified -> delete from the index
-        dels = (
-            stale_universe.select(F.col("o_orderkey").alias("id"))
-            .join(rebuilt.select("id"), ["id"], "left_anti")
-            .withColumn("_change_type", F.lit("delete"))
-        )
-        feed = ups.unionByName(dels, allowMissingColumns=True)
-        commit = self.index.apply_changes(
-            feed, keys=["id"], extra_metrics={"indexed_versions": latest}
-        )
+            # only affected ids the index holds can be deleted from it
+            stale_universe = scope.join(indexed, ["o_orderkey"], "left_semi")
+        try:
+            rebuilt = self._build(snaps, scope)
+            ups = rebuilt.withColumn("_change_type", F.lit("insert"))
+            # affected keys whose recompute produced no row: their fact
+            # row was deleted or disqualified -> delete from the index
+            dels = (
+                stale_universe.select(F.col("o_orderkey").alias("id"))
+                .join(rebuilt.select("id"), ["id"], "left_anti")
+                .withColumn("_change_type", F.lit("delete"))
+            )
+            feed = ups.unionByName(dels, allowMissingColumns=True)
+            # a full-scope feed upserts every index row: recording its
+            # change rows would write the index twice more
+            commit = self.index.apply_changes(
+                feed,
+                keys=["id"],
+                extra_metrics={"indexed_versions": latest},
+                record_changes=not dims_moved,
+            )
+        finally:
+            if scope is not None:
+                release_staged(scope)
         return {
             "mode": "full" if dims_moved else "incremental",
             "version": commit.version,

@@ -776,6 +776,7 @@ class BucketedTable(CheckConstraints):
         feed: DataFrame,
         keys: list[str],
         extra_metrics: dict[str, Any] | None = None,
+        record_changes: bool = True,
     ) -> BucketedCommit:
         """APPLY CHANGES INTO parity, bucket-scoped (the CDC consumer
         for the scale-path table): apply a :func:`snapshot_diff`-shaped
@@ -794,7 +795,10 @@ class BucketedTable(CheckConstraints):
         The feed is STAGED once (localCheckpoint) — the bucket probe,
         constraint aggregate, bucket writes and metric counts would
         otherwise each re-execute a typically snapshot-diff-shaped
-        lineage (5× the dominant job)."""
+        lineage (5× the dominant job). ``record_changes`` exists for
+        signature parity with :meth:`VersionedTable.apply_changes`:
+        this table records no change rows (its change feed diffs the
+        buckets whose manifest pointer moved)."""
         if not keys:
             raise ValueError("keys required to apply a change feed")
         feed = feed.localCheckpoint(eager=True)

@@ -9,6 +9,13 @@ Layout:
                                 immutable data snapshot for version NN
                                 (token makes concurrent writers'
                                 staging dirs collision-free)
+    <root>/v=0000NN-<token>/_change_data/*.parquet
+                                the rows commit NN changed (Delta's
+                                ``_change_data``): ``_change_type`` plus
+                                the row. Spark and pyarrow skip
+                                ``_``-prefixed dirs, so snapshot reads
+                                never see them; vacuum drops them with
+                                their snapshot.
 
 Commit protocol (Delta optimistic-concurrency parity): write the
 snapshot to a writer-unique data dir, then atomically publish the
@@ -21,10 +28,30 @@ silently replacing the winner's commit — the lost-update the old
 read-log/write-log protocol allowed. ``_log.json`` is refreshed after
 each win but is only a cache: ``history()`` reconciles it with the
 marker tail, so a crash between marker and cache loses nothing.
-Readers always see complete versions. Every mutating op is a full
-snapshot — simple, correct, and at the reference's table sizes (≤ a
-few GB) cheap; the API mirrors Delta so a log-structured incremental
-backend can replace snapshots without touching callers.
+Readers always see complete versions.
+
+Every mutating op still writes a full snapshot — simple, correct, and
+at the reference's table sizes (≤ a few GB) cheap — but each commit
+also records the rows it changed (commit-time change data, as Delta
+writes for its change-data feed), so ``changes()`` reads work
+proportional to the change instead of diffing two full snapshots:
+
+    merge, apply_changes   every row of every touched key, before the
+                           commit (update_preimage / delete) and after
+                           it (update_postimage / insert), classified
+                           under the commit's keys
+    append, delete_where   the rows added (insert) / removed (delete);
+                           the reader takes their keys under its own
+                           key set from the adjacent snapshots
+    compact                nothing: content does not change
+    a first commit         its own snapshot (all inserts), not a copy
+    overwrite, restore     no change data: spans crossing them diff
+                           full snapshots, as do tables written
+                           before commits recorded change data
+
+The per-commit counts in ``metrics`` come from the written files
+(parquet footers, or the ``_change_type`` column of the change rows),
+not from extra count jobs.
 """
 
 from __future__ import annotations
@@ -35,12 +62,17 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass
-from typing import Any
+from functools import reduce
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .constraints import CheckConstraints
+from ..operators.staging import release_staged
 from .meta import ConcurrentWriteError, drop_marker, marker_tail, reserve_version
 
 __all__ = ["Commit", "ConcurrentWriteError", "VersionedTable", "snapshot_diff"]
@@ -160,13 +192,23 @@ def snapshot_diff(old: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
     old), and updates as BOTH ``update_preimage`` and
     ``update_postimage`` rows. Key-only schemas cannot 'update'.
 
+    Key-local by construction: each side is grouped by key into the
+    SORTED list of its rows, and a key whose two lists differ emits
+    all its old rows as preimages and all its new rows as
+    postimages. So every output row depends only on rows sharing its
+    key, a key whose rows did not change emits nothing (also with
+    duplicate keys), and NULL keys group like any other value — which
+    is what lets ``VersionedTable.changes`` answer from the rows each
+    commit touched.
+
     Schemas are ALIGNED first (a span crossing a schema-evolving merge
     has the new column on one side only — the missing side reads NULL,
     so an old row gains a NULL 'tag' and a post-evolution row with a
-    value diffs as an update). Change detection is a NULL-SAFE struct
-    compare, not a hash: ``xxhash64`` skips NULL inputs entirely, so a
-    value moving between two columns (one going NULL, the other
-    gaining it) hashes identically and the update would be missed.
+    value diffs as an update). Change detection is a NULL-SAFE compare
+    of the row lists, not a hash: ``xxhash64`` skips NULL inputs
+    entirely, so a value moving between two columns (one going NULL,
+    the other gaining it) hashes identically and the update would be
+    missed.
     """
     for c in new.columns:
         if c not in old.columns:
@@ -174,32 +216,132 @@ def snapshot_diff(old: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
     for c in old.columns:
         if c not in new.columns:
             new = new.withColumn(c, F.lit(None).cast(old.schema[c].dataType))
-    nonkeys = [c for c in new.columns if c not in keys]
-    old = old.select(*new.columns)  # one column order for the unions
-    inserted = new.join(old.select(*keys), keys, "left_anti").withColumn(
-        "_change_type", F.lit("insert")
+    cols = new.columns
+    nonkeys = [c for c in cols if c not in keys]
+    row = F.struct(*nonkeys) if nonkeys else F.lit(True)
+
+    def grouped(df: DataFrame, name: str) -> DataFrame:
+        return df.groupBy(*keys).agg(
+            F.array_sort(F.collect_list(row)).alias(name)
+        )
+
+    on = [F.col(f"o.{_quote(k)}").eqNullSafe(F.col(f"n.{_quote(k)}"))
+          for k in keys]
+    joined = (
+        grouped(old, "_so").alias("o")
+        .join(grouped(new, "_sn").alias("n"), on, "full_outer")
+        .selectExpr(
+            *[f"coalesce(n.{_quote(k)}, o.{_quote(k)}) AS {_quote(k)}"
+              for k in keys],
+            "_so", "_sn",
+        )
     )
-    deleted = old.join(new.select(*keys), keys, "left_anti").withColumn(
-        "_change_type", F.lit("delete")
+
+    def tagged(side: str, change_type: str) -> str:
+        return f"transform({side}, r -> named_struct('t', '{change_type}', 'r', r))"
+
+    # one SQL expression (HOF lambdas built through the Column API cost
+    # dozens of Py4J round trips each)
+    emitted = (
+        f"CASE WHEN _so IS NULL THEN {tagged('_sn', 'insert')}"
+        f" WHEN _sn IS NULL THEN {tagged('_so', 'delete')}"
     )
     if nonkeys:
-        o = old.select(*keys, F.struct(*nonkeys).alias("_so"))
-        n = new.select(*keys, F.struct(*nonkeys).alias("_sn"))
-        upd_keys = (
-            n.join(o, keys)
-            .where(~F.col("_sn").eqNullSafe(F.col("_so")))
-            .select(*keys)
+        emitted += (
+            " WHEN NOT (_so <=> _sn) THEN concat("
+            f"{tagged('_so', 'update_preimage')},"
+            f" {tagged('_sn', 'update_postimage')})"
         )
-        pre = old.join(upd_keys, keys, "left_semi").withColumn(
-            "_change_type", F.lit("update_preimage")
-        )
-        post = new.join(upd_keys, keys, "left_semi").withColumn(
-            "_change_type", F.lit("update_postimage")
-        )
-        updates = pre.unionByName(post)
-    else:
-        updates = inserted.limit(0)
-    return inserted.unionByName(deleted).unionByName(updates)
+    return joined.selectExpr(
+        *[_quote(k) for k in keys], f"explode({emitted} END) AS _ch"
+    ).selectExpr(
+        *[_quote(c) if c in keys else f"_ch.r.{_quote(c)} AS {_quote(c)}"
+          for c in cols],
+        "_ch.t AS _change_type",
+    )
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+_CHANGE_DIR = "_change_data"
+# a table's first commit: every snapshot row is an insert
+_FIRST = {"kind": "snapshot"}
+_BEFORE = ("update_preimage", "delete")
+_AFTER = ("insert", "update_postimage")
+
+
+def _parquet_files(path: str) -> list[str]:
+    return [
+        os.path.join(path, f) for f in sorted(os.listdir(path))
+        if f.endswith(".parquet")
+    ]
+
+
+def _footer_rows(path: str) -> int:
+    """Rows in the parquet files directly under ``path``, from their
+    footers: no Spark job, no data read."""
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
+
+
+def _rows_metric(data_dir: str) -> dict[str, int]:
+    return {"rows": _footer_rows(data_dir)}
+
+
+def _change_counts(path: str) -> dict[str, int]:
+    """Change rows under ``path`` per ``_change_type``: one column read
+    with pyarrow instead of a count job per kind."""
+    counts = dict.fromkeys(_BEFORE + _AFTER, 0)
+    for f in _parquet_files(path):
+        col = pq.ParquetFile(f).read(columns=["_change_type"]).column(0)
+        for vc in pc.value_counts(col).to_pylist():
+            counts[vc["values"]] += vc["counts"]
+    return counts
+
+
+def _restrict(df: DataFrame, touched: DataFrame, keys: list[str]) -> DataFrame:
+    """Rows of ``df`` whose key is in ``touched`` (broadcast), NULL
+    keys matching NULL — the grouping ``snapshot_diff`` uses."""
+    on = [F.col(f"l.{_quote(k)}").eqNullSafe(F.col(f"r.{_quote(k)}"))
+          for k in keys]
+    return df.alias("l").join(F.broadcast(touched).alias("r"), on, "left_semi")
+
+
+def _conform(df: DataFrame, schema) -> DataFrame:
+    """``df`` in ``schema``'s columns and types; a column ``df`` lacks
+    reads NULL (a row from before a schema-evolving merge)."""
+    if [(f.name, f.dataType) for f in df.schema.fields] == [
+        (f.name, f.dataType) for f in schema.fields
+    ]:
+        return df
+    return df.select(*[
+        (F.col(f.name) if f.name in df.columns else F.lit(None))
+        .cast(f.dataType).alias(f.name)
+        for f in schema.fields
+    ])
+
+
+def _compose(
+    images: list[tuple[DataFrame, DataFrame]], keys: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """Fold per-commit (before, after) images, oldest first, into the
+    span's: per key, the before rows of the first commit that recorded
+    it and the after rows of the last one."""
+    parts = [
+        img.withColumn("_v", F.lit(i)).withColumn("_side", F.lit(side))
+        for i, pair in enumerate(images)
+        for side, img in enumerate(pair)
+    ]
+    u = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    w = Window.partitionBy(*keys)
+    u = u.withColumn("_first", F.min("_v").over(w)).withColumn(
+        "_last", F.max("_v").over(w)
+    )
+    helpers = ["_v", "_side", "_first", "_last"]
+    before = u.where((F.col("_side") == 0) & (F.col("_v") == F.col("_first")))
+    after = u.where((F.col("_side") == 1) & (F.col("_v") == F.col("_last")))
+    return before.drop(*helpers), after.drop(*helpers)
 
 
 @dataclass
@@ -211,6 +353,15 @@ class Commit:
     # data dir name under the table root; None on entries written
     # before the CAS protocol (legacy v=%06d layout)
     data: str | None = None
+    # what the commit recorded of the rows it changed (module doc):
+    # {"kind": "rows", "keys": [...]} | {"kind": "keys"} |
+    # {"kind": "empty"} | {"kind": "snapshot"}, plus the change rows'
+    # "schema"; None = nothing, so a span over this commit falls back
+    # to the full snapshot diff
+    change_data: dict[str, Any] | None = None
+    # the snapshot's schema (StructType JSON): reads pass it instead of
+    # running a schema-inference job over the footers
+    schema: str | None = None
 
 
 class VersionedTable(CheckConstraints):
@@ -250,7 +401,18 @@ class VersionedTable(CheckConstraints):
             json.dump([e.__dict__ for e in entries], f, indent=1)
         os.replace(tmp, self._log_path)
 
-    def _commit(self, action: str, df: DataFrame, metrics: dict[str, Any]) -> Commit:
+    def _commit(
+        self,
+        action: str,
+        df: DataFrame,
+        metrics: dict[str, Any] | Callable[[str], dict[str, Any]],
+        change_rows: DataFrame | None = None,
+        change_data: dict[str, Any] | None = None,
+    ) -> Commit:
+        """Write ``df`` as the next version's snapshot and ``change_rows``
+        (if any) under its ``_change_data/``, then publish the entry.
+        A callable ``metrics`` gets the written data dir, so counts come
+        from the files instead of count jobs."""
         self._enforce_constraints(df)
         history = self.history()
         version = (history[-1].version + 1) if history else 0
@@ -259,12 +421,17 @@ class VersionedTable(CheckConstraints):
         data_name = f"v={version:06d}-{uuid.uuid4().hex[:8]}"
         data_dir = os.path.join(self.root, data_name)
         df.write.mode("overwrite").parquet(data_dir)
+        if change_rows is not None:
+            change_rows.write.parquet(os.path.join(data_dir, _CHANGE_DIR))
+            change_data = {**change_data, "schema": change_rows.schema.json()}
         entry = Commit(
             version=version,
             action=action,
             ts=time.time(),
-            metrics=metrics,
+            metrics=metrics(data_dir) if callable(metrics) else metrics,
             data=data_name,
+            change_data=change_data,
+            schema=df.schema.json(),
         )
         try:
             # THE commit point: put-if-absent of the version marker
@@ -285,6 +452,12 @@ class VersionedTable(CheckConstraints):
 
     # ---- reads ----------------------------------------------------------
 
+    def _parquet(self, path: str, schema: str | None) -> DataFrame:
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(path)
+
     def exists(self) -> bool:
         return self.latest_version() is not None
 
@@ -298,7 +471,7 @@ class VersionedTable(CheckConstraints):
         for c in h:
             if c.version == version:
                 name = c.data if c.data else f"v={version:06d}"
-                return self.spark.read.parquet(os.path.join(self.root, name))
+                return self._parquet(os.path.join(self.root, name), c.schema)
         raise ValueError(
             f"version {version} not in {[c.version for c in h]}"
         )
@@ -306,12 +479,18 @@ class VersionedTable(CheckConstraints):
     # ---- writes ---------------------------------------------------------
 
     def overwrite(self, df: DataFrame) -> Commit:
-        return self._commit("overwrite", df, {"rows": df.count()})
+        return self._commit("overwrite", df, _rows_metric)
 
     def append(self, df: DataFrame) -> Commit:
-        if self.exists():
-            df = self.read().unionByName(df)
-        return self._commit("append", df, {"rows": df.count()})
+        if not self.exists():
+            return self._commit("append", df, _rows_metric, change_data=_FIRST)
+        return self._commit(
+            "append",
+            self.read().unionByName(df),
+            _rows_metric,
+            change_rows=df.withColumn("_change_type", F.lit("insert")),
+            change_data={"kind": "keys"},
+        )
 
     def merge(
         self,
@@ -341,6 +520,14 @@ class VersionedTable(CheckConstraints):
         ``UPDATE SET *`` only sets the columns the source has). Default
         False errors on any column-set mismatch, exactly as Delta MERGE
         does without the option.
+
+        The commit records its change rows — the target rows of every
+        matched key (update_preimage), the rows that replace them
+        (update_postimage) and the inserted rows — and its
+        ``inserted`` / ``updated`` metrics are counted from them. The
+        source is staged once (localCheckpoint, released after the
+        commit), so the change rows and the snapshot do not each run
+        its lineage.
         """
         if when_matched not in {"ignore", "update"}:
             raise ValueError(when_matched)
@@ -349,11 +536,29 @@ class VersionedTable(CheckConstraints):
         source = source.dropDuplicates(keys)
 
         if not self.exists():
-            return self._commit("merge", source, {"inserted": source.count(), "updated": 0})
+            return self._commit(
+                "merge", source,
+                lambda d: {"inserted": _footer_rows(d), "updated": 0},
+                change_data=_FIRST,
+            )
+        # staged: the change rows and the snapshot both consume the
+        # source, whose lineage (often a fetch transformer) must run once
+        staged = source.localCheckpoint(eager=True)
+        try:
+            return self._merge(staged, keys, when_matched, schema_evolution)
+        finally:
+            release_staged(staged)
 
+    def _merge(
+        self,
+        source: DataFrame,
+        keys: list[str],
+        when_matched: str,
+        schema_evolution: bool,
+    ) -> Commit:
         target = self.read()
         inserted = source.join(target.select(*keys), keys, "left_anti")
-        n_inserted = inserted.count()
+        changed = inserted.withColumn("_change_type", F.lit("insert"))
         if when_matched == "update":
             kept = target.join(source.select(*keys), keys, "left_anti")
             only_target = [c for c in target.columns if c not in source.columns]
@@ -365,23 +570,48 @@ class VersionedTable(CheckConstraints):
                 )
             else:
                 updated = source.join(target.select(*keys), keys, "left_semi")
-            n_updated = updated.count()
             out = kept.unionByName(
                 updated, allowMissingColumns=schema_evolution
             ).unionByName(inserted, allowMissingColumns=schema_evolution)
+            changed = (
+                target.join(source.select(*keys), keys, "left_semi")
+                .withColumn("_change_type", F.lit("update_preimage"))
+                .unionByName(
+                    updated.withColumn(
+                        "_change_type", F.lit("update_postimage")
+                    ),
+                    allowMissingColumns=True,
+                )
+                .unionByName(changed, allowMissingColumns=True)
+            )
         else:
-            n_updated = 0
             out = target.unionByName(
                 inserted, allowMissingColumns=schema_evolution
             )
-        return self._commit("merge", out, {"inserted": n_inserted, "updated": n_updated})
+
+        def metrics(data_dir: str) -> dict[str, int]:
+            n = _change_counts(os.path.join(data_dir, _CHANGE_DIR))
+            return {"inserted": n["insert"], "updated": n["update_postimage"]}
+
+        return self._commit(
+            "merge", out, metrics, changed, {"kind": "rows", "keys": list(keys)}
+        )
 
     def delete_where(self, condition) -> Commit:
         """Predicate DELETE (↔ delete_many, S11:
-        del_unuse_record_in_mrestate.py:11-19)."""
+        del_unuse_record_in_mrestate.py:11-19). Records the deleted
+        rows as its change rows."""
         target = self.read()
         kept = target.where(~condition | condition.isNull())
-        return self._commit("delete", kept, {"rows": kept.count()})
+        return self._commit(
+            "delete",
+            kept,
+            _rows_metric,
+            change_rows=target.where(condition).withColumn(
+                "_change_type", F.lit("delete")
+            ),
+            change_data={"kind": "keys"},
+        )
 
     # ---- rotation / rollback / backup -----------------------------------
 
@@ -397,6 +627,7 @@ class VersionedTable(CheckConstraints):
         feed: DataFrame,
         keys: list[str],
         extra_metrics: dict[str, Any] | None = None,
+        record_changes: bool = True,
     ) -> Commit:
         """APPLY CHANGES INTO parity (the CDC consumer): apply a
         change feed in :func:`snapshot_diff`'s shape (``_change_type``
@@ -411,37 +642,104 @@ class VersionedTable(CheckConstraints):
         change feed a replication protocol rather than a diff report.
         Feeds whose key sets overlap between delete and upsert apply
         delete-then-upsert (the postimage wins — matching
-        snapshot_diff, which never emits both for one key).
+        snapshot_diff, which never emits both for one key). Feed rows
+        with a NULL key identify no row and are dropped, as in
+        :meth:`merge`.
+
+        The commit records its change rows: every table row of a key
+        the feed touches (update_preimage, or delete when the feed does
+        not upsert the key) and the upserted rows (update_postimage, or
+        insert for a new key). Its metrics count them: ``upserts`` rows
+        written for upserted keys, ``deletes`` rows actually removed.
+        ``record_changes=False`` is for a full recompute whose feed
+        upserts every key: its change rows would be two more copies of
+        the table, so the commit records none (a span over it diffs
+        full snapshots, as over an overwrite) and its metrics count
+        feed rows instead.
 
         The feed is STAGED once (localCheckpoint): a CDC feed is
         typically ``snapshot_diff`` — a full-snapshot join — and the
-        metric counts, the constraint aggregate and the commit write
-        would otherwise each re-execute that lineage (4× the
-        dominant job). Downstream consumers read the checkpointed
-        blocks instead (single-execution pin in tests)."""
+        change rows, the constraint aggregate and the commit write
+        would otherwise each re-execute that lineage. Downstream
+        consumers read the checkpointed blocks instead (single-execution
+        pin in tests); the blocks are released once the commit lands."""
         if not keys:
             raise ValueError("keys required to apply a change feed")
-        feed = feed.localCheckpoint(eager=True)
+        staged = feed.localCheckpoint(eager=True)
+        try:
+            return self._apply(staged, keys, extra_metrics or {}, record_changes)
+        finally:
+            release_staged(staged)
+
+    def _apply(
+        self,
+        feed: DataFrame,
+        keys: list[str],
+        extra_metrics: dict[str, Any],
+        record_changes: bool,
+    ) -> Commit:
+        for k in keys:
+            feed = feed.where(F.col(k).isNotNull())
         ct = F.col("_change_type")
-        ups = feed.where(
-            ct.isin("insert", "update_postimage")
-        ).drop("_change_type")
+        ups = feed.where(ct.isin(*_AFTER)).drop("_change_type")
         dels = feed.where(ct == "delete").select(*keys)
-        target = self.read() if self.exists() else ups.limit(0)
-        kept = target.join(dels, keys, "left_anti")
-        out = kept.join(ups.select(*keys), keys, "left_anti").unionByName(
-            ups.select(*kept.columns)
-        )
-        n_up = ups.count()
-        n_del = dels.count()
         # extra_metrics ride in the SAME atomic commit entry — the
         # transactional side-channel consumers like the incremental
         # aggregate use to bind an applied-span watermark to the data
         # it produced (exactly-once under replay)
+        if not self.exists():
+            return self._commit(
+                "apply_changes",
+                ups,
+                lambda d: {"upserts": _footer_rows(d), "deletes": 0,
+                           **extra_metrics},
+                change_data=_FIRST,
+            )
+        target = self.read()
+        kept = target.join(dels, keys, "left_anti")
+        ups = ups.select(*kept.columns)
+        out = kept.join(ups.select(*keys), keys, "left_anti").unionByName(ups)
+        if not record_changes:
+            return self._commit(
+                "apply_changes",
+                out,
+                {"upserts": ups.count(), "deletes": dels.count(),
+                 **extra_metrics},
+            )
+        # before images (side 0) and after images (side 1) of every
+        # touched key, typed by whether the key has the other side
+        touched = ups.select(*keys).unionByName(dels)
+        side = F.col("_side")
+        w = Window.partitionBy(*keys)
+        changed = (
+            target.join(touched, keys, "left_semi")
+            .withColumn("_side", F.lit(0))
+            .unionByName(ups.withColumn("_side", F.lit(1)))
+            .withColumn(
+                "_change_type",
+                F.when(
+                    side == 0,
+                    F.when(F.max(side).over(w) == 1, "update_preimage")
+                    .otherwise("delete"),
+                ).otherwise(
+                    F.when(F.min(side).over(w) == 0, "update_postimage")
+                    .otherwise("insert")
+                ),
+            )
+            .drop("_side")
+        )
+
+        def metrics(data_dir: str) -> dict[str, Any]:
+            n = _change_counts(os.path.join(data_dir, _CHANGE_DIR))
+            return {
+                "upserts": n["insert"] + n["update_postimage"],
+                "deletes": n["delete"],
+                **extra_metrics,
+            }
+
         return self._commit(
-            "apply_changes",
-            out,
-            {"upserts": n_up, "deletes": n_del, **(extra_metrics or {})},
+            "apply_changes", out, metrics, changed,
+            {"kind": "rows", "keys": list(keys)},
         )
 
     def changes(
@@ -451,17 +749,78 @@ class VersionedTable(CheckConstraints):
         keys: list[str] | None = None,
     ) -> DataFrame:
         """Change-data-feed between two retained versions (Delta CDF
-        contract): snapshot_diff of the two full snapshots, keyed by
-        ``keys`` (required — a VersionedTable has no intrinsic key).
-        The bucketed variant prunes the diff to changed buckets; this
-        full-snapshot table diffs everything, which matches its
-        rewrite-everything commit model. vacuum retention bounds reach.
+        contract), keyed by ``keys`` (required — a VersionedTable has
+        no intrinsic key): exactly
+        ``snapshot_diff(read(from_version), read(to_version), keys)``.
+
+        Answered from the change rows the commits in the span recorded
+        (module doc): per key, the before rows of the first commit that
+        touched it and the after rows of the last one, passed through
+        :func:`snapshot_diff`. That is exact because snapshot_diff is
+        key-local, and it reads only ``_change_data`` for spans of
+        merges and apply_changes (append / delete_where spans also
+        read the adjacent snapshots, restricted to the touched keys by
+        a broadcast semi-join, so duplicate keys stay exact). A span
+        with a commit that recorded nothing (overwrite, restore, a
+        table written before change data) or recorded it under keys
+        that are not a subset of ``keys`` diffs the two full snapshots
+        instead. vacuum retention bounds reach.
         """
         if not keys:
             raise ValueError("keys required to identify rows across versions")
         old = self.read(from_version)
-        new = self.read(to_version) if to_version is not None else self.read()
-        return snapshot_diff(old, new, keys)
+        new = self.read(to_version)
+        history = self.history()
+        hi = history[-1].version if to_version is None else to_version
+        span = [c for c in history if from_version < c.version <= hi]
+        if from_version > hi or not all(
+            c.change_data is not None
+            and set(c.change_data.get("keys", ())) <= set(keys)
+            for c in span
+        ):
+            return snapshot_diff(old, new, keys)
+        images = [
+            pair for c in span if (pair := self._images(c, keys)) is not None
+        ]
+        if not images:
+            return snapshot_diff(
+                self.spark.createDataFrame([], old.schema),
+                self.spark.createDataFrame([], new.schema),
+                keys,
+            )
+        before, after = images[0] if len(images) == 1 else _compose(images, keys)
+        return snapshot_diff(
+            _conform(before, old.schema), _conform(after, new.schema), keys
+        )
+
+    def _images(
+        self, c: Commit, keys: list[str]
+    ) -> tuple[DataFrame, DataFrame] | None:
+        """(before, after) rows of the keys commit ``c`` touched, or
+        None when it changed nothing."""
+        kind = c.change_data["kind"]
+        if kind == "empty":
+            return None
+        if kind == "snapshot":
+            after = self.read(c.version)
+            return after.limit(0), after
+        rows = self._parquet(
+            os.path.join(self.root, c.data, _CHANGE_DIR),
+            c.change_data["schema"],
+        )
+        if kind == "rows":
+            ct = F.col("_change_type")
+            return (
+                rows.where(ct.isin(*_BEFORE)).drop("_change_type"),
+                rows.where(ct.isin(*_AFTER)).drop("_change_type"),
+            )
+        # "keys": the rows an append added or a delete removed; the
+        # other rows of their keys come from the adjacent snapshots
+        touched = rows.select(*keys).distinct()
+        return (
+            _restrict(self.read(c.version - 1), touched, keys),
+            _restrict(self.read(c.version), touched, keys),
+        )
 
     def clone(self, dest_root: str) -> "VersionedTable":
         """DEEP CLONE (↔ weekly mongodump backup, utils_of_backup.py:43-76):
@@ -559,6 +918,7 @@ class VersionedTable(CheckConstraints):
             {"rows": n, "files": n_files,
              **({"zorder_by": zorder_by, "zorder_method": zorder_method}
                 if zorder_by else {})},
+            change_data={"kind": "empty"},
         )
 
     def vacuum(self, keep_last: int = 3) -> list[int]:

@@ -7,6 +7,9 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from delta_data_pipelines_spark.storage import (
     DELTA_AVAILABLE,
@@ -1807,3 +1810,182 @@ def test_incremental_aggregate_maintenance_preserves_watermark(
     got = {r["title"]: (r["n_rows"], float(r["sum_price"]))
            for r in view.value().collect()}
     assert got == {"a": (3, 7.0), "b": (1, 3.0)}
+
+
+# ---- commit-time change data ------------------------------------------------
+
+_CD_SCHEMA = "k int, a string, b int"
+_CD_KEY = st.one_of(st.none(), st.integers(0, 5))
+_CD_ROW = st.tuples(
+    _CD_KEY,
+    st.one_of(st.none(), st.sampled_from(["x", "y"])),
+    st.one_of(st.none(), st.integers(0, 3)),
+)
+
+
+def _cd_batch(unique: bool):
+    if unique:
+        return st.lists(_CD_ROW, max_size=5, unique_by=lambda r: r[0])
+    return st.lists(_CD_ROW, max_size=5)
+
+
+def _cd_op(unique: bool):
+    batch = _cd_batch(unique)
+    return st.one_of(
+        st.tuples(st.just("merge"), batch, st.sampled_from(["ignore", "update"]),
+                  st.booleans(), st.booleans()),
+        st.tuples(st.just("apply_changes"), st.lists(
+            st.tuples(_CD_ROW, st.sampled_from(
+                ["insert", "delete", "update_preimage", "update_postimage"])),
+            max_size=5)),
+        st.tuples(st.just("append"), batch),
+        st.tuples(st.just("delete_where"), st.integers(0, 3)),
+        st.tuples(st.just("overwrite"), batch),
+        st.tuples(st.just("restore"), st.integers(0, 10)),
+        st.tuples(st.just("compact")),
+        st.tuples(st.just("vacuum"), st.integers(1, 3)),
+    )
+
+
+@st.composite
+def _cd_history(draw):
+    unique = draw(st.booleans())
+    first = draw(st.sampled_from(["overwrite", "merge", "append", "apply_changes"]))
+    return unique, first, draw(_cd_batch(unique)), draw(
+        st.lists(_cd_op(unique), min_size=1, max_size=3)
+    )
+
+
+def _cd_frame(spark, data, wide):
+    df = spark.createDataFrame(data, _CD_SCHEMA)
+    if wide:
+        df = df.withColumn(
+            "tag", F.when(F.col("b") > 1, F.concat(F.lit("t"), F.col("a")))
+        )
+    return df
+
+
+def _cd_run(spark, table, unique, first, rows, ops):
+    """Replay a drawn op sequence; returns nothing, leaves ``table``
+    with its retained versions."""
+    wide = lambda: "tag" in table.read().columns  # noqa: E731
+    if first == "overwrite":
+        table.overwrite(_cd_frame(spark, rows, False))
+    elif first == "merge":
+        table.merge(_cd_frame(spark, rows, False), keys=["k"])
+    elif first == "append":
+        table.append(_cd_frame(spark, rows, False))
+    else:
+        table.apply_changes(
+            _cd_frame(spark, rows, False).withColumn(
+                "_change_type", F.lit("insert")), keys=["k"])
+    for op in ops:
+        kind = op[0]
+        if kind == "merge":
+            _, data, when, evolve, widen = op
+            has_tag = wide()
+            source = _cd_frame(spark, data, widen or has_tag and evolve)
+            evolve = evolve or set(source.columns) != set(table.read().columns)
+            table.merge(source, keys=["k"], when_matched=when,
+                        schema_evolution=evolve)
+        elif kind == "apply_changes":
+            feed = spark.createDataFrame(
+                [r + (t,) for r, t in op[1]], _CD_SCHEMA + ", _change_type string"
+            )
+            if wide():
+                feed = feed.withColumn("tag", F.col("a"))
+            table.apply_changes(feed, keys=["k"])
+        elif kind == "append":
+            table.append(_cd_frame(spark, op[1], wide()))
+        elif kind == "delete_where":
+            table.delete_where(F.col("b") > op[1])
+        elif kind == "overwrite":
+            table.overwrite(_cd_frame(spark, op[1], False))
+        elif kind == "restore":
+            versions = [c.version for c in table.history()]
+            table.restore(versions[op[1] % len(versions)])
+        elif kind == "compact":
+            table.compact(target_rows_per_file=2)
+        else:
+            table.vacuum(keep_last=op[1])
+
+
+def _cd_rows(df):
+    cols = sorted(df.columns)
+    return sorted(repr(tuple(r)) for r in df.select(*cols).collect())
+
+
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(_cd_history())
+def test_changes_from_change_data_equal_full_snapshot_diff(
+    spark, tmp_path, history
+):
+    """For any mix of commits — merge (ignore/update, with and without
+    schema evolution), apply_changes, append, delete_where, overwrite,
+    restore, compact, vacuum — over unique- and duplicate-key data
+    (NULL keys included), ``changes(v0, v1, keys)`` answered from the
+    commits' change rows equals the full ``snapshot_diff`` of the two
+    snapshots, for every retained pair (and, over the whole retained
+    span, for a superset of the recorded keys). One collect per side."""
+    import uuid
+    from functools import reduce
+
+    from delta_data_pipelines_spark.storage.table import snapshot_diff
+
+    table = VersionedTable(spark, str(tmp_path / uuid.uuid4().hex))
+    _cd_run(spark, table, *history)
+    versions = [c.version for c in table.history()]
+    spans = [(["k"], v0, v1) for i, v0 in enumerate(versions)
+             for v1 in versions[i:]]
+    spans.append((["k", "a"], versions[0], versions[-1]))
+    got, want = [], []
+    for keys, v0, v1 in spans:
+        tag = F.lit(f"{keys}:{v0}-{v1}").alias("_span")
+        got.append(table.changes(v0, v1, keys=keys).select("*", tag))
+        want.append(snapshot_diff(
+            table.read(v0), table.read(v1), keys).select("*", tag))
+    union = lambda fs: reduce(  # noqa: E731
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), fs)
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")  # tiny data
+    try:
+        assert _cd_rows(union(got)) == _cd_rows(union(want))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+
+
+def test_changes_of_merge_and_apply_changes_read_only_change_data(spark, table):
+    """A span made only of merge and apply_changes commits is answered
+    from their ``_change_data`` files alone: no snapshot is scanned."""
+    table.overwrite(rows(spark, [("u1", "a", 1), ("u2", "b", 2)]))
+    table.merge(
+        rows(spark, [("u1", "A", 9), ("u3", "c", 3)]), keys=["content_url"],
+        when_matched="update",
+    )
+    table.apply_changes(
+        rows(spark, [("u2", None, None), ("u4", "d", 4)]).withColumn(
+            "_change_type",
+            F.when(F.col("content_url") == "u2", F.lit("delete"))
+            .otherwise(F.lit("insert")),
+        ),
+        keys=["content_url"],
+    )
+    table.merge(rows(spark, [("u5", "e", 5)]), keys=["content_url"])
+    for v0 in (0, 1, 2):
+        files = table.changes(v0, keys=["content_url"]).inputFiles()
+        assert files and all("/_change_data/" in f for f in files), files
+    got = {
+        (r["_change_type"], r["content_url"])
+        for r in table.changes(0, keys=["content_url"]).collect()
+    }
+    assert got == {
+        ("update_preimage", "u1"), ("update_postimage", "u1"),
+        ("insert", "u3"), ("delete", "u2"), ("insert", "u4"),
+        ("insert", "u5"),
+    }
+    assert [c.metrics for c in table.history()[1:]] == [
+        {"inserted": 1, "updated": 1},
+        {"upserts": 1, "deletes": 1},
+        {"inserted": 1, "updated": 0},
+    ]
