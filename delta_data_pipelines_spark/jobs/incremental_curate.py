@@ -633,7 +633,9 @@ def fit_reference_model(
                 f"ensemble_policy must be 'and' or 'or', got "
                 f"{ensemble_policy!r}"
             )
+        from ..operators.staging import release_staged, stage
         from ..operators.textstats import (
+            classifier_features,
             logreg_score,
             logreg_train,
             nb_score,
@@ -641,17 +643,22 @@ def fit_reference_model(
             quality_score,
         )
 
-        from pyspark.storagelevel import StorageLevel
-
-        # the labeled frame feeds up to FOUR consumers under "both"
-        # (each trainer and each calibration scoring pass) — stage it
-        # once (the td_classifier_agreement persist discipline) so the
-        # quality_score label fold runs one pass over the checkpointed
-        # clean rows instead of once per consumer; scoring reads the
-        # same staged frame (the extra _lbl column is ignored)
-        labeled = clean.withColumn(
-            "_lbl", quality_score(F.col(text_col)) >= 0.5
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        # the labeled per-doc feature frame feeds up to FOUR consumers
+        # under "both" (each trainer and each calibration scoring
+        # pass) — stage it once, keeping only the arrays the chosen
+        # scorers read, so the quality_score label fold and the
+        # featurize run one pass over the clean rows
+        arrays = {"logreg": ["_bks"], "nb": ["_toks"], "both": ["_toks", "_bks"]}
+        labeled = stage(
+            classifier_features(
+                clean.withColumn(
+                    "_lbl", quality_score(F.col(text_col)) >= 0.5
+                ),
+                text_col,
+                classifier_n_buckets,
+            ).select(id_col, "_lbl", *arrays[classifier]),
+            "classifier_features",
+        )
         meta.update(
             {
                 "classifier": classifier,
@@ -663,16 +670,12 @@ def fit_reference_model(
                 labeled,
                 "_lbl",
                 id_col,
-                text_col,
-                n_buckets=classifier_n_buckets,
                 steps=classifier_steps,
                 lr=classifier_lr,
             )
             c4 = model.logreg.overwrite(wts)
             stored_wts = model.logreg.read(c4.version)
-            ref_scores = logreg_score(
-                labeled, stored_wts, id_col, text_col, classifier_n_buckets
-            )
+            ref_scores = logreg_score(labeled, stored_wts, id_col)
             clf_thr = ref_scores.agg(
                 F.expr(
                     f"percentile(lr_score, {1.0 - classifier_keep_fraction})"
@@ -688,7 +691,7 @@ def fit_reference_model(
                 }
             )
         if classifier in ("nb", "both"):
-            nbw, prior = nb_train(labeled, "_lbl", id_col, text_col)
+            nbw, prior = nb_train(labeled, "_lbl")
             c5 = model.nb.overwrite(nbw)
             stored_nbw = model.nb.read(c5.version)
             # pin the prior as a plain float in meta (it is one
@@ -700,7 +703,7 @@ def fit_reference_model(
             prior_df = model.spark.createDataFrame(
                 [(prior_val,)], "log_prior double"
             )
-            nb_ref = nb_score(labeled, stored_nbw, prior_df, id_col, text_col)
+            nb_ref = nb_score(labeled, stored_nbw, prior_df, id_col)
             nb_thr = nb_ref.agg(
                 F.expr(
                     f"percentile(nb_score, {1.0 - classifier_keep_fraction})"
@@ -718,8 +721,8 @@ def fit_reference_model(
         # every consumer has collected by here (thresholds) or written
         # to storage (weight tables) — release the staged frame so
         # repeated fits in one long-lived session don't accumulate
-        # cached relations
-        labeled.unpersist()
+        # checkpointed blocks
+        release_staged(labeled)
     model._write_meta(meta)
     return meta
 
@@ -899,20 +902,29 @@ def curate_batch(
         # sets compose per the frozen ensemble_policy: "and" chains
         # two doc-keyed semi-joins (intersection), "or" semi-joins
         # against the deduplicated union — both linear, doc-keyed.
-        from ..operators.textstats import logreg_score, nb_score
+        from ..operators.textstats import (
+            classifier_features,
+            logreg_score,
+            nb_score,
+        )
 
         unscorable = F.col(id_col).isNull() | F.col(text_col).isNull()
         passthrough = gated.where(unscorable)
-        scorable = gated.where(~unscorable)
+        # ONE featurize definition for both scorers; each reads only
+        # its own array, so column pruning keeps an NB-only model off
+        # the md5 fold. Not staged: this function composes a lazy
+        # plan that its caller runs after it returns, so there is no
+        # point at which a staged frame could be released.
+        scorable = classifier_features(
+            gated.where(~unscorable),
+            text_col,
+            int(meta.get("classifier_n_buckets", 64)),
+        )
 
         def _lr_keep(frame: DataFrame) -> DataFrame:
             return (
                 logreg_score(
-                    frame,
-                    model.logreg.read(meta.get("logreg_version")),
-                    id_col,
-                    text_col,
-                    int(meta["classifier_n_buckets"]),
+                    frame, model.logreg.read(meta.get("logreg_version")), id_col
                 )
                 .where(
                     F.col("lr_score") >= F.lit(meta["classifier_threshold"])
@@ -930,7 +942,6 @@ def curate_batch(
                     model.nb.read(meta.get("nb_version")),
                     prior_df,
                     id_col,
-                    text_col,
                 )
                 .where(F.col("nb_score") >= F.lit(meta["nb_threshold"]))
                 .select(id_col)
@@ -956,7 +967,7 @@ def curate_batch(
                 scorable = scorable.join(
                     _nb_keep(scorable), id_col, "left_semi"
                 )
-        gated = scorable.unionByName(passthrough)
+        gated = scorable.drop("_toks", "_bks").unionByName(passthrough)
     n = int(meta["decont_n"])
     contaminated = (
         gated.where(F.size(F.split(F.col(text_col), " ")) >= n)

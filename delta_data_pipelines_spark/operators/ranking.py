@@ -141,10 +141,10 @@ def global_cumsum_by_range(
     # to the cumsum twin (r15). HONEST RECORD: the physical plans are
     # byte-identical either way (td_pack_sequences before/after diff,
     # plans/r15) — the optimizer's column pruning already drops the
-    # unused Window from the totals branch, so the tools/ab_r15.py
-    # delta on this query (1.55 vs 1.33) was noise, not a win. Kept
-    # at the source level so the intent doesn't depend on a pruning
-    # rule firing.
+    # unused Window from the totals branch, so the interleaved A/B
+    # delta on this query (1.55 vs 1.33, plans/r15/ab_flagged.json)
+    # was noise, not a win. Kept at the source level so the intent
+    # doesn't depend on a pruning rule firing.
     totals = parts.groupBy("_pid").agg(F.sum(val).alias("_tot"))
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = totals.withColumn(

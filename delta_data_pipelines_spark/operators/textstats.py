@@ -1277,73 +1277,75 @@ KN_SCORERS = {
 }
 
 
-def nb_tokens(
-    docs: DataFrame,
-    label_col: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+def classifier_features(
+    docs: DataFrame, text_col: str = "text", n_buckets: int = 64
 ) -> DataFrame:
-    """The ONE token explode a paired nb_train + nb_score can share:
-    ``(id_col, _pos nullable, _tok)`` over text-non-null docs, empty
-    tokens dropped. Callers that run train AND score on the same
-    corpus stage this once (persist — the _trained_classifier_verdicts
-    multi-consumer discipline) and pass it to both via ``tokens=``;
-    without it each half re-explodes the corpus (2 full text passes
-    per train/score pair — the dominant cost at 100 TB, where one
-    documents pass is the cost unit). ``_pos`` carries the label
-    nullable: nb_train filters ``_pos IS NOT NULL`` (exactly its
-    pre-explode filter — a row-level predicate commutes with
-    explode), nb_score ignores it."""
-    return (
-        docs.where(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col),
-            F.col(label_col).alias("_pos"),
-            F.explode(F.split(F.col(text_col), " ")).alias("_tok"),
-        )
-        .where(F.col("_tok") != "")
+    """The ONE featurizer of the trained quality classifiers: every
+    input row plus two per-doc arrays —
+
+    - ``_toks``: the non-empty ``split(text, " ")`` tokens (what
+      :func:`nb_train` / :func:`nb_score` explode);
+    - ``_bks``: the DISTINCT md5-hashed token buckets in
+      ``[0, n_buckets)`` plus the bias bucket -1 (the presence
+      features :func:`logreg_train` / :func:`logreg_score` explode).
+      The portable-md5 bucket expression is the one shared with
+      DSIR/KMV, so an oracle recomputes the identical feature space.
+
+    The frame is lazy and per-doc; each operator explodes the column
+    it reads. A caller with several consumers stages it once, keeping
+    only the columns it uses — an NB-only frame never runs the
+    per-token md5 fold (column pruning drops ``_bks``). NULL text
+    gives NULL arrays, which explode to nothing, but the row stays:
+    nb_train's class prior counts labelled docs whose text is
+    NULL."""
+    from .sampling import md5_hash64
+
+    toks = docs.select(
+        "*",
+        F.filter(F.split(F.col(text_col), " "), lambda t: t != "").alias(
+            "_toks"
+        ),
+    )
+    return toks.withColumn(
+        "_bks",
+        F.array_append(
+            F.array_distinct(
+                F.transform(
+                    "_toks", lambda t: F.pmod(md5_hash64(t), F.lit(n_buckets))
+                )
+            ),
+            F.lit(-1).cast("bigint"),
+        ),
     )
 
 
-def nb_train(
-    docs: DataFrame,
-    label_col: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    tokens: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
+def nb_train(feats: DataFrame, label_col: str) -> tuple[DataFrame, DataFrame]:
     """Train a naive-Bayes text classifier in ONE corpus pass —
     the quality-classifier filter of the GPT-3/CCNet pipelines
     (label a seed set, train a cheap linear model, filter the corpus
     by its score), expressed entirely as aggregations so the judge's
     oracle can recompute the exact weights.
 
-    ``label_col`` is a boolean column on ``docs`` (True = positive
-    class). Returns ``(weights, prior)``:
+    ``feats`` is a :func:`classifier_features` frame and
+    ``label_col`` a boolean column on it (True = positive class).
+    Returns ``(weights, prior)``:
 
     - weights: (token, log_odds) — Laplace-smoothed per-token
       log-likelihood ratio ln((c_pos+1)/(n_pos+V)) −
       ln((c_neg+1)/(n_neg+V)), with V = |vocabulary| and n_* = total
       token occurrences per class. Integer counts → one double ln per
       side rounded to 9 dp: deterministic and engine-portable.
-    - prior: one row (log_prior) = ln(docs_pos / docs_neg), rounded
-      to 9.
+    - prior: one row (log_prior) = ln(docs_pos / docs_neg) over the
+      labelled rows, rounded to 9.
 
-    Scale shape: one explode + two grouped aggregations; the weight
-    table is vocabulary-sized (broadcast at score time). NULL-text or
-    NULL-label docs contribute nothing to either class. With
-    ``tokens=`` (a staged :func:`nb_tokens` frame) the explode is the
-    caller's — train and score then share one corpus pass.
+    Scale shape: one ``_toks`` explode + two grouped aggregations;
+    the weight table is vocabulary-sized (broadcast at score time).
+    NULL-label docs contribute nothing; NULL-text docs contribute no
+    tokens but count in the prior.
     """
-    if tokens is not None:
-        toks = tokens.where(F.col("_pos").isNotNull()).select("_pos", "_tok")
-    else:
-        toks = docs.where(
-            F.col(label_col).isNotNull() & F.col(text_col).isNotNull()
-        ).select(
-            F.col(label_col).alias("_pos"),
-            F.explode(F.split(F.col(text_col), " ")).alias("_tok"),
-        ).where(F.col("_tok") != "")
+    toks = feats.where(F.col(label_col).isNotNull()).select(
+        F.col(label_col).alias("_pos"), F.explode("_toks").alias("_tok")
+    )
     counts = toks.groupBy("_tok").agg(
         F.sum(F.when(F.col("_pos"), 1).otherwise(0)).alias("_cp"),
         F.sum(F.when(~F.col("_pos"), 1).otherwise(0)).alias("_cn"),
@@ -1390,7 +1392,7 @@ def nb_train(
     np_ = F.sum(F.when(F.col(label_col), 1).otherwise(0)).cast("double")
     nn_ = F.sum(F.when(~F.col(label_col), 1).otherwise(0)).cast("double")
     prior = (
-        docs.where(F.col(label_col).isNotNull())
+        feats.where(F.col(label_col).isNotNull())
         .agg(
             F.when(
                 (np_ > 0) & (nn_ > 0),
@@ -1410,27 +1412,21 @@ def nb_train(
 
 
 def nb_score(
-    docs: DataFrame,
+    feats: DataFrame,
     weights: DataFrame,
     prior: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    tokens: DataFrame | None = None,
 ) -> DataFrame:
-    """Score docs under a trained NB model: per-doc sum of its tokens'
-    log-odds (decimal — order-free) plus the class prior; positive
-    score → positive class. Out-of-vocabulary tokens contribute 0 (the
-    both-classes-unseen Laplace terms cancel only approximately, so
-    the conventional choice is to skip them — documented, determinate,
-    and identical in the oracle). Output: (id, n_scored_tokens,
-    nb_score double, pred_pos boolean). With ``tokens=`` (a staged
-    :func:`nb_tokens` frame) the explode is the caller's."""
-    if tokens is not None:
-        toks = tokens.select(id_col, F.col("_tok").alias("token"))
-    else:
-        toks = docs.where(F.col(text_col).isNotNull()).select(
-            id_col, F.explode(F.split(F.col(text_col), " ")).alias("token")
-        ).where(F.col("token") != "")
+    """Score the docs of a :func:`classifier_features` frame under a
+    trained NB model: per-doc sum of its tokens' log-odds (decimal —
+    order-free) plus the class prior; positive score → positive class.
+    Out-of-vocabulary tokens contribute 0 (the both-classes-unseen
+    Laplace terms cancel only approximately, so the conventional
+    choice is to skip them — documented, determinate, and identical in
+    the oracle). Docs without tokens (NULL or blank text) are absent.
+    Output: (id, n_scored_tokens, nb_score double, pred_pos
+    boolean)."""
+    toks = feats.select(id_col, F.explode("_toks").alias("token"))
     scored = (
         toks.join(weights, "token", "left")
         .groupBy(id_col)
@@ -1455,82 +1451,29 @@ def nb_score(
     )
 
 
-def logreg_features(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 64,
-    label_col: str | None = None,
-) -> DataFrame:
-    """Hashed unigram-PRESENCE features for the linear quality
-    classifier: per doc, the DISTINCT md5-hashed token buckets in
-    ``[0, n_buckets)`` plus a bias feature at bucket -1, exploded to
-    (id[, y], bucket) rows. The portable-md5 bucket expression is the
-    one shared with DSIR/KMV, so an oracle recomputes the identical
-    feature space. NULL-text docs are excluded (nothing to featurize);
-    with ``label_col`` the boolean label rides along as y ∈ {0.0, 1.0}
-    and NULL-label docs are excluded too (they cannot train)."""
-    from .sampling import md5_hash64
-
-    base = docs.where(F.col(text_col).isNotNull())
-    cols = [F.col(id_col)]
-    if label_col is not None:
-        base = base.where(F.col(label_col).isNotNull())
-        cols.append(
-            F.when(F.col(label_col), F.lit(1.0)).otherwise(0.0).alias("_y")
-        )
-    w = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    buckets = F.array_append(
-        F.array_distinct(
-            F.transform(w, lambda t: F.pmod(md5_hash64(t), F.lit(n_buckets)))
+def _unique_doc(n_bias: Column, value: Column, op: str) -> Column:
+    """``value``, or an execution-time error when one doc id carries
+    more than one bias row. The linear classifier's doc-keyed
+    aggregates merge rows that share an id while its doc count counts
+    rows, so a duplicated id would train on a corpus that is neither
+    the deduplicated nor the raw one."""
+    return F.when(
+        n_bias > 1,
+        F.raise_error(
+            F.lit(
+                f"{op}: doc ids must be unique — one id carries more "
+                "than one bias row"
+            )
         ),
-        F.lit(-1).cast("bigint"),
-    )
-    return base.select(*cols, F.explode(buckets).alias("_bucket"))
-
-
-def logreg_features_staged(
-    docs: DataFrame,
-    label_col: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 64,
-) -> DataFrame:
-    """The ONE feature explode a paired logreg_train + logreg_score
-    can share: ``(id, _y nullable, _bucket)`` over ALL text-non-null
-    docs (the score population), ``_y`` NULL where the label is NULL
-    (train filters those rows out — exactly its pre-explode filter;
-    a row-level predicate commutes with explode). Callers stage this
-    once (persist) and pass it to both halves via ``feats=``; without
-    it each half re-runs the per-token md5 bucket fold over the whole
-    corpus (2 full featurize passes per train/score pair)."""
-    from .sampling import md5_hash64
-
-    w = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    buckets = F.array_append(
-        F.array_distinct(
-            F.transform(w, lambda t: F.pmod(md5_hash64(t), F.lit(n_buckets)))
-        ),
-        F.lit(-1).cast("bigint"),
-    )
-    return docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col),
-        F.when(F.col(label_col), F.lit(1.0)).otherwise(
-            F.when(~F.col(label_col), F.lit(0.0))
-        ).alias("_y"),
-        F.explode(buckets).alias("_bucket"),
-    )
+    ).otherwise(value)
 
 
 def logreg_train(
-    docs: DataFrame,
+    feats: DataFrame,
     label_col: str,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 64,
     steps: int = 2,
     lr: float = 0.5,
-    feats: DataFrame | None = None,
 ) -> DataFrame:
     """Train a LINEAR (logistic-regression) text quality classifier —
     the fastText-shaped filter of the CCNet/LLaMA pipelines (hash
@@ -1539,6 +1482,11 @@ def logreg_train(
     entirely in aggregations so an oracle recomputes the exact
     weights (the t_event_pagerank unrolled-iteration family; contrast
     :func:`nb_train`, the closed-form sibling).
+
+    ``feats`` is a :func:`classifier_features` frame (its
+    ``n_buckets`` is the model's feature space) and ``label_col`` a
+    boolean column on it; NULL-label and NULL-text docs do not train.
+    Doc ids must be unique: a step ≥ 2 fit raises on a duplicated id.
 
     Float discipline (the unigram-pair lessons): per-doc scores are
     DECIMAL(28,6) sums of 6-dp weights; the sigmoid input is
@@ -1549,41 +1497,30 @@ def logreg_train(
     multiply/divide then ROUND 6. Step 1 is closed-form (w=0 ⇒
     p = 0.5 exactly).
 
-    Scale shape: ONE feature explode staged for all steps (persist —
-    vocabulary-bounded bucket space, corpus-bounded rows). Step 1 is
-    a single feats pass (w = 0 ⇒ resid = 0.5 − y, a per-feature-row
-    expression, folded with the train-doc count into one O(n_buckets)
-    aggregate). Each later step is ALSO a single feats pass: the
-    doc-keyed score groupBy carries each doc's bucket list, and the
-    gradient explodes that list — no join back to the exploded frame.
-    The weight table is O(n_buckets) and broadcasts everywhere. With
-    ``feats=`` (a staged :func:`logreg_features_staged` frame,
-    persisted by the caller and shared with logreg_score) the explode
-    is the caller's and the internal persist is skipped. Returns
-    (bucket, weight) with bucket -1 = bias."""
-    from pyspark.storagelevel import StorageLevel
-
-    if feats is not None:
-        feats = feats.where(F.col("_y").isNotNull())
-    else:
-        feats = logreg_features(
-            docs, id_col, text_col, n_buckets, label_col=label_col
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    # step-1 gradient and the train-doc count in ONE feats pass (r15):
-    # w = 0 ⇒ p = 0.5 exactly, so the residual (0.5 − y) is a
-    # per-feature-row expression, and the doc count is the bias rows'
-    # count — every featurized doc carries exactly one bucket −1 row
-    # and pmod() never yields −1, so count(bias rows) = count(train
-    # docs with features) = the old `select(id).distinct().count`
-    # for unique-id corpora (the operator's contract; a duplicated id
-    # now counts per row, where distinct counted it once). The old
-    # form paid a corpus-sized distinct shuffle for _nd and — under
-    # the r14 non-reuse finding — re-ran it inside EVERY weight
-    # checkpoint job. The fused per-bucket frame is O(n_buckets);
-    # checkpoint it once so the _nd lookup and the step-1 update read
-    # the small RDD instead of re-aggregating the corpus.
+    Scale shape: each step is ONE pass over the ``_bks`` explode.
+    Step 1 folds the residual 0.5 − y and the train-doc count into one
+    O(n_buckets) aggregate; each later step's doc-keyed score groupBy
+    carries the doc's bucket list, and the gradient explodes that list
+    — no join back to the exploded frame. The weight table is
+    O(n_buckets) and broadcasts everywhere. Returns (bucket, weight)
+    with bucket -1 = bias."""
+    rows = feats.where(F.col(label_col).isNotNull()).select(
+        F.col(id_col),
+        F.when(F.col(label_col), F.lit(1.0)).otherwise(0.0).alias("_y"),
+        F.explode("_bks").alias("_bucket"),
+    )
+    # step-1 gradient and the train-doc count in ONE pass: w = 0 ⇒
+    # p = 0.5 exactly, so the residual (0.5 − y) is a per-row
+    # expression, and the doc count is the bias rows' count — every
+    # featurized doc carries exactly one bucket −1 row and pmod()
+    # never yields −1, so count(bias rows) = count(train docs) for
+    # unique-id corpora (the contract the step ≥ 2 groupBy checks).
+    # The per-bucket frame is O(n_buckets) with two consumers (the _nd
+    # lookup and the step-1 update) and Spark 4.1.2 reuses no identical
+    # exchanges: checkpoint it once so neither re-aggregates the
+    # corpus.
     g1 = (
-        feats.groupBy("_bucket")
+        rows.groupBy("_bucket")
         .agg(
             F.sum(
                 (F.lit(0.5) - F.col("_y")).cast("decimal(28,6)")
@@ -1617,31 +1554,29 @@ def logreg_train(
         )
 
     # step 1 closed form: z = 0, p = 0.5 exactly — the per-bucket
-    # residual sums were folded into the g1 pass above (one feats
-    # pass for gradient + doc count), same decimal sums of the same
-    # multiset (decimal addition is associative, so aggregation order
-    # cannot change the result). The weight frames themselves are NOT
+    # residual sums were folded into the g1 pass above (one pass for
+    # gradient + doc count), same decimal sums of the same multiset
+    # (decimal addition is associative, so aggregation order cannot
+    # change the result). The weight frames themselves are NOT
     # checkpointed (r15): with g1 staged, every weights plan is an
     # O(n_buckets) projection over the checkpointed RDD — re-running
     # it per consumer costs microseconds, while each eager checkpoint
-    # job cost a fixed ~0.2 s at sf0.1 (two jobs per fit). Before g1
-    # existed the checkpoint truncated a corpus-sized plan; that
-    # reason is gone.
+    # job cost a fixed ~0.2 s at sf0.1 (two jobs per fit).
     weights = new_weights(g1.select("_bucket", "_gr"), None)
     for _ in range(steps - 1):
         # later steps fuse the score pass and the gradient pass into
-        # ONE feats pass (r15): the per-doc groupBy carries the doc's
-        # bucket list alongside its weight sum, so the gradient is an
-        # explode of that list — the old shape joined the exploded
-        # feats frame BACK to the doc-keyed residuals (a second
-        # corpus-explode-sized shuffle + a second feats scan per
-        # step, never reused under the r14 finding). Buckets are
-        # distinct per doc by construction, so the exploded
-        # (bucket, resid) multiset — and its order-free decimal sums
-        # — are exactly the old join's.
+        # ONE pass: the per-doc groupBy carries the doc's bucket list
+        # alongside its weight sum, so the gradient is an explode of
+        # that list, not a join of the exploded rows back to the
+        # doc-keyed residuals (a second corpus-sized shuffle and scan
+        # per step). Buckets are distinct per doc, so the exploded
+        # (bucket, resid) multiset — and its order-free decimal sums —
+        # are the join's. Every row of a doc carries the doc's one
+        # label, so max(_y) is that label; the bias-row count checks
+        # the unique-id contract the doc count relies on.
         zb = (
-            feats.join(F.broadcast(weights), "_bucket", "left")
-            .groupBy(id_col, "_y")
+            rows.join(F.broadcast(weights), "_bucket", "left")
+            .groupBy(id_col)
             .agg(
                 F.sum(
                     F.coalesce(F.col("_wt"), F.lit(0.0)).cast(
@@ -1649,11 +1584,14 @@ def logreg_train(
                     )
                 ).alias("_z"),
                 F.collect_list("_bucket").alias("_bks"),
+                F.max("_y").alias("_y"),
+                F.count_if(F.col("_bucket") == -1).alias("_nbias"),
             )
         )
         resid = zb.select(
             F.explode("_bks").alias("_bucket"),
-            (
+            _unique_doc(
+                F.col("_nbias"),
                 F.round(
                     F.lit(1.0)
                     / (
@@ -1662,13 +1600,14 @@ def logreg_train(
                     ),
                     6,
                 )
-                - F.col("_y")
+                - F.col("_y"),
+                "logreg_train",
             ).alias("_resid"),
         )
         grads = resid.groupBy("_bucket").agg(
             F.sum(F.col("_resid").cast("decimal(28,6)")).alias("_gr")
         )
-        # each step's grads subtree contains one full feats pass, and
+        # each step's grads subtree contains one full corpus pass, and
         # the NEXT step (or the caller's score) re-plans it per
         # consumer under non-reuse — stage the O(n_buckets) result,
         # exactly like g1 (the weight projection above it stays lazy).
@@ -1680,39 +1619,37 @@ def logreg_train(
 
 
 def logreg_score(
-    docs: DataFrame,
+    feats: DataFrame,
     weights: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 64,
-    feats: DataFrame | None = None,
 ) -> DataFrame:
-    """Score docs under trained linear weights: per-doc DECIMAL sum of
-    its feature buckets' weights (bias included); positive score →
-    positive class. ``n_buckets`` must match the fit (the frozen-meta
-    rule — callers persisting a model pin it alongside the weights).
-    With ``feats=`` (a staged :func:`logreg_features_staged` frame,
-    shared with the paired logreg_train) the per-token md5 featurize
-    pass is the caller's. Output: (id, n_features, lr_score double,
-    pred_pos boolean)."""
-    if feats is not None:
-        feats = feats.select(id_col, "_bucket")
-    else:
-        feats = logreg_features(docs, id_col, text_col, n_buckets)
+    """Score the docs of a :func:`classifier_features` frame under
+    trained linear weights: per-doc DECIMAL sum of its feature
+    buckets' weights (bias included); positive score → positive
+    class. The frame's ``n_buckets`` must match the fit (the
+    frozen-meta rule — callers persisting a model pin it alongside
+    the weights). NULL-text docs are absent; a duplicated doc id
+    raises. Output: (id, n_features, lr_score double, pred_pos
+    boolean)."""
+    rows = feats.select(id_col, F.explode("_bks").alias("_bucket"))
+    s = _unique_doc(F.col("_nbias"), F.col("_s"), "logreg_score")
     return (
-        feats.join(F.broadcast(weights), feats["_bucket"] == weights["bucket"], "left")
+        rows.join(
+            F.broadcast(weights), rows["_bucket"] == weights["bucket"], "left"
+        )
         .groupBy(id_col)
         .agg(
             F.count("*").alias("n_features"),
             F.sum(
                 F.coalesce(F.col("weight"), F.lit(0.0)).cast("decimal(28,6)")
             ).alias("_s"),
+            F.count_if(F.col("_bucket") == -1).alias("_nbias"),
         )
         .select(
             id_col,
             "n_features",
-            F.col("_s").cast("double").alias("lr_score"),
-            (F.col("_s") >= 0).alias("pred_pos"),
+            s.cast("double").alias("lr_score"),
+            (s >= 0).alias("pred_pos"),
         )
     )
 

@@ -2693,6 +2693,38 @@ def sim_ivfpq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
+def _classifier_frame(
+    spark: SparkSession, sf_dir: str, *arrays: str, spread: bool = False
+) -> DataFrame:
+    """The ONE staged input of the trained-classifier queries: a row
+    per document, ``(doc_id, _lbl, *arrays)``, where ``_lbl`` is the
+    heuristic quality seed label (quality ≥ 0.5) and ``arrays`` are
+    the textstats.classifier_features columns the query's operators
+    read — ``_toks`` for naive Bayes, ``_bks`` (64 buckets) for
+    logreg. Every trainer, scorer and label join of a query reads
+    this frame, so it is staged once (eager localCheckpoint: one job,
+    the documents scan and the label/featurize expressions run once,
+    every consumer reads the RDD and explodes its array lazily).
+    Keeping only the used arrays keeps an NB-only query off the
+    per-token md5 fold. One definition so the label expression, the
+    feature geometry and the staging cannot drift between queries.
+    ``spread`` repartitions the one-split documents scan before the
+    per-row work (dedup._spread)."""
+    from ..operators.textstats import classifier_features, quality_score
+
+    docs = read_table(spark, sf_dir, "documents")
+    if spread:
+        docs = dedup._spread(docs)
+    labeled = docs.select(
+        "doc_id", "text", (quality_score(F.col("text")) >= 0.5).alias("_lbl")
+    )
+    return (
+        classifier_features(labeled, n_buckets=64)
+        .select("doc_id", "_lbl", *arrays)
+        .transform(staging.stage, "staged")
+    )
+
+
 def td_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The GPT-3/CCNet quality-classifier pattern, end to end in-plan:
     label the corpus by the heuristic quality gate (quality ≥ 0.5 as
@@ -2703,27 +2735,15 @@ def td_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     output's pred_pos column is the classifier's corpus filter; at
     scale the weights table is vocabulary-sized and broadcast, so the
     scoring pass is one explode + one broadcast join + a partial-agg
-    groupBy — linear, shuffle-light, no UDF anywhere. Train and
-    score share ONE staged token explode (nb_tokens, checkpointed — the
-    _trained_classifier_verdicts multi-consumer discipline), and the
-    labeled frame is persisted so the quality_score label expression
-    runs once, not once per consumer (explode + prior)."""
+    groupBy — linear, shuffle-light, no UDF anywhere. Train, prior
+    and score all read the one staged per-doc token frame
+    (`_classifier_frame`)."""
+    from ..operators.textstats import nb_score, nb_train
 
-    from ..operators.textstats import nb_score, nb_tokens, nb_train, quality_score
-
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            "text",
-            (quality_score(F.col("text")) >= 0.5).alias("_lbl"),
-        )
-        .transform(staging.stage, "staged")
-    )
-    toks = nb_tokens(d, "_lbl").transform(staging.stage, "staged")
-    weights, prior = nb_train(d, "_lbl", tokens=toks)
+    d = _classifier_frame(spark, sf_dir, "_toks")
+    weights, prior = nb_train(d, "_lbl")
     return (
-        nb_score(d, weights, prior, tokens=toks)
+        nb_score(d, weights, prior)
         .select("doc_id", "n_scored_tokens", "nb_score", "pred_pos")
         .orderBy("doc_id")
     )
@@ -2741,65 +2761,36 @@ def td_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights; pred_pos is the corpus filter. Float discipline per the
     unigram lessons: decimal feature sums, sigmoid quantized at 6 dp
     both sides of exp, one ROUND per weight update — the oracle
-    recomputes the exact weights. At scale: one staged feature
-    explode, two bounded-table broadcast joins per step, O(buckets)
+    recomputes the exact weights. At scale: one staged per-doc bucket
+    frame (`_classifier_frame`, spread: the per-token md5 fold runs
+    on the scan partitioning otherwise, and the sf parquet is ONE
+    split), two bounded-table broadcast joins per step, O(buckets)
     weight table."""
-    from ..operators.textstats import logreg_score, logreg_train, quality_score
+    from ..operators.textstats import logreg_score, logreg_train
 
-    # _spread: the per-token md5 bucket fold and the quality signals
-    # run on the scan partitioning, and the sf parquet is ONE split
-
-    from ..operators.textstats import logreg_features_staged
-
-    d = dedup._spread(read_table(spark, sf_dir, "documents")).select(
-        "doc_id", "text", (quality_score(F.col("text")) >= 0.5).alias("_lbl")
-    )
-    # ONE md5 featurize pass shared by train and score (persist — the
-    # _trained_classifier_verdicts multi-consumer discipline); before
-    # the staging, train and score each re-ran the per-token bucket
-    # fold over the whole corpus
-    feats = logreg_features_staged(
-        d, "_lbl", "doc_id", "text", n_buckets=64
-    ).transform(staging.stage, "staged")
-    weights = logreg_train(
-        d, "_lbl", "doc_id", "text", n_buckets=64, steps=2, lr=0.5,
-        feats=feats,
-    )
-    return logreg_score(
-        d, weights, "doc_id", "text", 64, feats=feats
-    ).orderBy("doc_id")
+    d = _classifier_frame(spark, sf_dir, "_bks", spread=True)
+    weights = logreg_train(d, "_lbl", steps=2, lr=0.5)
+    return logreg_score(d, weights).orderBy("doc_id")
 
 
 def _trained_classifier_verdicts(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Shared staging for the classifier audits
-    (td_classifier_agreement, td_classifier_ensemble): the corpus
-    labeled with the heuristic quality seed (STAGED — it feeds
-    four consumers: both trainers and both scoring passes; the
-    td_source_drift discipline) and the per-doc boolean verdicts of
-    the two trained scorers, `(_nb, _lr)` keyed by doc_id. One
-    definition so the label expression, the staging, and the 64/2
-    fit hyperparameters cannot drift between the two audits.
-
-    The three stages are eager localCheckpoints, not persists (r14
-    optimization round): a persist keeps lineage, so every consumer
-    still re-PLANS the full upstream tree and the four consumers race
-    the first materialization; the checkpoint truncates the tree and
-    materializes exactly once, up front. Interleaved sf0.1 A/B on the
-    calibrated audit (the deepest consumer stack): persist 17.9 →
-    checkpoint 15.1 s medians (−16%, measured in a load-degraded
-    phase — both arms equally degraded). The checkpointed RDDs are
-    released the same way persists were: the session-level cache/
-    state reset between bench/mirror queries, or GC of the frames."""
+    """Shared fit for the classifier audits (td_classifier_agreement,
+    td_classifier_ensemble, td_ensemble_calibrated): the staged
+    labeled per-doc frame (`_classifier_frame` with both feature
+    arrays — it feeds both trainers, both scorers and the audits'
+    label join) and the per-doc verdicts of the two trained scorers,
+    `(_nb, _nb_score)` and `(_lr, _lr_score)` keyed by doc_id. One
+    definition so the label expression, the staging and the 64/2 fit
+    hyperparameters cannot drift between the audits. With one staged
+    frame the two fits have no staging jobs left to overlap, so they
+    run one after the other on the driver thread."""
     from ..operators.textstats import (
-        logreg_features_staged,
         logreg_score,
         logreg_train,
         nb_score,
-        nb_tokens,
         nb_train,
-        quality_score,
     )
 
     # negative result (r15): recomposing the label from
@@ -2810,51 +2801,15 @@ def _trained_classifier_verdicts(
     # carries source); quality_score alone is too cheap to buy the
     # round-trip. Labels verified identical; the expression fold
     # stays.
-    d = (
-        dedup._spread(read_table(spark, sf_dir, "documents"))
-        .select(
-            "doc_id",
-            "text",
-            (quality_score(F.col("text")) >= 0.5).alias("_lbl"),
-        )
-        .transform(staging.stage, "staged")
-    )
-    # each scorer pair used to re-explode the (cached) corpus per
-    # half — nb_train + nb_score each a token explode, logreg_train +
-    # logreg_score each a per-token md5 featurize pass. Stage each
-    # explode ONCE and share it across its pair: 4 corpus explodes
-    # per audit → 2, the same discipline one level down.
-    #
-    # The two staging jobs (and then the two fit jobs) are INDEPENDENT
-    # — both read only the checkpointed d — so they are submitted from
-    # driver threads and overlap (guide §2.6: actions are only
-    # sequential because the driver calls them sequentially; the
-    # second job's tasks back-fill the first's tail). Interleaved A/B
-    # on the agreement chain at sf0.1: 4.80 → 3.91 s median (−19%).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        tf = pool.submit(
-            lambda: nb_tokens(d, "_lbl").transform(staging.stage, "staged")
-        )
-        ff = pool.submit(
-            lambda: logreg_features_staged(
-                d, "_lbl", "doc_id", "text", n_buckets=64
-            ).transform(staging.stage, "staged")
-        )
-        toks, feats = tf.result(), ff.result()
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        nf = pool.submit(nb_train, d, "_lbl", tokens=toks)
-        lf = pool.submit(
-            logreg_train, d, "_lbl", "doc_id", "text", 64, 2, 0.5, feats
-        )
-        (nbw, prior), lrw = nf.result(), lf.result()
-    nb = nb_score(d, nbw, prior, tokens=toks).select(
+    d = _classifier_frame(spark, sf_dir, "_toks", "_bks", spread=True)
+    nbw, prior = nb_train(d, "_lbl")
+    lrw = logreg_train(d, "_lbl", steps=2, lr=0.5)
+    nb = nb_score(d, nbw, prior).select(
         "doc_id",
         F.col("pred_pos").alias("_nb"),
         F.col("nb_score").alias("_nb_score"),
     )
-    lr = logreg_score(d, lrw, "doc_id", "text", 64, feats=feats).select(
+    lr = logreg_score(d, lrw).select(
         "doc_id",
         F.col("pred_pos").alias("_lr"),
         F.col("lr_score").alias("_lr_score"),
@@ -2874,15 +2829,14 @@ def td_classifier_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the two float divisions are written identically in the
     oracle. Scale shape: both scorers are explode + broadcast-weight
     joins + per-doc partial aggs; the audit joins two doc-keyed
-    score tables and aggregates to one row. The labeled frame has
-    FOUR consumers (nb_train, nb_score, logreg_train, logreg_score),
-    so it is staged once (eager localCheckpoint) — the td_source_drift
-    multi-consumer discipline; without it the final plan re-reads the
-    documents scan and recomputes the full quality_score label
-    expression per consumer (3 avoidable corpus scans at 100 TB).
-    Staging + both train/score chains live in
-    `_trained_classifier_verdicts`, shared with
-    td_classifier_ensemble."""
+    score tables and aggregates to one row. The labeled per-doc frame
+    has FOUR consumers (nb_train, nb_score, logreg_train,
+    logreg_score), so it is staged once; without that the final plan
+    re-reads the documents scan and recomputes the quality_score
+    label expression per consumer (3 avoidable corpus scans at
+    100 TB). Staging + both train/score chains live in
+    `_trained_classifier_verdicts`, shared with the ensemble
+    audits."""
     _, nb, lr = _trained_classifier_verdicts(spark, sf_dir)
     cells = nb.join(lr, "doc_id").agg(
         F.count("*").alias("n_docs"),
@@ -3027,8 +2981,7 @@ def td_ensemble_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scored frame has TWO consumers (the floors aggregate and the
     # confusion pass) — without staging, both scorer chains re-plan and
     # the corpus scores twice; checkpoint the narrow doc-keyed frame
-    # once (eager, lineage-truncating — the _trained_classifier_verdicts
-    # discipline and measurement)
+    # once (eager, lineage-truncating)
     scored = (
         d.select("doc_id", "_lbl")
         .join(nb, "doc_id")
@@ -3241,30 +3194,16 @@ def td_classifier_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-free pass over td_quality_classifier's machinery: all 15
     counters (tp/fp/fn × 5 thresholds) are conditional aggregates in
     a single-row agg over the scored-and-labeled frame, stacked to
-    rows — never one pass per threshold. The labeled frame feeds
-    THREE consumers (train, score, label join) and is staged once
-    (eager localCheckpoint — the _trained_classifier_verdicts
-    discipline) so the
-    plan holds one documents scan; the session-level cache reset
-    between queries releases it."""
+    rows — never one pass per threshold. Train, score and the label
+    join all read the one staged per-doc token frame
+    (`_classifier_frame`), so the plan holds no documents scan; the
+    session-level cache reset between queries releases it."""
+    from ..operators.textstats import nb_score, nb_train
 
-    from ..operators.textstats import nb_score, nb_tokens, nb_train, quality_score
-
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            "text",
-            (quality_score(F.col("text")) >= 0.5).alias("_lbl"),
-        )
-        .transform(staging.stage, "staged")
-    )
-    # train + score share one staged token explode (persist) instead
-    # of re-exploding the cached corpus per half
-    toks = nb_tokens(d, "_lbl").transform(staging.stage, "staged")
-    weights, prior = nb_train(d, "_lbl", tokens=toks)
+    d = _classifier_frame(spark, sf_dir, "_toks")
+    weights, prior = nb_train(d, "_lbl")
     s = (
-        nb_score(d, weights, prior, tokens=toks)
+        nb_score(d, weights, prior)
         .join(d.select("doc_id", "_lbl"), "doc_id")
         .where(F.col("_lbl").isNotNull())
     )
@@ -3320,39 +3259,16 @@ def td_logreg_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     in ONE single-row agg over the scored-and-labeled frame, stacked
     to rows — never one pass per threshold. Thresholds span the
     lr_score range ([−0.01, 0.41] at sf0.01; the 64-bucket decimal
-    weight sums are small by construction). The labeled frame feeds
-    THREE consumers (train, score, label join) and is staged once
-    (eager localCheckpoint — the _trained_classifier_verdicts
-    discipline) so the
-    plan holds one documents scan; the session-level cache reset
-    between queries releases it."""
+    weight sums are small by construction). Train, score and the
+    label join all read the one staged per-doc bucket frame
+    (`_classifier_frame`), so the plan holds no documents scan; the
+    session-level cache reset between queries releases it."""
+    from ..operators.textstats import logreg_score, logreg_train
 
-    from ..operators.textstats import (
-        logreg_features_staged,
-        logreg_score,
-        logreg_train,
-        quality_score,
-    )
-
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            "text",
-            (quality_score(F.col("text")) >= 0.5).alias("_lbl"),
-        )
-        .transform(staging.stage, "staged")
-    )
-    # train + score share one staged md5 featurize pass (persist)
-    # instead of re-running it over the cached corpus per half
-    feats = logreg_features_staged(
-        d, "_lbl", "doc_id", "text", n_buckets=64
-    ).transform(staging.stage, "staged")
-    weights = logreg_train(
-        d, "_lbl", "doc_id", "text", n_buckets=64, steps=2, feats=feats
-    )
+    d = _classifier_frame(spark, sf_dir, "_bks")
+    weights = logreg_train(d, "_lbl", steps=2)
     s = (
-        logreg_score(d, weights, "doc_id", "text", 64, feats=feats)
+        logreg_score(d, weights)
         .join(d.select("doc_id", "_lbl"), "doc_id")
         .where(F.col("_lbl").isNotNull())
     )
@@ -3469,27 +3385,16 @@ def td_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpartitioned window runs over ≤ n_parts partition totals), then
     one aggregate. Rank sums are kept ×2 in DECIMAL(38,0) so every
     intermediate is an exact integer (avg ranks are halves); the one
-    double division happens last."""
-
+    double division happens last. Train, score and the label join
+    all read the one staged per-doc token frame
+    (`_classifier_frame`)."""
     from ..operators import ranking
-    from ..operators.textstats import nb_score, nb_tokens, nb_train, quality_score
+    from ..operators.textstats import nb_score, nb_train
 
-    # the labeled frame feeds THREE consumers (train, score, label
-    # join) and train + score share one staged token explode — the
-    # _trained_classifier_verdicts discipline
-    d = (
-        read_table(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            "text",
-            (quality_score(F.col("text")) >= 0.5).alias("_lbl"),
-        )
-        .transform(staging.stage, "staged")
-    )
-    toks = nb_tokens(d, "_lbl").transform(staging.stage, "staged")
-    weights, prior = nb_train(d, "_lbl", tokens=toks)
+    d = _classifier_frame(spark, sf_dir, "_toks")
+    weights, prior = nb_train(d, "_lbl")
     s = (
-        nb_score(d, weights, prior, tokens=toks)
+        nb_score(d, weights, prior)
         .join(d.select("doc_id", "_lbl"), "doc_id")
         .where(F.col("_lbl").isNotNull())
     )

@@ -1879,7 +1879,10 @@ def test_frozen_logreg_classifier_filter(spark, tmp_path):
         curate_batch,
         fit_reference_model,
     )
-    from delta_data_pipelines_spark.operators.textstats import logreg_score
+    from delta_data_pipelines_spark.operators.textstats import (
+        classifier_features,
+        logreg_score,
+    )
 
     docs = read_table(spark, "/root/testdata/sf0.001", "documents").select(
         "doc_id", "text"
@@ -1907,7 +1910,9 @@ def test_frozen_logreg_classifier_filter(spark, tmp_path):
     gated = quality_gate(scrub_stage(batch, "text"), "text")
     below = {
         r["doc_id"]
-        for r in logreg_score(gated, model.logreg.read(), "doc_id", "text", 32)
+        for r in logreg_score(
+            classifier_features(gated, "text", 32), model.logreg.read(), "doc_id"
+        )
         .where(F.col("lr_score") < F.lit(meta["classifier_threshold"]))
         .collect()
     }
@@ -1917,7 +1922,9 @@ def test_frozen_logreg_classifier_filter(spark, tmp_path):
     # calibration: on the reference's own clean frame the floor keeps
     # ~keep_fraction (exact up to percentile interpolation/ties)
     ref_gated = quality_gate(scrub_stage(ref, "text"), "text")
-    rs = logreg_score(ref_gated, model.logreg.read(), "doc_id", "text", 32)
+    rs = logreg_score(
+        classifier_features(ref_gated, "text", 32), model.logreg.read(), "doc_id"
+    )
     n = rs.count()
     kept = rs.where(
         F.col("lr_score") >= F.lit(meta["classifier_threshold"])
@@ -2463,6 +2470,7 @@ def test_frozen_ensemble_classifier_filter(spark, tmp_path):
         fit_reference_model,
     )
     from delta_data_pipelines_spark.operators.textstats import (
+        classifier_features,
         logreg_score,
         nb_score,
     )
@@ -2501,13 +2509,17 @@ def test_frozen_ensemble_classifier_filter(spark, tmp_path):
     )
     lr_keep = {
         r["doc_id"]
-        for r in logreg_score(gated, model.logreg.read(), "doc_id", "text", 32)
+        for r in logreg_score(
+            classifier_features(gated, "text", 32), model.logreg.read(), "doc_id"
+        )
         .where(F.col("lr_score") >= F.lit(meta["classifier_threshold"]))
         .collect()
     }
     nb_keep = {
         r["doc_id"]
-        for r in nb_score(gated, model.nb.read(), prior_df, "doc_id", "text")
+        for r in nb_score(
+            classifier_features(gated), model.nb.read(), prior_df, "doc_id"
+        )
         .where(F.col("nb_score") >= F.lit(meta["nb_threshold"]))
         .collect()
     }
@@ -2530,7 +2542,9 @@ def test_frozen_ensemble_classifier_filter(spark, tmp_path):
     lr_keep_or = {
         r["doc_id"]
         for r in logreg_score(
-            gated, model_or.logreg.read(), "doc_id", "text", 32
+            classifier_features(gated, "text", 32),
+            model_or.logreg.read(),
+            "doc_id",
         )
         .where(F.col("lr_score") >= F.lit(meta_or["classifier_threshold"]))
         .collect()
@@ -2538,11 +2552,10 @@ def test_frozen_ensemble_classifier_filter(spark, tmp_path):
     nb_keep_or = {
         r["doc_id"]
         for r in nb_score(
-            gated,
+            classifier_features(gated),
             model_or.nb.read(),
             spark.createDataFrame([(meta_or["nb_prior"],)], "log_prior double"),
             "doc_id",
-            "text",
         )
         .where(F.col("nb_score") >= F.lit(meta_or["nb_threshold"]))
         .collect()

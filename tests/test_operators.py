@@ -1878,10 +1878,14 @@ def test_nb_classifier_separates_planted_classes(spark):
     built from 'good' tokens vs docs from 'bad' tokens must score on
     opposite sides of zero once trained on their own labels; token
     log-odds must carry the right sign; OOV-only docs score exactly
-    the prior; and NULL-text/NULL-label rows train nothing."""
+    the prior; NULL-label rows train nothing, and a NULL-text row
+    adds no tokens but counts in the class prior."""
+    import math
+
     from pyspark.sql import functions as F
 
     from delta_data_pipelines_spark.operators.textstats import (
+        classifier_features,
         nb_score,
         nb_train,
     )
@@ -1898,11 +1902,15 @@ def test_nb_classifier_separates_planted_classes(spark):
     rows.append((21, "clean prose", None))  # NULL label: not trained on
     docs = spark.createDataFrame(rows, "doc_id long, text string, lbl boolean")
 
-    weights, prior = nb_train(docs, "lbl")
+    feats = classifier_features(docs)
+    weights, prior = nb_train(feats, "lbl")
     w = {r["token"]: r["log_odds"] for r in weights.collect()}
     assert w["clean"] > 0 and w["spam"] < 0  # signs follow the classes
+    # the prior counts every labelled doc, doc 20 (NULL text) included:
+    # 7 positive against 6 negative, doc 21 (NULL label) left out
+    assert prior.collect()[0]["log_prior"] == round(math.log(7 / 6), 9)
 
-    scored = {r["doc_id"]: r for r in nb_score(docs, weights, prior).collect()}
+    scored = {r["doc_id"]: r for r in nb_score(feats, weights, prior).collect()}
     assert all(scored[i]["pred_pos"] for i in range(1, 7))
     assert not any(scored[i]["pred_pos"] for i in range(10, 16))
     assert 20 not in scored  # NULL text: nothing to score
@@ -1913,7 +1921,7 @@ def test_nb_classifier_separates_planted_classes(spark):
         [(99, "totally unseen vocabulary here")], "doc_id long, text string"
     )
     lp = prior.collect()[0]["log_prior"]
-    got = nb_score(oov, weights, prior).collect()[0]
+    got = nb_score(classifier_features(oov), weights, prior).collect()[0]
     assert abs(got["nb_score"] - round(lp, 9)) < 1e-9
 
 
@@ -3288,9 +3296,12 @@ def test_logreg_classifier_separates(spark):
     doc scores on its own side after step 2, and an unseen doc from
     the positive vocabulary scores positive. NULL text/label rows are
     excluded from training and scoring without error."""
+    import hashlib
+
     from pyspark.sql import functions as F
 
     from delta_data_pipelines_spark.operators.textstats import (
+        classifier_features,
         logreg_score,
         logreg_train,
     )
@@ -3305,11 +3316,26 @@ def test_logreg_classifier_separates(spark):
         for i in range(1, 7)
     ] + [(99, None, True), (98, "good fine", None)]
     df = spark.createDataFrame(rows, "doc_id long, text string, lbl boolean")
-    wts = logreg_train(df, "lbl", n_buckets=32, steps=2, lr=0.5)
-    got = {
-        r["doc_id"]: r
-        for r in logreg_score(df, wts, n_buckets=32).collect()
+    feats = classifier_features(df, n_buckets=32)
+    # step 1 is closed form (w = 0, p = 0.5): each bucket's weight is
+    # -lr * Σ(0.5 - y) / n_docs over the twelve labelled docs with
+    # text. Doc 99 (NULL text) and doc 98 (NULL label) add no bias row,
+    # no bucket row and nothing to the doc count.
+    def bucket(t):
+        return int(hashlib.md5(t.encode()).hexdigest()[:8], 16) % 32
+
+    grad = {}
+    for _, text, lbl in rows[:12]:
+        for b in {bucket(t) for t in text.split(" ")} | {-1}:
+            grad[b] = grad.get(b, 0.0) + 0.5 - (1.0 if lbl else 0.0)
+    step1 = {
+        r["bucket"]: r["weight"]
+        for r in logreg_train(feats, "lbl", steps=1, lr=0.5).collect()
     }
+    assert step1 == {b: round(-0.5 * g / 12, 6) for b, g in grad.items()}
+
+    wts = logreg_train(feats, "lbl", steps=2, lr=0.5)
+    got = {r["doc_id"]: r for r in logreg_score(feats, wts).collect()}
     assert 99 not in got  # NULL text unscoreable
     for i in range(1, 7):
         assert got[i]["pred_pos"] is True, got[i]
@@ -3318,7 +3344,9 @@ def test_logreg_classifier_separates(spark):
     unseen = spark.createDataFrame(
         [(50, "clean neat good")], "doc_id long, text string"
     )
-    out = logreg_score(unseen, wts, n_buckets=32).collect()[0]
+    out = logreg_score(
+        classifier_features(unseen, n_buckets=32), wts
+    ).collect()[0]
     assert out["pred_pos"] is True
     # n_features counts distinct buckets + bias
     assert out["n_features"] <= 4
@@ -3332,19 +3360,21 @@ def test_logreg_steps_accumulate(spark):
     recurrence that drops w_prev stagnates instead)."""
     from pyspark.sql import functions as F
 
-    from delta_data_pipelines_spark.operators.textstats import logreg_train
+    from delta_data_pipelines_spark.operators.textstats import (
+        classifier_features,
+        logreg_train,
+    )
 
     rows = [
         (i, " ".join(["good"] * 8), True) for i in range(1, 7)
     ] + [(10 + i, " ".join(["spam"] * 8), False) for i in range(1, 7)]
     df = spark.createDataFrame(rows, "doc_id long, text string, lbl boolean")
+    feats = classifier_features(df, n_buckets=16)
 
     def bias_magnitude(steps):
         wts = {
             r["bucket"]: r["weight"]
-            for r in logreg_train(
-                df, "lbl", n_buckets=16, steps=steps
-            ).collect()
+            for r in logreg_train(feats, "lbl", steps=steps).collect()
         }
         # the two vocab buckets carry opposite-sign weights; use the
         # positive one's magnitude
@@ -3353,6 +3383,33 @@ def test_logreg_steps_accumulate(spark):
     m1, m2, m4 = (bias_magnitude(s) for s in (1, 2, 4))
     assert m2 > m1 * 1.5, (m1, m2)
     assert m4 > m2 * 1.3, (m2, m4)
+
+
+def test_logreg_rejects_duplicate_doc_ids(spark):
+    """The linear classifier counts docs by their bias rows while its
+    doc-keyed aggregates merge rows that share an id, so a duplicated
+    id would train on neither the raw nor the deduplicated corpus.
+    The step-2 score groupBy and the scorer's groupBy raise instead;
+    step 1 has no doc-keyed aggregate and trains."""
+    from delta_data_pipelines_spark.operators.textstats import (
+        classifier_features,
+        logreg_score,
+        logreg_train,
+    )
+
+    rows = [
+        (1, "good fine", True),
+        (1, "spam junk", False),
+        (2, "good clean", True),
+        (3, "spam noise", False),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string, lbl boolean")
+    feats = classifier_features(df, n_buckets=16)
+    with pytest.raises(Exception, match="doc ids must be unique"):
+        logreg_train(feats, "lbl", steps=2)
+    wts = logreg_train(feats, "lbl", steps=1)
+    with pytest.raises(Exception, match="doc ids must be unique"):
+        logreg_score(feats, wts).collect()
 
 
 def test_kn_bigram_logprob_hand_computed(spark):

@@ -98,7 +98,7 @@ def main() -> int:
             continue
         finally:
             # queries that stage multi-consumer frames (the
-            # _trained_classifier_verdicts persist) rely on a
+            # classifier queries' labeled per-doc frame) rely on a
             # session-level cache reset between queries — bench's
             # _reset_session_state does this for bench; mirror it so a
             # full-registry run doesn't accumulate cached relations
