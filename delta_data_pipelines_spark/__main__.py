@@ -200,7 +200,7 @@ def main(argv: list[str] | None = None) -> int:
         "state-stats",
         help="per-bucket skew report for a bucketed state table",
     )
-    ss.add_argument("--table", required=True, help="BucketedTable root dir")
+    ss.add_argument("--table", required=True, help="bucketed table root dir")
 
     pq = sub.add_parser(
         "pq-index",
@@ -336,20 +336,20 @@ def main(argv: list[str] | None = None) -> int:
 
     ct = sub.add_parser(
         "compact-table",
-        help="OPTIMIZE parity: rewrite a versioned table into evenly "
-        "sized files (or collapse a bucketed table's owning "
-        "generations), then vacuum",
+        help="OPTIMIZE parity: rewrite a table into evenly sized "
+        "files (or collapse a bucketed table's owning generations), "
+        "then vacuum",
     )
     ct.add_argument("--table", required=True, help="table root dir")
     ct.add_argument("--target-rows", type=int, default=1_000_000,
-                    help="rows per file (versioned tables)")
+                    help="rows per file (unbucketed tables)")
     ct.add_argument("--keep-last", type=int, default=3,
                     help="history retained by the post-compact vacuum")
     ct.add_argument("--zorder-by", nargs="+", default=None, metavar="COL",
                     help="OPTIMIZE ZORDER BY parity: cluster the "
                     "rewrite on the Morton interleave of 1-4 numeric/"
                     "temporal columns so row-group stats prune scans "
-                    "filtered on any of them (versioned tables)")
+                    "filtered on any of them (unbucketed tables)")
     ct.add_argument("--zorder-method", choices=["range", "rank"],
                     default="range",
                     help="bucket by value range (default) or by "
@@ -613,10 +613,10 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "compact-neardups":
-        from .storage import open_table
+        from .storage import VersionedTable
         from .streaming.neardup import compact_neardup_residue
 
-        corpus = open_table(spark, args.corpus)
+        corpus = VersionedTable(spark, args.corpus)
         res = compact_neardup_residue(
             spark, args.state, corpus, id_col=args.id_col, threshold=args.threshold
         )
@@ -624,10 +624,10 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "compact-exact-substr":
-        from .storage import open_table
+        from .storage import VersionedTable
         from .streaming.exact_substr import compact_exact_substr_residue
 
-        corpus = open_table(spark, args.corpus)
+        corpus = VersionedTable(spark, args.corpus)
         res = compact_exact_substr_residue(
             spark, args.state, corpus,
             id_col=args.id_col, min_len=args.min_len,
@@ -638,22 +638,17 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "replicate":
         import time as _time
 
-        from .storage import BucketedTable, ChangeFeedTail, open_table
+        from .storage import ChangeFeedTail, VersionedTable
 
-        src = open_table(spark, args.source)
-        if os.path.exists(args.replica) and os.listdir(args.replica):
-            replica = open_table(spark, args.replica)
-        elif isinstance(src, BucketedTable):
-            # fresh replica mirrors the source's bucket geometry so
-            # apply_changes stays bucket-scoped on both sides
-            replica = BucketedTable(
-                spark, args.replica,
-                bucket_key=src.bucket_key, n_buckets=src.n_buckets,
+        src = VersionedTable(spark, args.source)
+        # a fresh replica mirrors the source's bucket geometry so
+        # apply_changes stays bucket-scoped on both sides; an existing
+        # one keeps its own
+        replica = VersionedTable(spark, args.replica)
+        if not replica.exists():
+            replica = VersionedTable(
+                spark, args.replica, src.bucket_key, src.n_buckets
             )
-        else:
-            from .storage import VersionedTable
-
-            replica = VersionedTable(spark, args.replica)
         tail = ChangeFeedTail(src, replica, keys=list(args.keys))
         results = []
         for i in range(max(1, args.ticks)):
@@ -671,17 +666,15 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "state-stats":
-        from .storage import BucketedTable
+        from .storage import VersionedTable
 
-        # a read-only diagnostic must not CREATE table metadata on a
-        # typo'd path (the constructor does)
-        if not BucketedTable.exists_at(args.table):
+        bt = VersionedTable(spark, args.table)
+        if bt.bucket_key is None or not bt.exists():
             print(json.dumps({
                 "job": "state-stats", "table": args.table,
                 "error": "not a bucketed table (no _meta.json)",
             }))
             return 1
-        bt = BucketedTable(spark, args.table)
         rows = bt.bucket_stats().collect()
         n_rows = [r["n_rows"] for r in rows]
         print(json.dumps({
@@ -916,20 +909,14 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "compact-table":
-        from .storage import BucketedTable, open_table
+        from .storage import VersionedTable
 
-        t = open_table(spark, args.table)
-        if isinstance(t, BucketedTable):
-            if args.zorder_by:
-                p.error("--zorder-by applies to versioned tables only "
-                        "(bucketed layout is the clustering)")
-            c = t.compact()
-            res = {"kind": "bucketed", "version": c.version, **c.metrics}
-        else:
-            c = t.compact(target_rows_per_file=args.target_rows,
-                          zorder_by=args.zorder_by,
-                          zorder_method=args.zorder_method)
-            res = {"kind": "versioned", "version": c.version, **c.metrics}
+        t = VersionedTable(spark, args.table)
+        c = t.compact(target_rows_per_file=args.target_rows,
+                      zorder_by=args.zorder_by,
+                      zorder_method=args.zorder_method)
+        res = {"kind": "versioned" if t.bucket_key is None else "bucketed",
+               "version": c.version, **c.metrics}
         removed = t.vacuum(keep_last=args.keep_last)
         res["vacuumed_versions"] = len(removed)
         print(json.dumps({"job": "compact-table", **res}))

@@ -242,7 +242,7 @@ class IVFIndexStore(JsonMetaStore):
     BUCKETED BY CELL ID — the layout ``similarity.ivf_topk``'s
     docstring prescribes for 100 TB ('the corpus is written
     partitioned by cell, so a probe is partition-pruned I/O'). The
-    cells table is a ``BucketedTable`` keyed on ``cid``: a serve reads
+    cells table is bucketed on ``cid``: a serve reads
     only the bucket dirs its probe cells hash into
     (``read_buckets``), never the whole corpus, and an incremental
     append merges only the touched buckets. Like the PQ store, the
@@ -252,12 +252,7 @@ class IVFIndexStore(JsonMetaStore):
     ``n_buckets=None`` (default) adopts an existing table's stored
     geometry — REOPENING an index never passes a count (a conflicting
     one raises); the default of 16 applies only when the cells table
-    is first created. The cells table is constructed LAZILY (first
-    ``.cells`` access): BucketedTable construction persists geometry,
-    so an eager construct on a read-only open of a missing index would
-    stamp the default bucket count and permanently block a later
-    ``--n-buckets`` build — ``exists()`` therefore probes the layout
-    without constructing anything."""
+    is first written."""
 
     def __init__(
         self, spark: SparkSession, root: str, n_buckets: int | None = None
@@ -265,29 +260,15 @@ class IVFIndexStore(JsonMetaStore):
         self.spark = spark
         self.root = root
         self.centroids = VersionedTable(spark, os.path.join(root, "centroids"))
-        self._cells_root = os.path.join(root, "cells")
-        self._n_buckets = n_buckets
-        self._cells = None
-
-    @property
-    def cells(self):
-        if self._cells is None:
-            from ..storage import BucketedTable
-
-            self._cells = BucketedTable(
-                self.spark,
-                self._cells_root,
-                bucket_key="cid",
-                n_buckets=self._n_buckets,
-            )
-        return self._cells
+        self.cells = VersionedTable(
+            spark, os.path.join(root, "cells"), bucket_key="cid",
+            n_buckets=n_buckets,
+        )
 
     def exists(self) -> bool:
-        from ..storage import BucketedTable
-
         return (
             self.centroids.exists()
-            and BucketedTable.exists_at(self._cells_root)
+            and self.cells.exists()
             and self.meta_exists()
         )
 

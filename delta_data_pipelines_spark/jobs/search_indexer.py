@@ -40,12 +40,12 @@ both. Replayed ticks re-derive the same scoped recompute and
 apply_changes is content-idempotent on it.
 
 100 TB posture: the per-tick cost is (change-feed diff) + (index plan
-over affected keys only). On VersionedTable sources ``changes()`` reads
-the change rows the span's commits recorded, on BucketedTable sources
-only moved buckets; the users→fact mapping is one broadcast semi-join
-against the fact (bucket-prunable further when the fact is bucketed by
-customer key). The index apply touches only fed buckets when the index
-itself is bucketed by id.
+over affected keys only). On unbucketed sources ``changes()`` reads
+the change rows the span's commits recorded, on bucketed sources only
+the buckets whose manifest entry moved; the users→fact mapping is one
+broadcast semi-join against the fact (bucket-prunable further when the
+fact is bucketed by customer key). The index apply touches only fed
+buckets when the index itself is bucketed by id.
 """
 
 from __future__ import annotations
@@ -61,11 +61,7 @@ from ..queries.search_index import (
     FULL_REBUILD_STATUS,
     build_index_frames,
 )
-from ..storage.bucketed import BucketedTable
-from ..storage.replication import _latest_version
 from ..storage.table import VersionedTable
-
-_Table = VersionedTable | BucketedTable
 
 # CDC key sets per source table (rows must be identifiable across
 # versions for snapshot_diff)
@@ -94,14 +90,14 @@ class ContinuousSearchIndexer:
     the flagship search-index query over seven source tables.
 
     ``sources`` maps the star-schema names (orders, lineitem, events,
-    customer, nation, region, part) to Versioned/Bucketed tables;
+    customer, nation, region, part) to tables (unbucketed or bucketed);
     ``fact_filter`` defaults to the full-rebuild qualification."""
 
     def __init__(
         self,
         spark: SparkSession,
-        sources: dict[str, _Table],
-        index: _Table,
+        sources: dict[str, VersionedTable],
+        index: VersionedTable,
         fact_filter: F.Column | None = None,
     ) -> None:
         missing = sorted(set(_SOURCE_KEYS) - set(sources))
@@ -213,7 +209,7 @@ class ContinuousSearchIndexer:
         ``deletes`` the index ids actually removed: the feed deletes
         only affected ids the index holds."""
         latest = {
-            name: _latest_version(t) for name, t in self.sources.items()
+            name: t.latest_version() for name, t in self.sources.items()
         }
         none_tables = sorted(n for n, v in latest.items() if v is None)
         if none_tables:

@@ -678,14 +678,24 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     # share one supplier ⇔ min = max over the staged late rows. Both
     # rewrites assume non-NULL l_suppkey (TPC-H's contract; the
     # original `<>` predicate and the oracle's EXISTS agree only under
-    # that) and keep duplicate late lines intact — the aggregates are
-    # one row per orderkey, so the semi joins multiply nothing.
+    # that), so the per-order aggregate checks it — count(l_suppkey)
+    # = count(*), else raise_error, in the same pass — and they keep
+    # duplicate late lines intact: the aggregates are one row per
+    # orderkey, so the semi joins multiply nothing.
     multi = (
         l.groupBy("l_orderkey")
         .agg(
-            F.min("l_suppkey").alias("_mn"), F.max("l_suppkey").alias("_mx")
+            F.min("l_suppkey").alias("_mn"), F.max("l_suppkey").alias("_mx"),
+            F.count("l_suppkey").alias("_n"), F.count("*").alias("_rows"),
         )
-        .where(F.col("_mn") != F.col("_mx"))
+        .where(
+            F.when(
+                F.col("_n") == F.col("_rows"), F.col("_mn") != F.col("_mx")
+            ).otherwise(F.raise_error(F.lit(
+                "tpch_q21: NULL l_suppkey in lineitem (the min/max "
+                "EXISTS rewrite needs every line's supplier)"
+            )))
+        )
         .select("l_orderkey")
     )
     solo_late = (

@@ -15,6 +15,10 @@ stores:
     watermark state table              ↔ incremental lower-bound fetch
                                          (sql_search_incremental_dag.py:118-140)
 
+One table class, ``VersionedTable``: unbucketed, or hash-bucketed on a
+key (``bucket_key``/``n_buckets``, fixed when the table is created) so
+a MERGE or change feed touches only the buckets its keys hash into.
+
 On a real cluster the same API would be backed by Delta/Iceberg; the
 interface is deliberately shaped so that swap is mechanical.
 ``DELTA_AVAILABLE`` is the feature probe for that seam: when the
@@ -30,20 +34,9 @@ try:  # pragma: no cover - absent in this container, probe documents the seam
 except ImportError:
     DELTA_AVAILABLE = False
 
-from .bucketed import BucketedTable  # noqa: F401
 from .matview import IncrementalAggregate  # noqa: F401
 from .meta import ConcurrentWriteError, JsonMetaStore  # noqa: F401
 from .replication import ChangeFeedTail  # noqa: F401
 from .table import VersionedTable  # noqa: F401
 from .watermark import WatermarkStore  # noqa: F401
 
-
-def open_table(spark, root: str):
-    """Open an existing table by path, dispatching on layout: a
-    ``_meta.json`` (bucket geometry) marks a BucketedTable, anything
-    else is a plain VersionedTable."""
-    import os
-
-    if os.path.exists(os.path.join(root, "_meta.json")):
-        return BucketedTable(spark, root)
-    return VersionedTable(spark, root)

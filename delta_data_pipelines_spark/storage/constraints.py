@@ -1,7 +1,7 @@
-"""CHECK-constraint support shared by both table variants — Delta
+"""CHECK-constraint support for VersionedTable — Delta
 ``ALTER TABLE ADD CONSTRAINT`` parity.
 
-One mixin, two hosts (VersionedTable, BucketedTable): predicates live
+Predicates live
 in an atomic ``_constraints.json`` sidecar under the table root, adding
 one scans the CURRENT snapshot first (Delta's rule — you cannot
 constrain a table whose data already violates it), and every write
@@ -12,7 +12,7 @@ NULL passes (write ``col IS NOT NULL AND …`` to also reject NULLs).
 A failed write raises before anything is committed, so the table stays
 at its previous version (Delta's InvariantViolation behavior).
 
-For the bucketed variant the enforced frame is the rewritten buckets —
+On a bucketed table the enforced frame is the rewritten buckets —
 incoming rows plus the touched buckets' carried-forward rows — which is
 exactly the set Delta validates when a merge rewrites files.
 """
@@ -44,6 +44,7 @@ class CheckConstraints:
             return json.load(f)
 
     def _write_constraints(self, cons: dict[str, str]) -> None:
+        os.makedirs(self.root, exist_ok=True)
         tmp = self._constraints_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(cons, f, indent=1, sort_keys=True)

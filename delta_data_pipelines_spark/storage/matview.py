@@ -21,9 +21,9 @@ BEATS a group's stored extremum makes that group's new extremum
 unknowable from the feed (the feed can't say whether another equal
 value remains), so exactly those extremum-losing groups recompute
 from the post-span base table — bucket-pruned to the losing groups'
-buckets when the source is a :class:`~.bucketed.BucketedTable` keyed
-on a group column. Cost follows the loser set, not the view: a
-monotone append-mostly workload never reads the base at all. This is
+buckets when the source is bucketed on a group column. Cost follows
+the loser set, not the view: a monotone append-mostly workload never
+reads the base at all. This is
 what lets the view cover MIN-per-key shapes (the reference's
 ``MinUserRole`` aggregate, SURVEY A2) incrementally.
 
@@ -39,8 +39,8 @@ there is no window where a replay double-counts.
 
 Scale posture: a refresh aggregates the FEED (map-side partial
 combine on the group keys — cost follows change volume), reads only
-the stored rows of affected groups (bucket-pruned when the view is a
-``BucketedTable`` keyed on a group column), and writes through
+the stored rows of affected groups (bucket-pruned when the view table
+is bucketed on a group column), and writes through
 ``apply_changes`` (touched buckets only). Sums are DECIMAL(38,6):
 exact integer-scaled arithmetic, associative under any partial-agg
 order, immune to float drift across thousands of refreshes.
@@ -53,17 +53,15 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bucketed import BucketedTable
-from .replication import _latest_version
 from .table import VersionedTable
 
 _SUM_TYPE = "decimal(38,6)"
 
 
 class IncrementalAggregate:
-    """A grouped count/sum/min/max view stored in ``table`` (Versioned
-    or Bucketed — for the bucketed scale path the bucket key must be
-    one of ``group_cols``), maintained by :meth:`refresh` from CDC
+    """A grouped count/sum/min/max view stored in ``table`` (a bucketed
+    table — the scale path — needs its bucket key among
+    ``group_cols``), maintained by :meth:`refresh` from CDC
     feeds or driven end-to-end by :meth:`tick` against a source table.
 
     View schema: ``group_cols…, n_rows bigint, sum_<c> decimal(38,6)``
@@ -76,19 +74,15 @@ class IncrementalAggregate:
 
     def __init__(
         self,
-        table: VersionedTable | BucketedTable,
+        table: VersionedTable,
         group_cols: list[str],
         sum_cols: list[str] | None = None,
         minmax_cols: list[str] | None = None,
     ) -> None:
         if not group_cols:
             raise ValueError("group_cols required")
-        if isinstance(table, BucketedTable) and table.bucket_key not in group_cols:
-            raise ValueError(
-                f"bucket key {table.bucket_key!r} must be one of the "
-                f"group columns {group_cols} (group rows must share a "
-                "bucket for the scoped refresh write)"
-            )
+        # group rows must share a bucket for the scoped refresh write
+        table._check_keys(group_cols, "group columns")
         self.table = table
         self.group_cols = list(group_cols)
         self.sum_cols = list(sum_cols or [])
@@ -187,14 +181,9 @@ class IncrementalAggregate:
             + [x for c in self.minmax_cols for x in (f"min_{c}", f"max_{c}")]
         )
         if self.table.exists():
-            if isinstance(self.table, BucketedTable):
-                # affected groups only, by bucket pruning — the read
-                # cost follows the delta, not the view size
-                base = self.table.read_buckets(
-                    self.table.bucket_ids_of(delta, self.table.bucket_key)
-                )
-            else:
-                base = self.table.read()
+            # affected groups only, by bucket pruning — the read cost
+            # follows the delta, not the view size
+            base = self.table.read_buckets(self.table.bucket_ids_of(delta))
             stored = base.select(*view_cols).join(
                 delta.select(*self.group_cols), self.group_cols, "left_semi"
             )
@@ -334,8 +323,8 @@ class IncrementalAggregate:
     def restamp(self) -> None:
         """Re-anchor the applied-span watermark at the history tail:
         an EMPTY ``apply_changes`` commit carrying the current
-        ``applied_to`` (zero rows → zero touched buckets on the
-        bucketed variant). Needed after maintenance commits, because
+        ``applied_to`` (zero rows → zero touched buckets on a
+        bucketed table). Needed after maintenance commits, because
         the watermark lives in refresh-commit metrics and ``vacuum``
         prunes history — without it, routine compact+vacuum could
         strand a consistent view in the unwatermarked state
@@ -374,14 +363,14 @@ class IncrementalAggregate:
     # ---- the tailing driver -------------------------------------------------
 
     def tick(
-        self, source: VersionedTable | BucketedTable, source_keys: list[str]
+        self, source: VersionedTable, source_keys: list[str]
     ) -> dict[str, Any]:
         """Catch the view up to the source's latest version: bootstrap
         folds the latest snapshot as an all-insert feed, steady state
         folds ``changes(applied, latest)``. Re-running after a crash
         is safe by construction — the watermark travels in the same
         commit as the deltas (module docstring)."""
-        latest = _latest_version(source)
+        latest = source.latest_version()
         if latest is None:
             return {"applied_from": None, "applied_to": None}
         applied = self.applied_version()
@@ -412,13 +401,9 @@ class IncrementalAggregate:
             # post-span base for extremum-losing groups: bucket-pruned
             # when the source's bucket key is a group column (the read
             # cost follows the loser set, not the source size)
-            if (
-                isinstance(source, BucketedTable)
-                and source.bucket_key in self.group_cols
-            ):
+            if source.bucket_key in self.group_cols:
                 return source.read_buckets(
-                    source.bucket_ids_of(losers, source.bucket_key),
-                    version=latest,
+                    source.bucket_ids_of(losers), version=latest
                 )
             return source.read(latest)
 

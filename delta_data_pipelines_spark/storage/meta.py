@@ -102,8 +102,8 @@ def drop_marker(root: str, version: int) -> None:
 def atomic_json_write(path: str, obj: Any) -> None:
     """THE atomic JSON write (tmp + os.replace) — the one place a
     durability fix (e.g. fsync-before-replace) lands for every meta
-    writer: the JsonMetaStore mixin below AND BucketedTable's
-    _meta.json schema updates route through here."""
+    writer: the JsonMetaStore mixin below AND VersionedTable's
+    _meta.json geometry route through here."""
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:

@@ -28,10 +28,10 @@ Consistency story (at-least-once ticks, exactly-once content):
   turns a second concurrent tail into ``ConcurrentWriteError`` on one
   side; the loser's watermark is untouched, so its retry converges.
 
-Scale posture: on the bucketed variant BOTH halves follow churn, not
-table size — ``changes()`` reads only buckets whose manifest pointer
-moved between the two versions, and ``apply_changes()`` rewrites only
-the buckets the feed touches, so a tick's cost is proportional to the
+Scale posture: on bucketed tables BOTH halves follow churn, not table
+size — ``changes()`` reads only buckets whose manifest entry moved
+between the two versions, and ``apply_changes()`` rewrites only the
+buckets the feed touches, so a tick's cost is proportional to the
 change volume however big the table. Source ``vacuum`` retention
 bounds how far a lagging tail can catch up from (Delta's exact
 contract); a tail lagging past retention must re-bootstrap.
@@ -45,16 +45,8 @@ from typing import Any
 
 from pyspark.sql import functions as F
 
-from .bucketed import BucketedTable
 from .meta import atomic_json_write
 from .table import VersionedTable
-
-
-def _latest_version(t: VersionedTable | BucketedTable) -> int | None:
-    if isinstance(t, VersionedTable):
-        return t.latest_version()
-    h = t.history()
-    return h[-1].version if h else None
 
 
 class ChangeFeedTail:
@@ -62,14 +54,14 @@ class ChangeFeedTail:
     ``replica.apply_changes()``, tracking the applied source version
     in ``<replica.root>/_replication.json``.
 
-    ``keys`` identify rows across versions (the CDC key set); for a
-    BucketedTable source/replica the bucket key must be among them
-    (the ``apply_changes`` bucket-scope rule)."""
+    ``keys`` identify rows across versions (the CDC key set); a
+    bucketed replica needs its bucket key among them (the
+    ``apply_changes`` bucket-scope rule)."""
 
     def __init__(
         self,
-        source: VersionedTable | BucketedTable,
-        replica: VersionedTable | BucketedTable,
+        source: VersionedTable,
+        replica: VersionedTable,
         keys: list[str],
     ) -> None:
         if not keys:
@@ -116,7 +108,7 @@ class ChangeFeedTail:
         ``changes(applied, latest)`` span, one atomic apply commit,
         then the watermark write — in that order, so a crash between
         them replays an idempotent span instead of skipping one."""
-        latest = _latest_version(self.source)
+        latest = self.source.latest_version()
         if latest is None:  # source not yet created
             return {"applied_from": None, "applied_to": None, "rows": 0}
         applied = self.applied_version()

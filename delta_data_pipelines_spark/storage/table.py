@@ -1,24 +1,44 @@
-"""Parquet-backed versioned table with a JSON commit log.
+"""Parquet-backed versioned table with a JSON commit log, unbucketed or
+hash-bucketed on a key.
 
 Layout:
     <root>/_log.json            read-optimized cache of the commit log
     <root>/_commits/0000NN.json per-version commit marker (the CAS
                                 commit point — source of truth for
                                 entries newer than the cache)
+    <root>/_meta.json           bucketed tables only: the geometry
+                                (bucket_key, n_buckets), recorded by
+                                the first commit
     <root>/v=0000NN-<token>/*.parquet
-                                immutable data snapshot for version NN
-                                (token makes concurrent writers'
-                                staging dirs collision-free)
+                                unbucketed: immutable data snapshot for
+                                version NN (token makes concurrent
+                                writers' staging dirs collision-free)
+    <root>/v=0000NN-<token>/_bucket=K/*.parquet
+                                bucketed: the buckets commit NN wrote;
+                                its entry's MANIFEST {bucket -> owner}
+                                names the dir holding each bucket's
+                                current rows
     <root>/v=0000NN-<token>/_change_data/*.parquet
-                                the rows commit NN changed (Delta's
-                                ``_change_data``): ``_change_type`` plus
-                                the row. Spark and pyarrow skip
-                                ``_``-prefixed dirs, so snapshot reads
-                                never see them; vacuum drops them with
-                                their snapshot.
+                                unbucketed: the rows commit NN changed
+                                (Delta's ``_change_data``):
+                                ``_change_type`` plus the row. Spark
+                                and pyarrow skip ``_``-prefixed dirs,
+                                so snapshot reads never see them;
+                                vacuum drops them with their snapshot.
+
+An unbucketed table is the one-bucket case: its snapshot dir is the
+one bucket. A bucketed table routes each row to bucket
+``pmod(xxhash64(bucket_key), n_buckets)``; a write reads only the
+buckets its source, feed or predicate touches, writes one new data dir
+for them, and points the manifest's untouched buckets at their old
+dirs — per-batch write cost O(batch + touched buckets), independent of
+table size, the contract of the reference's Mongo unique-index insert
+(mongodb_utils.py:21-36), which touches only the batch's keys. MERGE
+and APPLY CHANGES need the bucket key among their keys, so rows that
+can match share a bucket.
 
 Commit protocol (Delta optimistic-concurrency parity): write the
-snapshot to a writer-unique data dir, then atomically publish the
+data to a writer-unique data dir, then atomically publish the
 commit entry via exclusive-create of the per-version marker
 (``meta.reserve_version`` — the put-if-absent on ``_delta_log/N.json``).
 Two writers that raced from the same snapshot both compute version
@@ -30,11 +50,11 @@ each win but is only a cache: ``history()`` reconciles it with the
 marker tail, so a crash between marker and cache loses nothing.
 Readers always see complete versions.
 
-Every mutating op still writes a full snapshot — simple, correct, and
-at the reference's table sizes (≤ a few GB) cheap — but each commit
-also records the rows it changed (commit-time change data, as Delta
-writes for its change-data feed), so ``changes()`` reads work
-proportional to the change instead of diffing two full snapshots:
+An unbucketed commit writes a full snapshot — simple, correct, and at
+the reference's table sizes (≤ a few GB) cheap — so it also records
+the rows it changed (commit-time change data, as Delta writes for its
+change-data feed), and ``changes()`` reads work proportional to the
+change instead of diffing two full snapshots:
 
     merge, apply_changes   every row of every touched key, before the
                            commit (update_preimage / delete) and after
@@ -49,6 +69,9 @@ proportional to the change instead of diffing two full snapshots:
                            full snapshots, as do tables written
                            before commits recorded change data
 
+A bucketed commit records none: its ``changes()`` diffs only the
+buckets whose manifest entry moved, which already follows the churn.
+
 The per-commit counts in ``metrics`` come from the written files
 (parquet footers, or the ``_change_type`` column of the change rows),
 not from extra count jobs.
@@ -61,6 +84,7 @@ import os
 import shutil
 import time
 import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass
 from functools import reduce
 from typing import Any, Callable
@@ -73,7 +97,13 @@ from pyspark.sql.types import StructType
 
 from .constraints import CheckConstraints
 from ..operators.staging import release_staged
-from .meta import ConcurrentWriteError, drop_marker, marker_tail, reserve_version
+from .meta import (
+    ConcurrentWriteError,
+    atomic_json_write,
+    drop_marker,
+    marker_tail,
+    reserve_version,
+)
 
 __all__ = ["Commit", "ConcurrentWriteError", "VersionedTable", "snapshot_diff"]
 
@@ -187,10 +217,10 @@ def _morton_rank_frame(
 
 def snapshot_diff(old: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
     """Row-level diff between two snapshots keyed by ``keys`` — the
-    Delta change-data-feed row classification, defined ONCE for both
-    table variants: inserts (key only in new), deletes (key only in
-    old), and updates as BOTH ``update_preimage`` and
-    ``update_postimage`` rows. Key-only schemas cannot 'update'.
+    Delta change-data-feed row classification: inserts (key only in
+    new), deletes (key only in old), and updates as BOTH
+    ``update_preimage`` and ``update_postimage`` rows. Key-only
+    schemas cannot 'update'.
 
     Key-local by construction: each side is grouped by key into the
     SORTED list of its rows, and a key whose two lists differ emits
@@ -270,23 +300,42 @@ _CHANGE_DIR = "_change_data"
 _FIRST = {"kind": "snapshot"}
 _BEFORE = ("update_preimage", "delete")
 _AFTER = ("insert", "update_postimage")
+# a crash-orphaned merge spill is swept once its lease is this old
+_SPILL_GRACE_S = 3600
 
 
 def _parquet_files(path: str) -> list[str]:
-    return [
-        os.path.join(path, f) for f in sorted(os.listdir(path))
-        if f.endswith(".parquet")
-    ]
+    """Parquet files directly under ``path`` or under its
+    ``_bucket=K`` dirs (a bucketed data dir or spill)."""
+    out = []
+    for f in sorted(os.listdir(path)):
+        full = os.path.join(path, f)
+        if f.endswith(".parquet"):
+            out.append(full)
+        elif f.startswith("_bucket="):
+            out.extend(_parquet_files(full))
+    return out
 
 
-def _footer_rows(path: str) -> int:
-    """Rows in the parquet files directly under ``path``, from their
-    footers: no Spark job, no data read."""
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
+def _footer_rows(*paths: str) -> int:
+    """Rows in the parquet files under ``paths``, from their footers:
+    no Spark job, no data read."""
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows
+        for p in paths for f in _parquet_files(p)
+    )
 
 
 def _rows_metric(data_dir: str) -> dict[str, int]:
     return {"rows": _footer_rows(data_dir)}
+
+
+def _bucket_ids_in(path: str) -> list[int]:
+    """Bucket ids present as ``_bucket=K`` dirs under a written dir."""
+    return sorted(
+        int(d.split("=", 1)[1]) for d in os.listdir(path)
+        if d.startswith("_bucket=")
+    )
 
 
 def _change_counts(path: str) -> dict[str, int]:
@@ -298,6 +347,13 @@ def _change_counts(path: str) -> dict[str, int]:
         for vc in pc.value_counts(col).to_pylist():
             counts[vc["values"]] += vc["counts"]
     return counts
+
+
+def _recorded(data_dir: str) -> dict[str, int] | None:
+    """Change-row counts of the commit written to ``data_dir``, or None
+    when it recorded no change rows (a bucketed commit)."""
+    path = os.path.join(data_dir, _CHANGE_DIR)
+    return _change_counts(path) if os.path.isdir(path) else None
 
 
 def _restrict(df: DataFrame, touched: DataFrame, keys: list[str]) -> DataFrame:
@@ -344,31 +400,113 @@ def _compose(
     return before.drop(*helpers), after.drop(*helpers)
 
 
+def _owner_name(owner: Any) -> str:
+    """Data-dir name of a manifest owner: CAS-era manifests store the
+    name, legacy ones the integer version (``v=%06d`` layout)."""
+    if isinstance(owner, str) and owner.startswith("v="):
+        return owner
+    return f"v={int(owner):06d}"
+
+
+def _owner_version(owner: Any) -> int:
+    return int(_owner_name(owner)[2:].split("-", 1)[0])
+
+
+def _write_bucketed(df: DataFrame, path: str) -> None:
+    """One Spark job: ``df`` (with its ``_bucket`` column) as one file
+    per bucket under ``path/_bucket=K``."""
+    (
+        df.repartition("_bucket")
+        .write.mode("overwrite")
+        .partitionBy("_bucket")
+        .parquet(path)
+    )
+
+
 @dataclass
 class Commit:
     version: int
     action: str
     ts: float
     metrics: dict[str, Any]
-    # data dir name under the table root; None on entries written
-    # before the CAS protocol (legacy v=%06d layout)
+    # this commit's own data dir under the table root (a restore
+    # points at the restored one); None on entries written before the
+    # CAS protocol (legacy v=%06d layout) and on bucketed commits that
+    # wrote nothing
     data: str | None = None
     # what the commit recorded of the rows it changed (module doc):
     # {"kind": "rows", "keys": [...]} | {"kind": "keys"} |
     # {"kind": "empty"} | {"kind": "snapshot"}, plus the change rows'
     # "schema"; None = nothing, so a span over this commit falls back
-    # to the full snapshot diff
+    # to the snapshot diff of the moved buckets
     change_data: dict[str, Any] | None = None
     # the snapshot's schema (StructType JSON): reads pass it instead of
     # running a schema-inference job over the footers
     schema: str | None = None
+    # bucketed tables only: bucket id -> owning data dir name
+    manifest: dict[str, Any] | None = None
+
+    def as_json(self) -> dict[str, Any]:
+        # unbucketed entries carry no manifest key
+        return {k: v for k, v in self.__dict__.items()
+                if k != "manifest" or v is not None}
 
 
 class VersionedTable(CheckConstraints):
-    def __init__(self, spark: SparkSession, root: str):
+    # spill dirs of merges in flight IN THIS PROCESS: vacuum never
+    # sweeps these whatever their age (cross-process protection is the
+    # spill's _LEASE file)
+    _inflight_spills: set[str] = set()
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        bucket_key: str | None = None,
+        n_buckets: int | None = None,
+    ):
+        """Open or create a table. The bucket geometry is part of the
+        table, recorded in ``_meta.json`` by its first commit:
+        reopening loads it, and a CONFLICTING ``bucket_key`` /
+        ``n_buckets`` raises — a resume with another bucket count
+        would route keys to the wrong directories. Opening writes
+        nothing: a missing table stays missing until it commits."""
         self.spark = spark
         self.root = root
-        os.makedirs(root, exist_ok=True)
+        meta = self._meta()
+        if "bucket_key" in meta:
+            for arg, name in ((bucket_key, "bucket_key"), (n_buckets, "n_buckets")):
+                if arg is not None and arg != meta[name]:
+                    raise ValueError(
+                        f"table {root} was created with {name}={meta[name]!r}; "
+                        f"got {name}={arg!r}"
+                    )
+            bucket_key, n_buckets = meta["bucket_key"], meta["n_buckets"]
+        elif bucket_key is None:
+            if n_buckets not in (None, 1):
+                raise ValueError(f"n_buckets={n_buckets} needs a bucket_key")
+            n_buckets = 1
+        elif self.exists():
+            raise ValueError(
+                f"table {root} was created without buckets; got "
+                f"bucket_key={bucket_key!r}"
+            )
+        else:
+            n_buckets = 16 if n_buckets is None else n_buckets
+            if n_buckets < 1:
+                raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+        self.bucket_key = bucket_key
+        self.n_buckets = n_buckets
+
+    @property
+    def _meta_path(self) -> str:
+        return os.path.join(self.root, "_meta.json")
+
+    def _meta(self) -> dict[str, Any]:
+        if not os.path.exists(self._meta_path):
+            return {}
+        with open(self._meta_path) as f:
+            return json.load(f)
 
     # ---- log ------------------------------------------------------------
 
@@ -392,14 +530,39 @@ class VersionedTable(CheckConstraints):
         h = self.history()
         return h[-1].version if h else None
 
+    def exists(self) -> bool:
+        return self.latest_version() is not None
+
     def _write_log_cache(self, entries: list[Commit]) -> None:
         # writer-unique tmp name: two concurrent cache refreshes must
         # not interleave writes into one tmp file. Last replace wins;
         # a stale cache self-heals via history()'s marker-tail merge.
         tmp = f"{self._log_path}.tmp.{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
-            json.dump([e.__dict__ for e in entries], f, indent=1)
+            json.dump([e.as_json() for e in entries], f, indent=1)
         os.replace(tmp, self._log_path)
+
+    def _publish(
+        self, history: list[Commit], entry: Commit, data_dir: str | None = None
+    ) -> Commit:
+        """Commit ``entry`` as the next version: the first commit of a
+        bucketed table records its geometry, then the CAS-reserved
+        version marker is THE commit point (a loser removes its staged
+        ``data_dir`` and raises :class:`ConcurrentWriteError`)."""
+        if entry.manifest is not None:
+            entry.metrics = {**entry.metrics, "buckets_written": sum(
+                o == entry.data for o in entry.manifest.values())}
+            if not os.path.exists(self._meta_path):
+                atomic_json_write(self._meta_path, {
+                    "bucket_key": self.bucket_key, "n_buckets": self.n_buckets})
+        try:
+            reserve_version(self.root, entry.version, entry.as_json())
+        except ConcurrentWriteError:
+            if data_dir:
+                shutil.rmtree(data_dir, ignore_errors=True)
+            raise
+        self._write_log_cache(history + [entry])
+        return entry
 
     def _commit(
         self,
@@ -408,11 +571,16 @@ class VersionedTable(CheckConstraints):
         metrics: dict[str, Any] | Callable[[str], dict[str, Any]],
         change_rows: DataFrame | None = None,
         change_data: dict[str, Any] | None = None,
+        touched: list[int] | None = None,
     ) -> Commit:
-        """Write ``df`` as the next version's snapshot and ``change_rows``
-        (if any) under its ``_change_data/``, then publish the entry.
-        A callable ``metrics`` gets the written data dir, so counts come
-        from the files instead of count jobs."""
+        """Write ``df`` as the next version and publish it. Unbucketed,
+        ``df`` is the whole snapshot and ``change_rows`` (if any) go
+        under its ``_change_data/``. Bucketed, ``df`` holds the rows of
+        the ``touched`` buckets (None: all of them), the manifest keeps
+        every other bucket's owner, and no change rows are recorded:
+        the moved buckets already bound a diff. A callable
+        ``metrics`` gets the written data dir, so counts come from
+        the files instead of count jobs."""
         self._enforce_constraints(df)
         history = self.history()
         version = (history[-1].version + 1) if history else 0
@@ -420,10 +588,21 @@ class VersionedTable(CheckConstraints):
         # the same version can never clobber each other's files
         data_name = f"v={version:06d}-{uuid.uuid4().hex[:8]}"
         data_dir = os.path.join(self.root, data_name)
-        df.write.mode("overwrite").parquet(data_dir)
-        if change_rows is not None:
-            change_rows.write.parquet(os.path.join(data_dir, _CHANGE_DIR))
-            change_data = {**change_data, "schema": change_rows.schema.json()}
+        manifest = None
+        if self.bucket_key is None:
+            df.write.mode("overwrite").parquet(data_dir)
+            if change_rows is not None:
+                change_rows.write.parquet(os.path.join(data_dir, _CHANGE_DIR))
+                change_data = {**change_data, "schema": change_rows.schema.json()}
+        else:
+            manifest = {}
+            if touched is not None and history:
+                self._reject_type_changes(df, history[-1])
+                manifest = {b: o for b, o in self._manifest(history[-1]).items()
+                            if int(b) not in touched}
+            _write_bucketed(df.withColumn("_bucket", self._bucket_col()), data_dir)
+            manifest.update({str(b): data_name for b in _bucket_ids_in(data_dir)})
+            change_data = None
         entry = Commit(
             version=version,
             action=action,
@@ -432,49 +611,146 @@ class VersionedTable(CheckConstraints):
             data=data_name,
             change_data=change_data,
             schema=df.schema.json(),
+            manifest=manifest,
         )
-        try:
-            # THE commit point: put-if-absent of the version marker
-            reserve_version(self.root, version, entry.__dict__)
-        except ConcurrentWriteError:
-            shutil.rmtree(data_dir, ignore_errors=True)
-            raise
-        self._write_log_cache(history + [entry])
-        return entry
+        return self._publish(history, entry, data_dir)
 
-    def _data_dir(self, version: int) -> str:
-        for c in self.history():
-            if c.version == version:
-                if c.data:
-                    return os.path.join(self.root, c.data)
-                break
-        return os.path.join(self.root, f"v={version:06d}")
+    def _reject_type_changes(self, df: DataFrame, latest: Commit) -> None:
+        """A bucketed commit that keeps other buckets' files must not
+        change a column's type: those files are read under the new
+        schema. Raises before anything is written."""
+        schema = self._schema(latest)
+        if schema is None:
+            return
+        old = {f.name: f.dataType.simpleString() for f in schema.fields}
+        changed = [
+            f.name for f in df.schema.fields
+            if f.name in old and f.dataType.simpleString() != old[f.name]
+        ]
+        if changed:
+            raise ValueError(
+                f"schema evolution cannot change existing column types: "
+                f"{changed} (stored { {c: old[c] for c in changed} }); cast "
+                f"the source to the stored types or rewrite the table"
+            )
 
-    # ---- reads ----------------------------------------------------------
+    # ---- layout ---------------------------------------------------------
 
-    def _parquet(self, path: str, schema: str | None) -> DataFrame:
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(StructType.fromJson(json.loads(schema)))
-        return reader.parquet(path)
-
-    def exists(self) -> bool:
-        return self.latest_version() is not None
-
-    def read(self, version: int | None = None) -> DataFrame:
-        """Read the latest snapshot, or time-travel to ``version``."""
+    def _entry(self, version: int | None = None) -> Commit:
         h = self.history()
         if not h:
             raise FileNotFoundError(f"table {self.root} has no commits")
         if version is None:
-            version = h[-1].version
+            return h[-1]
         for c in h:
             if c.version == version:
-                name = c.data if c.data else f"v={version:06d}"
-                return self._parquet(os.path.join(self.root, name), c.schema)
-        raise ValueError(
-            f"version {version} not in {[c.version for c in h]}"
+                return c
+        raise ValueError(f"version {version} not in {[c.version for c in h]}")
+
+    def _manifest(self, c: Commit | None = None) -> dict[str, str]:
+        """bucket id -> owning data dir name of commit ``c`` (default:
+        the latest). An unbucketed snapshot is one bucket, its dir."""
+        c = c or self._entry()
+        if c.manifest is None:
+            return {"0": c.data or f"v={c.version:06d}"}
+        return {b: _owner_name(o) for b, o in c.manifest.items()}
+
+    def _leaves(self, c: Commit, buckets: list[int] | None = None) -> list[str]:
+        """Data dirs of commit ``c``'s snapshot, limited to ``buckets``."""
+        return [
+            os.path.join(self.root, o, *(
+                [f"_bucket={b}"] if self.bucket_key is not None else []))
+            for b, o in self._manifest(c).items()
+            if buckets is None or int(b) in buckets
+        ]
+
+    def _data_dir(self, version: int) -> str:
+        return os.path.join(self.root, self._entry(version).data or f"v={version:06d}")
+
+    def _schema(self, c: Commit) -> StructType | None:
+        # a bucketed table written before per-commit schemas kept one
+        # in _meta.json
+        s = c.schema if c.schema is not None else self._meta().get("schema")
+        if s is None:
+            return None
+        return StructType.fromJson(json.loads(s) if isinstance(s, str) else s)
+
+    def _bucket_col(self):
+        return F.pmod(F.xxhash64(F.col(self.bucket_key)), F.lit(self.n_buckets))
+
+    def bucket_ids_of(
+        self, df: DataFrame, key: str | None = None
+    ) -> list[int] | None:
+        """Distinct bucket ids the values of ``key`` (default: the
+        bucket key) hash into — the one function that drives
+        ``read_buckets`` pruning, so a probe can never drift from the
+        table's own bucket math. Collects ≤ n_buckets ints, never data.
+        None on an unbucketed table (no Spark job): its one bucket is
+        the whole table."""
+        if self.bucket_key is None:
+            return None
+        return sorted(
+            r[0]
+            for r in df.select(
+                F.pmod(F.xxhash64(F.col(key or self.bucket_key)),
+                       F.lit(self.n_buckets)).alias("_b")
+            )
+            .distinct()
+            .collect()
         )
+
+    def _check_keys(self, keys: list[str], role: str) -> None:
+        if self.bucket_key is not None and self.bucket_key not in keys:
+            raise ValueError(
+                f"bucket key {self.bucket_key!r} must be one of the {role} "
+                f"{keys} (rows that match must share a bucket)"
+            )
+
+    # ---- reads ----------------------------------------------------------
+
+    def read(self, version: int | None = None) -> DataFrame:
+        """Read the latest snapshot, or time-travel to ``version``."""
+        return self.read_buckets(None, version)
+
+    def read_buckets(
+        self, buckets: list[int] | None, version: int | None = None
+    ) -> DataFrame:
+        """Bucket-pruned scan: only the named buckets' files are read
+        (all of them for ``None``) — the layout-as-plan lever for key
+        probes. Reads pass the commit's schema: no inference job, and
+        buckets written before a schema-evolving merge read NULL in
+        the added columns."""
+        c = self._entry(version)
+        paths = self._leaves(c, buckets)
+        schema = self._schema(c)
+        if not paths:
+            return self.spark.createDataFrame([], schema)
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(*paths)
+
+    def bucket_stats(self) -> DataFrame:
+        """Per-bucket (bucket_id, n_rows, n_files, owning_version) —
+        the skew diagnostic for state tables: one hot bucket means the
+        bucket key is degenerate (e.g. boilerplate band hashes) and
+        per-batch merges rewrite disproportionate data. Counts come
+        from the parquet footers: no Spark job."""
+        c = self._entry()
+        rows = [
+            (int(b), _footer_rows(leaf), len(_parquet_files(leaf)),
+             _owner_version(o))
+            for (b, o), leaf in zip(self._manifest(c).items(), self._leaves(c))
+        ]
+        return self.spark.createDataFrame(
+            rows,
+            "bucket_id int, n_rows bigint, n_files int, owning_version int",
+        ).orderBy("bucket_id")
+
+    def generations(self) -> int:
+        """Distinct owning data dirs in the live manifest — the fan-out
+        :meth:`compact` collapses. Metadata-only."""
+        return len(set(self._manifest().values())) if self.exists() else 0
 
     # ---- writes ---------------------------------------------------------
 
@@ -484,12 +760,14 @@ class VersionedTable(CheckConstraints):
     def append(self, df: DataFrame) -> Commit:
         if not self.exists():
             return self._commit("append", df, _rows_metric, change_data=_FIRST)
+        touched = self.bucket_ids_of(df)
         return self._commit(
             "append",
-            self.read().unionByName(df),
+            self.read_buckets(touched).unionByName(df),
             _rows_metric,
             change_rows=df.withColumn("_change_type", F.lit("insert")),
             change_data={"kind": "keys"},
+            touched=touched,
         )
 
     def merge(
@@ -511,7 +789,8 @@ class VersionedTable(CheckConstraints):
 
         Null-key source rows are dropped first (mongodb_utils.py:24-26),
         and the source is deduplicated on the keys so one batch can't
-        insert the same key twice.
+        insert the same key twice. On a bucketed table the bucket key
+        must be one of ``keys``, so rows that can match share a bucket.
 
         ``schema_evolution=True`` — Delta ``mergeSchema`` parity: a
         source with NEW columns widens the table (old rows read NULL
@@ -521,16 +800,23 @@ class VersionedTable(CheckConstraints):
         False errors on any column-set mismatch, exactly as Delta MERGE
         does without the option.
 
-        The commit records its change rows — the target rows of every
+        The source is staged once, so the joins run inside the commit
+        write only: a localCheckpoint on an unbucketed table, released
+        after the commit; on a bucketed one a spill partitioned by
+        bucket, whose dirs name the touched buckets (no collect job) —
+        the hot-loop contract is the spill job plus the commit write.
+        Only the touched buckets are read and rewritten. An unbucketed
+        commit records its change rows — the target rows of every
         matched key (update_preimage), the rows that replace them
-        (update_postimage) and the inserted rows — and its
-        ``inserted`` / ``updated`` metrics are counted from them. The
-        source is staged once (localCheckpoint, released after the
-        commit), so the change rows and the snapshot do not each run
-        its lineage.
+        (update_postimage) and the inserted rows — and ``inserted`` /
+        ``updated`` count them; a bucketed commit counts from parquet
+        footers (rows written less rows replaced; source rows less
+        inserted), exact while the table's keys are unique — the
+        invariant merge maintains.
         """
         if when_matched not in {"ignore", "update"}:
             raise ValueError(when_matched)
+        self._check_keys(keys, "merge keys")
         for k in keys:
             source = source.where(F.col(k).isNotNull())
         source = source.dropDuplicates(keys)
@@ -541,22 +827,55 @@ class VersionedTable(CheckConstraints):
                 lambda d: {"inserted": _footer_rows(d), "updated": 0},
                 change_data=_FIRST,
             )
-        # staged: the change rows and the snapshot both consume the
-        # source, whose lineage (often a fetch transformer) must run once
-        staged = source.localCheckpoint(eager=True)
+        with self._staged(source) as (staged, touched, spill):
+            return self._merge(
+                staged, touched, spill, keys, when_matched, schema_evolution
+            )
+
+    @contextmanager
+    def _staged(self, source: DataFrame):
+        """``(staged source, touched buckets, spill dir)`` for a merge;
+        the stage is released on exit."""
+        if self.bucket_key is None:
+            staged = source.localCheckpoint(eager=True)
+            try:
+                yield staged, None, None
+            finally:
+                release_staged(staged)
+            return
+        # writer-unique spill dir: concurrent merges must not share it
+        # (vacuum sweeps crash-orphaned spills)
+        spill = os.path.join(self.root, f"_tmp_merge-{uuid.uuid4().hex[:8]}")
+        VersionedTable._inflight_spills.add(spill)
         try:
-            return self._merge(staged, keys, when_matched, schema_evolution)
+            bucketed = source.withColumn("_bucket", self._bucket_col())
+            _write_bucketed(bucketed, spill)
+            # cross-process liveness lease: the orphan sweep keys on
+            # this file's mtime, touched once the spill has landed
+            with open(os.path.join(spill, "_LEASE"), "w") as fh:
+                fh.write(str(time.time()))
+            # _bucket in the read schema parses the dir values as bigint
+            yield (
+                self.spark.read.schema(bucketed.schema).parquet(spill)
+                .drop("_bucket"),
+                _bucket_ids_in(spill),
+                spill,
+            )
         finally:
-            release_staged(staged)
+            VersionedTable._inflight_spills.discard(spill)
+            shutil.rmtree(spill, ignore_errors=True)
 
     def _merge(
         self,
         source: DataFrame,
+        touched: list[int] | None,
+        spill: str | None,
         keys: list[str],
         when_matched: str,
         schema_evolution: bool,
     ) -> Commit:
-        target = self.read()
+        replaced = self._leaves(self._entry(), touched)
+        target = self.read_buckets(touched)
         inserted = source.join(target.select(*keys), keys, "left_anti")
         changed = inserted.withColumn("_change_type", F.lit("insert"))
         if when_matched == "update":
@@ -590,27 +909,39 @@ class VersionedTable(CheckConstraints):
             )
 
         def metrics(data_dir: str) -> dict[str, int]:
-            n = _change_counts(os.path.join(data_dir, _CHANGE_DIR))
-            return {"inserted": n["insert"], "updated": n["update_postimage"]}
+            n = _recorded(data_dir)
+            if n is not None:
+                return {"inserted": n["insert"], "updated": n["update_postimage"]}
+            n_ins = _footer_rows(data_dir) - _footer_rows(*replaced)
+            return {
+                "inserted": n_ins,
+                "updated": (_footer_rows(spill) - n_ins
+                            if when_matched == "update" else 0),
+            }
 
         return self._commit(
-            "merge", out, metrics, changed, {"kind": "rows", "keys": list(keys)}
+            "merge", out, metrics, changed,
+            {"kind": "rows", "keys": list(keys)}, touched,
         )
 
     def delete_where(self, condition) -> Commit:
         """Predicate DELETE (↔ delete_many, S11:
-        del_unuse_record_in_mrestate.py:11-19). Records the deleted
-        rows as its change rows."""
-        target = self.read()
-        kept = target.where(~condition | condition.isNull())
+        del_unuse_record_in_mrestate.py:11-19), rewriting only the
+        buckets that hold a matching row. Records the deleted rows as
+        its change rows."""
+        touched = self.bucket_ids_of(self.read().where(condition))
+        replaced = self._leaves(self._entry(), touched)
+        target = self.read_buckets(touched)
         return self._commit(
             "delete",
-            kept,
-            _rows_metric,
+            target.where(~condition | condition.isNull()),
+            lambda d: {"rows": _footer_rows(d),
+                       "deleted": _footer_rows(*replaced) - _footer_rows(d)},
             change_rows=target.where(condition).withColumn(
                 "_change_type", F.lit("delete")
             ),
             change_data={"kind": "keys"},
+            touched=touched,
         )
 
     # ---- rotation / rollback / backup -----------------------------------
@@ -618,9 +949,20 @@ class VersionedTable(CheckConstraints):
     def restore(self, version: int) -> Commit:
         """RESTORE TABLE TO VERSION AS OF — the rollback the reference
         hand-rolls with last-data/old-data object juggling
-        (price_prediction_data_pipeline.py:228-268)."""
-        df = self.read(version)
-        return self._commit("restore", df, {"restored_from": version})
+        (price_prediction_data_pipeline.py:228-268). A new commit
+        pointing back at ``version``'s data: nothing is copied, history
+        is kept, and vacuum keeps the restored dirs alive."""
+        c = self._entry(version)
+        history = self.history()
+        return self._publish(history, Commit(
+            version=history[-1].version + 1,
+            action="restore",
+            ts=time.time(),
+            metrics={"restored_from": version},
+            data=self._manifest(c)["0"] if c.manifest is None else None,
+            schema=c.schema,
+            manifest=c.manifest,
+        ))
 
     def apply_changes(
         self,
@@ -632,7 +974,9 @@ class VersionedTable(CheckConstraints):
         """APPLY CHANGES INTO parity (the CDC consumer): apply a
         change feed in :func:`snapshot_diff`'s shape (``_change_type``
         ∈ insert / delete / update_preimage / update_postimage) to
-        this table as ONE atomic commit.
+        this table as ONE atomic commit that rewrites only the buckets
+        the feed touches (a bucket left empty loses its manifest
+        entry), so per-application cost follows the change volume.
 
         Deletes drop their keys, inserts and update POSTIMAGES upsert
         (last-writer-wins on key), preimages are informational and
@@ -646,16 +990,16 @@ class VersionedTable(CheckConstraints):
         with a NULL key identify no row and are dropped, as in
         :meth:`merge`.
 
-        The commit records its change rows: every table row of a key
-        the feed touches (update_preimage, or delete when the feed does
-        not upsert the key) and the upserted rows (update_postimage, or
-        insert for a new key). Its metrics count them: ``upserts`` rows
-        written for upserted keys, ``deletes`` rows actually removed.
-        ``record_changes=False`` is for a full recompute whose feed
-        upserts every key: its change rows would be two more copies of
-        the table, so the commit records none (a span over it diffs
-        full snapshots, as over an overwrite) and its metrics count
-        feed rows instead.
+        An unbucketed commit records its change rows: every table row
+        of a key the feed touches (update_preimage, or delete when the
+        feed does not upsert the key) and the upserted rows
+        (update_postimage, or insert for a new key). Its metrics count
+        them: ``upserts`` rows written for upserted keys, ``deletes``
+        rows actually removed. ``record_changes=False`` is for a full
+        recompute whose feed upserts every key: its change rows would
+        be two more copies of the table, so the commit records none (a
+        span over it diffs full snapshots, as over an overwrite). A
+        commit without change rows counts feed rows instead.
 
         The feed is STAGED once (localCheckpoint): a CDC feed is
         typically ``snapshot_diff`` — a full-snapshot join — and the
@@ -665,6 +1009,7 @@ class VersionedTable(CheckConstraints):
         pin in tests); the blocks are released once the commit lands."""
         if not keys:
             raise ValueError("keys required to apply a change feed")
+        self._check_keys(keys, "feed keys")
         staged = feed.localCheckpoint(eager=True)
         try:
             return self._apply(staged, keys, extra_metrics or {}, record_changes)
@@ -695,42 +1040,41 @@ class VersionedTable(CheckConstraints):
                            **extra_metrics},
                 change_data=_FIRST,
             )
-        target = self.read()
+        touched = self.bucket_ids_of(ups.select(*keys).unionByName(dels))
+        target = self.read_buckets(touched)
         kept = target.join(dels, keys, "left_anti")
         ups = ups.select(*kept.columns)
         out = kept.join(ups.select(*keys), keys, "left_anti").unionByName(ups)
-        if not record_changes:
-            return self._commit(
-                "apply_changes",
-                out,
-                {"upserts": ups.count(), "deletes": dels.count(),
-                 **extra_metrics},
+        probe = ups.select(*keys).unionByName(dels)
+        changed = None
+        if record_changes:
+            # before images (side 0) and after images (side 1) of every
+            # touched key, typed by whether the key has the other side
+            side = F.col("_side")
+            w = Window.partitionBy(*keys)
+            changed = (
+                target.join(probe, keys, "left_semi")
+                .withColumn("_side", F.lit(0))
+                .unionByName(ups.withColumn("_side", F.lit(1)))
+                .withColumn(
+                    "_change_type",
+                    F.when(
+                        side == 0,
+                        F.when(F.max(side).over(w) == 1, "update_preimage")
+                        .otherwise("delete"),
+                    ).otherwise(
+                        F.when(F.min(side).over(w) == 0, "update_postimage")
+                        .otherwise("insert")
+                    ),
+                )
+                .drop("_side")
             )
-        # before images (side 0) and after images (side 1) of every
-        # touched key, typed by whether the key has the other side
-        touched = ups.select(*keys).unionByName(dels)
-        side = F.col("_side")
-        w = Window.partitionBy(*keys)
-        changed = (
-            target.join(touched, keys, "left_semi")
-            .withColumn("_side", F.lit(0))
-            .unionByName(ups.withColumn("_side", F.lit(1)))
-            .withColumn(
-                "_change_type",
-                F.when(
-                    side == 0,
-                    F.when(F.max(side).over(w) == 1, "update_preimage")
-                    .otherwise("delete"),
-                ).otherwise(
-                    F.when(F.min(side).over(w) == 0, "update_postimage")
-                    .otherwise("insert")
-                ),
-            )
-            .drop("_side")
-        )
 
         def metrics(data_dir: str) -> dict[str, Any]:
-            n = _change_counts(os.path.join(data_dir, _CHANGE_DIR))
+            n = _recorded(data_dir)
+            if n is None:
+                return {"upserts": ups.count(), "deletes": dels.count(),
+                        **extra_metrics}
             return {
                 "upserts": n["insert"] + n["update_postimage"],
                 "deletes": n["delete"],
@@ -739,7 +1083,8 @@ class VersionedTable(CheckConstraints):
 
         return self._commit(
             "apply_changes", out, metrics, changed,
-            {"kind": "rows", "keys": list(keys)},
+            {"kind": "rows", "keys": list(keys)} if record_changes else None,
+            touched,
         )
 
     def changes(
@@ -749,23 +1094,28 @@ class VersionedTable(CheckConstraints):
         keys: list[str] | None = None,
     ) -> DataFrame:
         """Change-data-feed between two retained versions (Delta CDF
-        contract), keyed by ``keys`` (required — a VersionedTable has
-        no intrinsic key): exactly
+        contract), keyed by ``keys`` (default: the bucket key; an
+        unbucketed table has no intrinsic key): exactly
         ``snapshot_diff(read(from_version), read(to_version), keys)``.
 
-        Answered from the change rows the commits in the span recorded
-        (module doc): per key, the before rows of the first commit that
-        touched it and the after rows of the last one, passed through
-        :func:`snapshot_diff`. That is exact because snapshot_diff is
-        key-local, and it reads only ``_change_data`` for spans of
-        merges and apply_changes (append / delete_where spans also
-        read the adjacent snapshots, restricted to the touched keys by
-        a broadcast semi-join, so duplicate keys stay exact). A span
-        with a commit that recorded nothing (overwrite, restore, a
-        table written before change data) or recorded it under keys
-        that are not a subset of ``keys`` diffs the two full snapshots
-        instead. vacuum retention bounds reach.
+        When every commit in the span recorded its change rows (module
+        doc), the answer comes from them: per key, the before rows of
+        the first commit that touched it and the after rows of the
+        last one, passed through :func:`snapshot_diff`. That is exact
+        because snapshot_diff is key-local, and it reads only
+        ``_change_data`` for spans of merges and apply_changes (append
+        / delete_where spans also read the adjacent snapshots,
+        restricted to the touched keys by a broadcast semi-join, so
+        duplicate keys stay exact). Otherwise — a commit that recorded
+        nothing (bucketed, overwrite, restore, a table written before
+        change data) or recorded under keys that are not a subset of
+        ``keys`` — it diffs the buckets whose manifest entry moved
+        between the two versions: an untouched bucket proves itself
+        unchanged by metadata alone (exact when the bucket key is one
+        of ``keys``; otherwise every bucket is diffed). Unbucketed,
+        that is the full snapshot diff. vacuum retention bounds reach.
         """
+        keys = keys or ([self.bucket_key] if self.bucket_key else None)
         if not keys:
             raise ValueError("keys required to identify rows across versions")
         old = self.read(from_version)
@@ -778,7 +1128,17 @@ class VersionedTable(CheckConstraints):
             and set(c.change_data.get("keys", ())) <= set(keys)
             for c in span
         ):
-            return snapshot_diff(old, new, keys)
+            moved = None
+            if self.bucket_key in keys:
+                m0 = self._manifest(self._entry(from_version))
+                m1 = self._manifest(self._entry(to_version))
+                moved = [int(b) for b in set(m0) | set(m1)
+                         if m0.get(b) != m1.get(b)]
+            return snapshot_diff(
+                self.read_buckets(moved, from_version),
+                self.read_buckets(moved, to_version),
+                keys,
+            )
         images = [
             pair for c in span if (pair := self._images(c, keys)) is not None
         ]
@@ -804,10 +1164,9 @@ class VersionedTable(CheckConstraints):
         if kind == "snapshot":
             after = self.read(c.version)
             return after.limit(0), after
-        rows = self._parquet(
-            os.path.join(self.root, c.data, _CHANGE_DIR),
-            c.change_data["schema"],
-        )
+        rows = self.spark.read.schema(
+            StructType.fromJson(json.loads(c.change_data["schema"]))
+        ).parquet(os.path.join(self.root, c.data, _CHANGE_DIR))
         if kind == "rows":
             ct = F.col("_change_type")
             return (
@@ -824,8 +1183,9 @@ class VersionedTable(CheckConstraints):
 
     def clone(self, dest_root: str) -> "VersionedTable":
         """DEEP CLONE (↔ weekly mongodump backup, utils_of_backup.py:43-76):
-        copies the latest snapshot into a fresh single-version table."""
-        dest = VersionedTable(self.spark, dest_root)
+        copies the latest snapshot into a fresh single-version table of
+        the same geometry."""
+        dest = VersionedTable(self.spark, dest_root, self.bucket_key, self.n_buckets)
         dest.overwrite(self.read())
         return dest
 
@@ -848,23 +1208,31 @@ class VersionedTable(CheckConstraints):
         zorder_by: list[str] | None = None,
         zorder_method: str = "range",
     ) -> Commit:
-        """Delta ``OPTIMIZE`` parity: rewrite the latest snapshot into
-        evenly-sized files, as a new commit (time travel to the
-        pre-compaction layout still works until vacuum).
+        """Delta ``OPTIMIZE`` parity: rewrite the latest snapshot as a
+        new commit (time travel to the pre-compaction layout still
+        works until vacuum). Data content is identical (tests assert);
+        only layout changes.
 
-        Why it matters at scale: every ``merge``/``append`` commit
-        writes with the plan's own partitioning, so a table fed by a
-        micro-batch stream accretes one small-file generation per
-        batch — and scan cost at 100 TB is dominated by file count
-        (task scheduling + footer reads), not bytes. One round of
-        repartition-by-count restores ~``target_rows_per_file`` rows
-        per file. Repartition (shuffle) rather than coalesce:
-        coalesce glues adjacent partitions and inherits their skew,
-        which at scale recreates the straggler files compaction is
-        meant to remove. Data content is byte-identical (tests
-        assert); only layout changes.
+        Unbucketed, the rewrite is evenly-sized files. Every
+        ``merge``/``append`` commit writes with the plan's own
+        partitioning, so a table fed by a micro-batch stream accretes
+        one small-file generation per batch — and scan cost at 100 TB
+        is dominated by file count (task scheduling + footer reads),
+        not bytes. One round of repartition-by-count restores
+        ~``target_rows_per_file`` rows per file. Repartition (shuffle)
+        rather than coalesce: coalesce glues adjacent partitions and
+        inherits their skew, which at scale recreates the straggler
+        files compaction is meant to remove.
 
-        ``zorder_by`` is ``OPTIMIZE ZORDER BY`` parity: cluster the
+        Bucketed, files are already one per bucket; the rewrite
+        collapses OWNERSHIP. Partition-scoped merges leave each bucket
+        owned by the commit that last rewrote it, and a data dir still
+        owning one bucket stays alive through vacuum; after compact
+        every bucket has one owner, so a following ``vacuum`` can
+        release every older generation.
+
+        ``zorder_by`` (unbucketed only: the bucket layout is the
+        clustering) is ``OPTIMIZE ZORDER BY`` parity: cluster the
         rewrite on the Morton interleave of the named NUMERIC/temporal
         columns, so files are simultaneously narrow in EVERY named
         dimension and parquet row-group min/max stats prune scans
@@ -872,21 +1240,26 @@ class VersionedTable(CheckConstraints):
         key only). Each column is mapped to a 14-bit bucket over its
         [min, max] (one column-pruned agg pass), the buckets' bits are
         interleaved, and the rewrite range-partitions + sorts on that
-        key. Layout-only, like plain compaction."""
+        key."""
         if target_rows_per_file < 1:
             raise ValueError(
                 f"target_rows_per_file must be >= 1, got {target_rows_per_file}"
             )
         df = self.read()
         # NOT a second data pass: count(*) over a parquet scan prunes
-        # to zero columns and answers from row-group footers (the
-        # bucketed store's _footer_count pattern). Its cost is one
-        # task per file — which is the small-file problem compaction
-        # exists to fix, and a distributed footer read still beats a
-        # driver-side pyarrow loop over the same million files.
+        # to zero columns and answers from row-group footers. Its cost
+        # is one task per file — which is the small-file problem
+        # compaction exists to fix, and a distributed footer read
+        # still beats a single-process pyarrow loop over the same
+        # million files.
         n = df.count()
         n_files = max(1, -(-n // target_rows_per_file))  # ceil div
         if zorder_by:
+            if self.bucket_key is not None:
+                raise ValueError(
+                    "zorder_by applies to unbucketed tables only (the "
+                    "bucket layout is the clustering)"
+                )
             if zorder_method not in ("range", "rank"):
                 raise ValueError(
                     f"zorder_method must be 'range' or 'rank', "
@@ -911,7 +1284,8 @@ class VersionedTable(CheckConstraints):
                 .drop("_z")
             )
         else:
-            out = df.repartition(n_files)
+            # a bucketed write already lays out one file per bucket
+            out = df if self.bucket_key else df.repartition(n_files)
         return self._commit(
             "compact",
             out,
@@ -921,35 +1295,73 @@ class VersionedTable(CheckConstraints):
             change_data={"kind": "empty"},
         )
 
+    def maybe_compact(self, max_generations: int) -> Commit | None:
+        """The auto-compaction hook for continuous-merge loops (the
+        streaming state tables): :meth:`compact` iff the live manifest
+        spans more than ``max_generations`` owning data dirs, else do
+        nothing. The trigger reads only the manifest, so calling this
+        every micro-batch costs one JSON read when it doesn't fire —
+        the same posture as per-batch ``vacuum``. Under a steady merge
+        stream this bounds BOTH the generation count (≤
+        max_generations + 1 at any instant) and, through the following
+        vacuums, the on-disk data-dir count — which keeps per-batch
+        read planning flat however long the stream runs."""
+        if max_generations < 1:
+            raise ValueError(
+                f"max_generations must be >= 1, got {max_generations}"
+            )
+        if self.generations() <= max_generations:
+            return None
+        return self.compact()
+
     def vacuum(self, keep_last: int = 3) -> list[int]:
-        """Drop all but the last N snapshots (↔ keep-last-3 backup
-        retention, utils_of_backup.py:155-164). The log keeps only the
-        surviving versions; time travel beyond them is gone. Also
-        sweeps data dirs no surviving commit references — the staged
-        dirs of writers that lost a CAS race mid-crash (a live loser
-        removes its own) — but only at versions ≤ the latest kept
-        commit: a dir staged at latest+1 belongs to an in-flight
-        writer."""
+        """Drop history beyond the last N commits (↔ keep-last-3 backup
+        retention, utils_of_backup.py:155-164) and delete every data
+        dir no surviving commit references; returns the versions of
+        the dirs deleted. Time travel beyond the survivors is gone.
+
+        The sweep walks the disk, not the dropped log entries: a dir
+        can outlive its own log entry (a kept manifest still pointed an
+        untouched bucket at it) and only become garbage rounds later,
+        when that bucket is rewritten. It also reclaims the staged dirs
+        of writers that lost a CAS race mid-crash (a live loser removes
+        its own), but only at versions ≤ the latest kept commit: a dir
+        staged above it belongs to an in-flight writer. A merge spill
+        is swept only when no merge of this process holds it and its
+        ``_LEASE`` (or, lacking one, the dir) is older than an hour."""
         history = self.history()
         if len(history) <= keep_last:
             return []
         drop, keep = history[:-keep_last], history[-keep_last:]
-        for c in drop:
-            name = c.data if c.data else f"v={c.version:06d}"
-            shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
-            drop_marker(self.root, c.version)
-        self._write_log_cache(keep)
-        live = {c.data for c in keep if c.data} | {
-            f"v={c.version:06d}" for c in keep if not c.data
-        }
+        live = {o for c in keep for o in self._manifest(c).values()}
         latest = keep[-1].version
+        removed = []
+        now = time.time()
         for d in os.listdir(self.root):
+            path = os.path.join(self.root, d)
+            if d.startswith("_tmp_merge"):
+                if path in VersionedTable._inflight_spills:
+                    continue
+                lease = os.path.join(path, "_LEASE")
+                try:
+                    ref = os.path.getmtime(path)
+                    if os.path.exists(lease):
+                        ref = max(ref, os.path.getmtime(lease))
+                except OSError:
+                    continue
+                if now - ref > _SPILL_GRACE_S:
+                    shutil.rmtree(path, ignore_errors=True)
+                continue
             if not d.startswith("v=") or d in live:
                 continue
             try:
-                v = int(d[2:].split("-", 1)[0])
+                version = _owner_version(d)
             except ValueError:
                 continue
-            if v <= latest:
-                shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
-        return [c.version for c in drop]
+            if version <= latest:
+                shutil.rmtree(path, ignore_errors=True)
+                removed.append(version)
+        for c in drop:
+            drop_marker(self.root, c.version)
+        self._write_log_cache(keep)
+        return sorted(set(removed))

@@ -17,10 +17,10 @@ at-least-once delivery converges to exactly-once effect.
 
 At scale: the gate is a narrow projection (no shuffle); the dedup
 state is per content-hash key, bounded by the watermark; the MERGE
-matches only the batch's keys — pass a ``BucketedTable`` corpus
-(bucketed on ``_content_key``) so the WRITE is also batch-scoped
-(a ``VersionedTable`` corpus re-snapshots the full table per batch:
-fine for bounded backfills, wrong for an unbounded stream).
+matches only the batch's keys — pass a corpus bucketed on
+``_content_key`` so the WRITE is also batch-scoped (an unbucketed
+corpus re-snapshots the full table per batch: fine for bounded
+backfills, wrong for an unbounded stream).
 """
 
 from __future__ import annotations
@@ -29,12 +29,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..storage import BucketedTable, VersionedTable
+from ..storage import VersionedTable
 
 
 def run_streaming_curation(
     docs_stream: DataFrame,
-    corpus: VersionedTable | BucketedTable,
+    corpus: VersionedTable,
     checkpoint_dir: str,
     text_col: str = "text",
     ts_col: str | None = None,

@@ -69,13 +69,13 @@ from ..operators.dedup import (
     _window_starts,
     _word_arrays,
 )
-from ..storage import BucketedTable, VersionedTable
+from ..storage import VersionedTable
 
 
 def run_incremental_exact_substr(
     docs_stream: DataFrame,
     state_dir: str,
-    corpus: VersionedTable | BucketedTable,
+    corpus: VersionedTable,
     checkpoint_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -116,7 +116,7 @@ def run_incremental_exact_substr(
         raise ValueError(f"min_len must be >= 1, got {min_len}")
     L = int(min_len)
     spark = docs_stream.sparkSession
-    gram_table = BucketedTable(
+    gram_table = VersionedTable(
         spark,
         f"{state_dir}/window_hashes",
         bucket_key="_h",
@@ -128,7 +128,7 @@ def run_incremental_exact_substr(
     # replays are harmless). compact_exact_substr_residue sweeps the
     # published corpus against it to cut the first-arrival copies
     # ingest had to leave uncut.
-    dup_table = BucketedTable(
+    dup_table = VersionedTable(
         spark,
         f"{state_dir}/dup_hashes",
         bucket_key="_h",
@@ -223,14 +223,13 @@ def run_incremental_exact_substr(
                 F.min(F.col(id_col).cast("string")).alias("_origin")
             ),
             keys=["_h"],
-            metrics=False,
             # a pre-origin state table has only _h: the first batch
             # after an upgrade must widen it (legacy rows get NULL
             # origin = conservatively seen, the read-side shim above),
             # not crash the stream on a column-count mismatch
             schema_evolution=True,
         )
-        dup_table.merge(dup_h.distinct(), keys=["_h"], metrics=False)
+        dup_table.merge(dup_h.distinct(), keys=["_h"])
         # state maintenance: ownership fan-out is bounded per batch
         # (maybe_compact's manifest check is metadata-only when it
         # doesn't fire), then vacuum releases unreferenced dirs — so
@@ -253,7 +252,7 @@ def run_incremental_exact_substr(
 def compact_exact_substr_residue(
     spark,
     state_dir: str,
-    corpus: VersionedTable | BucketedTable,
+    corpus: VersionedTable,
     id_col: str = "doc_id",
     text_col: str = "text",
     min_len: int = 10,
@@ -295,11 +294,8 @@ def compact_exact_substr_residue(
     if min_len < 1:
         raise ValueError(f"min_len must be >= 1, got {min_len}")
     L = int(min_len)
-    dup_root = f"{state_dir}/dup_hashes"
-    if not BucketedTable.exists_at(dup_root) or not corpus.exists():
-        return {"docs_rewritten": 0, "docs_dropped": 0, "rows_after": 0}
-    dup_table = BucketedTable(spark, dup_root)
-    if not dup_table.exists():
+    dup_table = VersionedTable(spark, f"{state_dir}/dup_hashes")
+    if not dup_table.exists() or not corpus.exists():
         return {"docs_rewritten": 0, "docs_dropped": 0, "rows_after": 0}
 
     kept = corpus.read()

@@ -7,7 +7,7 @@ near-dup-checked against EVERYTHING ingested so far without ever
 recomputing the corpus — the accumulated state is a banded MinHash
 signature table on storage, not in the streaming state store, so it
 scales with the corpus and survives restarts for free. The state
-tables are hash-bucketed (``storage.BucketedTable``), so the per-batch
+tables are hash-bucketed ``VersionedTable``s, so the per-batch
 state MERGE rewrites only the buckets the batch touches — without
 that, merge-as-full-rewrite makes total ingest work O(n²).
 
@@ -43,7 +43,7 @@ command). Tested in tests/test_streaming.py.
 
 STATE LAYOUT: signatures bucket on band_hash, shingle sets on doc id
 (layout v2 — v1 bucketed both on doc id). Reopening a v1 state dir
-raises the BucketedTable geometry error by design; migrate by
+raises the table's geometry error by design; migrate by
 re-ingesting, or rebuild in place with ``migrate_state_layout``.
 """
 
@@ -61,13 +61,13 @@ from ..operators.dedup import (
     minhash_signatures,
     near_dup_clusters,
 )
-from ..storage import BucketedTable, VersionedTable
+from ..storage import VersionedTable
 
 
 def run_incremental_neardup(
     docs_stream: DataFrame,
     state_dir: str,
-    corpus: VersionedTable | BucketedTable,
+    corpus: VersionedTable,
     checkpoint_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -80,9 +80,9 @@ def run_incremental_neardup(
 ) -> StreamingQuery:
     """docs stream → in-batch collapse → vs-corpus LSH filter → MERGE.
 
-    The signature/shingle state tables are hash-bucketed
-    (``BucketedTable``) so each micro-batch's MERGE rewrites only the
-    buckets the batch touches — per-batch write cost is
+    The signature/shingle state tables are hash-bucketed so each
+    micro-batch's MERGE rewrites only the buckets the batch touches —
+    per-batch write cost is
     O(batch + corpus/n_state_buckets · touched), not O(corpus). READS
     are bucket-pruned the same way: signatures are bucketed by
     band_hash (the candidate probe's key) and shingle sets by doc id
@@ -113,13 +113,13 @@ def run_incremental_neardup(
     # instead of a full-table scan per micro-batch. band_hash rides in
     # the merge keys — a (doc, band) row has exactly one hash, so key
     # semantics are unchanged and matching rows always share a bucket.
-    sig_table = BucketedTable(
+    sig_table = VersionedTable(
         spark, f"{state_dir}/signatures", bucket_key="band_hash",
         n_buckets=n_state_buckets,
     )
     # shingle sets are probed by doc id (the verify join), so they keep
     # doc-id buckets and the same pruned-read trick applies there
-    hs_table = BucketedTable(
+    hs_table = VersionedTable(
         spark, f"{state_dir}/shingle_sets", bucket_key=id_col,
         n_buckets=n_state_buckets,
     )
@@ -231,13 +231,8 @@ def run_incremental_neardup(
                 hs_table.bucket_ids_of(sigs, id_col)
             ).select(id_col)
             new_banded = banded.join(known, id_col, "left_anti")
-        # metrics=False: per-batch inserted/updated counts would add
-        # footer-count jobs to every micro-batch; buckets_written (the
-        # bounded-write contract metric) is recorded regardless
-        sig_table.merge(
-            new_banded, keys=[id_col, "band_id", "band_hash"], metrics=False
-        )
-        hs_table.merge(sigs.select(id_col, "_hs"), keys=[id_col], metrics=False)
+        sig_table.merge(new_banded, keys=[id_col, "band_id", "band_hash"])
+        hs_table.merge(sigs.select(id_col, "_hs"), keys=[id_col])
         # retention: superseded bucket dirs would otherwise accumulate
         # one generation per micro-batch, forever; state tables need no
         # deep time travel, so prune beyond the last few commits
@@ -271,16 +266,14 @@ def migrate_state_layout(spark, state_dir: str) -> bool:
     import shutil
 
     root = f"{state_dir}/signatures"
-    if not BucketedTable.exists_at(root):
-        return False
-    old = BucketedTable(spark, root)
-    if old.bucket_key == "band_hash":
+    old = VersionedTable(spark, root)
+    if not old.exists() or old.bucket_key == "band_hash":
         return False
     rows = old.read().localCheckpoint(eager=True)
     tmp_root = root + ".migrating"
     if os.path.exists(tmp_root):
         shutil.rmtree(tmp_root)
-    new = BucketedTable(
+    new = VersionedTable(
         spark, tmp_root, bucket_key="band_hash", n_buckets=old.n_buckets
     )
     new.overwrite(rows)
@@ -292,7 +285,7 @@ def migrate_state_layout(spark, state_dir: str) -> bool:
 def compact_neardup_residue(
     spark,
     state_dir: str,
-    corpus: VersionedTable | BucketedTable,
+    corpus: VersionedTable,
     id_col: str = "doc_id",
     threshold: float = 0.8,
     max_bucket: int = 10_000,
@@ -322,14 +315,9 @@ def compact_neardup_residue(
     buckets hotter than even this cap is templated boilerplate — the
     quality gate's problem, not pair verification's.
     """
-    # check BEFORE constructing: BucketedTable() creates metadata and
-    # raises on a missing bucket_key, so a never-ingested state dir
-    # must short-circuit here, not in the constructor
-    if not BucketedTable.exists_at(f"{state_dir}/signatures") or not corpus.exists():
-        return {"pairs": 0, "removed": 0, "rows_after": 0}
-    sig_table = BucketedTable(spark, f"{state_dir}/signatures")
-    hs_table = BucketedTable(spark, f"{state_dir}/shingle_sets")
-    if not sig_table.exists():
+    sig_table = VersionedTable(spark, f"{state_dir}/signatures")
+    hs_table = VersionedTable(spark, f"{state_dir}/shingle_sets")
+    if not sig_table.exists() or not corpus.exists():
         return {"pairs": 0, "removed": 0, "rows_after": 0}
 
     cand = _candidates(sig_table.read(), id_col, max_bucket)

@@ -392,9 +392,9 @@ def test_ivf_serve_reads_only_probe_buckets(spark, registry):
     # denominator from the LATEST manifest only: v=* would count every
     # retained generation after a refresh, letting a pruning regression
     # (scanning all of ONE generation) pass vacuously
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
 
-    cells = BucketedTable(spark, cells_root)
+    cells = VersionedTable(spark, cells_root)
     all_parquet = cells.read().inputFiles()
     df = registry["sim_ivf_serve"](spark, SF)
     scanned = set(df.inputFiles())

@@ -156,6 +156,34 @@ def test_tpch_q4_interval_preserves_time_of_day(spark, tmp_path):
     assert got == {"2-HIGH": 1}
 
 
+def test_tpch_q21_rejects_null_suppkey(spark, tmp_path):
+    """q21 decides EXISTS / NOT EXISTS on per-order min/max supplier
+    aggregates, which equal the oracle's ``<>`` predicates only when
+    every line has a supplier. One NULL l_suppkey must fail the query,
+    not return a silently different answer."""
+    import datetime as dt
+
+    import pytest
+
+    from delta_data_pipelines_spark.queries.tpch import tpch_q21
+
+    od = dt.datetime(1996, 7, 1)
+    late = od + dt.timedelta(days=90)
+    spark.createDataFrame(
+        [(1, "F", od), (2, "F", od)],
+        "o_orderkey long, o_orderstatus string, o_orderdate timestamp",
+    ).write.parquet(str(tmp_path / "orders.parquet"))
+    spark.createDataFrame(
+        [(1, "Supplier#1"), (2, "Supplier#2")], "s_suppkey long, s_name string"
+    ).write.parquet(str(tmp_path / "supplier.parquet"))
+    lines = [(1, 1, late), (1, 2, od), (2, 1, late), (2, None, od)]
+    spark.createDataFrame(
+        lines, "l_orderkey long, l_suppkey long, l_shipdate timestamp"
+    ).write.parquet(str(tmp_path / "lineitem.parquet"))
+    with pytest.raises(Exception, match="NULL l_suppkey"):
+        tpch_q21(spark, str(tmp_path)).collect()
+
+
 @settings(**_SETTINGS)
 @given(
     st.lists(

@@ -128,14 +128,14 @@ def test_delta_adapter_surface():
 
 
 # ---------------------------------------------------------------------------
-# BucketedTable: partition-scoped merges
+# Bucketed tables: partition-scoped merges
 # ---------------------------------------------------------------------------
 
 
 def _bucket_dirs(bt, version):
     import os
 
-    vdir = bt._version_dir(version)
+    vdir = bt._data_dir(version)
     return sorted(
         int(d.split("=", 1)[1])
         for d in os.listdir(vdir)
@@ -145,9 +145,9 @@ def _bucket_dirs(bt, version):
 
 @pytest.fixture()
 def btable(spark, tmp_path):
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
 
-    return BucketedTable(
+    return VersionedTable(
         spark, str(tmp_path / "bt"), bucket_key="content_url", n_buckets=8
     )
 
@@ -213,7 +213,7 @@ def test_bucketed_time_travel_and_vacuum_keeps_live_dirs(spark, btable):
     # v0 holds buckets still referenced by the last manifests: kept
     # (its log ENTRY is pruned, so resolve the dir via the manifest)
     assert c0.version not in removed
-    live_dirs = {btable._owner_dir(v) for v in btable._manifest().values()}
+    live_dirs = {os.path.join(btable.root, v) for v in btable._manifest().values()}
     assert os.path.join(btable.root, c0.data) in live_dirs
     assert all(os.path.isdir(d) for d in live_dirs)
     assert btable.read().count() == 54
@@ -242,17 +242,19 @@ def test_bucketed_read_buckets_prunes(spark, btable):
 
 
 def test_bucketed_geometry_persisted_and_conflicts_raise(spark, tmp_path):
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
 
-    BucketedTable(spark, str(tmp_path / "g"), bucket_key="content_url", n_buckets=4)
+    VersionedTable(
+        spark, str(tmp_path / "g"), bucket_key="content_url", n_buckets=4
+    ).overwrite(rows(spark, [("u1", "a", 1)]))
     # reopen with no args: geometry loaded from _meta.json
-    re = BucketedTable(spark, str(tmp_path / "g"))
+    re = VersionedTable(spark, str(tmp_path / "g"))
     assert (re.bucket_key, re.n_buckets) == ("content_url", 4)
     # conflicting geometry would corrupt the layout: refuse
     with pytest.raises(ValueError, match="n_buckets"):
-        BucketedTable(spark, str(tmp_path / "g"), bucket_key="content_url", n_buckets=8)
+        VersionedTable(spark, str(tmp_path / "g"), bucket_key="content_url", n_buckets=8)
     with pytest.raises(ValueError, match="bucket_key"):
-        BucketedTable(spark, str(tmp_path / "g2"))  # new table needs a key
+        VersionedTable(spark, str(tmp_path / "g2"), n_buckets=8)  # needs a key
 
 
 def test_bucketed_vacuum_reclaims_dirs_whose_entry_was_already_pruned(
@@ -273,10 +275,7 @@ def test_bucketed_vacuum_reclaims_dirs_whose_entry_was_already_pruned(
     # rewrite every bucket so no manifest references any old generation
     btable.overwrite(btable.read())
     btable.vacuum(keep_last=1)
-    live = {
-        os.path.basename(btable._owner_dir(v))
-        for v in btable._manifest().values()
-    }
+    live = set(btable._manifest().values())
     on_disk = {d for d in os.listdir(btable.root) if d.startswith("v=")}
     assert on_disk == live, f"leaked version dirs: {sorted(on_disk - live)}"
     assert btable.read().count() == 58
@@ -297,17 +296,19 @@ def test_bucketed_delete_all_then_read_returns_empty(spark, btable):
 
 
 def test_bucketed_refuses_foreign_commit_log(spark, tmp_path):
-    """Opening a VersionedTable layout as a BucketedTable must raise,
+    """Reopening an unbucketed table with a bucket geometry must raise,
     not silently adopt it with empty manifests (data would vanish)."""
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
 
     vt = VersionedTable(spark, str(tmp_path / "vt"))
     vt.overwrite(rows(spark, [("u1", "a", 1)]))
-    with pytest.raises(ValueError, match="not a .*BucketedTable"):
-        BucketedTable(
+    import os
+
+    with pytest.raises(ValueError, match="created without buckets"):
+        VersionedTable(
             spark, str(tmp_path / "vt"), bucket_key="content_url", n_buckets=8
         )
-    assert not BucketedTable.exists_at(str(tmp_path / "vt"))
+    assert not os.path.exists(str(tmp_path / "vt" / "_meta.json"))
 
 
 def test_bucketed_restore_is_metadata_only_rollback(spark, btable):
@@ -334,9 +335,9 @@ def test_bucketed_restore_is_metadata_only_rollback(spark, btable):
 def test_bucketed_bucket_stats_counts_and_skew(spark, tmp_path):
     """bucket_stats must report per-bucket row counts that sum to the
     table and reflect deliberate skew (one hot key value)."""
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
 
-    bt = BucketedTable(
+    bt = VersionedTable(
         spark, str(tmp_path / "bs"), bucket_key="k", n_buckets=4
     )
     rows = [("hot", i) for i in range(40)] + [(f"k{i}", i) for i in range(10)]
@@ -357,9 +358,9 @@ def test_bucketed_commit_ignores_orphaned_version_dir(spark, tmp_path):
     the latest kept commit."""
     import os
 
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
 
-    bt = BucketedTable(spark, str(tmp_path / "cr"), bucket_key="k", n_buckets=2)
+    bt = VersionedTable(spark, str(tmp_path / "cr"), bucket_key="k", n_buckets=2)
     bt.overwrite(spark.createDataFrame([("a", 1)], "k string, v int"))
     orphan_root = os.path.join(bt.root, "v=000001-deadbeef")
     orphan = os.path.join(orphan_root, "_bucket=0")
@@ -587,43 +588,42 @@ def test_bucketed_changes_cdf(spark, btable):
 
 
 def test_bucketed_merge_job_count(spark, tmp_path):
-    """The hot-streaming-loop contract: a metrics=False merge runs the
-    two write actions (source spill + merge write) plus at most one
-    broadcast-exchange submit — never per-metric count jobs — and a
-    first commit adopts the spill directory in a single job.  AQE is
+    """The hot-streaming-loop contract: a merge runs the two write
+    actions (source spill + merge write) plus at most one
+    broadcast-exchange submit — its counts come from parquet footers,
+    never count jobs — and a first commit is a single job.  AQE is
     disabled for the measurement because it splits one action into a
     job per materialized shuffle stage, which would make the count
     reflect the planner, not the merge's action shape."""
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
 
     sc = spark.sparkContext
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        bt = BucketedTable(
+        bt = VersionedTable(
             spark, str(tmp_path / "jc"), bucket_key="k", n_buckets=8
         )
         seed = spark.createDataFrame(
             [(f"u{i}", i) for i in range(50)], "k string, v int"
         )
         sc.setJobGroup("jc-first", "first merge")
-        bt.merge(seed, keys=["k"], metrics=False)
+        bt.merge(seed, keys=["k"])
         sc.setJobGroup("jc-hot", "hot-loop merge")
         bt.merge(
             spark.createDataFrame([("zz", 1)], "k string, v int"),
             keys=["k"],
-            metrics=False,
         )
         sc.setJobGroup("jc-done", "")
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     st = sc.statusTracker()
-    assert len(st.getJobIdsForGroup("jc-first")) == 1  # adopted spill
+    assert len(st.getJobIdsForGroup("jc-first")) == 1
     assert len(st.getJobIdsForGroup("jc-hot")) <= 3
-    # and the data is right despite the skipped metric jobs
+    # and the data and counts are right without metric jobs
     assert bt.read().count() == 51
     assert bt.history()[-1].metrics == {
-        "inserted": -1, "updated": -1, "buckets_written": 1,
+        "inserted": 1, "updated": 0, "buckets_written": 1,
     }
 
 
@@ -679,6 +679,8 @@ def test_bucketed_compact_collapses_generations(spark, btable):
     version last rewrote them, pinning every such version dir through
     vacuum. compact() re-owns ALL buckets under one version, after
     which vacuum(keep_last=1) releases every older generation."""
+    from delta_data_pipelines_spark.storage.table import _owner_version
+
     # three merges touching different key ranges -> manifest spans
     # multiple owning versions
     for wave in range(3):
@@ -696,7 +698,7 @@ def test_bucketed_compact_collapses_generations(spark, btable):
 
     removed = btable.vacuum(keep_last=1)
     # old generations released
-    assert set(removed) >= {btable._owner_version(o) for o in owners_before}
+    assert set(removed) >= {_owner_version(o) for o in owners_before}
     assert sorted(tuple(r) for r in btable.read().collect()) == before
 
 
@@ -944,25 +946,22 @@ def test_versioned_history_reconciles_marker_tail_after_cache_loss(
 def test_bucketed_concurrent_writers_conflict_not_lost_update(
     spark, btable, monkeypatch
 ):
-    """BucketedTable shares the CAS commit point: a merge raced from a
+    """A bucketed table shares the CAS commit point: a merge raced from a
     stale snapshot conflicts; the winner's buckets and manifest are
     untouched (writers stage to unique dirs, so the loser can never
     clobber the winner's files pre-CAS either)."""
-    from delta_data_pipelines_spark.storage import (
-        BucketedTable,
-        ConcurrentWriteError,
-    )
+    from delta_data_pipelines_spark.storage import ConcurrentWriteError
 
     btable.overwrite(rows(spark, [(f"u{i}", "x", i) for i in range(20)]))
     stale = btable.history()
     btable.merge(rows(spark, [("win", "w", 1)]), keys=["content_url"])
 
-    loser = BucketedTable(spark, btable.root)
+    loser = VersionedTable(spark, btable.root)
     monkeypatch.setattr(loser, "history", lambda: stale)
     with pytest.raises(ConcurrentWriteError, match="version 1"):
         loser.merge(rows(spark, [("lose", "l", 2)]), keys=["content_url"])
 
-    fresh = BucketedTable(spark, btable.root)
+    fresh = VersionedTable(spark, btable.root)
     assert fresh.latest_version() == 1
     got = {r["content_url"] for r in fresh.read().collect()}
     assert "win" in got and "lose" not in got and len(got) == 21
@@ -986,9 +985,9 @@ def test_bucketed_history_reconciles_marker_tail_after_cache_loss(
     with open(log, "w") as f:
         _json.dump(entries[:1], f)
 
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
 
-    t2 = BucketedTable(spark, btable.root)
+    t2 = VersionedTable(spark, btable.root)
     assert [c.version for c in t2.history()] == [0, 1]
     assert t2.read().count() == 2
     t2.merge(rows(spark, [("u3", "c", 3)]), keys=["content_url"])
@@ -1043,7 +1042,7 @@ def test_apply_changes_executes_feed_once(spark, table, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql.types import StringType
 
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
 
     acc = spark.sparkContext.accumulator(0)
 
@@ -1076,7 +1075,7 @@ def test_apply_changes_executes_feed_once(spark, table, tmp_path):
     assert acc.value == n_rows, f"feed executed {acc.value / n_rows}x"
 
     acc.value = 0
-    bt = BucketedTable(
+    bt = VersionedTable(
         spark, str(tmp_path / "exec_once_b"), bucket_key="content_url",
         n_buckets=4,
     )
@@ -1094,12 +1093,12 @@ def test_bucketed_apply_changes_roundtrip_and_bucket_scope(
     content-idempotent."""
     from pyspark.sql import functions as F
 
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
 
     src = btable
     seed = rows(spark, [(f"u{i}", "x", i) for i in range(60)])
     src.overwrite(seed)
-    replica = BucketedTable(
+    replica = VersionedTable(
         spark, str(tmp_path / "brep"), bucket_key="content_url", n_buckets=8
     )
     replica.overwrite(seed)
@@ -1138,7 +1137,7 @@ def test_bucketed_apply_changes_roundtrip_and_bucket_scope(
     assert got2 == want
 
     # a bucket emptied by deletes loses its pointer
-    solo = BucketedTable(
+    solo = VersionedTable(
         spark, str(tmp_path / "bsolo"), bucket_key="k", n_buckets=2
     )
     solo.overwrite(spark.createDataFrame([("a", 1)], "k string, v int"))
@@ -1229,7 +1228,7 @@ def test_change_feed_tail_bucketed_touches_only_moved_buckets(
     reads only moved-pointer source buckets and apply_changes rewrites
     only fed replica buckets — proven by untouched replica pointers
     surviving verbatim across a tick that mutates one key."""
-    from delta_data_pipelines_spark.storage import BucketedTable, ChangeFeedTail
+    from delta_data_pipelines_spark.storage import ChangeFeedTail, VersionedTable
 
     src = btable
     batch = rows(
@@ -1237,7 +1236,7 @@ def test_change_feed_tail_bucketed_touches_only_moved_buckets(
         [(f"u{i}", f"t{i}", i) for i in range(16)],
     )
     src.merge(batch, keys=["content_url"])
-    replica = BucketedTable(
+    replica = VersionedTable(
         spark, str(tmp_path / "cft_breplica"), bucket_key="content_url",
         n_buckets=8,
     )
@@ -1310,9 +1309,9 @@ def test_maybe_compact_bounds_generations_on_a_merge_stream(
     import os
     import time as _time
 
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
 
-    bt = BucketedTable(
+    bt = VersionedTable(
         spark, str(tmp_path / "mc"), bucket_key="k", n_buckets=8
     )
     MAXGEN = 4
@@ -1323,7 +1322,7 @@ def test_maybe_compact_bounds_generations_on_a_merge_stream(
             [(f"k{i}", i)], "k string, v long"
         )
         t0 = _time.time()
-        bt.merge(batch, keys=["k"], metrics=False)
+        bt.merge(batch, keys=["k"])
         if bt.maybe_compact(MAXGEN) is not None:
             compactions += 1
         bt.vacuum(keep_last=3)
@@ -1345,9 +1344,9 @@ def test_maybe_compact_bounds_generations_on_a_merge_stream(
 
 
 def test_maybe_compact_validates_and_noops_below_threshold(spark, tmp_path):
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
 
-    bt = BucketedTable(
+    bt = VersionedTable(
         spark, str(tmp_path / "mc2"), bucket_key="k", n_buckets=4
     )
     with pytest.raises(ValueError):
@@ -1371,9 +1370,9 @@ def test_vacuum_spill_sweep_respects_lease_and_registry(spark, tmp_path):
     import os
     import time as _time
 
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
 
-    bt = BucketedTable(
+    bt = VersionedTable(
         spark, str(tmp_path / "vs"), bucket_key="k", n_buckets=4
     )
     for i in range(4):  # enough history for vacuum to run its sweep
@@ -1394,7 +1393,7 @@ def test_vacuum_spill_sweep_respects_lease_and_registry(spark, tmp_path):
     reg = os.path.join(bt.root, "_tmp_merge-registered")
     os.makedirs(reg)
     os.utime(reg, (old, old))
-    BucketedTable._inflight_spills.add(reg)
+    VersionedTable._inflight_spills.add(reg)
 
     # (c) ancient dir, stale lease
     orphan = os.path.join(bt.root, "_tmp_merge-orphan")
@@ -1410,7 +1409,7 @@ def test_vacuum_spill_sweep_respects_lease_and_registry(spark, tmp_path):
         assert os.path.exists(reg)
         assert not os.path.exists(orphan)
     finally:
-        BucketedTable._inflight_spills.discard(reg)
+        VersionedTable._inflight_spills.discard(reg)
 
 
 # ---------------------------------------------------------------------------
@@ -1524,7 +1523,6 @@ def test_incremental_aggregate_bucketed_touches_only_fed_buckets(
     from pyspark.sql import functions as F
 
     from delta_data_pipelines_spark.storage import (
-        BucketedTable,
         IncrementalAggregate,
         VersionedTable,
     )
@@ -1532,7 +1530,7 @@ def test_incremental_aggregate_bucketed_touches_only_fed_buckets(
     src = VersionedTable(spark, str(tmp_path / "agg_src"))
     data = [(f"u{i}", f"g{i % 6}", i) for i in range(24)]
     src.overwrite(rows(spark, data))
-    view = BucketedTable(
+    view = VersionedTable(
         spark, str(tmp_path / "agg_b"), bucket_key="title", n_buckets=8
     )
     agg = IncrementalAggregate(view, ["title"], ["price"])
@@ -1849,9 +1847,11 @@ def _cd_op(unique: bool):
 
 @st.composite
 def _cd_history(draw):
+    # None: unbucketed; else that many buckets on the key
+    n_buckets = draw(st.sampled_from([None, 2, 3]))
     unique = draw(st.booleans())
     first = draw(st.sampled_from(["overwrite", "merge", "append", "apply_changes"]))
-    return unique, first, draw(_cd_batch(unique)), draw(
+    return n_buckets, unique, first, draw(_cd_batch(unique)), draw(
         st.lists(_cd_op(unique), min_size=1, max_size=3)
     )
 
@@ -1924,16 +1924,22 @@ def test_changes_from_change_data_equal_full_snapshot_diff(
     """For any mix of commits — merge (ignore/update, with and without
     schema evolution), apply_changes, append, delete_where, overwrite,
     restore, compact, vacuum — over unique- and duplicate-key data
-    (NULL keys included), ``changes(v0, v1, keys)`` answered from the
-    commits' change rows equals the full ``snapshot_diff`` of the two
-    snapshots, for every retained pair (and, over the whole retained
-    span, for a superset of the recorded keys). One collect per side."""
+    (NULL keys included), on an unbucketed table or one bucketed on the
+    key, ``changes(v0, v1, keys)`` — answered from the commits' change
+    rows, or from the buckets that moved — equals the full
+    ``snapshot_diff`` of the two snapshots, for every retained pair
+    (and, over the whole retained span, for a superset of the recorded
+    keys). One collect per side."""
     import uuid
     from functools import reduce
 
     from delta_data_pipelines_spark.storage.table import snapshot_diff
 
-    table = VersionedTable(spark, str(tmp_path / uuid.uuid4().hex))
+    n_buckets, *history = history
+    table = VersionedTable(
+        spark, str(tmp_path / uuid.uuid4().hex),
+        bucket_key="k" if n_buckets else None, n_buckets=n_buckets,
+    )
     _cd_run(spark, table, *history)
     versions = [c.version for c in table.history()]
     spans = [(["k"], v0, v1) for i, v0 in enumerate(versions)

@@ -342,7 +342,7 @@ def test_streaming_curation_matches_batch_gate(spark, tmp_path):
 
     from delta_data_pipelines_spark.catalog import read_table
     from delta_data_pipelines_spark.jobs.curate_corpus import quality_gate
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
     from delta_data_pipelines_spark.streaming.curate import run_streaming_curation
 
     docs = read_table(spark, SF_DIR, "documents")
@@ -356,7 +356,7 @@ def test_streaming_curation_matches_batch_gate(spark, tmp_path):
 
     # bucketed corpus: the unbounded-stream configuration (per-batch
     # MERGE rewrites only touched buckets, not the whole table)
-    corpus = BucketedTable(
+    corpus = VersionedTable(
         spark, str(tmp_path / "corpus"), bucket_key="_content_key", n_buckets=8
     )
     for attempt in range(2):  # second run = full re-delivery
@@ -609,15 +609,15 @@ def test_incremental_neardup_chain_residue_under_adversarial_order(spark, tmp_pa
     # read bucket-pruned) — a 1-doc batch writes at most its BANDS=16
     # band buckets, bounded by the batch's bands, never the table
     from delta_data_pipelines_spark.operators.dedup import BANDS
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
 
-    hs = BucketedTable(
+    hs = VersionedTable(
         spark, str(tmp_path / "chain_state" / "shingle_sets"), bucket_key="doc_id"
     )
     merges = [c for c in hs.history() if c.action == "merge"]
     assert len(merges) == 3
     assert all(c.metrics["buckets_written"] == 1 for c in merges)
-    sig = BucketedTable(
+    sig = VersionedTable(
         spark, str(tmp_path / "chain_state" / "signatures"), bucket_key="band_hash"
     )
     merges = [c for c in sig.history() if c.action == "merge"]
@@ -642,7 +642,7 @@ def test_incremental_neardup_chain_residue_under_adversarial_order(spark, tmp_pa
 
 def test_compact_neardup_residue_handles_missing_state(spark, tmp_path):
     """Running the sweep before any ingest (or against a wrong path)
-    must return the zero result, not crash in the BucketedTable
+    must return the zero result, not crash in the VersionedTable
     constructor — and must not scatter metadata into the state dir."""
     import os
 
@@ -845,13 +845,13 @@ def test_neardup_state_layout_migration(spark, tmp_path):
     """A v1 signature state (doc-id buckets) must be rebuildable in
     place into the v2 band-hash layout with identical rows, after which
     the ingest constructor accepts it."""
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
     from delta_data_pipelines_spark.streaming.neardup import (
         migrate_state_layout,
     )
 
     state = tmp_path / "mig_state"
-    v1 = BucketedTable(
+    v1 = VersionedTable(
         spark, str(state / "signatures"), bucket_key="doc_id", n_buckets=8
     )
     rows = spark.createDataFrame(
@@ -863,7 +863,7 @@ def test_neardup_state_layout_migration(spark, tmp_path):
         (r["doc_id"], r["band_id"], r["band_hash"]) for r in v1.read().collect()
     }
     assert migrate_state_layout(spark, str(state)) is True
-    v2 = BucketedTable(spark, str(state / "signatures"))
+    v2 = VersionedTable(spark, str(state / "signatures"))
     assert v2.bucket_key == "band_hash" and v2.n_buckets == 8
     after = {
         (r["doc_id"], r["band_id"], r["band_hash"]) for r in v2.read().collect()
@@ -886,7 +886,7 @@ def test_neardup_reingest_changed_text_keeps_state_consistent(
     import shutil
     import time as _time
 
-    from delta_data_pipelines_spark.storage import BucketedTable, VersionedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
     from delta_data_pipelines_spark.streaming.neardup import (
         run_incremental_neardup,
     )
@@ -922,8 +922,8 @@ def test_neardup_reingest_changed_text_keeps_state_consistent(
         stream, str(tmp_path / "ri_state"), corpus, str(tmp_path / "ri_ckpt")
     )
     q.awaitTermination(180)
-    sig = BucketedTable(spark, str(tmp_path / "ri_state" / "signatures"))
-    hs = BucketedTable(spark, str(tmp_path / "ri_state" / "shingle_sets"))
+    sig = VersionedTable(spark, str(tmp_path / "ri_state" / "signatures"))
+    hs = VersionedTable(spark, str(tmp_path / "ri_state" / "shingle_sets"))
     # doc 1 has exactly ONE signature set (first arrival's 16 bands)
     per_doc = {
         r["doc_id"]: r["n"]
@@ -1227,7 +1227,7 @@ def test_streaming_compression_band_matches_batch_stage(spark, tmp_path):
         compression_filter_stage,
         quality_gate,
     )
-    from delta_data_pipelines_spark.storage import BucketedTable
+    from delta_data_pipelines_spark.storage import VersionedTable
     from delta_data_pipelines_spark.streaming.curate import (
         run_streaming_curation,
     )
@@ -1244,7 +1244,7 @@ def test_streaming_compression_band_matches_batch_stage(spark, tmp_path):
     n_gated = quality_gate(docs).count()
     assert 0 < len(expect) < n_gated  # the band cuts something
 
-    corpus = BucketedTable(
+    corpus = VersionedTable(
         spark, str(tmp_path / "corpus_cb"), bucket_key="_content_key",
         n_buckets=8,
     )
@@ -1835,10 +1835,7 @@ def test_incremental_exact_substr_legacy_state_upgrade(spark, tmp_path):
     carrying _origin for every hash going forward."""
     import hashlib
 
-    from delta_data_pipelines_spark.storage import (
-        BucketedTable,
-        VersionedTable,
-    )
+    from delta_data_pipelines_spark.storage import VersionedTable
     from delta_data_pipelines_spark.streaming.exact_substr import (
         run_incremental_exact_substr,
     )
@@ -1846,7 +1843,7 @@ def test_incremental_exact_substr_legacy_state_upgrade(spark, tmp_path):
     dup_words = [f"d{j}" for j in range(10)]
     legacy_h = hashlib.md5(" ".join(dup_words).encode()).hexdigest()
     state = str(tmp_path / "state")
-    gram = BucketedTable(
+    gram = VersionedTable(
         spark, f"{state}/window_hashes", bucket_key="_h", n_buckets=64
     )
     gram.merge(
