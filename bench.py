@@ -252,10 +252,11 @@ def _reset_session_state(spark) -> None:
     """Release accumulated executor storage between bench queries.
 
     Several operators materialize eagerly inside their plan
-    (localCheckpoint in near-dup clustering / packing, persist() in
-    the containment and MinHash joins). Their blocks are only weakly
-    referenced: across a 39-query loop they linger until driver GC
-    runs the ContextCleaner, taxing later queries with storage
+    (``staging.stage`` in near-dup clustering, packing and the
+    containment and MinHash joins), and a staged frame that escapes in
+    a lazy result is never released by its operator. Its blocks are
+    only weakly referenced: across a 39-query loop they linger until
+    driver GC runs the ContextCleaner, taxing later queries with storage
     pressure and GC pauses — the r7 round showed byte-identical
     queries (dd_containment 1.56x, txt_bm25_topk 1.28x) regress
     in-loop while measuring flat standalone. Explicitly dropping

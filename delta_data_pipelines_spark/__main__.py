@@ -480,6 +480,7 @@ def main(argv: list[str] | None = None) -> int:
         from .catalog import read_table
         from .ingest.jsonl import read_jsonl, split_corrupt, write_jsonl
         from .jobs import publish_corpus
+        from .operators.staging import release_staged, stage
         from .storage import VersionedTable
 
         if args.jsonl_shards is not None and not args.export_jsonl:
@@ -499,23 +500,22 @@ def main(argv: list[str] | None = None) -> int:
             p.error("--pack-bins and --pack-ctx are mutually exclusive "
                     "(no-split bins vs concat-and-chunk)")
         n_quarantined = 0
+        staged_in = None  # the one scan of the input, released after publish
         if args.warc_in:
             from pyspark.sql import functions as F
 
             from .ingest.warc import documents_from_records, read_warc
 
             # scan ONCE (each WARC member decompresses on read): the
-            # checkpoint feeds the quarantine count and the pipeline
-            recs = read_warc(spark, args.warc_in).localCheckpoint(
-                eager=True
-            )
+            # stage feeds the quarantine count and the pipeline
+            recs = staged_in = stage(read_warc(spark, args.warc_in), "cli_warc")
             n_quarantined = recs.where(
                 F.col("warc_type") == "_error"
             ).count()
             docs = documents_from_records(
-                # stage=False: recs is checkpointed two lines up —
-                # a second payload-sized checkpoint of resp would pin
-                # the corpus bytes twice
+                # stage=False: recs is staged two lines up — a second
+                # payload-sized stage of resp would pin the corpus
+                # bytes twice
                 recs, main_content=args.main_content, stage=False
             )
             if args.dedup_refetches:
@@ -528,10 +528,10 @@ def main(argv: list[str] | None = None) -> int:
             from .ingest.warc import read_warc, wet_documents_from_records
 
             # scan ONCE (the WET members decompress on read): the
-            # checkpoint feeds the quarantine count and the pipeline
-            recs = read_warc(
-                spark, args.wet_in, split_http=False
-            ).localCheckpoint(eager=True)
+            # stage feeds the quarantine count and the pipeline
+            recs = staged_in = stage(
+                read_warc(spark, args.wet_in, split_http=False), "cli_wet"
+            )
             n_quarantined = recs.where(
                 F.col("warc_type") == "_error"
             ).count()
@@ -543,48 +543,54 @@ def main(argv: list[str] | None = None) -> int:
         elif args.jsonl_in:
             # parse ONCE: gzip shards are not block-splittable, so every
             # extra pass over the raw corpus is a full decompress+parse;
-            # the eager checkpoint feeds the quarantine count, the job's
-            # rows_in count, and the curation pipeline from one scan
-            raw = read_jsonl(
-                spark, args.jsonl_in,
-                "doc_id long, text string, lang string, source string",
-            ).localCheckpoint(eager=True)
+            # the stage feeds the quarantine count, the job's rows_in
+            # count, and the curation pipeline from one scan
+            raw = staged_in = stage(
+                read_jsonl(
+                    spark, args.jsonl_in,
+                    "doc_id long, text string, lang string, source string",
+                ),
+                "cli_jsonl",
+            )
             docs, bad = split_corrupt(raw)
             n_quarantined = bad.count()
         else:
             docs = read_table(spark, args.sf_dir, "documents")
-        table = VersionedTable(spark, args.out)
-        res = publish_corpus(
-            table, docs, funnel=args.funnel,
-            scrub=not args.no_scrub, pack_ctx=args.pack_ctx,
-            pack_bins_ctx=args.pack_bins,
-            lm_drop_fraction=args.lm_drop, lm=args.lm,
-            dup_weights=args.dup_weights,
-            decontaminate=args.decontaminate,
-            max_passage_dup=args.max_passage_dup,
-            dedup_passages=args.dedup_passages,
-            sentence_spans=args.sentence_spans,
-            exact_substr=args.exact_substr,
-            compression_bounds=(
-                tuple(args.compression_bounds)
-                if args.compression_bounds else None
-            ),
-            sample_per_source=args.sample_per_source,
-            tokenizer_store=_tok_store(spark, args.tokenizer),
-            dsir_select=args.dsir_select,
-            c4=args.c4,
-            lang_aware=args.lang_aware,
-            lang_col=args.lang_col,
-            url_blocklist=(
-                # read as a dataset, not driver-side: UT1 lists run
-                # ~100 MB and the filter broadcasts them itself
-                spark.read.text(args.blocklist).withColumnRenamed(
-                    "value", "domain"
-                )
-                if args.blocklist
-                else None
-            ),
-        )
+        try:
+            table = VersionedTable(spark, args.out)
+            res = publish_corpus(
+                table, docs, funnel=args.funnel,
+                scrub=not args.no_scrub, pack_ctx=args.pack_ctx,
+                pack_bins_ctx=args.pack_bins,
+                lm_drop_fraction=args.lm_drop, lm=args.lm,
+                dup_weights=args.dup_weights,
+                decontaminate=args.decontaminate,
+                max_passage_dup=args.max_passage_dup,
+                dedup_passages=args.dedup_passages,
+                sentence_spans=args.sentence_spans,
+                exact_substr=args.exact_substr,
+                compression_bounds=(
+                    tuple(args.compression_bounds)
+                    if args.compression_bounds else None
+                ),
+                sample_per_source=args.sample_per_source,
+                tokenizer_store=_tok_store(spark, args.tokenizer),
+                dsir_select=args.dsir_select,
+                c4=args.c4,
+                lang_aware=args.lang_aware,
+                lang_col=args.lang_col,
+                url_blocklist=(
+                    # read as a dataset, not driver-side: UT1 lists run
+                    # ~100 MB and the filter broadcasts them itself
+                    spark.read.text(args.blocklist).withColumnRenamed(
+                        "value", "domain"
+                    )
+                    if args.blocklist
+                    else None
+                ),
+            )
+        finally:
+            release_staged(staged_in)
         if args.jsonl_in:
             res["quarantined_lines"] = n_quarantined
         if args.warc_in or args.wet_in:

@@ -45,6 +45,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.staging import stage
+
 # Block-level elements: entering or leaving one closes the current
 # text block (the linearized-block model trafilatura uses; inline
 # elements — a, span, b, em, … — keep accumulating into the block).
@@ -204,9 +206,7 @@ def main_content(
         # the parse output feeds the site aggregate AND the mark join:
         # staged once so the Arrow-batched tokenizer runs one pass
         # (the two-consumer recompute trap)
-        ex = ex.withColumn("_bh", F.md5("_btext")).localCheckpoint(
-            eager=True
-        )
+        ex = stage(ex.withColumn("_bh", F.md5("_btext")), "main_content_blocks")
         # per-source page totals come from the PRE-parse frame — one
         # cheap distinct, no second trip through the block explosion
         totals = pages.groupBy(source_col).agg(

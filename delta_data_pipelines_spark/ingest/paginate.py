@@ -22,6 +22,7 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.staging import release_staged, stage
 from ..storage import VersionedTable
 from .crawl import dup_ratio, mark_seen, partition_new, publish
 
@@ -40,20 +41,19 @@ def ensure_source_order(
     ascending). A violating source raises immediately instead of
     silently breaking the early stop.
 
-    Each page is persisted before the min/max probe, so the page is
-    evaluated exactly ONCE: the probe materializes the cache and the
-    consumer reads the same materialized rows. (An unpersisted page
-    would be computed twice — once for the probe, once on consumption —
-    and with a non-deterministic source the verified edge could belong
-    to different data than what gets published.) The cache is released
-    as soon as the consumer asks for the next page.
+    Each page is staged before the min/max probe, so the page is
+    evaluated exactly ONCE: the probe and the consumer read the same
+    materialized rows. (An unstaged page would be computed twice — once
+    for the probe, once on consumption — and with a non-deterministic
+    source the verified edge could belong to different data than what
+    gets published.) The stage is released as soon as the consumer
+    asks for the next page or stops; the page the caller handed in is
+    never touched.
     """
     prev_edge = None
-    live = None
-    try:
-        for i, page in enumerate(pages):
-            page = page.persist()
-            live = page
+    for i, page in enumerate(pages):
+        page = stage(page, "ordered_page")
+        try:
             row = page.agg(
                 F.min(order_col).alias("lo"), F.max(order_col).alias("hi")
             ).first()
@@ -72,11 +72,8 @@ def ensure_source_order(
             if lo is not None:
                 prev_edge = lo if descending else hi
             yield page
-            page.unpersist()
-            live = None
-    finally:
-        if live is not None:
-            live.unpersist()
+        finally:
+            release_staged(page)
 
 
 def run_crawl(
@@ -116,12 +113,12 @@ def run_crawl(
             stop = "max_pages"
             break
         # One page feeds five consumers (count, dup probe, anti-join
-        # split, queue MERGE, seen MERGE); persist so the SOURCE
+        # split, queue MERGE, seen MERGE); staged so the SOURCE
         # evaluates once per page — with a remote/non-deterministic
         # source, re-evaluation could publish different rows than the
-        # ones probed. (Pages from ensure_source_order arrive already
-        # persisted; re-persist/unpersist is a no-op there.)
-        page = page.persist()
+        # ones probed. The stage is this loop's own copy: the page the
+        # caller handed in is never released here.
+        page = stage(page, "crawl_page")
         try:
             n_pages += 1
             total = page.count()
@@ -145,7 +142,7 @@ def run_crawl(
                 stop = "dup_ratio"
                 break
         finally:
-            page.unpersist()
+            release_staged(page)
     else:
         stop = "exhausted"
 

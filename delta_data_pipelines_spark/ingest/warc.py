@@ -314,6 +314,7 @@ def documents_from_records(
         F.col("warc_date").alias("fetched_at"),
         F.col("payload").cast("string").alias("_html"),
     )
+    from ..operators import staging
     from ..operators.textstats import lang_id
 
     if main_content:
@@ -322,13 +323,13 @@ def documents_from_records(
         # three consumers read resp (main_content's block parse, its
         # per-source page totals, and the metadata join below) — and
         # resp's lineage is the WARC scan, so unstaged each consumer
-        # would re-decompress every shard. One eager checkpoint makes
-        # it one decompression. ``stage=False`` skips it for callers
-        # whose ``recs`` is ALREADY checkpointed (the curate CLI —
-        # resp's consumers then read the cached record blocks, and a
-        # second payload-sized checkpoint would pin the corpus twice).
+        # would re-decompress every shard. One stage makes it one
+        # decompression. ``stage=False`` skips it for callers whose
+        # ``recs`` is ALREADY staged (the curate CLI — resp's consumers
+        # then read the staged record blocks, and a second
+        # payload-sized stage would pin the corpus twice).
         if stage:
-            resp = resp.localCheckpoint(eager=True)
+            resp = staging.stage(resp, "warc_responses")
         body = extract_main(
             resp, "doc_id", "_html", source_col="source"
         ).select("doc_id", F.col("main_text").alias("text"))

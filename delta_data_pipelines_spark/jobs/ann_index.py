@@ -34,6 +34,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import similarity
+from ..operators.staging import release_staged, stage
 from ..storage import JsonMetaStore, VersionedTable
 
 
@@ -84,13 +85,17 @@ def refresh_pq_index(
     refresh pairs either the complete old index or the complete new
     one (the old versions remain readable until vacuum)."""
     _, cb = similarity.pq_index(vectors, id_col, vec_col, m, k, n_iter)
-    cb = cb.localCheckpoint(eager=True)  # the ONE fit evaluation
-    coded = similarity.pq_encode(
-        vectors, cb, id_col, vec_col, m, keep_sim=True
-    ).localCheckpoint(eager=True)
-    c1 = store.codebook.overwrite(cb)
-    c2 = store.codes.overwrite(coded.drop("_sim"))
-    baseline = _mean_assignment_sim(coded)
+    cb = stage(cb, "pq_codebook")  # the ONE fit evaluation
+    coded = stage(
+        similarity.pq_encode(vectors, cb, id_col, vec_col, m, keep_sim=True),
+        "pq_codes",
+    )
+    try:
+        c1 = store.codebook.overwrite(cb)
+        c2 = store.codes.overwrite(coded.drop("_sim"))
+        baseline = _mean_assignment_sim(coded)
+    finally:
+        release_staged(cb, coded)
     store._write_meta(
         {
             "id_col": id_col,
@@ -164,11 +169,15 @@ def pq_assignment_quality(
     pass via ``_mean_assignment_sim``)."""
     from pyspark.sql import functions as F
 
-    sims = similarity.pq_encode(
-        vectors, codebook, id_col, vec_col, m, keep_sim=True
-    ).localCheckpoint(eager=True)
-    n = sims.count() // max(1, m)
-    return int(n), _mean_assignment_sim(sims)
+    sims = stage(
+        similarity.pq_encode(vectors, codebook, id_col, vec_col, m, keep_sim=True),
+        "pq_quality",
+    )
+    try:
+        n = sims.count() // max(1, m)
+        return int(n), _mean_assignment_sim(sims)
+    finally:
+        release_staged(sims)
 
 
 def append_pq_codes(
@@ -198,43 +207,43 @@ def append_pq_codes(
     id_col, m = meta["id_col"], int(meta["m"])
     vec_col = _resolve_vec_col(meta, vec_col)
     cb = store.codebook.read(meta.get("codebook_version"))
-    coded = similarity.pq_encode(
-        new_vectors, cb, id_col, vec_col, m, keep_sim=True
-    ).localCheckpoint(eager=True)  # merge + quality agg share one eval
-    if coded.isEmpty():
-        # nothing to absorb: no commit, and NO drift number — a 0.0
-        # mean on an empty batch would read as catastrophic drift
-        return {
-            "codes_version": store.codes.latest_version(),
-            "inserted": 0,
-            "batch_mean_sim": None,
-            "baseline_mean_sim": meta.get("baseline_mean_sim"),
-        }
-    commit = store.codes.merge(
-        coded.drop("_sim"), keys=[id_col, "sub_id"], when_matched="ignore"
+    # merge + quality agg share one eval
+    coded = stage(
+        similarity.pq_encode(new_vectors, cb, id_col, vec_col, m, keep_sim=True),
+        "pq_append_codes",
     )
-    # advance the serve pin to the merged codes — CONDITIONALLY: if a
-    # refresh completed while this append ran, its meta pins a new
-    # codebook and this batch's codes (encoded against the OLD one)
-    # must not be pinned over it
-    pinned = store._update_meta(
-        _if_unchanged={"codebook_version": meta.get("codebook_version")},
-        codes_version=commit.version,
-    )
-    if not pinned:
-        return {
+    try:
+        if coded.isEmpty():
+            # nothing to absorb: no commit, and NO drift number — a 0.0
+            # mean on an empty batch would read as catastrophic drift
+            return {
+                "codes_version": store.codes.latest_version(),
+                "inserted": 0,
+                "batch_mean_sim": None,
+                "baseline_mean_sim": meta.get("baseline_mean_sim"),
+            }
+        commit = store.codes.merge(
+            coded.drop("_sim"), keys=[id_col, "sub_id"], when_matched="ignore"
+        )
+        # advance the serve pin to the merged codes — CONDITIONALLY: if a
+        # refresh completed while this append ran, its meta pins a new
+        # codebook and this batch's codes (encoded against the OLD one)
+        # must not be pinned over it
+        pinned = store._update_meta(
+            _if_unchanged={"codebook_version": meta.get("codebook_version")},
+            codes_version=commit.version,
+        )
+        out = {
             "codes_version": commit.version,
             "inserted": commit.metrics.get("inserted"),
             "batch_mean_sim": _mean_assignment_sim(coded),
             "baseline_mean_sim": meta.get("baseline_mean_sim"),
-            "superseded_by_refresh": True,
         }
-    return {
-        "codes_version": commit.version,
-        "inserted": commit.metrics.get("inserted"),
-        "batch_mean_sim": _mean_assignment_sim(coded),
-        "baseline_mean_sim": meta.get("baseline_mean_sim"),
-    }
+    finally:
+        release_staged(coded)
+    if not pinned:
+        out["superseded_by_refresh"] = True
+    return out
 
 
 class IVFIndexStore(JsonMetaStore):
@@ -438,7 +447,7 @@ def serve_ivf_topk(
         qs.withColumn("_rn", F.row_number().over(wq))
         .where(F.col("_rn") <= nprobe)
         .select("query_id", "_qv", "cid")
-        .localCheckpoint(eager=True)
+        .transform(stage, "ivf_probe_cells")
     )
     cells_src = store.cells.read_buckets(
         store.cells.bucket_ids_of(q_cells, "cid"),
@@ -617,7 +626,7 @@ def serve_ivfpq_topk(
         .withColumn("_rn", F.row_number().over(wq))
         .where(F.col("_rn") <= nprobe)
         .select("query_id", "cid")
-        .localCheckpoint(eager=True)
+        .transform(stage, "ivfpq_probe_cells")
     )
 
     # 2. candidates: pruned bucket read -> (query_id, neighbor_id)

@@ -28,6 +28,7 @@ from ..operators.textstats import (
     scrub_pii,
     token_count_ws,
 )
+from ..operators.staging import release_staged, stage
 from ..storage import VersionedTable
 
 DEFAULT_SPLITS = {"train": 0.8, "eval": 0.1, "test": 0.1}
@@ -134,7 +135,7 @@ def pack_stage(
         F.col(n_tokens_col)
         if n_tokens_col
         else token_count_ws(F.col(text_col)),
-    ).localCheckpoint(eager=True)
+    ).transform(stage, "pack_sized")
     names = [r[0] for r in sized.select(split_col).distinct().collect()]
     if not names:  # empty input: keep the output schema, skip the union
         span = chunk_span("cum_before", "_ntok", ctx)
@@ -333,7 +334,6 @@ def lang_lm_filter_stage(
     text_col: str = "text",
     lang_col: str = "lang_routed",
     drop_fraction: float = 0.05,
-    materialize: bool = True,
 ) -> DataFrame:
     """Per-language CCNet tail cut: fit the unigram LM WITHIN each
     language and drop each language's docs under its own
@@ -352,8 +352,7 @@ def lang_lm_filter_stage(
         )
     if drop_fraction == 0.0:
         return docs
-    if materialize:
-        docs = docs.localCheckpoint(eager=True)
+    docs = stage(docs, "lang_lm_filter_input")
     unscorable = (
         F.col(id_col).isNull()
         | F.col(text_col).isNull()
@@ -386,7 +385,6 @@ def lm_filter_stage(
     id_col: str = "doc_id",
     text_col: str = "text",
     drop_fraction: float = 0.05,
-    materialize: bool = True,
     lm: str = "unigram",
 ) -> DataFrame:
     """CCNet-style language-model filter: score every doc by its mean
@@ -403,12 +401,10 @@ def lm_filter_stage(
     doc payloads never ride through the scoring shuffle. Ties AT the
     threshold are kept.
 
-    ``materialize=True`` (default) localCheckpoints the input first:
-    the scoring plan embeds the input under four separate scans (token
-    freq, score join, percentile, semi-join probe), and in the job
-    that input is the full regex-heavy scrub+gate lineage — without
-    staging it would re-run ~5×. Pass False to keep a fully lazy
-    composable plan (oracle-query usage).
+    The input is staged first: the scoring plan embeds it under four
+    separate scans (token freq, score join, percentile, semi-join
+    probe), and in the job that input is the full regex-heavy
+    scrub+gate lineage — without staging it would re-run ~5×.
     """
     if not (0.0 <= drop_fraction < 1.0):
         raise ValueError(f"drop_fraction must be in [0, 1), got {drop_fraction}")
@@ -422,8 +418,7 @@ def lm_filter_stage(
         return docs
     from ..operators.textstats import unigram_logprob_scores
 
-    if materialize:
-        docs = docs.localCheckpoint(eager=True)
+    docs = stage(docs, "lm_filter_input")
     # NULL text/id rows cannot be scored (no tokens / no joinable key):
     # pass them through explicitly, mirroring decontaminate_stage —
     # without this the semi-join re-entry silently dropped them, which
@@ -486,7 +481,6 @@ def compression_filter_stage(
     id_col: str = "doc_id",
     text_col: str = "text",
     bounds: tuple[float, float] = (0.3, 1.1),
-    materialize: bool = True,
 ) -> DataFrame:
     """Cut documents whose zlib compression ratio falls outside
     ``bounds`` — below the floor is templated/repetitive boilerplate,
@@ -496,18 +490,16 @@ def compression_filter_stage(
     ride the Python pass twice). Unscorable rows (NULL id, NULL or
     empty text — ratio NULL) pass through, the shared stage invariant.
 
-    ``materialize=True`` localCheckpoints the input first — the
-    lm_filter_stage precedent: this stage reads its input under three
-    scans (passthrough, semi-join left side, signal pass), and in the
-    job that input is the regex-heavy scrub+gate lineage. Pass False
-    for a fully lazy plan."""
+    The input is staged first — the lm_filter_stage precedent: this
+    stage reads its input under three scans (passthrough, semi-join
+    left side, signal pass), and in the job that input is the
+    regex-heavy scrub+gate lineage."""
     lo, hi = bounds
     if not lo <= hi:
         raise ValueError(f"bounds must satisfy lo <= hi, got {bounds}")
     from ..operators.textstats import compression_signal
 
-    if materialize:
-        docs = docs.localCheckpoint(eager=True)
+    docs = stage(docs, "compression_filter_input")
     unscorable = F.col(id_col).isNull() | F.col(text_col).isNull()
     passthrough = docs.where(unscorable)
     scorable = docs.where(~unscorable)
@@ -736,7 +728,6 @@ def decontaminate_stage(
     text_col: str = "text",
     split_col: str = "split",
     n: int = 13,
-    materialize: bool = True,
 ) -> DataFrame:
     """Drop train docs sharing any ``n``-token n-gram with a heldout
     (non-train) doc — the exact-collision decontamination standard
@@ -750,14 +741,12 @@ def decontaminate_stage(
 
     Scale shape: contaminated train ids come from one equi-join on
     the gram and re-enter as a LEFT ANTI join on the id, so document
-    payloads never ride the gram shuffle. ``materialize`` (default
-    True) localCheckpoints the input first: the plan otherwise embeds
-    the full upstream curation lineage under four branches
-    (passthrough, train side, and both gram arms) — ~4× the pipeline
-    cost. Pass False for a lazy composable plan.
+    payloads never ride the gram shuffle. The input is staged first:
+    the plan otherwise embeds the full upstream curation lineage under
+    four branches (passthrough, train side, and both gram arms) — ~4×
+    the pipeline cost.
     """
-    if materialize:
-        split_docs = split_docs.localCheckpoint(eager=True)
+    split_docs = stage(split_docs, "decontaminate_input")
     contaminated = dedup.contamination_gram_hits(
         split_docs, id_col, text_col, split_col, n
     ).select(id_col).distinct()
@@ -919,7 +908,7 @@ def curate_corpus(
             "lang_gates; global gate_kwargs would be silently ignored"
         )
 
-    def _tick(df: DataFrame, stage: str) -> DataFrame:
+    def _tick(df: DataFrame, name: str) -> DataFrame:
         """Funnel instrumentation: when the caller passes a ``funnel``
         dict, record each stage's surviving doc count (insertion order
         = stage order — the FineWeb-style retention report). The stage
@@ -929,8 +918,8 @@ def curate_corpus(
         and the plan is unchanged."""
         if funnel is None:
             return df
-        df = df.localCheckpoint(eager=True)
-        funnel[stage] = df.count()
+        df = stage(df, f"funnel_{name}")
+        funnel[name] = df.count()
         return df
 
     docs = _tick(docs, "input")
@@ -1067,7 +1056,7 @@ def curate_corpus(
             # silently deleted from the published corpus.
             from .tokenizer import piece_counts
 
-            split = split.localCheckpoint(eager=True)
+            split = stage(split, "pack_tokenized_split")
             pc = piece_counts(
                 tokenizer_store,
                 split.select(id_col, text_col),
@@ -1103,7 +1092,7 @@ def curate_corpus(
                 )
             ),
         )
-        split = split.localCheckpoint(eager=True)
+        split = stage(split, "pack_bins_split")
         packed = best_fit_pack(
             split.select(id_col, "split", n.alias("_nt")),
             id_col,
@@ -1137,15 +1126,18 @@ def publish_corpus(
     curated = curate_corpus(
         docs, id_col, text_col, splits, funnel=stage_counts, **gate_kwargs
     )
-    curated = curated.localCheckpoint(eager=True)  # metrics + write share one run
-    n_out = curated.count()
-    if n_out == 0:
-        raise ValueError("curation produced an empty corpus; not publishing")
-    commit = table.overwrite(curated)
-    agg = [F.count("*").alias("n")]
-    if "n_pii" in curated.columns:
-        agg.append(F.sum("n_pii").alias("pii"))
-    per_split_rows = curated.groupBy("split").agg(*agg).collect()
+    curated = stage(curated, "publish_curated")  # metrics + write share one run
+    try:
+        n_out = curated.count()
+        if n_out == 0:
+            raise ValueError("curation produced an empty corpus; not publishing")
+        commit = table.overwrite(curated)
+        agg = [F.count("*").alias("n")]
+        if "n_pii" in curated.columns:
+            agg.append(F.sum("n_pii").alias("pii"))
+        per_split_rows = curated.groupBy("split").agg(*agg).collect()
+    finally:
+        release_staged(curated)
     per_split = {r["split"]: r["n"] for r in per_split_rows}
     out = {
         "version": commit.version,

@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from ..operators import langcurate as langcurate_mod
 from ..operators.dedup import shingles
+from ..operators.staging import release_staged, stage
 from ..storage import JsonMetaStore, VersionedTable
 from .curate_corpus import lang_quality_gate, quality_gate, scrub_stage
 
@@ -316,7 +317,7 @@ def fit_reference_model(
             text_col,
             lang_col=lang_col,
             gates=lang_gates,
-        ).localCheckpoint(eager=True)
+        ).transform(stage, "reference_clean")
         freq = (
             clean.select(
                 F.col(routed).alias("lang"),
@@ -328,7 +329,7 @@ def fit_reference_model(
     else:
         clean = quality_gate(
             scrub_stage(reference_docs, text_col), text_col, **gate_kwargs
-        ).localCheckpoint(eager=True)  # freq + threshold share one run
+        ).transform(stage, "reference_clean")  # freq + threshold share one run
         freq = (
             clean.select(
                 F.explode(F.split(F.col(text_col), " ")).alias("token")
@@ -336,394 +337,394 @@ def fit_reference_model(
             .groupBy("token")
             .agg(F.count("*").alias("tf"))
         )
-    c1 = model.unigram.overwrite(freq)
-    stored_freq = model.unigram.read()
-    if lang_aware:
-        lang_totals = {
-            r["lang"]: int(r["t"])
-            for r in stored_freq.groupBy("lang")
-            .agg(F.sum("tf").alias("t"))
-            .collect()
-        }
-        if not lang_totals:
-            raise ValueError(
-                "reference corpus is empty after scrub+gate — no unigram "
-                "distribution to freeze; widen the gates or fix the input"
-            )
-        totals_df = model.spark.createDataFrame(
-            list(lang_totals.items()), "lang string, total long"
-        )
-        if lm in _KN_LMS:
-            # per-language KN — CCNet's actual production shape (one
-            # KenLM per language, at any of the engine's three
-            # orders): the frozen artifact is the (lang, …grams) type
-            # table; each language's floor is its own drop_fraction
-            # percentile of KN scores under the STORED table,
-            # calibrated on the gated HELD-OUT docs (the
-            # in-sample-bias rule — see the non-lang KN branch; a
-            # language present in the reference but absent from the
-            # heldout gets no floor and passes the LM stage through,
-            # the unseen-language invariant extended to calibration).
-            # The per-language unigram table above still freezes
-            # (drift + vocabulary artifact).
-            types_fn, score_fn, kn_table, kn_vkey, _ = _kn_dispatch(model, lm)
-            ckn = kn_table.overwrite(
-                types_fn(
-                    _kn_text_view(
-                        clean.withColumn("_kn_lang", F.col(routed)),
-                        text_col,
-                        "_kn_lang",
-                    ),
-                    text_col,
-                    lang_col="_kn_lang",
-                )
-            )
-            stored_kn = kn_table.read(ckn.version)
-            cal = lang_quality_gate(
-                scrub_stage(heldout_docs, text_col),
-                text_col,
-                lang_col=lang_col,
-                gates=lang_gates,
-            ).where(
-                F.col(id_col).isNotNull() & F.col(text_col).isNotNull()
-            )
-            scores = score_fn(
-                _kn_text_view(
-                    cal.withColumn("_kn_lang", F.col(routed)),
-                    text_col,
-                    id_col,
-                    "_kn_lang",
-                ),
-                stored_kn,
-                id_col,
-                text_col,
-                lang_col="_kn_lang",
-            ).withColumnRenamed("_kn_lang", "lang")
-        else:
-            scores = _frozen_lang_lm_scores(
-                clean, stored_freq, totals_df, id_col, text_col, routed
-            )
-        lang_thresholds = {
-            r["lang"]: float(r["thr"])
-            for r in scores.groupBy("lang")
-            .agg(
-                F.expr(f"percentile(avg_logprob, {drop_fraction})").alias(
-                    "thr"
-                )
-            )
-            .collect()
-            if r["thr"] is not None
-        }
-        if lm in _KN_LMS:
-            # held-out calibration must cover every language the
-            # reference froze a model for: a modeled language with no
-            # floor would silently make its LM stage a permanent
-            # no-op (this is NOT the unseen-language invariant — the
-            # language IS seen and modeled; only calibration data is
-            # missing). Fail the BUILD job loudly instead. The
-            # required set is the languages IN THE TYPE TABLE, not
-            # every unigram-modeled language: a reference language
-            # whose docs are all shorter than the order's minimum has
-            # no n-gram types at that order, so no heldout could ever
-            # calibrate it — it is KN-unmodeled and passes the LM
-            # stage through at apply time (absent from the score
-            # frame), the unseen-language invariant.
-            kn_langs = {
-                r[0]
-                for r in stored_kn.select("_kn_lang").distinct().collect()
+    try:
+        c1 = model.unigram.overwrite(freq)
+        stored_freq = model.unigram.read()
+        if lang_aware:
+            lang_totals = {
+                r["lang"]: int(r["t"])
+                for r in stored_freq.groupBy("lang")
+                .agg(F.sum("tf").alias("t"))
+                .collect()
             }
-            if not kn_langs:
-                # mirror the non-lang branch's fit-time guard: a KN
-                # model with zero types in EVERY language is not an
-                # all-exempt model, it is no model — and curate_batch
-                # would correctly refuse the empty stored table
+            if not lang_totals:
                 raise ValueError(
-                    "reference corpus has no n-grams at the requested "
-                    "order in any language after scrub+gate — no KN "
-                    "distribution to freeze; widen the gates or fix "
-                    "the input"
+                    "reference corpus is empty after scrub+gate — no unigram "
+                    "distribution to freeze; widen the gates or fix the input"
                 )
-            uncal = sorted(
-                (set(lang_totals) & kn_langs) - set(lang_thresholds)
+            totals_df = model.spark.createDataFrame(
+                list(lang_totals.items()), "lang string, total long"
             )
-            if uncal:
-                raise ValueError(
-                    "held-out calibration produced no KN floor for "
-                    f"modeled language(s) {uncal} — the gated heldout "
-                    "has no scorable docs in them; pass a heldout "
-                    "covering every reference language modeled at "
-                    "this n-gram order"
+            if lm in _KN_LMS:
+                # per-language KN — CCNet's actual production shape (one
+                # KenLM per language, at any of the engine's three
+                # orders): the frozen artifact is the (lang, …grams) type
+                # table; each language's floor is its own drop_fraction
+                # percentile of KN scores under the STORED table,
+                # calibrated on the gated HELD-OUT docs (the
+                # in-sample-bias rule — see the non-lang KN branch; a
+                # language present in the reference but absent from the
+                # heldout gets no floor and passes the LM stage through,
+                # the unseen-language invariant extended to calibration).
+                # The per-language unigram table above still freezes
+                # (drift + vocabulary artifact).
+                types_fn, score_fn, kn_table, kn_vkey, _ = _kn_dispatch(model, lm)
+                ckn = kn_table.overwrite(
+                    types_fn(
+                        _kn_text_view(
+                            clean.withColumn("_kn_lang", F.col(routed)),
+                            text_col,
+                            "_kn_lang",
+                        ),
+                        text_col,
+                        lang_col="_kn_lang",
+                    )
                 )
-        thr = None
-        total = sum(lang_totals.values())
-    else:
-        total = stored_freq.agg(F.sum("tf").alias("t")).collect()[0]["t"]
-        if not total:
-            raise ValueError(
-                "reference corpus is empty after scrub+gate — no unigram "
-                "distribution to freeze; widen the gate or fix the input"
-            )
-        if lm in _KN_LMS:
-            # CCNet production parity: the LM cut scores under an
-            # interpolated Kneser-Ney model (the KenLM estimator —
-            # bigram at lm='kn', trigram at lm='kn3', 4-gram at
-            # lm='kn4') instead of the unigram distribution. ONE
-            # artifact freezes per order — the n-gram TYPE table;
-            # every marginal re-derives deterministically at apply
-            # time through the same scoring definition the
-            # oracle-checked txt_kn_logprob / txt_kn3_logprob queries
-            # use. The unigram table above still freezes: batch_drift's
-            # KL runs on it and it documents the reference vocabulary.
-            #
-            # The floor is calibrated on the HELD-OUT docs (scrubbed
-            # and gated like any batch), NOT on the reference's own
-            # scores: a KN model scores its own training text with
-            # every n-gram seen, so an in-sample percentile is biased
-            # optimistic — mildly at order 0 (the unigram path keeps
-            # in-sample calibration), fatally by order 2, where
-            # in-sample calibration put ~100% of genuinely novel text
-            # under the floor (the kn3 lesson this round). Held-out
-            # scores have the same unseen-n-gram profile future
-            # batches will have.
-            # calibration population matches the apply side exactly:
-            # curate_batch filters NULL id/text before KN scoring, so
-            # the fit must too — otherwise NULL-id heldout rows pool
-            # into one pseudo-doc that skews the percentile
-            cal = _kn_text_view(
-                quality_gate(
+                stored_kn = kn_table.read(ckn.version)
+                cal = lang_quality_gate(
                     scrub_stage(heldout_docs, text_col),
                     text_col,
-                    **gate_kwargs,
+                    lang_col=lang_col,
+                    gates=lang_gates,
                 ).where(
                     F.col(id_col).isNotNull() & F.col(text_col).isNotNull()
-                ),
-                text_col,
-                id_col,
-            )
-            fit_view = _kn_text_view(clean, text_col)
-            types_fn, score_fn, kn_table, kn_vkey, _ = _kn_dispatch(model, lm)
-            ckn = kn_table.overwrite(types_fn(fit_view, text_col))
-            stored_types = kn_table.read(ckn.version)
-            kn_scores = score_fn(cal, stored_types, id_col, text_col)
-            if stored_types.limit(1).count() == 0:
-                raise ValueError(
-                    "reference corpus has no n-grams at the requested "
-                    "order after scrub+gate — no KN distribution to "
-                    "freeze; widen the gate or fix the input"
                 )
-            thr = kn_scores.agg(
-                F.expr(f"percentile(avg_logprob, {drop_fraction})").alias(
-                    "thr"
+                scores = score_fn(
+                    _kn_text_view(
+                        cal.withColumn("_kn_lang", F.col(routed)),
+                        text_col,
+                        id_col,
+                        "_kn_lang",
+                    ),
+                    stored_kn,
+                    id_col,
+                    text_col,
+                    lang_col="_kn_lang",
+                ).withColumnRenamed("_kn_lang", "lang")
+            else:
+                scores = _frozen_lang_lm_scores(
+                    clean, stored_freq, totals_df, id_col, text_col, routed
                 )
-            ).collect()[0]["thr"]
-            if thr is None:
-                raise ValueError(
-                    "heldout corpus is empty after scrub+gate — cannot "
-                    "calibrate the KN floor on held-out scores; pass a "
-                    "larger heldout_docs"
+            lang_thresholds = {
+                r["lang"]: float(r["thr"])
+                for r in scores.groupBy("lang")
+                .agg(
+                    F.expr(f"percentile(avg_logprob, {drop_fraction})").alias(
+                        "thr"
+                    )
                 )
+                .collect()
+                if r["thr"] is not None
+            }
+            if lm in _KN_LMS:
+                # held-out calibration must cover every language the
+                # reference froze a model for: a modeled language with no
+                # floor would silently make its LM stage a permanent
+                # no-op (this is NOT the unseen-language invariant — the
+                # language IS seen and modeled; only calibration data is
+                # missing). Fail the BUILD job loudly instead. The
+                # required set is the languages IN THE TYPE TABLE, not
+                # every unigram-modeled language: a reference language
+                # whose docs are all shorter than the order's minimum has
+                # no n-gram types at that order, so no heldout could ever
+                # calibrate it — it is KN-unmodeled and passes the LM
+                # stage through at apply time (absent from the score
+                # frame), the unseen-language invariant.
+                kn_langs = {
+                    r[0]
+                    for r in stored_kn.select("_kn_lang").distinct().collect()
+                }
+                if not kn_langs:
+                    # mirror the non-lang branch's fit-time guard: a KN
+                    # model with zero types in EVERY language is not an
+                    # all-exempt model, it is no model — and curate_batch
+                    # would correctly refuse the empty stored table
+                    raise ValueError(
+                        "reference corpus has no n-grams at the requested "
+                        "order in any language after scrub+gate — no KN "
+                        "distribution to freeze; widen the gates or fix "
+                        "the input"
+                    )
+                uncal = sorted(
+                    (set(lang_totals) & kn_langs) - set(lang_thresholds)
+                )
+                if uncal:
+                    raise ValueError(
+                        "held-out calibration produced no KN floor for "
+                        f"modeled language(s) {uncal} — the gated heldout "
+                        "has no scorable docs in them; pass a heldout "
+                        "covering every reference language modeled at "
+                        "this n-gram order"
+                    )
+            thr = None
+            total = sum(lang_totals.values())
         else:
-            scores = _frozen_lm_scores(
-                clean, stored_freq, total, id_col, text_col
-            )
-            thr = scores.agg(
-                F.expr(f"percentile(avg_logprob, {drop_fraction})").alias(
-                    "thr"
+            total = stored_freq.agg(F.sum("tf").alias("t")).collect()[0]["t"]
+            if not total:
+                raise ValueError(
+                    "reference corpus is empty after scrub+gate — no unigram "
+                    "distribution to freeze; widen the gate or fix the input"
                 )
-            ).collect()[0]["thr"]
-    grams = (
-        heldout_docs.where(F.size(F.split(F.col(text_col), " ")) >= decont_n)
-        .select(F.explode(shingles(F.col(text_col), decont_n)).alias("_gram"))
-        .distinct()
-    )
-    c2 = model.heldout_grams.overwrite(grams)
-    meta = {
-        "total_tokens": int(total),
-        "lm": lm,
-        "lm_threshold": float(thr) if thr is not None else None,
-        "drop_fraction": drop_fraction,
-        "decont_n": decont_n,
-        "gate_kwargs": gate_kwargs,
-        "unigram_version": c1.version,
-        "heldout_grams_version": c2.version,
-    }
-    if lm in _KN_LMS:
-        meta[kn_vkey] = ckn.version
-        # frozen KN inputs are line-break normalized (the
-        # lm_filter_stage rule) from this fit version on; the flag is
-        # the frozen-meta contract that keeps PRE-normalization
-        # artifacts replay-identical — curate_batch only normalizes
-        # when the model's own fit did, so a keep set can never shift
-        # under a code upgrade (the frozen-meta rule)
-        meta["kn_text_normalized"] = True
-    if lang_aware:
-        meta.update(
-            {
-                "lang_aware": True,
-                "lang_col": lang_col,
-                # JSON round-trips tuples as lists; curate_batch
-                # converts back. The EFFECTIVE gates are resolved HERE
-                # (lang_gates or the package defaults) and frozen into
-                # meta: storing None and re-resolving DEFAULT_LANG_GATES
-                # at apply time would let a later edit to the defaults
-                # silently change a frozen model's thresholds between
-                # fit and apply.
-                "lang_gates": {
-                    k: list(v)
-                    for k, v in (
-                        lang_gates
-                        or langcurate_mod.DEFAULT_LANG_GATES
-                    ).items()
-                },
-                "lang_totals": lang_totals,
-                "lang_thresholds": lang_thresholds,
-            }
+            if lm in _KN_LMS:
+                # CCNet production parity: the LM cut scores under an
+                # interpolated Kneser-Ney model (the KenLM estimator —
+                # bigram at lm='kn', trigram at lm='kn3', 4-gram at
+                # lm='kn4') instead of the unigram distribution. ONE
+                # artifact freezes per order — the n-gram TYPE table;
+                # every marginal re-derives deterministically at apply
+                # time through the same scoring definition the
+                # oracle-checked txt_kn_logprob / txt_kn3_logprob queries
+                # use. The unigram table above still freezes: batch_drift's
+                # KL runs on it and it documents the reference vocabulary.
+                #
+                # The floor is calibrated on the HELD-OUT docs (scrubbed
+                # and gated like any batch), NOT on the reference's own
+                # scores: a KN model scores its own training text with
+                # every n-gram seen, so an in-sample percentile is biased
+                # optimistic — mildly at order 0 (the unigram path keeps
+                # in-sample calibration), fatally by order 2, where
+                # in-sample calibration put ~100% of genuinely novel text
+                # under the floor (the kn3 lesson this round). Held-out
+                # scores have the same unseen-n-gram profile future
+                # batches will have.
+                # calibration population matches the apply side exactly:
+                # curate_batch filters NULL id/text before KN scoring, so
+                # the fit must too — otherwise NULL-id heldout rows pool
+                # into one pseudo-doc that skews the percentile
+                cal = _kn_text_view(
+                    quality_gate(
+                        scrub_stage(heldout_docs, text_col),
+                        text_col,
+                        **gate_kwargs,
+                    ).where(
+                        F.col(id_col).isNotNull() & F.col(text_col).isNotNull()
+                    ),
+                    text_col,
+                    id_col,
+                )
+                fit_view = _kn_text_view(clean, text_col)
+                types_fn, score_fn, kn_table, kn_vkey, _ = _kn_dispatch(model, lm)
+                ckn = kn_table.overwrite(types_fn(fit_view, text_col))
+                stored_types = kn_table.read(ckn.version)
+                kn_scores = score_fn(cal, stored_types, id_col, text_col)
+                if stored_types.limit(1).count() == 0:
+                    raise ValueError(
+                        "reference corpus has no n-grams at the requested "
+                        "order after scrub+gate — no KN distribution to "
+                        "freeze; widen the gate or fix the input"
+                    )
+                thr = kn_scores.agg(
+                    F.expr(f"percentile(avg_logprob, {drop_fraction})").alias(
+                        "thr"
+                    )
+                ).collect()[0]["thr"]
+                if thr is None:
+                    raise ValueError(
+                        "heldout corpus is empty after scrub+gate — cannot "
+                        "calibrate the KN floor on held-out scores; pass a "
+                        "larger heldout_docs"
+                    )
+            else:
+                scores = _frozen_lm_scores(
+                    clean, stored_freq, total, id_col, text_col
+                )
+                thr = scores.agg(
+                    F.expr(f"percentile(avg_logprob, {drop_fraction})").alias(
+                        "thr"
+                    )
+                ).collect()[0]["thr"]
+        grams = (
+            heldout_docs.where(F.size(F.split(F.col(text_col), " ")) >= decont_n)
+            .select(F.explode(shingles(F.col(text_col), decont_n)).alias("_gram"))
+            .distinct()
         )
-    if dsir_keep_fraction is not None:
-        from ..operators import dsir
-        from ..operators.textstats import quality_score
+        c2 = model.heldout_grams.overwrite(grams)
+        meta = {
+            "total_tokens": int(total),
+            "lm": lm,
+            "lm_threshold": float(thr) if thr is not None else None,
+            "drop_fraction": drop_fraction,
+            "decont_n": decont_n,
+            "gate_kwargs": gate_kwargs,
+            "unigram_version": c1.version,
+            "heldout_grams_version": c2.version,
+        }
+        if lm in _KN_LMS:
+            meta[kn_vkey] = ckn.version
+            # frozen KN inputs are line-break normalized (the
+            # lm_filter_stage rule) from this fit version on; the flag is
+            # the frozen-meta contract that keeps PRE-normalization
+            # artifacts replay-identical — curate_batch only normalizes
+            # when the model's own fit did, so a keep set can never shift
+            # under a code upgrade (the frozen-meta rule)
+            meta["kn_text_normalized"] = True
+        if lang_aware:
+            meta.update(
+                {
+                    "lang_aware": True,
+                    "lang_col": lang_col,
+                    # JSON round-trips tuples as lists; curate_batch
+                    # converts back. The EFFECTIVE gates are resolved HERE
+                    # (lang_gates or the package defaults) and frozen into
+                    # meta: storing None and re-resolving DEFAULT_LANG_GATES
+                    # at apply time would let a later edit to the defaults
+                    # silently change a frozen model's thresholds between
+                    # fit and apply.
+                    "lang_gates": {
+                        k: list(v)
+                        for k, v in (
+                            lang_gates
+                            or langcurate_mod.DEFAULT_LANG_GATES
+                        ).items()
+                    },
+                    "lang_totals": lang_totals,
+                    "lang_thresholds": lang_thresholds,
+                }
+            )
+        if dsir_keep_fraction is not None:
+            from ..operators import dsir
+            from ..operators.textstats import quality_score
 
-        lr = dsir.dsir_log_ratio_flagged(
-            clean, quality_score(F.col(text_col)) >= 0.5, text_col,
-            dsir_n_buckets,
-        )
-        c3 = model.dsir_lr.overwrite(lr)
-        stored_lr = model.dsir_lr.read(c3.version)
-        w = dsir.dsir_score(clean, stored_lr, id_col, text_col, dsir_n_buckets)
-        dsir_thr = w.agg(
-            F.expr(
-                f"percentile(dsir_weight, {1.0 - dsir_keep_fraction})"
-            ).alias("thr")
-        ).collect()[0]["thr"]
-        meta.update(
-            {
-                "dsir_threshold": float(dsir_thr),
-                "dsir_keep_fraction": dsir_keep_fraction,
-                "dsir_n_buckets": dsir_n_buckets,
-                "dsir_lr_version": c3.version,
-            }
-        )
-    if classifier is not None:
-        # classifier filter (the fastText-shaped CCNet stage): train
-        # on the gate-surviving reference with the heuristic-quality
-        # seed labels (the same bootstrap the DSIR stage uses), freeze
-        # the weight table(s), and record the feature geometry in meta
-        # — batch application must score in the SAME space the fit
-        # recorded (the frozen-meta rule). Every keep threshold is
-        # CALIBRATED, not the raw sign: the frozen floor is the
-        # reference corpus's own (1 - keep_fraction) score percentile
-        # (the DSIR-stage discipline) — a hard pred_pos cut
-        # degenerates to drop-all / keep-all whenever the features
-        # can't separate the seed labels, while a percentile floor
-        # always keeps the best-scoring fraction.
-        #
-        # "both" freezes BOTH scorers off the SAME seed bootstrap and
-        # composes their calibrated keeps at batch time under
-        # ``ensemble_policy``: "and" (intersection — the
-        # high-precision gate) or "or" (union — the high-recall gate).
-        # td_classifier_ensemble is the oracle-checked audit of what
-        # each policy costs in precision vs recall.
-        if classifier not in ("logreg", "nb", "both"):
-            raise ValueError(
-                "classifier must be None, 'logreg', 'nb' or 'both', "
-                f"got {classifier!r}"
+            lr = dsir.dsir_log_ratio_flagged(
+                clean, quality_score(F.col(text_col)) >= 0.5, text_col,
+                dsir_n_buckets,
             )
-        if classifier == "both" and ensemble_policy not in ("and", "or"):
-            raise ValueError(
-                f"ensemble_policy must be 'and' or 'or', got "
-                f"{ensemble_policy!r}"
-            )
-        from ..operators.staging import release_staged, stage
-        from ..operators.textstats import (
-            classifier_features,
-            logreg_score,
-            logreg_train,
-            nb_score,
-            nb_train,
-            quality_score,
-        )
-
-        # the labeled per-doc feature frame feeds up to FOUR consumers
-        # under "both" (each trainer and each calibration scoring
-        # pass) — stage it once, keeping only the arrays the chosen
-        # scorers read, so the quality_score label fold and the
-        # featurize run one pass over the clean rows
-        arrays = {"logreg": ["_bks"], "nb": ["_toks"], "both": ["_toks", "_bks"]}
-        labeled = stage(
-            classifier_features(
-                clean.withColumn(
-                    "_lbl", quality_score(F.col(text_col)) >= 0.5
-                ),
-                text_col,
-                classifier_n_buckets,
-            ).select(id_col, "_lbl", *arrays[classifier]),
-            "classifier_features",
-        )
-        meta.update(
-            {
-                "classifier": classifier,
-                "classifier_keep_fraction": classifier_keep_fraction,
-            }
-        )
-        if classifier in ("logreg", "both"):
-            wts = logreg_train(
-                labeled,
-                "_lbl",
-                id_col,
-                steps=classifier_steps,
-                lr=classifier_lr,
-            )
-            c4 = model.logreg.overwrite(wts)
-            stored_wts = model.logreg.read(c4.version)
-            ref_scores = logreg_score(labeled, stored_wts, id_col)
-            clf_thr = ref_scores.agg(
+            c3 = model.dsir_lr.overwrite(lr)
+            stored_lr = model.dsir_lr.read(c3.version)
+            w = dsir.dsir_score(clean, stored_lr, id_col, text_col, dsir_n_buckets)
+            dsir_thr = w.agg(
                 F.expr(
-                    f"percentile(lr_score, {1.0 - classifier_keep_fraction})"
+                    f"percentile(dsir_weight, {1.0 - dsir_keep_fraction})"
                 ).alias("thr")
             ).collect()[0]["thr"]
             meta.update(
                 {
-                    "classifier_n_buckets": classifier_n_buckets,
-                    "classifier_steps": classifier_steps,
-                    "classifier_lr": classifier_lr,
-                    "classifier_threshold": float(clf_thr),
-                    "logreg_version": c4.version,
+                    "dsir_threshold": float(dsir_thr),
+                    "dsir_keep_fraction": dsir_keep_fraction,
+                    "dsir_n_buckets": dsir_n_buckets,
+                    "dsir_lr_version": c3.version,
                 }
             )
-        if classifier in ("nb", "both"):
-            nbw, prior = nb_train(labeled, "_lbl")
-            c5 = model.nb.overwrite(nbw)
-            stored_nbw = model.nb.read(c5.version)
-            # pin the prior as a plain float in meta (it is one
-            # scalar, not a table) and score the reference through
-            # the SAME reconstructed 1-row frame the batch path uses,
-            # so fit-time calibration and batch-time scoring share
-            # one code shape
-            prior_val = float(prior.collect()[0]["log_prior"])
-            prior_df = model.spark.createDataFrame(
-                [(prior_val,)], "log_prior double"
+        if classifier is not None:
+            # classifier filter (the fastText-shaped CCNet stage): train
+            # on the gate-surviving reference with the heuristic-quality
+            # seed labels (the same bootstrap the DSIR stage uses), freeze
+            # the weight table(s), and record the feature geometry in meta
+            # — batch application must score in the SAME space the fit
+            # recorded (the frozen-meta rule). Every keep threshold is
+            # CALIBRATED, not the raw sign: the frozen floor is the
+            # reference corpus's own (1 - keep_fraction) score percentile
+            # (the DSIR-stage discipline) — a hard pred_pos cut
+            # degenerates to drop-all / keep-all whenever the features
+            # can't separate the seed labels, while a percentile floor
+            # always keeps the best-scoring fraction.
+            #
+            # "both" freezes BOTH scorers off the SAME seed bootstrap and
+            # composes their calibrated keeps at batch time under
+            # ``ensemble_policy``: "and" (intersection — the
+            # high-precision gate) or "or" (union — the high-recall gate).
+            # td_classifier_ensemble is the oracle-checked audit of what
+            # each policy costs in precision vs recall.
+            if classifier not in ("logreg", "nb", "both"):
+                raise ValueError(
+                    "classifier must be None, 'logreg', 'nb' or 'both', "
+                    f"got {classifier!r}"
+                )
+            if classifier == "both" and ensemble_policy not in ("and", "or"):
+                raise ValueError(
+                    f"ensemble_policy must be 'and' or 'or', got "
+                    f"{ensemble_policy!r}"
+                )
+            from ..operators.textstats import (
+                classifier_features,
+                logreg_score,
+                logreg_train,
+                nb_score,
+                nb_train,
+                quality_score,
             )
-            nb_ref = nb_score(labeled, stored_nbw, prior_df, id_col)
-            nb_thr = nb_ref.agg(
-                F.expr(
-                    f"percentile(nb_score, {1.0 - classifier_keep_fraction})"
-                ).alias("thr")
-            ).collect()[0]["thr"]
-            meta.update(
-                {
-                    "nb_prior": prior_val,
-                    "nb_threshold": float(nb_thr),
-                    "nb_version": c5.version,
-                }
+
+            # the labeled per-doc feature frame feeds up to FOUR consumers
+            # under "both" (each trainer and each calibration scoring
+            # pass) — stage it once, keeping only the arrays the chosen
+            # scorers read, so the quality_score label fold and the
+            # featurize run one pass over the clean rows
+            arrays = {"logreg": ["_bks"], "nb": ["_toks"], "both": ["_toks", "_bks"]}
+            labeled = stage(
+                classifier_features(
+                    clean.withColumn(
+                        "_lbl", quality_score(F.col(text_col)) >= 0.5
+                    ),
+                    text_col,
+                    classifier_n_buckets,
+                ).select(id_col, "_lbl", *arrays[classifier]),
+                "classifier_features",
             )
-        if classifier == "both":
-            meta["ensemble_policy"] = ensemble_policy
-        # every consumer has collected by here (thresholds) or written
-        # to storage (weight tables) — release the staged frame so
-        # repeated fits in one long-lived session don't accumulate
-        # checkpointed blocks
-        release_staged(labeled)
-    model._write_meta(meta)
+            try:
+                meta.update(
+                    {
+                        "classifier": classifier,
+                        "classifier_keep_fraction": classifier_keep_fraction,
+                    }
+                )
+                if classifier in ("logreg", "both"):
+                    wts = logreg_train(
+                        labeled,
+                        "_lbl",
+                        id_col,
+                        steps=classifier_steps,
+                        lr=classifier_lr,
+                    )
+                    c4 = model.logreg.overwrite(wts)
+                    stored_wts = model.logreg.read(c4.version)
+                    ref_scores = logreg_score(labeled, stored_wts, id_col)
+                    clf_thr = ref_scores.agg(
+                        F.expr(
+                            f"percentile(lr_score, {1.0 - classifier_keep_fraction})"
+                        ).alias("thr")
+                    ).collect()[0]["thr"]
+                    meta.update(
+                        {
+                            "classifier_n_buckets": classifier_n_buckets,
+                            "classifier_steps": classifier_steps,
+                            "classifier_lr": classifier_lr,
+                            "classifier_threshold": float(clf_thr),
+                            "logreg_version": c4.version,
+                        }
+                    )
+                if classifier in ("nb", "both"):
+                    nbw, prior = nb_train(labeled, "_lbl")
+                    c5 = model.nb.overwrite(nbw)
+                    stored_nbw = model.nb.read(c5.version)
+                    # pin the prior as a plain float in meta (it is one
+                    # scalar, not a table) and score the reference through
+                    # the SAME reconstructed 1-row frame the batch path uses,
+                    # so fit-time calibration and batch-time scoring share
+                    # one code shape
+                    prior_val = float(prior.collect()[0]["log_prior"])
+                    prior_df = model.spark.createDataFrame(
+                        [(prior_val,)], "log_prior double"
+                    )
+                    nb_ref = nb_score(labeled, stored_nbw, prior_df, id_col)
+                    nb_thr = nb_ref.agg(
+                        F.expr(
+                            f"percentile(nb_score, {1.0 - classifier_keep_fraction})"
+                        ).alias("thr")
+                    ).collect()[0]["thr"]
+                    meta.update(
+                        {
+                            "nb_prior": prior_val,
+                            "nb_threshold": float(nb_thr),
+                            "nb_version": c5.version,
+                        }
+                    )
+                if classifier == "both":
+                    meta["ensemble_policy"] = ensemble_policy
+            finally:
+                release_staged(labeled)
+        model._write_meta(meta)
+    finally:
+        release_staged(clean)
     return meta
 
 

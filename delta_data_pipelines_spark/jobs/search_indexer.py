@@ -55,7 +55,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.staging import release_staged
+from ..operators.staging import release_staged, stage
 from ..queries.search_index import (
     FULL_REBUILD_SINCE,
     FULL_REBUILD_STATUS,
@@ -243,8 +243,8 @@ class ContinuousSearchIndexer:
             scope = None
             stale_universe = indexed
         else:
-            scope = self._affected_keys(applied, latest, snaps)
-            scope = scope.localCheckpoint(eager=True)  # staged: 3 consumers
+            # staged: 3 consumers
+            scope = stage(self._affected_keys(applied, latest, snaps), "index_scope")
             # only affected ids the index holds can be deleted from it
             stale_universe = scope.join(indexed, ["o_orderkey"], "left_semi")
         try:

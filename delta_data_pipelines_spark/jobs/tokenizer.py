@@ -27,6 +27,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.staging import release_staged, stage
 from ..storage import JsonMetaStore, VersionedTable
 
 _FAMILIES = ("unigram", "bpe")
@@ -74,7 +75,7 @@ def train_tokenizer(
             .where(F.col("w") != "")
             .groupBy("w")
             .agg(F.count("*").alias("n"))
-            .localCheckpoint(eager=True)  # candidates + every EM round
+            .transform(stage, "tokenizer_vocab")  # candidates + every EM round
         )
         pieces = unigram.piece_logprobs(
             unigram.unigram_candidates(
@@ -82,11 +83,23 @@ def train_tokenizer(
                 max_len=max_len, min_count=min_count,
             )
         )
-        for _ in range(em_rounds):
-            pieces = unigram.unigram_refit(
-                vocab, pieces, word_col="w", n_col="n", max_len=max_len
-            ).localCheckpoint(eager=True)  # each round reads the last
-        commit = store.pieces.overwrite(pieces)
+        try:
+            for r in range(em_rounds):
+                # each round reads the last, which is released once the
+                # new round is staged
+                prev, pieces = pieces, stage(
+                    unigram.unigram_refit(
+                        vocab, pieces, word_col="w", n_col="n", max_len=max_len
+                    ),
+                    "unigram_pieces",
+                )
+                if r:
+                    release_staged(prev)
+            commit = store.pieces.overwrite(pieces)
+        finally:
+            release_staged(vocab)
+            if em_rounds:
+                release_staged(pieces)
         meta = {
             "family": "unigram",
             "max_len": max_len,
@@ -389,7 +402,7 @@ def materialize_packed(
     # encode once: the counts->prefix-sum branch and the token explode
     # both consume enc, and the encode plan (distinct-word Viterbi +
     # corpus join) is too expensive to evaluate per branch
-    enc = encode_ids(store, docs, text_col).localCheckpoint(eager=True)
+    enc = stage(encode_ids(store, docs, text_col), "packed_windows_ids")
     counts = enc.select(id_col, F.col("piece_ids_n").alias("n_pieces"))
     cum = ranking.global_cumsum_by_range(counts, id_col, "n_pieces").select(
         id_col, F.col("cum_before").alias("_off")

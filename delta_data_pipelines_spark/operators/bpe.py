@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .staging import release_staged, stage
+
 
 def _adjacent_pairs(syms: Column) -> Column:
     """array<struct<l,r>> of adjacent symbol pairs; the trailing
@@ -83,10 +85,10 @@ def bpe_train(
     """Learn the first ``n_merges`` BPE merge rules from the corpus.
 
     Returns (rank int, left, right, merged, pair_count) in learning
-    order. Each round localCheckpoints the rewritten vocabulary (the
-    kmeans ``checkpoint_rounds`` pattern): plan depth stays O(1) per
-    round instead of compounding fold-inside-fold expressions, at the
-    price of one eager job per round — the right trade for an
+    order. Each round stages the rewritten vocabulary and releases the
+    previous round's (the near_dup_clusters pattern): plan depth stays
+    O(1) per round instead of compounding fold-inside-fold expressions,
+    at the price of one eager job per round — the right trade for an
     inherently sequential algorithm. Stops early when no pair repeats
     (max pair_count would be a single word's internal pair with wf=1
     and no competitors — still merged; only an EMPTY pair table stops).
@@ -94,22 +96,29 @@ def bpe_train(
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
     spark = docs.sparkSession
-    vocab = word_vocab(docs, text_col).localCheckpoint(eager=True)
+    vocab = stage(word_vocab(docs, text_col), "bpe_vocab")
     merges: list[tuple] = []
-    for rank in range(1, n_merges + 1):
-        best = (
-            pair_counts(vocab)
-            .orderBy(F.col("pair_count").desc(), "l", "r")
-            .limit(1)
-            .collect()
-        )
-        if not best:  # every word is a single symbol already
-            break
-        left, right, cnt = best[0]["l"], best[0]["r"], int(best[0]["pair_count"])
-        merges.append((rank, left, right, left + right, cnt))
-        vocab = vocab.select(
-            "wf", merge_pair(F.col("syms"), left, right).alias("syms")
-        ).localCheckpoint(eager=True)
+    try:
+        for rank in range(1, n_merges + 1):
+            best = (
+                pair_counts(vocab)
+                .orderBy(F.col("pair_count").desc(), "l", "r")
+                .limit(1)
+                .collect()
+            )
+            if not best:  # every word is a single symbol already
+                break
+            left, right, cnt = best[0]["l"], best[0]["r"], int(best[0]["pair_count"])
+            merges.append((rank, left, right, left + right, cnt))
+            prev, vocab = vocab, stage(
+                vocab.select(
+                    "wf", merge_pair(F.col("syms"), left, right).alias("syms")
+                ),
+                "bpe_vocab",
+            )
+            release_staged(prev)
+    finally:
+        release_staged(vocab)
     return spark.createDataFrame(
         merges,
         "rank int, left string, right string, merged string, pair_count bigint",

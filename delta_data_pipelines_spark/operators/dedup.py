@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .staging import stage
+from .staging import release_staged, stage
 
 # MinHash geometry: k = bands * rows_per_band. With 16 bands of 4 rows,
 # P(candidate | jaccard=j) = 1-(1-j^4)^16 — ~0.65 at j=0.5, >0.9996 at
@@ -38,30 +38,21 @@ ROWS_PER_BAND = 4
 SHINGLE_SIZE = 3
 
 
-def _materialize_and_release(out: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Materialize ``out`` (conf-gated staging: eager localCheckpoint
-    locally, written table with ``spark.delta_pipelines.staging.dir``
-    set — the fault-tolerant production form), then release the staged
-    intermediates it was built from.
+def _materialize_and_release(out: DataFrame, *staged: DataFrame) -> DataFrame:
+    """Stage ``out``, then release the frames it was built from — the
+    eager-operator shape: the caller gets a staged result, and the
+    operator's own intermediates are gone before it returns.
 
-    A bare ``.persist()`` pins blocks in the CacheManager for the whole
-    session (repeated invocations — exactly what bench loops do —
-    accumulate cache without bound). Materializing ``out`` severs the
-    lineage so the intermediates are safe to release immediately; the
-    checkpoint's own blocks are reclaimed by the ContextCleaner once
-    the result is dereferenced (and don't exist at all in the
-    written-table form). ``cached`` frames may be persist()ed OR
-    eagerly localCheckpointed — :func:`staging.release_staged` handles
-    both (r14 VERDICT #6: the release hook now covers the checkpoint
-    mechanism too, so operator-internal staging can use whichever
-    primitive measures faster without leaking executor storage).
+    ``staged`` are frames this operator staged itself (never a frame
+    the caller handed in). Staging ``out`` severs its lineage, so they
+    are safe to release even if staging ``out`` fails; the result's
+    own blocks are reclaimed by the ContextCleaner once it is
+    dereferenced.
     """
-    from .staging import release_staged
-
-    result = out.transform(stage, "staged")
-    for df in cached:
-        release_staged(df)
-    return result
+    try:
+        return stage(out, "result")
+    finally:
+        release_staged(*staged)
 
 
 def tokens(text: Column) -> Column:
@@ -243,7 +234,7 @@ def lsh_candidate_pairs(
 
 def minhash_near_dup_pairs(
     df: DataFrame, id_col: str, text_col: str, threshold: float = 0.8,
-    max_bucket: int = 1000, materialize: bool = True,
+    max_bucket: int = 1000,
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs, verified with exact Jaccard.
 
@@ -253,24 +244,15 @@ def minhash_near_dup_pairs(
     precision is 1.0 and recall is the LSH collision probability (≈1
     at the 0.8 threshold with the default geometry).
 
-    With ``materialize=True`` (default) this executes EAGERLY: the
-    full LSH + verify job runs at call time, the signature base is
-    staged (persisted) across the band/verify arms and released after
-    (see ``_materialize_and_release``) — not a lazy plan you can
-    ``explain``/``limit`` cheaply. ``materialize=False`` returns the
-    lazy plan with NO persists: composition-friendly (explain/schema
-    cost nothing), but the shingle+signature pass recomputes once per
-    consuming arm — persist upstream or accept ~2× compute.
+    Executes EAGERLY: the full LSH + verify job runs at call time, and
+    the signature base is staged across the band/verify arms and
+    released after (see ``_materialize_and_release``) — not a lazy plan
+    you can ``explain``/``limit`` cheaply.
     """
-    from pyspark.storagelevel import StorageLevel
-
     # Both the banding arm and the verify arm consume the signature
-    # base; unpersisted, Spark recomputes the whole shingle+hash pass
-    # per arm (~2× cost). Persisting = the "stage signatures to a
-    # table" step a 100 TB run does explicitly.
-    base = minhash_signatures(df, id_col, text_col)
-    if materialize:
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    # base; unstaged, Spark recomputes the whole shingle+hash pass per
+    # arm (~2× cost).
+    base = stage(minhash_signatures(df, id_col, text_col), "minhash_signatures")
     cand = _candidates(_banded(base.select(id_col, "_sig"), id_col), id_col, max_bucket)
     hs = base.select(id_col, "_hs")
     out = (
@@ -280,8 +262,6 @@ def minhash_near_dup_pairs(
         .where(F.col("jaccard_sim") >= threshold)
         .select("id_a", "id_b", "jaccard_sim")
     )
-    if not materialize:
-        return out
     return _materialize_and_release(out, base)
 
 
@@ -340,7 +320,6 @@ def containment_pairs(
     id_col: str,
     text_col: str,
     threshold: float = 0.5,
-    materialize: bool = True,
     max_df: int | None = None,
 ) -> DataFrame:
     """Asymmetric shingle-containment pairs: |sh(a)∩sh(b)| / |sh(a)| ≥ t.
@@ -370,9 +349,9 @@ def containment_pairs(
        string-set computation — collisions ≈ |sh|²/2⁻⁶⁴).
 
     Output: (id_a, id_b, containment), containment rounded to 9 dp.
-    ``materialize`` follows :func:`minhash_near_dup_pairs`: the ordered
-    shingle-set base feeds the prefix, index, and verify arms, so the
-    default persists it for the run and releases it after.
+    Eager like :func:`minhash_near_dup_pairs`: the ordered shingle-set
+    base feeds the prefix, index, and verify arms, so it is staged for
+    the run and released after.
 
     ``max_df`` is the hot-shingle guard (the analog of the LSH path's
     ``max_bucket``): shingles whose document frequency exceeds it are
@@ -387,14 +366,12 @@ def containment_pairs(
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    from pyspark.storagelevel import StorageLevel
-
     sh = _spread(df.select(id_col, text_col)).select(
         id_col,
         F.transform(shingles(F.col(text_col)), lambda x: F.xxhash64(x)).alias("_hs"),
     )
     # ex feeds two consumers (the df groupBy and the order-attach join)
-    # but is deliberately NOT persisted: caching the corpus-gram explode
+    # but is deliberately NOT staged: caching the corpus-gram explode
     # MEASURED SLOWER at sf0.1 (2.56 → 2.70 s median with a 7 s spill
     # outlier, r14 optimization round) — the explode recompute off the
     # page-cached scan is cheaper than materializing gram rows
@@ -415,9 +392,8 @@ def containment_pairs(
             ).alias("_hs"),
         )
         .withColumn("_sz", F.size("_hs"))
+        .transform(stage, "containment_sets")
     )
-    if materialize:
-        ordered = ordered.persist(StorageLevel.MEMORY_AND_DISK)
     # ceil over a 6-dp-rounded product: bare ceil(t·sz) overestimates by
     # 1 whenever the float product lands epsilon ABOVE the true integer
     # (0.55·100 = 55.000000000000004 → ceil 56), silently dropping true
@@ -469,8 +445,6 @@ def containment_pairs(
         .where(F.col("containment") >= threshold)
         .select("id_a", "id_b", "containment")
     )
-    if not materialize:
-        return out
     return _materialize_and_release(out, ordered)
 
 
@@ -696,7 +670,7 @@ def simhash_near_dup_pairs(
 
 def embedding_near_dup_pairs(
     df: DataFrame, id_col: str, vec_col: str, block_col: str | None = None,
-    threshold: float = 0.98, materialize: bool = True,
+    threshold: float = 0.98,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs ≥ threshold.
 
@@ -704,10 +678,7 @@ def embedding_near_dup_pairs(
     (an LSH bucket / IVF cell from operators.similarity) to bound it
     at scale.
 
-    ``materialize=True`` (default) executes EAGERLY at call time (see
-    ``_materialize_and_release``); ``materialize=False`` returns the
-    lazy plan with no persists — the normalization pass then recomputes
-    once per self-join arm.
+    Executes EAGERLY at call time (see ``_materialize_and_release``).
     """
     from .similarity import dot, norm
 
@@ -730,11 +701,9 @@ def embedding_near_dup_pairs(
             *( ["_blk"] if block_col else [] ),
         )
     )
-    # Both self-join arms read v; without a persist the full upstream
+    # Both self-join arms read v; unstaged, the full upstream
     # (blocking join / IVF assignment / normalization) re-runs per arm.
-    # Local stand-in for staging the normalized vectors to a table.
-    if materialize:
-        v = v.persist()
+    v = stage(v, "embedding_unit_vectors")
     a, b = v.alias("a"), v.alias("b")
     cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
     if block_col:
@@ -749,35 +718,7 @@ def embedding_near_dup_pairs(
             "cosine_sim",
         )
     )
-    if not materialize:
-        return out
     return _materialize_and_release(out, v)
-
-
-def _tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, list[int]]:
-    """localCheckpoint(eager) + the ids of the persistent RDDs the
-    checkpoint registered, so the caller can release them
-    DETERMINISTICALLY once the next round no longer needs them.
-
-    A localCheckpoint's blocks are only weakly referenced: without an
-    explicit release they linger until driver GC runs the
-    ContextCleaner — across many rounds/invocations on large pair sets
-    that is executor storage held hostage to GC timing."""
-    sc = df.sparkSession.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    out = df.transform(stage, "staged")
-    after = sc._jsc.getPersistentRDDs().keySet().toArray()
-    return out, [i for i in after if i not in before]
-
-
-def _release_rdd_ids(spark_session, ids: list[int]) -> None:
-    """Unpersist persistent RDDs by id (safe for locally-checkpointed
-    RDDs we will never read again — the blocks ARE the data)."""
-    m = spark_session.sparkContext._jsc.getPersistentRDDs()
-    for i in ids:
-        rdd = m.get(i)
-        if rdd is not None:
-            rdd.unpersist(False)
 
 
 def near_dup_clusters(
@@ -800,17 +741,14 @@ def near_dup_clusters(
     components are shallow (cliques/chains of a handful of docs), so
     this converges in 2-4 rounds in practice; each round is one
     join + groupBy on (src) — no all-pairs anywhere. Each round's
-    labels are localCheckpoint-ed to SEVER lineage, not merely
-    persisted: the round expression references the previous labels
-    twice (propagate + changed-count), so an unbroken logical plan
-    doubles per round — 2^rounds nodes, a driver-heap OOM by round
-    ~12 even on 10 rows. Checkpointing keeps every round's plan O(1);
-    GraphFrames' connected components checkpoints the same way. Each
-    superseded round's checkpoint blocks are unpersisted explicitly the
-    moment the next round is materialized (checkpoint blocks are only
-    weakly referenced — left alone they linger until driver GC runs the
-    ContextCleaner), so executor storage holds at most two rounds of
-    labels at any time, regardless of round count or invocation count.
+    labels are staged to SEVER lineage: the round expression references
+    the previous labels twice (propagate + changed-count), so an
+    unbroken logical plan doubles per round — 2^rounds nodes, a
+    driver-heap OOM by round ~12 even on 10 rows. Staging keeps every
+    round's plan O(1); GraphFrames' connected components checkpoints
+    the same way. Each superseded round is released the moment the
+    next round is staged, so storage holds at most two rounds of labels
+    at any time, regardless of round count or invocation count.
 
     Raises RuntimeError if the fixpoint is not reached within
     ``max_iter`` rounds (component diameter > max_iter): returning the
@@ -821,81 +759,73 @@ def near_dup_clusters(
 
     Executes EAGERLY — label propagation is inherently iterative
     (one Spark job per round), so the result is materialized at call
-    time (see ``_materialize_and_release``).
+    time (see ``_materialize_and_release``). The operator stages its
+    own copy of ``pairs`` and releases only what it staged: a frame the
+    caller persisted stays cached.
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    # persist: the symmetric union reads `pairs` twice, and every
+    # staged: the symmetric union reads `pairs` twice, and every
     # propagation round joins against edges — without these the
     # upstream pair computation (LSH join + Jaccard verify) re-runs
     # once per union arm and once per round
-    pairs = pairs.persist()
+    pairs = stage(pairs, "cluster_pairs")
     fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = (
-        fwd.union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .persist()
-    )
-    spark = pairs.sparkSession
-    # Materialize the pairs+edges caches BEFORE the first tracked
-    # checkpoint: cached-RDD ids register in sc.persistentRdds lazily,
-    # during the first job that builds the cache — if that job is the
-    # tracked checkpoint below, the caches land in ITS before/after diff
-    # and get released after round 1, silently recomputing the whole
-    # pair build every subsequent round (caught by the evaluation-count
-    # test in tests/test_operators.py).
-    edges.count()
-    labels, label_blocks = _tracked_local_checkpoint(
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    changed = 0
-    for _ in range(max_iter):
-        prop = (
-            edges.join(
-                labels.withColumnRenamed("node", "src"), "src"
+    edges = labels = None
+    try:
+        edges = stage(
+            fwd.union(
+                pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+            ).distinct(),
+            "cluster_edges",
+        )
+        labels = stage(
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .withColumn("label", F.col("node")),
+            "cluster_labels",
+        )
+        changed = 0
+        for _ in range(max_iter):
+            prop = (
+                edges.join(labels.withColumnRenamed("node", "src"), "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.min("label").alias("nlabel"))
             )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("label").alias("nlabel"))
-        )
-        new_labels, new_blocks = _tracked_local_checkpoint(
-            labels.join(prop, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
+            new_labels = stage(
+                labels.join(prop, "node", "left").select(
+                    "node",
+                    F.least(
+                        F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
+                    ).alias("label"),
+                ),
+                "cluster_labels",
             )
+            changed = (
+                new_labels.withColumnRenamed("label", "_new")
+                .join(labels, "node")
+                .where(F.col("_new") != F.col("label"))
+                .count()
+            )
+            # the previous round is dead from here: release it now
+            # instead of waiting for driver GC + ContextCleaner
+            release_staged(labels)
+            labels = new_labels
+            if changed == 0:
+                break
+        if changed != 0:
+            raise RuntimeError(
+                f"near_dup_clusters did not converge in {max_iter} rounds "
+                f"({changed} labels still changing): a component's diameter "
+                f"exceeds max_iter; raise max_iter for deep chain-shaped "
+                f"components instead of accepting split clusters"
+            )
+        out = labels.select(
+            F.col("node").alias("member_id"), F.col("label").alias("cluster_id")
         )
-        changed = (
-            new_labels.withColumnRenamed("label", "_new")
-            .join(labels, "node")
-            .where(F.col("_new") != F.col("label"))
-            .count()
-        )
-        # previous round's checkpoint blocks are dead from here: release
-        # them now instead of waiting for driver GC + ContextCleaner
-        _release_rdd_ids(spark, label_blocks)
-        labels, label_blocks = new_labels, new_blocks
-        if changed == 0:
-            break
-    if changed != 0:
-        _release_rdd_ids(spark, label_blocks)
-        for df in (edges, pairs):
-            df.unpersist()
-        raise RuntimeError(
-            f"near_dup_clusters did not converge in {max_iter} rounds "
-            f"({changed} labels still changing): a component's diameter "
-            f"exceeds max_iter; raise max_iter for deep chain-shaped "
-            f"components instead of accepting split clusters"
-        )
-    out = labels.select(
-        F.col("node").alias("member_id"), F.col("label").alias("cluster_id")
-    )
-    result = _materialize_and_release(out, edges, pairs)
-    _release_rdd_ids(spark, label_blocks)  # final round's blocks, post-copy
-    return result
+        return stage(out, "result")
+    finally:
+        release_staged(pairs, edges, labels)
 
 
 def contamination_gram_hits(

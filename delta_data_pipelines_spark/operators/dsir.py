@@ -237,16 +237,15 @@ def dsir_weights_flagged(
     Same numbers as the two-frame form — bucket counts, round-9 lns,
     round-9 log-ratio, DECIMAL(28,9) doc sums — but the corpus
     explodes ONCE total: the (id, flag, bucket) feature frame is
-    staged (persist — the multi-consumer discipline; the local
-    stand-in for writing it to a table) and feeds BOTH the
-    conditional-count model fit and the scoring join. The two-frame
-    form explodes three times (target fit, raw fit, scoring) and the
-    r13 one-pass-fit form still twice; at 100 TB each saved explode
-    is a full corpus pass. A NULL flag counts as not-target, matching
-    ``where(flag)``'s NULL-drops semantics; the flag expression is
-    evaluated exactly once per doc (below the explode — the
-    ExtractGenerator rule, see dsir_log_ratio_flagged)."""
-    from pyspark.storagelevel import StorageLevel
+    staged (``staging.stage`` — the multi-consumer discipline) and
+    feeds BOTH the conditional-count model fit and the scoring join.
+    The two-frame form explodes three times (target fit, raw fit,
+    scoring) and the r13 one-pass-fit form still twice; at 100 TB each
+    saved explode is a full corpus pass. A NULL flag counts as
+    not-target, matching ``where(flag)``'s NULL-drops semantics; the
+    flag expression is evaluated exactly once per doc (below the
+    explode — the ExtractGenerator rule, see dsir_log_ratio_flagged)."""
+    from .staging import stage
 
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
@@ -259,7 +258,7 @@ def dsir_weights_flagged(
         id_col,
         "_t",
         F.explode(buckets_from_words(F.col("_w"), n_buckets)).alias("bucket"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).transform(stage, "dsir_feats")
     counts = feats.groupBy("bucket").agg(
         F.count("*").alias("_rc"),
         F.count_if(F.coalesce(F.col("_t"), F.lit(False))).alias("_tc"),

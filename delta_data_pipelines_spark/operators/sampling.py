@@ -362,12 +362,12 @@ def cluster_balance(
     from .dedup import _materialize_and_release
     from .ranking import grouped_rank_by_range
     from .similarity import kmeans_assign
-    from pyspark.storagelevel import StorageLevel
+    from .staging import stage
 
     if cap < 1:
         raise ValueError(f"cap must be >= 1, got {cap}")
-    assign = kmeans_assign(df, id_col, vec_col, k=k, n_iter=n_iter).persist(
-        StorageLevel.MEMORY_AND_DISK
+    assign = stage(
+        kmeans_assign(df, id_col, vec_col, k=k, n_iter=n_iter), "cluster_assign"
     )
     keyed = assign.withColumn(
         "_h", F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))

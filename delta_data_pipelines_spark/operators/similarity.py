@@ -17,7 +17,7 @@ import pandas as pd  # module-level: pandas_udf resolves the (stringified
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .staging import stage
+from .staging import release_staged, stage
 
 
 def as_double(vec: Column) -> Column:
@@ -214,15 +214,13 @@ def mmr_topk(
     (query side broadcast, same as brute_force_topk — swap in the IVF
     candidate generator for a bucketed pool at larger scale); the
     pair table is pool² rows per query, bounded by construction, and
-    is staged once (persist — k−1 consumers) like the dd_* operator
-    stages. NULL/zero-norm similarities rank last (nullif-based), so
+    is staged once (k−1 consumers) like the dd_* operator stages.
+    NULL/zero-norm similarities rank last (nullif-based), so
     degenerate vectors can never win a round."""
     if not 1 <= k <= pool:
         raise ValueError(f"need 1 <= k <= pool, got k={k} pool={pool}")
     if not 0.0 <= lam <= 1.0:
         raise ValueError(f"lambda must be in [0, 1], got {lam}")
-    from pyspark.storagelevel import StorageLevel
-
     c, q = _probe_frames(corpus, queries, id_col, vec_col)
     scored = c.join(
         F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
@@ -234,7 +232,7 @@ def mmr_topk(
         scored.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= pool)
         .select("query_id", "neighbor_id", "_rel", "_cv")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(stage, "mmr_pool")
     )
     pairs = (
         cand.select(
@@ -257,91 +255,90 @@ def mmr_topk(
             "_ib",
             F.round(cosine(F.col("_va"), F.col("_vb")), 9).alias("_s"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(stage, "mmr_pairs")
     )
-    base = cand.select("query_id", "neighbor_id", "_rel")
-    picked: DataFrame | None = None
-    remaining = base
-    for r in range(1, k + 1):
-        if picked is None:
-            mmr = F.round(F.lit(lam) * F.col("_rel"), 9)
-            cur = remaining.withColumn("_mmr", mmr)
-        else:
-            # rename the grouped side's keys before the join: remaining
-            # and maxsim share lineage, so attribute-equality conditions
-            # can resolve both sides to the SAME column (Spark warns
-            # "trivially true equals predicate") and silently join
-            # across queries
-            maxsim = (
-                pairs.join(
-                    picked.select(
-                        "query_id", F.col("neighbor_id").alias("_ib")
-                    ),
-                    ["query_id", "_ib"],
+    try:
+        base = cand.select("query_id", "neighbor_id", "_rel")
+        picked: DataFrame | None = None
+        remaining = base
+        for r in range(1, k + 1):
+            if picked is None:
+                mmr = F.round(F.lit(lam) * F.col("_rel"), 9)
+                cur = remaining.withColumn("_mmr", mmr)
+            else:
+                # rename the grouped side's keys before the join: remaining
+                # and maxsim share lineage, so attribute-equality conditions
+                # can resolve both sides to the SAME column (Spark warns
+                # "trivially true equals predicate") and silently join
+                # across queries
+                maxsim = (
+                    pairs.join(
+                        picked.select(
+                            "query_id", F.col("neighbor_id").alias("_ib")
+                        ),
+                        ["query_id", "_ib"],
+                    )
+                    .groupBy("query_id", "_ia")
+                    .agg(F.max("_s").alias("_ms"))
+                    .withColumnRenamed("query_id", "_qq")
                 )
-                .groupBy("query_id", "_ia")
-                .agg(F.max("_s").alias("_ms"))
-                .withColumnRenamed("query_id", "_qq")
-            )
-            cur = (
-                remaining.join(
-                    maxsim,
-                    (F.col("query_id") == F.col("_qq"))
-                    & (F.col("neighbor_id") == F.col("_ia")),
-                    "left",
+                cur = (
+                    remaining.join(
+                        maxsim,
+                        (F.col("query_id") == F.col("_qq"))
+                        & (F.col("neighbor_id") == F.col("_ia")),
+                        "left",
+                    )
+                    .select(
+                        "query_id",
+                        "neighbor_id",
+                        "_rel",
+                        F.round(
+                            F.lit(lam) * F.col("_rel")
+                            - F.lit(1.0 - lam) * F.coalesce(F.col("_ms"), F.lit(0.0)),
+                            9,
+                        ).alias("_mmr"),
+                    )
+                )
+            # argmax via min_by on (-score, id): negating the DOUBLE score
+            # (always safe) instead of the id keeps the smallest-id tie rule
+            # working for ANY orderable id type (a negated string id would
+            # cast to NULL and break determinism); NULL scores (zero-norm
+            # vectors) are excluded up front so min_by can never pick one
+            pick = (
+                cur.where(F.col("_mmr").isNotNull())
+                .groupBy("query_id")
+                .agg(
+                    F.min_by(
+                        F.struct(
+                            F.col("neighbor_id").alias("i"),
+                            F.col("_mmr").alias("m"),
+                        ),
+                        F.struct(-F.col("_mmr"), F.col("neighbor_id")),
+                    ).alias("_p")
                 )
                 .select(
                     "query_id",
-                    "neighbor_id",
-                    "_rel",
-                    F.round(
-                        F.lit(lam) * F.col("_rel")
-                        - F.lit(1.0 - lam) * F.coalesce(F.col("_ms"), F.lit(0.0)),
-                        9,
-                    ).alias("_mmr"),
+                    F.col("_p.i").alias("neighbor_id"),
+                    F.col("_p.m").alias("mmr_score"),
+                    F.lit(r).alias("rank"),
                 )
+                # cut the lineage per round (the near_dup_clusters iterative
+                # precedent): without it round r's plan embeds rounds
+                # 1..r-1 recursively and optimizer+codegen time blows up
+                # (~40s for k=5 at sf0.01 vs ~4s with the barrier); the
+                # checkpointed frame is one row per query — tiny
+                .transform(stage, "mmr_pick")
             )
-        # argmax via min_by on (-score, id): negating the DOUBLE score
-        # (always safe) instead of the id keeps the smallest-id tie rule
-        # working for ANY orderable id type (a negated string id would
-        # cast to NULL and break determinism); NULL scores (zero-norm
-        # vectors) are excluded up front so min_by can never pick one
-        pick = (
-            cur.where(F.col("_mmr").isNotNull())
-            .groupBy("query_id")
-            .agg(
-                F.min_by(
-                    F.struct(
-                        F.col("neighbor_id").alias("i"),
-                        F.col("_mmr").alias("m"),
-                    ),
-                    F.struct(-F.col("_mmr"), F.col("neighbor_id")),
-                ).alias("_p")
+            picked = pick if picked is None else picked.unionByName(pick)
+            remaining = remaining.join(
+                pick.select("query_id", "neighbor_id"),
+                ["query_id", "neighbor_id"],
+                "left_anti",
             )
-            .select(
-                "query_id",
-                F.col("_p.i").alias("neighbor_id"),
-                F.col("_p.m").alias("mmr_score"),
-                F.lit(r).alias("rank"),
-            )
-            # cut the lineage per round (the near_dup_clusters iterative
-            # precedent): without it round r's plan embeds rounds
-            # 1..r-1 recursively and optimizer+codegen time blows up
-            # (~40s for k=5 at sf0.01 vs ~4s with the barrier); the
-            # checkpointed frame is one row per query — tiny
-            .transform(stage, "staged")
-        )
-        picked = pick if picked is None else picked.unionByName(pick)
-        remaining = remaining.join(
-            pick.select("query_id", "neighbor_id"),
-            ["query_id", "neighbor_id"],
-            "left_anti",
-        )
-    # every round is eagerly checkpointed, so the staged frames have no
-    # remaining consumer — release them (the _materialize_and_release
-    # discipline; leaving them cached taxes later queries in a loop)
-    cand.unpersist()
-    pairs.unpersist()
+    finally:
+        # every round's pick is staged, so the result reads neither frame
+        release_staged(cand, pairs)
     return picked
 
 
@@ -562,7 +559,6 @@ def kmeans_assign(
     vec_col: str = "embedding",
     k: int = 8,
     n_iter: int = 2,
-    checkpoint_rounds: bool = False,
 ) -> DataFrame:
     """Spherical k-means (cosine Lloyd) with deterministic seeding —
     the centroid-fitting step the IVF index needs at real scale
@@ -582,9 +578,7 @@ def kmeans_assign(
     one hash partition on (cid, pos) — k·dim groups — plus the argmax
     window on the vector id; nothing quadratic, nothing driver-side.
     """
-    assign = _kmeans_final_assign(
-        df, id_col, vec_col, k, n_iter, checkpoint_rounds
-    )
+    assign = _kmeans_final_assign(df, id_col, vec_col, k, n_iter)
     return assign.select(id_col, "cid")
 
 
@@ -613,20 +607,13 @@ def _kmeans_final_assign(
     vec_col: str,
     k: int,
     n_iter: int,
-    checkpoint_rounds: bool = False,
 ) -> DataFrame:
-    """``checkpoint_rounds=False`` (default) unrolls every Lloyd round
-    into ONE lazy plan — what the oracle checks, and fine for the 1-3
-    rounds an IVF build needs (plan depth grows linearly with rounds).
-    ``checkpoint_rounds=True`` localCheckpoints each round's centroids
-    (the near_dup_clusters pattern): plan depth stays O(1), the price
-    is one eager job per round — the right mode for a deep refinement
-    run (tests assert both modes produce identical assignments)."""
+    """Unrolls every Lloyd round into ONE lazy plan — what the oracle
+    checks, and fine for the 1-3 rounds an IVF build needs (plan depth
+    grows linearly with rounds)."""
     if k < 1 or n_iter < 1:
         raise ValueError(f"k and n_iter must be >= 1, got k={k} n_iter={n_iter}")
     vecs = df.select(F.col(id_col), as_double(F.col(vec_col)).alias("_v"))
-    if checkpoint_rounds:
-        vecs = vecs.transform(stage, "staged")
     # seed from the k actual lowest ids, not `id < k` — the latter
     # silently yields < k centroids on sparse/offset id spaces (same
     # contract as pq_index's seed; identical on dense 0-based ids).
@@ -640,8 +627,6 @@ def _kmeans_final_assign(
     assign = ivf_assign(vecs, cent, id_col)
     for _ in range(n_iter - 1):
         cent = _centroid_means(assign)
-        if checkpoint_rounds:
-            cent = cent.transform(stage, "staged")
         assign = ivf_assign(vecs, cent, id_col)
     return assign
 
@@ -652,14 +637,11 @@ def kmeans_centroids(
     vec_col: str = "embedding",
     k: int = 8,
     n_iter: int = 2,
-    checkpoint_rounds: bool = False,
 ) -> DataFrame:
     """Fitted cell centroids (cid, cv) — the production IVF build step:
     run the deterministic Lloyd rounds, then return the mean of each
     FINAL cluster. Feed straight into ``ivf_topk(centroids=...)``."""
-    assign = _kmeans_final_assign(
-        df, id_col, vec_col, k, n_iter, checkpoint_rounds
-    )
+    assign = _kmeans_final_assign(df, id_col, vec_col, k, n_iter)
     return _centroid_means(assign)
 
 

@@ -566,7 +566,7 @@ def passage_dup_stats(
       partial-agg friendly (the doc-keyed one collapses map-side to
       one row per doc per task); a boilerplate gram is one combiner
       row, so the hot-key skew the join mode guarded against cannot
-      occur at all. The explode has two consumers, so it is persisted
+      occur at all. The explode has two consumers, so it is staged
       once and the result materialized-and-released (the dd_* staging
       precedent; on a cluster this staging is a written table). NOTE
       this mode executes eagerly, like the dd_* operators.
@@ -576,7 +576,6 @@ def passage_dup_stats(
       Right when shingle df is known to be bounded (deduplicated or
       sampled corpora).
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     from .dedup import shingles
@@ -607,7 +606,7 @@ def passage_dup_stats(
         )
     from .dedup import _materialize_and_release
 
-    staged = grams.persist(StorageLevel.MEMORY_AND_DISK)
+    staged = stage(grams, "passage_grams")
     # min over a df-1 gram's single row IS its owner, including a NULL
     # id (min of {NULL} is NULL; the null-safe join below re-attaches
     # it to the NULL doc group exactly as the old gram join did)
@@ -757,7 +756,7 @@ def kn_bigram_logprob_scores(
     (verified: 0 ReusedExchange, one scan per instance; the earlier
     "AQE exchange reuse dedupes these" reading was wrong — the
     recompute was merely hidden by concurrent stage execution at
-    bench scale). `.persist()` measured SLOWER at sf0.1 (1.18→1.85 s:
+    bench scale). A CacheManager persist measured SLOWER at sf0.1 (1.18→1.85 s:
     cache-manager materialization serializes what concurrency hid),
     but the checkpoint truncates the re-planned subtree outright —
     and it matches the production posture, where the type table is
@@ -1046,7 +1045,7 @@ def kn_trigram_logprob_scores(
     table is localCheckpointed (eager): Spark 4.1.2 does not reuse
     the identical exchanges, so an unstaged table re-runs the
     reference explode once per consuming subtree (see
-    kn_bigram_logprob_scores for the verified account — `.persist()`
+    kn_bigram_logprob_scores for the verified account — a CacheManager persist
     measured slower here, the checkpoint does not)."""
     return kn_trigram_score_from_types(
         docs,
@@ -1247,7 +1246,7 @@ def kn_quadgram_logprob_scores(
     unstaged plan executed 18 scans / 18 explodes for one query
     (verified, 0 ReusedExchange). The checkpoint measured 3.9 → 3.1 s
     at sf0.1 AND removes seven reference-corpus re-explodes at scale;
-    `.persist()` had measured slower (see kn_bigram_logprob_scores
+    a CacheManager persist had measured slower (see kn_bigram_logprob_scores
     for the corrected account). Checkpointing the bn3/bn2 marginals
     TOO measured flat-to-slower (their recompute off the materialized
     type table is map-side cheap; each extra eager job costs more
@@ -1527,7 +1526,7 @@ def logreg_train(
             ).alias("_gr"),
             F.count("*").alias("_c"),
         )
-        .localCheckpoint(eager=True)
+        .transform(stage, "logreg_step1_grads")
     )
     nd = g1.where(F.col("_bucket") == -1).select(F.col("_c").alias("_nd"))
 
@@ -1611,7 +1610,7 @@ def logreg_train(
         # the NEXT step (or the caller's score) re-plans it per
         # consumer under non-reuse — stage the O(n_buckets) result,
         # exactly like g1 (the weight projection above it stays lazy).
-        grads = grads.localCheckpoint(eager=True)
+        grads = stage(grads, "logreg_grads")
         weights = new_weights(grads, weights)
     return weights.select(
         F.col("_bucket").alias("bucket"), F.col("_wt").alias("weight")
@@ -1705,9 +1704,9 @@ def remove_dup_passages(
     whose text is NULL pass through untouched (n_segments 0), and a
     fully-deleted document becomes the empty string, not NULL.
 
-    Scale shape: one tiling explode staged ONCE (persist — two
-    consumers: the per-segment frequency/winner aggregate and the
-    join-back), frequency+winner by plain groupBy (partial agg; each
+    Scale shape: one tiling explode staged ONCE (two consumers: the
+    per-segment frequency/winner aggregate and the join-back),
+    frequency+winner by plain groupBy (partial agg; each
     (doc, pos) emits one row so COUNT(*) is the occurrence count), the
     join back on the segment key is AQE-skew-split when boilerplate
     segments are hot — `passage_dup_stats`' df_mode="join" posture
@@ -1716,7 +1715,6 @@ def remove_dup_passages(
     operators: materialize, then release the stage).
     """
     from .dedup import _materialize_and_release
-    from pyspark import StorageLevel
 
     if n < 1:
         raise ValueError(f"segment size n must be >= 1, got {n}")
@@ -1731,7 +1729,7 @@ def remove_dup_passages(
             ).alias("_pos", "_seg"),
         )
     )
-    staged = segs.persist(StorageLevel.MEMORY_AND_DISK)
+    staged = stage(segs, "passage_segments")
     stats = staged.groupBy("_seg").agg(
         F.count("*").alias("_df"),
         F.min(
@@ -2116,7 +2114,6 @@ def dedup_sentence_spans(
     text_col: str = "text",
     span: int = 3,
     terminal: tuple[str, ...] = C4_TERMINAL,
-    materialize: bool = True,
 ) -> DataFrame:
     """C4's sentence-span deduplication (Raffel et al. 2020 §2.2:
     "we discard all but one of any three-sentence span occurring more
@@ -2147,28 +2144,22 @@ def dedup_sentence_spans(
     folds; the ONE corpus-scale shuffle is the span-hash partial-agg
     (the remove_dup_passages / decontamination shape, AQE-skew-safe);
     deletions re-enter by (id, position) anti-join; the sentence table
-    is staged once with persist for its two consumers (spans +
-    rebuild).
+    is staged once for its two consumers (spans + rebuild).
 
-    ``materialize=True`` (default) localCheckpoints the INPUT first:
-    it is read under two arms (NULL passthrough + live), and when the
-    text column is itself a derived expression (a mid-pipeline stage,
-    or the td_dedup_sentence_spans fixture derive) Catalyst pushes the
-    live arm's isNotNull down as the fully RE-DERIVED predicate —
-    re-evaluating the derivation per row on the scan side, serially on
-    a one-split file (measured: the pushed punctuation transform alone
-    cost ~3s/5k docs on one task). The checkpoint severs both the
-    double read and the pushdown (the lm_filter_stage precedent);
-    pass False for a fully lazy plan over plain stored columns."""
+    The INPUT is staged first too: it is read under two arms (NULL
+    passthrough + live), and when the text column is itself a derived
+    expression (a mid-pipeline stage, or the td_dedup_sentence_spans
+    fixture derive) Catalyst pushes the live arm's isNotNull down as
+    the fully RE-DERIVED predicate — re-evaluating the derivation per
+    row on the scan side, serially on a one-split file (measured: the
+    pushed punctuation transform alone cost ~3s/5k docs on one task).
+    Staging severs both the double read and the pushdown (the
+    lm_filter_stage precedent)."""
     if span < 1:
         raise ValueError(f"span must be >= 1, got {span}")
-    from pyspark.storagelevel import StorageLevel
-
     from .dedup import _materialize_and_release
 
-    base = docs.select(id_col, text_col)
-    if materialize:
-        base = base.localCheckpoint(eager=True)
+    base = stage(docs.select(id_col, text_col), "sentence_spans_input")
     nulls = base.where(F.col(text_col).isNull()).select(
         id_col,
         F.col(text_col),
@@ -2179,7 +2170,7 @@ def dedup_sentence_spans(
     s1 = live.select(id_col, F.split(F.col(text_col), " ").alias("_w"))
     sents = s1.select(
         id_col, sentences_from_words(F.col("_w"), terminal).alias("_sents")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).transform(stage, "sentence_arrays")
     ns = F.size(F.col("_sents"))
     spans = sents.select(
         id_col,
@@ -2266,7 +2257,7 @@ def dedup_sentence_spans(
         )
         .unionByName(nulls)
     )
-    return _materialize_and_release(out, sents)
+    return _materialize_and_release(out, sents, base)
 
 
 def c4_line_ok(

@@ -1989,7 +1989,7 @@ def txt_kn_lang_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recompute was hidden by concurrent stages at bench scale), so
     # it is localCheckpointed — the production posture too, where
     # the per-language table is the frozen STORED artifact.
-    # `.persist()` had measured slower (1.17→2.03 s: cache-manager
+    # a CacheManager persist had measured slower (1.17→2.03 s: cache-manager
     # materialization serializes what concurrency hid).
     s = textstats.kn_bigram_score_from_types(
         d,
@@ -2041,7 +2041,7 @@ def txt_kn3_lang_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # like the bigram lang query, the type table is localCheckpointed:
     # Spark 4.1.2 does not reuse the identical exchanges, so unstaged
     # it re-runs the reference explode once per consuming subtree
-    # (see txt_kn_lang_logprob for the verified account; `.persist()`
+    # (see txt_kn_lang_logprob for the verified account; a CacheManager persist
     # had measured slower — 1.89→2.68 s — because cache-manager
     # materialization serializes what concurrent stages hid)
     s = textstats.kn_trigram_score_from_types(
@@ -2271,7 +2271,7 @@ def txt_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # their identical exchanges (the corrected KN finding: 0
     # ReusedExchange — each consumer re-runs the corpus explode,
     # merely hidden by concurrent stages at bench scale, which is
-    # also why `.persist()` measured 2× slower, 1.29 → 2.64 s). The
+    # also why a CacheManager persist measured 2× slower, 1.29 → 2.64 s). The
     # localCheckpoint is flat locally (2.67 vs 2.73 s interleaved
     # A/B) and removes two full corpus explodes at scale — the
     # vocabulary is the tokenizer's stored artifact in production

@@ -53,6 +53,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.staging import release_staged, stage
 from .table import VersionedTable
 
 _SUM_TYPE = "decimal(38,6)"
@@ -171,145 +172,147 @@ class IncrementalAggregate:
         # all-zero groups (an update that changed no aggregated column
         # cancels pre against post) must not force a no-op rewrite of
         # their bucket
-        delta = (
-            self._deltas(feed).where(~zero).localCheckpoint(eager=True)
-        )
-        view_cols = (
-            self.group_cols
-            + ["n_rows"]
-            + [f"sum_{c}" for c in self.sum_cols]
-            + [x for c in self.minmax_cols for x in (f"min_{c}", f"max_{c}")]
-        )
-        if self.table.exists():
-            # affected groups only, by bucket pruning — the read cost
-            # follows the delta, not the view size
-            base = self.table.read_buckets(self.table.bucket_ids_of(delta))
-            stored = base.select(*view_cols).join(
-                delta.select(*self.group_cols), self.group_cols, "left_semi"
+        delta = stage(self._deltas(feed).where(~zero), "matview_delta")
+        staged_rows = None
+        try:
+            view_cols = (
+                self.group_cols
+                + ["n_rows"]
+                + [f"sum_{c}" for c in self.sum_cols]
+                + [x for c in self.minmax_cols for x in (f"min_{c}", f"max_{c}")]
             )
-        else:
-            stored = None
-        recompute = F.lit(False)
-        if stored is not None:
-            merged = delta.alias("d").join(
-                stored.alias("s"), self.group_cols, "left"
-            )
-            n_rows = F.coalesce(F.col("s.n_rows"), F.lit(0)) + F.col("d._dn")
-            sums = [
-                (
-                    F.coalesce(F.col(f"s.sum_{c}"), F.lit(0).cast(_SUM_TYPE))
-                    + F.col(f"d._d_{c}")
+            if self.table.exists():
+                # affected groups only, by bucket pruning — the read cost
+                # follows the delta, not the view size
+                base = self.table.read_buckets(self.table.bucket_ids_of(delta))
+                stored = base.select(*view_cols).join(
+                    delta.select(*self.group_cols), self.group_cols, "left_semi"
                 )
-                .cast(_SUM_TYPE)
-                .alias(f"sum_{c}")
-                for c in self.sum_cols
-            ]
-            # insert-side extremum maintenance is exact
-            # (least/greatest skip NULLs); a delete that ties-or-beats
-            # the stored extremum makes the group unknowable from the
-            # feed — flag it for base recompute
-            mms = []
-            for c in self.minmax_cols:
-                mms += [
-                    F.least(F.col(f"s.min_{c}"), F.col(f"d._imin_{c}"))
-                    .alias(f"min_{c}"),
-                    F.greatest(F.col(f"s.max_{c}"), F.col(f"d._imax_{c}"))
-                    .alias(f"max_{c}"),
-                ]
-                recompute = recompute | (
-                    F.col(f"s.min_{c}").isNotNull()
-                    & (F.col(f"d._dmin_{c}") <= F.col(f"s.min_{c}"))
-                ) | (
-                    F.col(f"s.max_{c}").isNotNull()
-                    & (F.col(f"d._dmax_{c}") >= F.col(f"s.max_{c}"))
+            else:
+                stored = None
+            recompute = F.lit(False)
+            if stored is not None:
+                merged = delta.alias("d").join(
+                    stored.alias("s"), self.group_cols, "left"
                 )
-        else:
-            merged = delta
-            n_rows = F.col("_dn")
-            sums = [
-                F.col(f"_d_{c}").cast(_SUM_TYPE).alias(f"sum_{c}")
-                for c in self.sum_cols
-            ]
-            # bootstrap: the feed IS the base (all-insert), so the
-            # insert-side extrema are exact
-            mms = [
-                x
-                for c in self.minmax_cols
-                for x in (
-                    F.col(f"_imin_{c}").alias(f"min_{c}"),
-                    F.col(f"_imax_{c}").alias(f"max_{c}"),
-                )
-            ]
-        rows = merged.select(
-            *self.group_cols,
-            n_rows.alias("n_rows"),
-            *sums,
-            *mms,
-            (
-                F.coalesce(recompute, F.lit(False)) & (n_rows > 0)
-            ).alias("_recompute"),
-        )
-        n_recomputed = 0
-        if self.minmax_cols and stored is not None:
-            rows = rows.localCheckpoint(eager=True)
-            losers = rows.where(F.col("_recompute")).select(
-                *self.group_cols
-            )
-            n_recomputed = losers.count()
-            if n_recomputed:
-                if base_reader is None:
-                    raise ValueError(
-                        "refresh needs base_reader: the feed deletes a "
-                        "stored MIN/MAX extremum, which is not "
-                        "maintainable from the feed alone (pass the "
-                        "post-span base, or drive via tick)"
+                n_rows = F.coalesce(F.col("s.n_rows"), F.lit(0)) + F.col("d._dn")
+                sums = [
+                    (
+                        F.coalesce(F.col(f"s.sum_{c}"), F.lit(0).cast(_SUM_TYPE))
+                        + F.col(f"d._d_{c}")
                     )
-                rec = (
-                    base_reader(losers)
-                    .join(losers, self.group_cols, "left_semi")
-                    .groupBy(*self.group_cols)
-                    .agg(
+                    .cast(_SUM_TYPE)
+                    .alias(f"sum_{c}")
+                    for c in self.sum_cols
+                ]
+                # insert-side extremum maintenance is exact
+                # (least/greatest skip NULLs); a delete that ties-or-beats
+                # the stored extremum makes the group unknowable from the
+                # feed — flag it for base recompute
+                mms = []
+                for c in self.minmax_cols:
+                    mms += [
+                        F.least(F.col(f"s.min_{c}"), F.col(f"d._imin_{c}"))
+                        .alias(f"min_{c}"),
+                        F.greatest(F.col(f"s.max_{c}"), F.col(f"d._imax_{c}"))
+                        .alias(f"max_{c}"),
+                    ]
+                    recompute = recompute | (
+                        F.col(f"s.min_{c}").isNotNull()
+                        & (F.col(f"d._dmin_{c}") <= F.col(f"s.min_{c}"))
+                    ) | (
+                        F.col(f"s.max_{c}").isNotNull()
+                        & (F.col(f"d._dmax_{c}") >= F.col(f"s.max_{c}"))
+                    )
+            else:
+                merged = delta
+                n_rows = F.col("_dn")
+                sums = [
+                    F.col(f"_d_{c}").cast(_SUM_TYPE).alias(f"sum_{c}")
+                    for c in self.sum_cols
+                ]
+                # bootstrap: the feed IS the base (all-insert), so the
+                # insert-side extrema are exact
+                mms = [
+                    x
+                    for c in self.minmax_cols
+                    for x in (
+                        F.col(f"_imin_{c}").alias(f"min_{c}"),
+                        F.col(f"_imax_{c}").alias(f"max_{c}"),
+                    )
+                ]
+            rows = merged.select(
+                *self.group_cols,
+                n_rows.alias("n_rows"),
+                *sums,
+                *mms,
+                (
+                    F.coalesce(recompute, F.lit(False)) & (n_rows > 0)
+                ).alias("_recompute"),
+            )
+            n_recomputed = 0
+            if self.minmax_cols and stored is not None:
+                rows = staged_rows = stage(rows, "matview_rows")
+                losers = rows.where(F.col("_recompute")).select(
+                    *self.group_cols
+                )
+                n_recomputed = losers.count()
+                if n_recomputed:
+                    if base_reader is None:
+                        raise ValueError(
+                            "refresh needs base_reader: the feed deletes a "
+                            "stored MIN/MAX extremum, which is not "
+                            "maintainable from the feed alone (pass the "
+                            "post-span base, or drive via tick)"
+                        )
+                    rec = (
+                        base_reader(losers)
+                        .join(losers, self.group_cols, "left_semi")
+                        .groupBy(*self.group_cols)
+                        .agg(
+                            *[
+                                x
+                                for c in self.minmax_cols
+                                for x in (
+                                    F.min(c).alias(f"_rmin_{c}"),
+                                    F.max(c).alias(f"_rmax_{c}"),
+                                )
+                            ]
+                        )
+                    )
+                    rows = rows.join(rec, self.group_cols, "left").select(
+                        *self.group_cols,
+                        "n_rows",
+                        *[f"sum_{c}" for c in self.sum_cols],
                         *[
                             x
                             for c in self.minmax_cols
                             for x in (
-                                F.min(c).alias(f"_rmin_{c}"),
-                                F.max(c).alias(f"_rmax_{c}"),
+                                F.when(
+                                    F.col("_recompute"), F.col(f"_rmin_{c}")
+                                )
+                                .otherwise(F.col(f"min_{c}"))
+                                .alias(f"min_{c}"),
+                                F.when(
+                                    F.col("_recompute"), F.col(f"_rmax_{c}")
+                                )
+                                .otherwise(F.col(f"max_{c}"))
+                                .alias(f"max_{c}"),
                             )
-                        ]
+                        ],
                     )
-                )
-                rows = rows.join(rec, self.group_cols, "left").select(
-                    *self.group_cols,
-                    "n_rows",
-                    *[f"sum_{c}" for c in self.sum_cols],
-                    *[
-                        x
-                        for c in self.minmax_cols
-                        for x in (
-                            F.when(
-                                F.col("_recompute"), F.col(f"_rmin_{c}")
-                            )
-                            .otherwise(F.col(f"min_{c}"))
-                            .alias(f"min_{c}"),
-                            F.when(
-                                F.col("_recompute"), F.col(f"_rmax_{c}")
-                            )
-                            .otherwise(F.col(f"max_{c}"))
-                            .alias(f"max_{c}"),
-                        )
-                    ],
-                )
-        out = rows.select(*view_cols).withColumn(
-            "_change_type",
-            F.when(F.col("n_rows") <= 0, F.lit("delete")).otherwise(
-                F.lit("insert")
-            ),
-        )
-        extra = {} if applied_to is None else {"applied_to": applied_to}
-        commit = self.table.apply_changes(
-            out, keys=self.group_cols, extra_metrics=extra
-        )
+            out = rows.select(*view_cols).withColumn(
+                "_change_type",
+                F.when(F.col("n_rows") <= 0, F.lit("delete")).otherwise(
+                    F.lit("insert")
+                ),
+            )
+            extra = {} if applied_to is None else {"applied_to": applied_to}
+            commit = self.table.apply_changes(
+                out, keys=self.group_cols, extra_metrics=extra
+            )
+        finally:
+            release_staged(delta, staged_rows)
         return {
             "version": commit.version,
             "groups_touched": commit.metrics.get("upserts", 0)

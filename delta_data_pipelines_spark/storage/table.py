@@ -96,7 +96,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .constraints import CheckConstraints
-from ..operators.staging import release_staged
+from ..operators.staging import release_staged, stage
 from .meta import (
     ConcurrentWriteError,
     atomic_json_write,
@@ -837,7 +837,7 @@ class VersionedTable(CheckConstraints):
         """``(staged source, touched buckets, spill dir)`` for a merge;
         the stage is released on exit."""
         if self.bucket_key is None:
-            staged = source.localCheckpoint(eager=True)
+            staged = stage(source, "merge_source")
             try:
                 yield staged, None, None
             finally:
@@ -1001,16 +1001,16 @@ class VersionedTable(CheckConstraints):
         span over it diffs full snapshots, as over an overwrite). A
         commit without change rows counts feed rows instead.
 
-        The feed is STAGED once (localCheckpoint): a CDC feed is
+        The feed is STAGED once (``staging.stage``): a CDC feed is
         typically ``snapshot_diff`` — a full-snapshot join — and the
         change rows, the constraint aggregate and the commit write
         would otherwise each re-execute that lineage. Downstream
         consumers read the checkpointed blocks instead (single-execution
-        pin in tests); the blocks are released once the commit lands."""
+        pin in tests); the stage is released once the commit lands."""
         if not keys:
             raise ValueError("keys required to apply a change feed")
         self._check_keys(keys, "feed keys")
-        staged = feed.localCheckpoint(eager=True)
+        staged = stage(feed, "apply_feed")
         try:
             return self._apply(staged, keys, extra_metrics or {}, record_changes)
         finally:

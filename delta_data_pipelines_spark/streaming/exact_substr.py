@@ -69,6 +69,7 @@ from ..operators.dedup import (
     _window_starts,
     _word_arrays,
 )
+from ..operators.staging import release_staged, stage
 from ..storage import VersionedTable
 
 
@@ -138,107 +139,111 @@ def run_incremental_exact_substr(
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.dropDuplicates([id_col])
         if prepare is not None:
-            batch = prepare(batch).localCheckpoint(eager=True)
-        if batch.isEmpty():
-            return
-        base = batch.select(id_col, text_col)
-        w = _word_arrays(base, id_col, text_col)
-        # staged eagerly: starts feeds the within-batch count, the
-        # state probe's bucket ids, the mark join AND the state merge
-        # — unstaged, the split/explode lineage would run four times
-        starts = _window_starts(w, id_col, L).localCheckpoint(eager=True)
-        dup_in_batch = (
-            starts.groupBy("_h")
-            .agg(F.count("*").alias("_c"))
-            .where(F.col("_c") > 1)
-            .select("_h")
-        )
-        marked_starts = starts.join(dup_in_batch, "_h", "left_semi")
-        dup_h = dup_in_batch
-        if gram_table.exists():
-            # bucket-pruned state probe, then restrict to the batch's
-            # own hashes (semi-join; broadcast-hinted only while the
-            # batch is provably small — an availableNow backlog batch
-            # must not push its hash set through the driver)
-            batch_hashes = starts.select("_h").distinct()
-            if starts.count() <= broadcast_hash_limit:
-                batch_hashes = F.broadcast(batch_hashes)
-            state = gram_table.read_buckets(
-                gram_table.bucket_ids_of(starts, "_h")
-            ).join(batch_hashes, "_h", "left_semi")
-            if "_origin" not in state.columns:  # legacy presence-only
-                state = state.withColumn(
-                    "_origin", F.lit(None).cast("string")
+            batch = stage(prepare(batch), "exact_substr_batch")
+        starts = None
+        try:
+            if batch.isEmpty():
+                return
+            base = batch.select(id_col, text_col)
+            w = _word_arrays(base, id_col, text_col)
+            # staged eagerly: starts feeds the within-batch count, the
+            # state probe's bucket ids, the mark join AND the state merge
+            # — unstaged, the split/explode lineage would run four times
+            starts = stage(_window_starts(w, id_col, L), "exact_substr_starts")
+            dup_in_batch = (
+                starts.groupBy("_h")
+                .agg(F.count("*").alias("_c"))
+                .where(F.col("_c") > 1)
+                .select("_h")
+            )
+            marked_starts = starts.join(dup_in_batch, "_h", "left_semi")
+            dup_h = dup_in_batch
+            if gram_table.exists():
+                # bucket-pruned state probe, then restrict to the batch's
+                # own hashes (semi-join; broadcast-hinted only while the
+                # batch is provably small — an availableNow backlog batch
+                # must not push its hash set through the driver)
+                batch_hashes = starts.select("_h").distinct()
+                if starts.count() <= broadcast_hash_limit:
+                    batch_hashes = F.broadcast(batch_hashes)
+                state = gram_table.read_buckets(
+                    gram_table.bucket_ids_of(starts, "_h")
+                ).join(batch_hashes, "_h", "left_semi")
+                if "_origin" not in state.columns:  # legacy presence-only
+                    state = state.withColumn(
+                        "_origin", F.lit(None).cast("string")
+                    )
+                # origin-aware hit: only a DIFFERENT document's prior
+                # sighting makes a window duplicated — a replayed batch
+                # matching its own state entries marks nothing (the
+                # dup_hashes poisoning fix, module docstring). NULL
+                # origin = legacy row, conservatively seen.
+                state_marks = (
+                    starts.join(state.select("_h", "_origin"), "_h")
+                    .where(
+                        F.col("_origin").isNull()
+                        | (F.col("_origin") != F.col(id_col).cast("string"))
+                    )
+                    .select(id_col, "_s", "_h")
                 )
-            # origin-aware hit: only a DIFFERENT document's prior
-            # sighting makes a window duplicated — a replayed batch
-            # matching its own state entries marks nothing (the
-            # dup_hashes poisoning fix, module docstring). NULL
-            # origin = legacy row, conservatively seen.
-            state_marks = (
-                starts.join(state.select("_h", "_origin"), "_h")
-                .where(
-                    F.col("_origin").isNull()
-                    | (F.col("_origin") != F.col(id_col).cast("string"))
+                marked_starts = marked_starts.unionByName(state_marks)
+                dup_h = dup_in_batch.unionByName(
+                    state_marks.select("_h")
+                ).distinct()
+            marked = (
+                marked_starts.select(id_col, "_s")
+                .distinct()
+                .groupBy(id_col)
+                .agg(F.sort_array(F.collect_list("_s")).alias("_ms"))
+            )
+            rebuilt = _rebuild_uncovered(w, marked, id_col, L)
+            # rewrite the text in place, preserving every other batch
+            # column; NULL-text rows pass through (the stage invariant)
+            out = (
+                batch.join(rebuilt.select(id_col, "_text_out"), id_col, "left")
+                .withColumn(
+                    text_col,
+                    F.when(
+                        F.col(text_col).isNull(), F.lit(None).cast("string")
+                    ).otherwise(F.coalesce("_text_out", F.col(text_col))),
                 )
-                .select(id_col, "_s", "_h")
+                .drop("_text_out")
             )
-            marked_starts = marked_starts.unionByName(state_marks)
-            dup_h = dup_in_batch.unionByName(
-                state_marks.select("_h")
-            ).distinct()
-        marked = (
-            marked_starts.select(id_col, "_s")
-            .distinct()
-            .groupBy(id_col)
-            .agg(F.sort_array(F.collect_list("_s")).alias("_ms"))
-        )
-        rebuilt = _rebuild_uncovered(w, marked, id_col, L)
-        # rewrite the text in place, preserving every other batch
-        # column; NULL-text rows pass through (the stage invariant)
-        out = (
-            batch.join(rebuilt.select(id_col, "_text_out"), id_col, "left")
-            .withColumn(
-                text_col,
-                F.when(
-                    F.col(text_col).isNull(), F.lit(None).cast("string")
-                ).otherwise(F.coalesce("_text_out", F.col(text_col))),
+            if drop_emptied:
+                out = out.where(
+                    F.col(text_col).isNull() | (F.col(text_col) != "")
+                )
+            # publish FIRST (unique-key ignore-merge), state SECOND: a
+            # replay that finds its own hashes in the state over-cuts, but
+            # every over-cut id is already published and the merge ignores
+            # it (see module docstring)
+            corpus.merge(out, keys=[id_col])
+            # first-wins origin per hash (merge ignores matched keys), so
+            # the earliest document to carry a window owns it forever —
+            # the identity the replay no-op check tests against
+            gram_table.merge(
+                starts.groupBy("_h").agg(
+                    F.min(F.col(id_col).cast("string")).alias("_origin")
+                ),
+                keys=["_h"],
+                # a pre-origin state table has only _h: the first batch
+                # after an upgrade must widen it (legacy rows get NULL
+                # origin = conservatively seen, the read-side shim above),
+                # not crash the stream on a column-count mismatch
+                schema_evolution=True,
             )
-            .drop("_text_out")
-        )
-        if drop_emptied:
-            out = out.where(
-                F.col(text_col).isNull() | (F.col(text_col) != "")
-            )
-        # publish FIRST (unique-key ignore-merge), state SECOND: a
-        # replay that finds its own hashes in the state over-cuts, but
-        # every over-cut id is already published and the merge ignores
-        # it (see module docstring)
-        corpus.merge(out, keys=[id_col])
-        # first-wins origin per hash (merge ignores matched keys), so
-        # the earliest document to carry a window owns it forever —
-        # the identity the replay no-op check tests against
-        gram_table.merge(
-            starts.groupBy("_h").agg(
-                F.min(F.col(id_col).cast("string")).alias("_origin")
-            ),
-            keys=["_h"],
-            # a pre-origin state table has only _h: the first batch
-            # after an upgrade must widen it (legacy rows get NULL
-            # origin = conservatively seen, the read-side shim above),
-            # not crash the stream on a column-count mismatch
-            schema_evolution=True,
-        )
-        dup_table.merge(dup_h.distinct(), keys=["_h"])
-        # state maintenance: ownership fan-out is bounded per batch
-        # (maybe_compact's manifest check is metadata-only when it
-        # doesn't fire), then vacuum releases unreferenced dirs — so
-        # per-batch state read planning stays flat forever
-        if state_max_generations is not None:
-            gram_table.maybe_compact(state_max_generations)
-            dup_table.maybe_compact(state_max_generations)
-        gram_table.vacuum(keep_last=state_keep_last)
-        dup_table.vacuum(keep_last=state_keep_last)
+            dup_table.merge(dup_h.distinct(), keys=["_h"])
+            # state maintenance: ownership fan-out is bounded per batch
+            # (maybe_compact's manifest check is metadata-only when it
+            # doesn't fire), then vacuum releases unreferenced dirs — so
+            # per-batch state read planning stays flat forever
+            if state_max_generations is not None:
+                gram_table.maybe_compact(state_max_generations)
+                dup_table.maybe_compact(state_max_generations)
+            gram_table.vacuum(keep_last=state_keep_last)
+            dup_table.vacuum(keep_last=state_keep_last)
+        finally:
+            release_staged(batch if prepare is not None else None, starts)
 
     return (
         docs_stream.writeStream.foreachBatch(sink)
@@ -308,25 +313,27 @@ def compact_exact_substr_residue(
         .agg(F.sort_array(F.collect_list("_s")).alias("_ms"))
     )
     rebuilt = _rebuild_uncovered(w, marked, id_col, L)
-    changed = (
-        rebuilt.where(F.col("n_removed") > 0)
-        .select(id_col, "_text_out")
-        .persist()
+    changed = stage(
+        rebuilt.where(F.col("n_removed") > 0).select(id_col, "_text_out"),
+        "residue_changed",
     )
-    n_changed = changed.count()
-    n_dropped = 0
-    if n_changed:
-        out = kept.join(changed, id_col, "left").withColumn(
-            text_col, F.coalesce("_text_out", F.col(text_col))
-        ).drop("_text_out")
-        if drop_emptied:
-            out = out.where(
-                F.col(text_col).isNull() | (F.col(text_col) != "")
-            )
-            n_dropped = changed.where(F.col("_text_out") == "").count()
-        out = out.localCheckpoint(eager=True)
-        corpus.overwrite(out)
-    changed.unpersist()
+    out = None
+    try:
+        n_changed = changed.count()
+        n_dropped = 0
+        if n_changed:
+            out = kept.join(changed, id_col, "left").withColumn(
+                text_col, F.coalesce("_text_out", F.col(text_col))
+            ).drop("_text_out")
+            if drop_emptied:
+                out = out.where(
+                    F.col(text_col).isNull() | (F.col(text_col) != "")
+                )
+                n_dropped = changed.where(F.col("_text_out") == "").count()
+            out = stage(out, "residue_rewritten")
+            corpus.overwrite(out)
+    finally:
+        release_staged(changed, out)
     rows_after = corpus.read().count()
     return {
         "docs_rewritten": n_changed,

@@ -61,6 +61,7 @@ from ..operators.dedup import (
     minhash_signatures,
     near_dup_clusters,
 )
+from ..operators.staging import release_staged, stage
 from ..storage import VersionedTable
 
 
@@ -125,6 +126,7 @@ def run_incremental_neardup(
     )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        staged: list[DataFrame] = []  # released when the batch is done
         batch = batch_df.dropDuplicates([id_col])
         if prepare is not None:
             # per-batch cleaning seam (jobs.incremental_curate wires
@@ -136,115 +138,118 @@ def run_incremental_neardup(
             # under several branches (pair build, signatures, corpus
             # merge), and an unstaged prepare lineage — scrub regexes,
             # gate, frozen-LM scoring joins — would re-run per branch.
-            batch = prepare(batch).localCheckpoint(eager=True)
-        if batch.isEmpty():
-            return
-        # 1. in-batch near-dup collapse (same operators as the batch job)
-        pairs = minhash_near_dup_pairs(batch, id_col, text_col, threshold)
-        clusters = near_dup_clusters(pairs)
-        reps = (
-            batch.join(clusters, batch[id_col] == clusters.member_id, "left")
-            .where(
-                F.col("cluster_id").isNull()
-                | (F.col("member_id") == F.col("cluster_id"))
-            )
-            .drop("member_id", "cluster_id")
-        )
-        # 2. cross-batch filter against the accumulated signature table
-        sigs = minhash_signatures(batch, id_col, text_col).localCheckpoint(
-            eager=True
-        )
-        banded = _banded(sigs.select(id_col, "_sig"), id_col)
-        # BOTH state tables must exist: a crash between the first
-        # batch's two state merges leaves sig committed but shingles
-        # empty — on replay the verify join would crash reading a
-        # zero-commit table. Candidates can't be verified without
-        # shingle sets, so the cross-batch filter is skipped for that
-        # (idempotently re-merged) batch.
-        if sig_table.exists() and hs_table.exists():
-            # Restrict the state side to the batch's (band_id,
-            # band_hash) keys FIRST (broadcast semi-join — the batch
-            # side is tiny), THEN apply the degenerate-bucket cap (the
-            # batch path's _candidates guard, applied stream-static).
-            # A group's count is identical after the semi-join on its
-            # own group key, so the cap semantics are unchanged — but
-            # the window now shuffles only the batch-matched state
-            # rows, not the whole accumulated table per micro-batch.
-            batch_bands = banded.select("band_id", "band_hash").distinct()
-            bucket_w = Window.partitionBy("band_id", "band_hash")
-            sig_src = (
-                sig_table.read_buckets(sig_table.bucket_ids_of(banded))
-                .join(
-                    F.broadcast(batch_bands),
-                    ["band_id", "band_hash"],
-                    "left_semi",
+            batch = stage(prepare(batch), "neardup_batch")
+            staged.append(batch)
+        try:
+            if batch.isEmpty():
+                return
+            # 1. in-batch near-dup collapse (same operators as the batch job)
+            pairs = minhash_near_dup_pairs(batch, id_col, text_col, threshold)
+            clusters = near_dup_clusters(pairs)
+            reps = (
+                batch.join(clusters, batch[id_col] == clusters.member_id, "left")
+                .where(
+                    F.col("cluster_id").isNull()
+                    | (F.col("member_id") == F.col("cluster_id"))
                 )
-                .withColumn("_bn", F.count("*").over(bucket_w))
-                .where(F.col("_bn") <= max_bucket)
-                .drop("_bn")
+                .drop("member_id", "cluster_id")
             )
-            cand = (
-                banded.withColumnRenamed(id_col, "new_id")
-                .join(
-                    sig_src.withColumnRenamed(id_col, "old_id"),
-                    ["band_id", "band_hash"],
+            # 2. cross-batch filter against the accumulated signature table
+            sigs = stage(minhash_signatures(batch, id_col, text_col), "neardup_sigs")
+            staged.append(sigs)
+            banded = _banded(sigs.select(id_col, "_sig"), id_col)
+            # BOTH state tables must exist: a crash between the first
+            # batch's two state merges leaves sig committed but shingles
+            # empty — on replay the verify join would crash reading a
+            # zero-commit table. Candidates can't be verified without
+            # shingle sets, so the cross-batch filter is skipped for that
+            # (idempotently re-merged) batch.
+            if sig_table.exists() and hs_table.exists():
+                # Restrict the state side to the batch's (band_id,
+                # band_hash) keys FIRST (broadcast semi-join — the batch
+                # side is tiny), THEN apply the degenerate-bucket cap (the
+                # batch path's _candidates guard, applied stream-static).
+                # A group's count is identical after the semi-join on its
+                # own group key, so the cap semantics are unchanged — but
+                # the window now shuffles only the batch-matched state
+                # rows, not the whole accumulated table per micro-batch.
+                batch_bands = banded.select("band_id", "band_hash").distinct()
+                bucket_w = Window.partitionBy("band_id", "band_hash")
+                sig_src = (
+                    sig_table.read_buckets(sig_table.bucket_ids_of(banded))
+                    .join(
+                        F.broadcast(batch_bands),
+                        ["band_id", "band_hash"],
+                        "left_semi",
+                    )
+                    .withColumn("_bn", F.count("*").over(bucket_w))
+                    .where(F.col("_bn") <= max_bucket)
+                    .drop("_bn")
                 )
-                .select("new_id", "old_id")
-                .distinct()
-            )
-            # candidates are batch-proportional; persist so the bucket-id
-            # probe and the verify join share one evaluation
-            cand = cand.persist()
-            hs_src = hs_table.read_buckets(hs_table.bucket_ids_of(cand, "old_id"))
-            dup_ids = (
-                cand.join(
-                    sigs.select(
-                        F.col(id_col).alias("new_id"), F.col("_hs").alias("_hs_new")
-                    ),
-                    "new_id",
+                cand = (
+                    banded.withColumnRenamed(id_col, "new_id")
+                    .join(
+                        sig_src.withColumnRenamed(id_col, "old_id"),
+                        ["band_id", "band_hash"],
+                    )
+                    .select("new_id", "old_id")
+                    .distinct()
                 )
-                .join(
-                    hs_src.select(
-                        F.col(id_col).alias("old_id"), F.col("_hs").alias("_hs_old")
-                    ),
-                    "old_id",
+                # candidates are batch-proportional; staged so the bucket-id
+                # probe and the verify join share one evaluation
+                cand = stage(cand, "neardup_candidates")
+                staged.append(cand)
+                hs_src = hs_table.read_buckets(hs_table.bucket_ids_of(cand, "old_id"))
+                dup_ids = (
+                    cand.join(
+                        sigs.select(
+                            F.col(id_col).alias("new_id"), F.col("_hs").alias("_hs_new")
+                        ),
+                        "new_id",
+                    )
+                    .join(
+                        hs_src.select(
+                            F.col(id_col).alias("old_id"), F.col("_hs").alias("_hs_old")
+                        ),
+                        "old_id",
+                    )
+                    .where(jaccard(F.col("_hs_new"), F.col("_hs_old")) >= threshold)
+                    .select(F.col("new_id").alias(id_col))
+                    .distinct()
                 )
-                .where(jaccard(F.col("_hs_new"), F.col("_hs_old")) >= threshold)
-                .select(F.col("new_id").alias(id_col))
-                .distinct()
-            )
-            reps = reps.join(dup_ids, id_col, "left_anti")
-            reps = reps.localCheckpoint(eager=True)
-            cand.unpersist()
-        # 3. publish survivors; remember EVERY batch doc's signatures.
-        # First-wins consistency across BOTH state tables: a re-arriving
-        # doc id (even with changed text) contributes nothing — the
-        # shingle merge already ignores matched ids, and the signature
-        # rows are pre-filtered to ids not yet in the shingle state
-        # (band_hash is in the sig merge keys for bucketing, so without
-        # this filter changed text would INSERT second-signature rows
-        # describing text the stored shingle set doesn't match).
-        corpus.merge(reps, keys=[id_col])
-        new_banded = banded
-        if hs_table.exists():
-            known = hs_table.read_buckets(
-                hs_table.bucket_ids_of(sigs, id_col)
-            ).select(id_col)
-            new_banded = banded.join(known, id_col, "left_anti")
-        sig_table.merge(new_banded, keys=[id_col, "band_id", "band_hash"])
-        hs_table.merge(sigs.select(id_col, "_hs"), keys=[id_col])
-        # retention: superseded bucket dirs would otherwise accumulate
-        # one generation per micro-batch, forever; state tables need no
-        # deep time travel, so prune beyond the last few commits
-        # (manifest-referenced dirs are always kept). maybe_compact
-        # first bounds ownership fan-out (generations), so the vacuums
-        # can actually release old dirs and per-batch state reads stay
-        # flat however long the stream runs
-        if state_max_generations is not None:
-            sig_table.maybe_compact(state_max_generations)
-            hs_table.maybe_compact(state_max_generations)
-        sig_table.vacuum(keep_last=state_keep_last)
-        hs_table.vacuum(keep_last=state_keep_last)
+                reps = stage(reps.join(dup_ids, id_col, "left_anti"), "neardup_reps")
+                staged.append(reps)
+            # 3. publish survivors; remember EVERY batch doc's signatures.
+            # First-wins consistency across BOTH state tables: a re-arriving
+            # doc id (even with changed text) contributes nothing — the
+            # shingle merge already ignores matched ids, and the signature
+            # rows are pre-filtered to ids not yet in the shingle state
+            # (band_hash is in the sig merge keys for bucketing, so without
+            # this filter changed text would INSERT second-signature rows
+            # describing text the stored shingle set doesn't match).
+            corpus.merge(reps, keys=[id_col])
+            new_banded = banded
+            if hs_table.exists():
+                known = hs_table.read_buckets(
+                    hs_table.bucket_ids_of(sigs, id_col)
+                ).select(id_col)
+                new_banded = banded.join(known, id_col, "left_anti")
+            sig_table.merge(new_banded, keys=[id_col, "band_id", "band_hash"])
+            hs_table.merge(sigs.select(id_col, "_hs"), keys=[id_col])
+            # retention: superseded bucket dirs would otherwise accumulate
+            # one generation per micro-batch, forever; state tables need no
+            # deep time travel, so prune beyond the last few commits
+            # (manifest-referenced dirs are always kept). maybe_compact
+            # first bounds ownership fan-out (generations), so the vacuums
+            # can actually release old dirs and per-batch state reads stay
+            # flat however long the stream runs
+            if state_max_generations is not None:
+                sig_table.maybe_compact(state_max_generations)
+                hs_table.maybe_compact(state_max_generations)
+            sig_table.vacuum(keep_last=state_keep_last)
+            hs_table.vacuum(keep_last=state_keep_last)
+        finally:
+            release_staged(*staged)
 
     return (
         docs_stream.writeStream.foreachBatch(sink)
@@ -269,14 +274,17 @@ def migrate_state_layout(spark, state_dir: str) -> bool:
     old = VersionedTable(spark, root)
     if not old.exists() or old.bucket_key == "band_hash":
         return False
-    rows = old.read().localCheckpoint(eager=True)
-    tmp_root = root + ".migrating"
-    if os.path.exists(tmp_root):
-        shutil.rmtree(tmp_root)
-    new = VersionedTable(
-        spark, tmp_root, bucket_key="band_hash", n_buckets=old.n_buckets
-    )
-    new.overwrite(rows)
+    rows = stage(old.read(), "neardup_state_rows")
+    try:
+        tmp_root = root + ".migrating"
+        if os.path.exists(tmp_root):
+            shutil.rmtree(tmp_root)
+        new = VersionedTable(
+            spark, tmp_root, bucket_key="band_hash", n_buckets=old.n_buckets
+        )
+        new.overwrite(rows)
+    finally:
+        release_staged(rows)
     shutil.rmtree(root)
     os.replace(tmp_root, root)
     return True
@@ -335,13 +343,14 @@ def compact_neardup_residue(
         .where(F.col("jaccard_sim") >= threshold)
         .select("id_a", "id_b")
     )
-    # persist + count here: near_dup_clusters re-persists the same plan
-    # (cache-manager hit) and releases it on completion, so the verified
-    # pair set is built exactly once for both the metric and the
-    # clustering
-    pairs = pairs.persist()
-    n_pairs = pairs.count()
-    clusters = near_dup_clusters(pairs)
+    # staged here: the verified pair set is built exactly once for
+    # both the metric and the clustering
+    pairs = stage(pairs, "residue_pairs")
+    try:
+        n_pairs = pairs.count()
+        clusters = near_dup_clusters(pairs)
+    finally:
+        release_staged(pairs)
     kept = corpus.read()
     members = clusters.join(
         kept.select(F.col(id_col).alias("member_id")), "member_id"
@@ -354,8 +363,11 @@ def compact_neardup_residue(
     )
     n_removed = residue.count()
     if n_removed:
-        out = kept.join(residue, id_col, "left_anti").localCheckpoint(eager=True)
-        corpus.overwrite(out)
+        out = stage(kept.join(residue, id_col, "left_anti"), "residue_kept")
+        try:
+            corpus.overwrite(out)
+        finally:
+            release_staged(out)
     return {
         "pairs": n_pairs,
         "removed": n_removed,

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.sketches import bottom_k, kmv_estimate, kmv_sketch
+from ..operators.staging import release_staged, stage
 from ..storage import VersionedTable
 
 
@@ -108,7 +109,11 @@ def run_incremental_vocab_sketch(
             )
         else:
             out = batch_sketch
-        state_table.overwrite(out.localCheckpoint(eager=True))
+        out = stage(out, "kmv_state")
+        try:
+            state_table.overwrite(out)
+        finally:
+            release_staged(out)
         # one overwrite per micro-batch: prune superseded version dirs
         # (tiny, but a long-lived stream would leak one per batch)
         state_table.vacuum(keep_last=state_keep_last)
@@ -235,29 +240,34 @@ def run_incremental_heavy_hitters(
         toks = batch_df.select(
             F.explode(F.split(F.col(text_col), " ")).alias("item")
         ).where(F.col("item") != "")
-        toks = toks.localCheckpoint(eager=True)  # count + summarize, one eval
-        batch_n = toks.count()
-        batch_summary = misra_gries_candidates(toks, "item", k)
-        if prev_summary is not None:
-            merged = merge_mg_summaries(prev_summary, batch_summary, k)
-        else:
-            merged = merge_mg_summaries(
-                batch_summary.limit(0), batch_summary, k
+        toks = stage(toks, "mg_batch_tokens")  # count + summarize, one eval
+        try:
+            batch_n = toks.count()
+            batch_summary = misra_gries_candidates(toks, "item", k)
+            if prev_summary is not None:
+                merged = merge_mg_summaries(prev_summary, batch_summary, k)
+            else:
+                merged = merge_mg_summaries(
+                    batch_summary.limit(0), batch_summary, k
+                )
+            n_total = prev_n + batch_n
+            out = (
+                merged.withColumn("n_total", F.lit(n_total))
+                .withColumn("_epoch", F.lit(epoch_id))
+                .withColumn("_run", F.lit(checkpoint_dir))
             )
-        n_total = prev_n + batch_n
-        out = (
-            merged.withColumn("n_total", F.lit(n_total))
-            .withColumn("_epoch", F.lit(epoch_id))
-            .withColumn("_run", F.lit(checkpoint_dir))
-        )
-        meta_row = batch_df.sparkSession.createDataFrame(
-            [(None, 0, n_total, epoch_id, checkpoint_dir)],
-            "item string, mg_count bigint, n_total bigint, _epoch bigint,"
-            " _run string",
-        )
-        state_table.overwrite(
-            out.unionByName(meta_row).localCheckpoint(eager=True)
-        )
+            meta_row = batch_df.sparkSession.createDataFrame(
+                [(None, 0, n_total, epoch_id, checkpoint_dir)],
+                "item string, mg_count bigint, n_total bigint, _epoch bigint,"
+                " _run string",
+            )
+            out = stage(out.unionByName(meta_row), "mg_state")
+        finally:
+            release_staged(toks)
+        try:
+            state_table.overwrite(out)
+        finally:
+            release_staged(out)
         state_table.vacuum(keep_last=state_keep_last)
 
     return (
@@ -340,20 +350,27 @@ def run_incremental_cm(
         toks = batch_df.select(
             F.explode(F.split(F.col(text_col), " ")).alias("item")
         ).where(F.col("item") != "")
-        toks = toks.localCheckpoint(eager=True)  # count + sketch, one eval
-        batch_n = toks.count()
-        batch_sketch = cm_sketch(toks, "item", d=d, w=w)
-        merged = (
-            merge_cm_sketches(prev, batch_sketch)
-            if prev is not None
-            else batch_sketch
-        )
-        out = (
-            merged.withColumn("n_total", F.lit(prev_n + batch_n))
-            .withColumn("_epoch", F.lit(epoch_id))
-            .withColumn("_run", F.lit(checkpoint_dir))
-        )
-        state_table.overwrite(out.localCheckpoint(eager=True))
+        toks = stage(toks, "cm_batch_tokens")  # count + sketch, one eval
+        try:
+            batch_n = toks.count()
+            batch_sketch = cm_sketch(toks, "item", d=d, w=w)
+            merged = (
+                merge_cm_sketches(prev, batch_sketch)
+                if prev is not None
+                else batch_sketch
+            )
+            out = stage(
+                merged.withColumn("n_total", F.lit(prev_n + batch_n))
+                .withColumn("_epoch", F.lit(epoch_id))
+                .withColumn("_run", F.lit(checkpoint_dir)),
+                "cm_state",
+            )
+        finally:
+            release_staged(toks)
+        try:
+            state_table.overwrite(out)
+        finally:
+            release_staged(out)
         state_table.vacuum(keep_last=state_keep_last)
 
     return (
@@ -410,7 +427,11 @@ def run_incremental_hll(
             )
         else:
             out = batch_sk
-        state_table.overwrite(out.localCheckpoint(eager=True))
+        out = stage(out, "hll_state")
+        try:
+            state_table.overwrite(out)
+        finally:
+            release_staged(out)
         state_table.vacuum(keep_last=state_keep_last)
 
     return (

@@ -119,11 +119,6 @@ def test_containment_eager_and_releases_cache(spark, corpus):
     out = dedup.containment_pairs(corpus, "doc_id", "text", 0.9)
     assert "Join" not in out._jdf.queryExecution().optimizedPlan().toString()
     assert cache_manager.isEmpty()
-    lazy = dedup.containment_pairs(corpus, "doc_id", "text", 0.9, materialize=False)
-    assert "Join" in lazy._jdf.queryExecution().optimizedPlan().toString()
-    key = lambda r: (r["id_a"], r["id_b"])  # noqa: E731
-    assert sorted(map(key, lazy.collect())) == sorted(map(key, out.collect()))
-    assert cache_manager.isEmpty()
 
 
 def test_containment_exact_boundary_not_lost_to_float_ceil(spark):
@@ -609,26 +604,6 @@ def test_top_bigram_ratio_known_values(spark):
     assert abs(got[1] - 1 / 3) < 1e-8
     assert got[2] == 0.5
     assert got[3] == 0.0
-
-
-def test_pair_builders_lazy_opt_out(spark, corpus):
-    """materialize=False returns a LAZY plan (no jobs at construction,
-    no persists left behind) that evaluates to the same pairs."""
-    from delta_data_pipelines_spark.operators.dedup import minhash_near_dup_pairs
-
-    cache_manager = spark._jsparkSession.sharedState().cacheManager()
-    spark.catalog.clearCache()
-    lazy = minhash_near_dup_pairs(corpus, "doc_id", "text", 0.5, materialize=False)
-    # structurally lazy: the plan is the live query tree (LSH joins
-    # still visible), not a bare scan of a checkpointed result RDD
-    # (which is what the eager path collapses to)
-    assert "Join" in lazy._jdf.queryExecution().optimizedPlan().toString()
-    assert cache_manager.isEmpty()  # and nothing was staged/persisted
-    eager = minhash_near_dup_pairs(corpus, "doc_id", "text", 0.5)
-    assert "Join" not in eager._jdf.queryExecution().optimizedPlan().toString()
-    key = lambda r: (r["id_a"], r["id_b"])  # noqa: E731
-    assert sorted(map(key, lazy.collect())) == sorted(map(key, eager.collect()))
-    assert cache_manager.isEmpty()  # lazy consumption left no cache either
 
 
 def test_dedup_builders_empty_inputs(spark):
@@ -1678,13 +1653,11 @@ def test_temperature_mix_flattens_distribution(spark):
 
 
 def test_near_dup_clusters_evaluates_pairs_exactly_once(spark):
-    """The pairs/edges caches must survive every propagation round: the
-    cached-RDD ids register lazily (during the first job that builds
-    the cache), and an earlier bug let the first tracked checkpoint
-    claim them and release them after round 1 — silently recomputing
-    the full pair build each subsequent round. A 5-node chain needs
-    several rounds; the accumulator proves the source was scanned for
-    the cache build only (once per union arm), not once per round."""
+    """The staged pairs/edges must survive every propagation round: an
+    earlier bug released them after round 1 — silently recomputing the
+    full pair build each subsequent round. A 5-node chain needs several
+    rounds; the accumulator proves the source was scanned for the
+    staging only (at most once per union arm), not once per round."""
     from delta_data_pipelines_spark.operators.dedup import near_dup_clusters
 
     calls = spark.sparkContext.accumulator(0)
@@ -1694,38 +1667,42 @@ def test_near_dup_clusters_evaluates_pairs_exactly_once(spark):
         calls.add(1)
         return x
 
-    import delta_data_pipelines_spark.operators.dedup as dd
-
     raw = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "a bigint, id_b bigint"
     )
     pairs = raw.select(tick("a").alias("id_a"), "id_b")
-    # spy on the checkpoint tracker: every tracked checkpoint must
-    # capture EXACTLY ONE persistent-RDD id (its own blocks) — without
-    # the pre-materialization the first one also claims the pairs and
-    # edges cache ids (observed [cache, cache, ckpt]) and releases them
-    # after round 1
-    captured: list[list[int]] = []
-    orig = dd._tracked_local_checkpoint
+    out = {
+        r["member_id"]: r["cluster_id"]
+        for r in near_dup_clusters(pairs).collect()
+    }
+    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1}
+    # the symmetric-edges union reads pairs twice at most; after that
+    # every round must read the staged edges
+    assert calls.value <= 2 * raw.count(), calls.value
 
-    def spy(df):
-        out, ids = orig(df)
-        captured.append(ids)
-        return out, ids
 
-    dd._tracked_local_checkpoint = spy
+def test_near_dup_clusters_keeps_caller_persisted_pairs_cached(spark):
+    """An operator releases only what it staged: a pair frame the
+    caller persisted is still cached after near_dup_clusters (the
+    operator used to re-persist the caller's frame — a no-op — and
+    then unpersist it, emptying the caller's cache)."""
+    from delta_data_pipelines_spark.operators.dedup import near_dup_clusters
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8)], "id_a bigint, id_b bigint"
+    ).persist()
+    pairs.count()
     try:
         out = {
             r["member_id"]: r["cluster_id"]
             for r in near_dup_clusters(pairs).collect()
         }
+        assert out == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+        assert cache_manager.lookupCachedData(pairs._jdf).isDefined()
     finally:
-        dd._tracked_local_checkpoint = orig
-    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1}
-    assert captured and all(len(ids) == 1 for ids in captured), captured
-    # the symmetric-edges union reads pairs twice while building the
-    # edges cache; after that every round must hit the cache
-    assert calls.value <= 2 * raw.count(), calls.value
+        pairs.unpersist()
 
 
 def test_ivf_topk_with_fitted_kmeans_centroids(spark):
@@ -1753,27 +1730,6 @@ def test_ivf_topk_with_fitted_kmeans_centroids(spark):
     }
     hits = sum(1 for r in rows if (r["query_id"], r["neighbor_id"]) in exact)
     assert hits / len(exact) >= 0.3  # single-digit-probe recall floor
-
-
-def test_kmeans_checkpointed_rounds_match_lazy(spark):
-    """checkpoint_rounds=True (O(1) plan depth, one job per round) must
-    produce the identical assignment as the unrolled-lazy default, for
-    a deep iteration count."""
-    import random
-
-    from delta_data_pipelines_spark.operators.similarity import kmeans_assign
-
-    rng = random.Random(3)
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(6)]) for i in range(60)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    lazy = {r["vec_id"]: r["cid"] for r in kmeans_assign(df, k=4, n_iter=5).collect()}
-    ckpt = {
-        r["vec_id"]: r["cid"]
-        for r in kmeans_assign(df, k=4, n_iter=5, checkpoint_rounds=True).collect()
-    }
-    assert lazy == ckpt and len(lazy) == 60
 
 
 def test_brute_topk_pandas_impl_matches_expr(spark):

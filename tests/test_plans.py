@@ -26,6 +26,22 @@ def plan_of(spark, registry, name: str) -> str:
     return str(qe.explainString(mode))
 
 
+def staged_plans(spark, monkeypatch, module) -> list[str]:
+    """Formatted plans of the frames ``module`` hands to ``stage`` from
+    here on: work a query stages runs at staging time, so it shows up
+    here rather than in the query's own plan."""
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    plans: list[str] = []
+    real = module.stage
+
+    def spy(df, name):
+        plans.append(str(df._jdf.queryExecution().explainString(mode)))
+        return real(df, name)
+
+    monkeypatch.setattr(module, "stage", spy)
+    return plans
+
+
 def test_filter_pushdown_reaches_scan(spark, registry):
     plan = plan_of(spark, registry, "p_filter_project")
     assert "PushedFilters: [" in plan
@@ -80,13 +96,19 @@ def test_q6_all_predicates_pushed(spark, registry):
         assert frag in plan, plan
 
 
-def test_scalable_rank_has_no_full_table_single_partition_exchange(spark, registry):
+def test_scalable_rank_has_no_full_table_single_partition_exchange(
+    spark, registry, monkeypatch
+):
     """w_row_number_seq_scalable: the big-table window must run over
-    range partitions (parallel); the only SinglePartition exchange
+    range partitions (parallel; the range partition is staged, so its
+    exchange runs at staging time); the only SinglePartition exchange
     allowed is the one feeding the tiny per-partition-counts window
     (O(partitions) rows, after a HashAggregate)."""
+    from delta_data_pipelines_spark.operators import ranking
+
+    staged = staged_plans(spark, monkeypatch, ranking)
     plan = plan_of(spark, registry, "w_row_number_seq_scalable")
-    assert "rangepartitioning" in plan.lower(), plan
+    assert any("rangepartitioning" in p.lower() for p in staged), staged
     # the full-table window is partitioned by _pid, not global: the
     # windowspecdefinition's FIRST argument must be the partition key
     # (a global window would read `windowspecdefinition(doc_id ... )`
@@ -120,9 +142,12 @@ def test_pq_adc_scan_never_cartesian(spark, registry):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_batch_ids_global_parallel_plan(spark, registry):
+def test_batch_ids_global_parallel_plan(spark, registry, monkeypatch):
+    from delta_data_pipelines_spark.operators import ranking
+
+    staged = staged_plans(spark, monkeypatch, ranking)
     plan = plan_of(spark, registry, "w_batch_ids_global")
-    assert "rangepartitioning" in plan.lower(), plan
+    assert any("rangepartitioning" in p.lower() for p in staged), staged
     # two tiny unpartitioned windows allowed: partition offsets (≤32
     # rows) and total_batches over the per-batch aggregate
     assert plan.count("SinglePartition") <= 2, plan
@@ -274,17 +299,26 @@ def test_funnel_single_shuffle_no_joins(spark, registry):
     assert plan.count("Window") >= 3, plan
 
 
-def test_containment_joins_are_equi_never_cross(spark):
+def test_containment_joins_are_equi_never_cross(spark, monkeypatch):
     """containment_pairs: the prefix-probe ⋈ inverted-index join and
     the verify joins are all equi-joins — a cross-product fallback
     would be all-pairs, the exact thing the prefix filter exists to
-    avoid. Asserted on the lazy form (the eager default collapses to a
-    checkpoint scan with no joins left to inspect)."""
+    avoid. Asserted on the lazy plan handed to ``stage`` (the eager
+    result collapses to a checkpoint scan with no joins left to
+    inspect)."""
     from delta_data_pipelines_spark.catalog import read_table
-    from delta_data_pipelines_spark.operators.dedup import containment_pairs
+    from delta_data_pipelines_spark.operators import dedup
 
+    handed = []
+
+    def capture(df, name):
+        handed.append(df)
+        return df
+
+    monkeypatch.setattr(dedup, "stage", capture)
     d = read_table(spark, SF, "documents")
-    df = containment_pairs(d, "doc_id", "text", 0.5, materialize=False)
+    dedup.containment_pairs(d, "doc_id", "text", 0.5)
+    df = handed[-1]  # the result plan, staged last
     qe = df._jdf.queryExecution()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
@@ -314,12 +348,17 @@ def test_stream_interval_join_batch_twin_is_equi_join(spark, registry):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_interleave_range_partitioned_ranks_no_cartesian(spark, registry):
+def test_interleave_range_partitioned_ranks_no_cartesian(
+    spark, registry, monkeypatch
+):
     """ds_interleave: both rank passes must be range-partitioned (the
     per-source rank and the global position) — a per-source or global
     single-task window would serialize the schedule build."""
+    from delta_data_pipelines_spark.operators import ranking
+
+    staged = staged_plans(spark, monkeypatch, ranking)
     plan = plan_of(spark, registry, "ds_interleave")
-    assert plan.lower().count("rangepartitioning") >= 2, plan
+    assert sum("rangepartitioning" in p.lower() for p in staged) >= 2, staged
     assert "CartesianProduct" not in plan, plan
     # the only SinglePartition windows allowed are the tiny
     # per-partition-counts offset tables
@@ -446,7 +485,7 @@ def test_cm_counts_counter_table_is_broadcast(spark, registry):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_dsir_weights_flag_stays_below_generate(spark, registry):
+def test_dsir_weights_flag_stays_below_generate(spark, registry, monkeypatch):
     """td_dsir_weights: the quality flag must be evaluated once per
     DOC (below the feature explode), never once per exploded feature —
     ExtractGenerator hoists sibling expressions of a generator into a
@@ -455,23 +494,27 @@ def test_dsir_weights_flag_stays_below_generate(spark, registry):
     marker `64.0` (the quality score's length-cap divisor) must not
     appear in any Project above a Generate. The log-ratio table join
     must be broadcast (1024 rows), and the corpus must explode exactly
-    ONCE — the r14 staging shares one persisted (id, flag, bucket)
+    ONCE — the r14 staging shares one staged (id, flag, bucket)
     feature frame between the model fit and the scoring join (it was
-    2 explodes before: fit + score)."""
+    2 explodes before: fit + score). The explode runs at staging time,
+    so its plan is the staged frame's, and the query's own plan reads
+    the staged frame with no Generate left in it."""
+    from delta_data_pipelines_spark.operators import staging
+
+    staged = staged_plans(spark, monkeypatch, staging)
     plan = plan_of(spark, registry, "td_dsir_weights")
     assert "CartesianProduct" not in plan, plan
     # formatted mode prints each node twice (tree + detail): count
     # unique Generate node ids
-    gens = set(re.findall(r"\((\d+)\) Generate", plan))
-    assert len(gens) == 1, plan
-    # and the staged feature frame is actually cached (both the fit
-    # aggregation and the scoring join read the InMemoryRelation)
-    assert "InMemoryTableScan" in plan, plan
+    assert not re.findall(r"\((\d+)\) Generate", plan), plan
+    assert "Scan ExistingRDD" in plan, plan
+    (feats,) = [p for p in staged if re.search(r"\((\d+)\) Generate", p)]
+    assert len(set(re.findall(r"\((\d+)\) Generate", feats))) == 1, feats
     # the quality flag must sit BELOW the counts-pass Generate (one
     # Project detail carries the marker `64.0`, the quality score's
     # length-cap divisor); every Project detail above a Generate in
     # the same subtree must be marker-free
-    assert plan.count("64.0") == 1, plan
+    assert feats.count("64.0") == 1, feats
 
 
 def test_dsir_sample_is_take_ordered(spark, registry):

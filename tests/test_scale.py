@@ -511,49 +511,58 @@ def test_lang_curation_scales_with_replicated_corpus(spark):
 
 
 def test_stage_rank_parts_conf_gate(spark, tmp_path):
-    """The r15 conf-gated rank staging (VERDICT r14 #5 / ADVICE #1):
-    conf OFF (the driver's bench session) leaves the plan byte-
-    identical to the unstaged form; rank.stageParts=true pins the
-    range boundaries with ONE range exchange in the executed plan and
-    identical output; staging.dir switches to the written-table form,
-    also output-identical, with the staged parquet on disk."""
+    """The rank operators stage their range-partitioned frame, so both
+    consumers read ONE boundary draw (no range exchange left in the
+    executed plan), and ranks are exact where range sampling is partial
+    (20 000 distinct keys with payload columns over 4 input partitions)
+    — checked against a Python reference for the global rank, the
+    grouped rank and the cumulative sum, with ``staging.dir`` unset and
+    set."""
     from delta_data_pipelines_spark.operators.ranking import (
+        global_cumsum_by_range,
         global_rank_by_range,
+        grouped_rank_by_range,
     )
 
-    df = spark.range(0, 500).select(
-        (F.col("id") * 37 % 1000).alias("key")
-    ).distinct()
-    base = global_rank_by_range(df, "key", n_parts=4)
-    expect = sorted(
-        (r["key"], r["global_rank"]) for r in base.collect()
+    n = 20_000
+    df = spark.range(0, n, numPartitions=4).select(
+        (F.col("id") * 7919 % n).alias("key"),
+        (F.col("id") % 5).alias("grp"),
+        (F.col("id") % 13).alias("val"),
     )
-    plan_off = _plan(base)
-    assert "Scan ExistingRDD" not in plan_off  # conf off: unstaged
+    rows = [(r["key"], r["grp"], r["val"]) for r in df.collect()]
+    by_key = sorted(rows)
+    rank_ref = {k: i + 1 for i, (k, _, _) in enumerate(by_key)}
+    cum_ref, run = {}, 0
+    for k, _, v in by_key:
+        cum_ref[k] = run
+        run += v
+    grp_ref, seen = {}, {}
+    for k, g, _ in sorted(rows, key=lambda r: (r[1], r[0])):
+        seen[g] = seen.get(g, 0) + 1
+        grp_ref[k] = seen[g]
 
-    try:
-        spark.conf.set("spark.delta_pipelines.rank.stageParts", "true")
-        staged = global_rank_by_range(df, "key", n_parts=4)
-        got = sorted((r["key"], r["global_rank"]) for r in staged.collect())
-        assert got == expect
-        plan_on = _plan(staged)
-        # the checkpointed frame replaces the duplicated range
-        # exchange: the executed plan reads the RDD, with NO range
-        # exchange left inside it
-        assert "Scan ExistingRDD" in plan_on
-        assert plan_on.count("rangepartitioning") == 0, plan_on
-    finally:
-        spark.conf.unset("spark.delta_pipelines.rank.stageParts")
+    def check():
+        ranked = global_rank_by_range(df, "key", n_parts=4)
+        assert {
+            r["key"]: r["global_rank"] for r in ranked.collect()
+        } == rank_ref
+        grouped = grouped_rank_by_range(df, "grp", "key", n_parts=4)
+        assert {
+            r["key"]: r["group_rank"] for r in grouped.collect()
+        } == grp_ref
+        cum = global_cumsum_by_range(df, "key", "val", n_parts=4)
+        assert {r["key"]: r["cum_before"] for r in cum.collect()} == cum_ref
 
+    check()
+    plan = _plan(global_rank_by_range(df, "key", n_parts=4))
+    assert "Scan ExistingRDD" in plan
+    assert plan.count("rangepartitioning") == 0, plan
     try:
         spark.conf.set(
             "spark.delta_pipelines.staging.dir", str(tmp_path / "stg")
         )
-        written = global_rank_by_range(df, "key", n_parts=4)
-        got = sorted((r["key"], r["global_rank"]) for r in written.collect())
-        assert got == expect
-        stg = list((tmp_path / "stg").glob("rank_parts-*"))
-        assert stg, "staged table not written"
+        check()
     finally:
         spark.conf.unset("spark.delta_pipelines.staging.dir")
 
@@ -601,3 +610,95 @@ def test_release_staged_drops_checkpoint_blocks(spark):
     pk.count()
     release_staged(pk)
     assert jsc.getPersistentRDDs().size() == base
+
+
+def test_release_staged_deletes_written_staging_dir(spark, tmp_path):
+    """With ``staging.dir`` set, release_staged deletes the
+    ``<name>-<uuid hex>`` dir the stage wrote — and nothing else: a
+    parquet table that is not directly under the staging dir, or not
+    named like a staged dir, survives its release."""
+    from delta_data_pipelines_spark.operators.staging import (
+        release_staged,
+        stage,
+    )
+
+    sdir = tmp_path / "stg"
+    user = tmp_path / "user_table"
+    spark.range(5).write.parquet(str(user))
+    lookalike = sdir / "probe-notauuid"
+    spark.range(5).write.parquet(str(lookalike))
+    try:
+        spark.conf.set("spark.delta_pipelines.staging.dir", str(sdir))
+        staged = stage(spark.range(10), "probe")
+        written = list(sdir.glob("probe-*"))
+        assert len(written) == 2 and staged.count() == 10
+        release_staged(staged)
+        assert list(sdir.glob("probe-*")) == [lookalike]
+        release_staged(spark.read.parquet(str(user)))
+        release_staged(spark.read.parquet(str(lookalike)))
+    finally:
+        spark.conf.unset("spark.delta_pipelines.staging.dir")
+    assert user.exists() and lookalike.exists()
+
+
+def _digest(df) -> str:
+    import hashlib
+
+    cols = sorted(df.columns)
+    rows = sorted(repr(tuple(r[c] for c in cols)) for r in df.collect())
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+
+def test_written_staging_posture_matches_default(spark, tmp_path):
+    """The production posture run for real: registry queries that reach
+    rewritten staging sites, and a merge + apply_changes, give
+    digest-equal outputs with ``staging.dir`` unset and set — and the
+    storage calls leave none of their staged dirs behind."""
+    import __spark_entry__ as entry
+    from delta_data_pipelines_spark.storage import VersionedTable
+
+    sf = "/root/testdata/sf0.001"
+    registry = entry.queries()
+    names = (
+        "dd_containment", "dd_minhash", "td_logreg_quality",
+        "w_batch_ids_global",
+    )
+
+    def run(tag: str) -> dict[str, str]:
+        out = {n: _digest(registry[n](spark, sf)) for n in names}
+        t = VersionedTable(spark, str(tmp_path / f"table_{tag}"))
+        t.overwrite(spark.createDataFrame(
+            [(i, f"v{i}") for i in range(20)], "id long, v string"
+        ))
+        t.merge(
+            spark.createDataFrame(
+                [(i, f"w{i}") for i in range(15, 30)], "id long, v string"
+            ),
+            keys=["id"], when_matched="update",
+        )
+        t.apply_changes(
+            spark.createDataFrame(
+                [(3, None, "delete"), (16, "u", "update_postimage"),
+                 (40, "x", "insert")],
+                "id long, v string, _change_type string",
+            ),
+            keys=["id"],
+        )
+        out["table"] = _digest(t.read())
+        return out
+
+    default = run("default")
+    sdir = tmp_path / "stg"
+    try:
+        spark.conf.set("spark.delta_pipelines.staging.dir", str(sdir))
+        written = run("written")
+    finally:
+        spark.conf.unset("spark.delta_pipelines.staging.dir")
+    assert written == default
+    left = {p.name.rsplit("-", 1)[0] for p in sdir.iterdir()}
+    # the storage stages and the dedup operators' intermediates are
+    # released; what stays is what escapes in a lazy result
+    assert not left & {
+        "merge_source", "apply_feed", "minhash_signatures",
+        "containment_sets",
+    }, left

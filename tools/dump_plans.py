@@ -50,10 +50,13 @@ def main() -> int:
         "- `dd_minhash` / `dd_exact` / `dd_embedding_blocked` /",
         "  `dd_containment` / `td_passage_dup_fraction` /",
         "  `td_dedup_passages` / `td_cluster_balance` execute",
-        "  EAGERLY (operators/dedup.py materialize-and-release): the",
+        "  EAGERLY (every operator materializes through",
+        "  `operators/staging.stage` and releases its own stages): the",
         "  audited plan is the scan of the already-materialized result,",
         "  so their LSH/self-join/gram-df shape doesn't appear here —",
-        "  see the operator plan tests instead.",
+        "  see the operator plan tests instead. The rank family",
+        "  (`w_batch_ids_global`, `w_percent_rank_scalable`, ...) reads",
+        "  its staged range partition the same way.",
         "- `sim_brute_topk` / `sim_ivf_topk` / `sim_kmeans` cross",
         "  entries are the INTENTIONAL broadcast all-pairs: every corpus",
         "  row scores against the (tiny, broadcast) query/centroid set;",
