@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -276,8 +277,35 @@ def _reset_session_state(spark) -> None:
         pass  # hygiene must never fail the bench
 
 
-def _calibration_probe(spark) -> float:
-    """Fixed-cost machine-load probe: constant-size synthetic aggregate.
+def time_query(spark, fn, sf_dir, runs: int) -> list[float]:
+    """The one query timer: ``runs`` wall-clock samples of
+    ``fn(spark, sf_dir)`` forced end-to-end through the ``noop`` sink.
+
+    One untimed warm-up runs first: the first execution pays codegen/
+    JIT/scan-cache costs that would otherwise land in the first sample
+    and drag the median around under background load. The session is
+    reset afterwards (``_reset_session_state``) even when a run
+    raises, so the next query's timing does not carry this one's
+    storage."""
+
+    def run() -> None:
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    try:
+        run()
+        samples: list[float] = []
+        for _ in range(runs):
+            t0 = time.perf_counter()
+            run()
+            samples.append(time.perf_counter() - t0)
+        return samples
+    finally:
+        _reset_session_state(spark)
+
+
+def _calibration_probe(spark, one_core: bool = False) -> float:
+    """Fixed-cost machine-load probe: constant-size synthetic aggregate,
+    the median of three timed runs after a warm-up.
 
     SF-independent and IO-free, so its timing moves only with ambient
     machine load (CPU contention, thermal state), never with code or
@@ -285,53 +313,31 @@ def _calibration_probe(spark) -> float:
     query deltas should be read relative to the probe ratio
     (see README "Bench calibration").  The r5->r6 window showed every
     byte-identical query "regress" 1.2-2.5x purely from sandbox
-    contention — unreadable without this anchor.
-    """
-    import statistics
+    contention — unreadable without this anchor. The warm-up matters:
+    the probe's OWN codegen/JIT tier-up otherwise lands in the START
+    samples only (the end-of-run JVM is hot), which read as a
+    systematic 1.5-2x start/end "disagreement" (observed r7-r9).
 
+    ``one_core`` runs a smaller aggregate (8M rows) on ONE slice, so
+    its timing tracks SINGLE-CORE speed. The r12 investigation found
+    the two dimensions move independently across sandbox hosts: a box
+    whose 32-way probe read FASTER than ever (0.086 vs the ~0.12
+    floor) measured every single-task-dominated query (one-split scan
+    stages, driver-adjacent folds, bounded-group kernels) a uniform
+    1.2-1.9x SLOWER on byte-identical code, while well-parallelized
+    plans (tpch, search_index) stayed flat. Without the single-task
+    size that signature is indistinguishable from a real regression
+    in exactly the queries it hits."""
     from pyspark.sql import functions as F
 
-    def run() -> float:
-        t0 = time.perf_counter()
-        spark.range(0, 50_000_000, 1, 32).select(
+    rows, slices = (8_000_000, 1) if one_core else (50_000_000, 32)
+
+    def probe(spark, _sf_dir):
+        return spark.range(0, rows, 1, slices).select(
             F.sum(F.col("id") * 2 + 1).alias("s")
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
+        )
 
-    # untimed warmup: the probe's OWN codegen/JIT tier-up otherwise
-    # lands in the START samples only (the end-of-run JVM is hot),
-    # which read as a systematic 1.5-2x start/end "disagreement" that
-    # the noise rule then blames on ambient load (observed r7-r9;
-    # median-of-3 absorbs one cold sample, not tier-up across all 3)
-    run()
-    return round(statistics.median([run() for _ in range(3)]), 3)
-
-
-def _calibration_probe_1core(spark) -> float:
-    """Single-task twin of the calibration probe: the same synthetic
-    aggregate on ONE slice, so its timing tracks SINGLE-CORE speed.
-
-    The r12 investigation found the two dimensions move independently
-    across sandbox hosts: a box whose 32-way probe read FASTER than
-    ever (0.086 vs the ~0.12 floor) measured every single-task-
-    dominated query (one-split scan stages, driver-adjacent folds,
-    bounded-group kernels) a uniform 1.2-1.9x SLOWER on byte-identical
-    code, while well-parallelized plans (tpch, search_index) stayed
-    flat. Without this probe that signature is indistinguishable from
-    a real regression in exactly the queries it hits."""
-    import statistics
-
-    from pyspark.sql import functions as F
-
-    def run() -> float:
-        t0 = time.perf_counter()
-        spark.range(0, 8_000_000, 1, 1).select(
-            F.sum(F.col("id") * 2 + 1).alias("s")
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    run()
-    return round(statistics.median([run() for _ in range(3)]), 3)
+    return round(statistics.median(time_query(spark, probe, None, 3)), 3)
 
 
 def _stable_start_probe(spark) -> tuple[float, bool, int]:
@@ -361,24 +367,13 @@ def _stable_start_probe(spark) -> tuple[float, bool, int]:
 
 
 def build_session(cpus: str, app_name: str = "delta-data-pipelines-spark-bench"):
-    """The bench SparkSession — ONE definition, shared with
-    tools/time_one.py so standalone remeasure numbers stay comparable
-    to the bench sidecar they adjudicate (a config added here reaches
-    both automatically)."""
-    from pyspark.sql import SparkSession
+    """The bench SparkSession: ``session.get_spark`` on ``local[cpus]``
+    with one shuffle partition per core. bench.py, perfbench/ and every
+    timing tool take their session here, so they measure the same
+    config the tests and ``tools/check.py`` run under."""
+    from delta_data_pipelines_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
+    return get_spark(app_name, master=f"local[{cpus}]", shuffle_partitions=int(cpus))
 
 
 def main() -> int:
@@ -390,8 +385,6 @@ def main() -> int:
         sf = -1.0
 
     spark = build_session(cpus)
-
-    import statistics
 
     import __spark_entry__ as entrymod
 
@@ -405,40 +398,29 @@ def main() -> int:
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir):
         try:
-            registry["search_index_full"](spark, warm_dir).write.format(
-                "noop"
-            ).mode("overwrite").save()
+            time_query(spark, registry["search_index_full"], warm_dir, 0)
         except Exception:
             pass
 
     load_start = os.getloadavg()
     calib_start, start_unstable, start_samples = _stable_start_probe(spark)
-    calib_1core_start = _calibration_probe_1core(spark)
+    calib_1core_start = _calibration_probe(spark, one_core=True)
 
     for name in HEADLINE:
         fn = registry.get(name)
         if fn is None:
             continue
-        samples: list[float] = []
         try:
-            # untimed warmup: first execution pays codegen/JIT/scan-cache
-            # costs that would otherwise land in the first sample and
-            # drag the median around under background load
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                samples.append(time.perf_counter() - t0)
+            samples = time_query(spark, fn, sf_dir, runs)
             timings[name] = round(statistics.median(samples), 3)
             spread[name] = [round(min(samples), 3), round(max(samples), 3)]
         except Exception as exc:  # record failures, keep benching
             timings[name] = -1.0
             spread[name] = []
             print(f"BENCH-FAIL {name}: {exc}", file=sys.stderr)
-        _reset_session_state(spark)
 
     calib_end = _calibration_probe(spark)
-    calib_1core_end = _calibration_probe_1core(spark)
+    calib_1core_end = _calibration_probe(spark, one_core=True)
     load_end = os.getloadavg()
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
@@ -460,7 +442,7 @@ def main() -> int:
         "start_samples": start_samples,
         # single-task twin probes: single-core speed moves
         # independently of 32-way throughput across sandbox hosts
-        # (see _calibration_probe_1core) — compare these before
+        # (see _calibration_probe) — compare these before
         # believing a regression confined to one-split/bounded-group
         # queries
         "probe_1core": [calib_1core_start, calib_1core_end],

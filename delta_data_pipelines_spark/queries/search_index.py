@@ -97,16 +97,6 @@ def pivot_custom_fields_frames(
     )
 
 
-def _pivot_custom_fields(
-    spark: SparkSession, sf_dir: str, keys: DataFrame | None = None
-) -> DataFrame:
-    return pivot_custom_fields_frames(
-        read_table(spark, sf_dir, "lineitem"),
-        read_table(spark, sf_dir, "part"),
-        keys,
-    )
-
-
 def min_user_role_frames(
     events: DataFrame, users: DataFrame | None = None
 ) -> DataFrame:
@@ -124,12 +114,6 @@ def min_user_role_frames(
     return events.groupBy(F.col("user_id").alias("mr_user_id")).agg(
         F.min("value").alias("min_role_value")
     )
-
-
-def _min_user_role(
-    spark: SparkSession, sf_dir: str, users: DataFrame | None = None
-) -> DataFrame:
-    return min_user_role_frames(read_table(spark, sf_dir, "events"), users)
 
 
 def build_index_frames(

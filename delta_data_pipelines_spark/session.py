@@ -24,8 +24,8 @@ _DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
     # Arrow for pandas_udf / mapInPandas / toPandas round-trips.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Keep the 10 MB default broadcast threshold; dims here are tiny and
-    # at 100 TB the dims (region/nation/options) stay broadcast-sized.
+    # 32 MB broadcast threshold: dims here are tiny and at 100 TB the
+    # dims (region/nation/options) stay broadcast-sized.
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
     # Quieter local runs.
     "spark.ui.showConsoleProgress": "false",
@@ -54,9 +54,10 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    # local mode: driver is the only JVM; give it headroom if not set.
+    # local mode: the driver is the only JVM; 8g is the heap the bench
+    # and perfbench numbers are measured at.
     if master.startswith("local") and "spark.driver.memory" not in (extra_conf or {}):
-        conf.setdefault("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        conf.setdefault("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -9,6 +9,7 @@ import re
 import pytest
 
 import __spark_entry__ as entry
+from tools.dump_plans import formatted_plan
 
 SF = "/root/testdata/sf0.001"
 
@@ -19,23 +20,18 @@ def registry():
 
 
 def plan_of(spark, registry, name: str) -> str:
-    # formatted mode prints PushedFilters/ReadSchema on their own lines
-    # (plain toString truncates long scan lines before they appear)
-    qe = registry[name](spark, SF)._jdf.queryExecution()
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return str(qe.explainString(mode))
+    return formatted_plan(registry[name](spark, SF))
 
 
 def staged_plans(spark, monkeypatch, module) -> list[str]:
     """Formatted plans of the frames ``module`` hands to ``stage`` from
     here on: work a query stages runs at staging time, so it shows up
     here rather than in the query's own plan."""
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     plans: list[str] = []
     real = module.stage
 
     def spy(df, name):
-        plans.append(str(df._jdf.queryExecution().explainString(mode)))
+        plans.append(formatted_plan(df))
         return real(df, name)
 
     monkeypatch.setattr(module, "stage", spy)
@@ -277,13 +273,17 @@ def test_tfidf_construction_is_lazy(spark, registry):
     assert df.columns == ["doc_id", "token", "tf", "doc_freq", "tfidf"]
 
 
-def test_pack_sequences_parallel_cumsum_plan(spark, registry):
+def test_pack_sequences_parallel_cumsum_plan(spark, registry, monkeypatch):
     """td_pack_sequences: the full-table running offset must cumsum
-    inside range partitions (windowspecdefinition partitioned on _pid),
-    with the only SinglePartition exchange feeding the ≤32-row
+    inside range partitions (windowspecdefinition partitioned on _pid;
+    the range partition is staged, so its exchange runs at staging
+    time), with the only SinglePartition exchange feeding the ≤32-row
     per-partition-totals window — same contract as the scalable rank."""
+    from delta_data_pipelines_spark.operators import ranking
+
+    staged = staged_plans(spark, monkeypatch, ranking)
     plan = plan_of(spark, registry, "td_pack_sequences")
-    assert "rangepartitioning" in plan.lower(), plan
+    assert any("rangepartitioning" in p.lower() for p in staged), staged
     assert re.search(r"windowspecdefinition\(_pid#\d+, doc_id#\d+", plan), plan
     assert plan.count("SinglePartition") <= 1, plan
 
@@ -318,12 +318,7 @@ def test_containment_joins_are_equi_never_cross(spark, monkeypatch):
     monkeypatch.setattr(dedup, "stage", capture)
     d = read_table(spark, SF, "documents")
     dedup.containment_pairs(d, "doc_id", "text", 0.5)
-    df = handed[-1]  # the result plan, staged last
-    qe = df._jdf.queryExecution()
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = str(qe.explainString(mode))
+    plan = formatted_plan(handed[-1])  # the result plan, staged last
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -384,13 +379,19 @@ def test_ohlc_is_pure_aggregation(spark, registry):
     assert plan.count("HashAggregate") >= 4, plan  # 2 aggs x partial+final
 
 
-def test_percent_rank_scalable_no_full_table_single_partition(spark, registry):
+def test_percent_rank_scalable_no_full_table_single_partition(
+    spark, registry, monkeypatch
+):
     """w_percent_rank_scalable: the rank must come from range
     partitions (a plain PERCENT_RANK window would be one task holding
-    the whole table); the only SinglePartition exchange allowed feeds
-    the tiny per-partition-counts window."""
+    the whole table; the range partition is staged, so its exchange
+    runs at staging time); the only SinglePartition exchange allowed
+    feeds the tiny per-partition-counts window."""
+    from delta_data_pipelines_spark.operators import ranking
+
+    staged = staged_plans(spark, monkeypatch, ranking)
     plan = plan_of(spark, registry, "w_percent_rank_scalable")
-    assert "rangepartitioning" in plan.lower(), plan
+    assert any("rangepartitioning" in p.lower() for p in staged), staged
     # two tiny SinglePartition exchanges allowed: the ≤32-row
     # per-partition-counts window and the 1-row n aggregate
     assert plan.count("SinglePartition") <= 2, plan
@@ -620,11 +621,7 @@ def test_dsir_fit_and_score_scan_count_pinned(spark, registry):
     flagged n-gram fit, unigram score, bigram score). An extra
     corpus scan per stage is the dominant regression at 100 TB, where
     one documents pass IS the cost unit."""
-    qe = registry["td_dsir_weights"](spark, SF)._jdf.queryExecution()
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = str(qe.explainString(mode))
+    plan = plan_of(spark, registry, "td_dsir_weights")
     scans = [
         line
         for line in plan.splitlines()
@@ -744,12 +741,7 @@ def test_lang_lm_scores_no_window_over_vocab(spark):
         .select("doc_id", "text")
         .withColumn("lang", F.lit("en"))
     )
-    scores = langcurate.lang_lm_scores(docs, "doc_id", "text")
-    qe = scores._jdf.queryExecution()
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-    plan = str(qe.explainString(mode))
+    plan = formatted_plan(langcurate.lang_lm_scores(docs, "doc_id", "text"))
     assert "Window" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
     # partial sum for the per-language totals (map-side combine)

@@ -1,16 +1,19 @@
-"""Tests for the round-over-round tooling (no SparkSession needed):
-tools/compare_bench.py's two input paths must apply the SAME
-normalization rules — the r10 review found the driver-record path had
-drifted from the bench-line path (min-vs-mean probes, run-level
-fields polluting the query map, disagreement never populated)."""
+"""Tests for the round-over-round tooling. tools/compare_bench.py's
+two input paths must apply the SAME normalization rules — the r10
+review found the driver-record path had drifted from the bench-line
+path (min-vs-mean probes, run-level fields polluting the query map,
+disagreement never populated). The bench timer, the plan normalizer
+and the one-session-builder rule are pinned at the end."""
 
 from __future__ import annotations
 
 import json
+import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from tools import compare_bench  # noqa: E402
 
@@ -172,3 +175,59 @@ def test_registry_md_not_stale():
     assert green_ever == sum(
         1 for q in reg if any(ok for _, ok in hist.get(q, []))
     )
+
+
+def test_time_query_times_runs_after_one_warm_up_and_resets(spark):
+    """bench.time_query: one untimed warm-up, then one sample per timed
+    run, and the session reset afterwards, so a frame the query staged
+    and never released does not outlive the timing."""
+    import bench
+    from delta_data_pipelines_spark.operators.staging import stage
+
+    calls = []
+
+    def query(spark, sf_dir):
+        calls.append(sf_dir)
+        return stage(spark.range(1000), "time_query_probe")
+
+    samples = bench.time_query(spark, query, "sf", 3)
+    assert len(samples) == 3 and all(t > 0 for t in samples)
+    assert calls == ["sf"] * 4
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+
+
+def test_normalize_plan_equates_two_builds_of_one_query(spark):
+    """Two builds of one query print different expression ids, plan ids,
+    lambda-variable counters and checkpoint RDDs; normalize_plan masks
+    exactly those, so the two normalized dumps are equal."""
+    import bench
+    import __spark_entry__ as entry
+    from tools.dump_plans import formatted_plan, normalize_plan
+
+    fn = entry.queries()["txt_unigram_encode"]
+    try:
+        a, b = (formatted_plan(fn(spark, "/root/testdata/sf0.001")) for _ in "ab")
+    finally:
+        bench._reset_session_state(spark)
+    assert a != b
+    assert normalize_plan(a) == normalize_plan(b)
+
+
+def test_one_session_builder_and_one_plan_dumper():
+    """Sessions come from session.get_spark and plans from
+    tools/dump_plans.formatted_plan: no other file in the package,
+    bench.py, tools/ or tests/ builds a session or an explain mode."""
+    files = [
+        *ROOT.glob("delta_data_pipelines_spark/**/*.py"),
+        ROOT / "bench.py",
+        *ROOT.glob("tools/*.py"),
+        *ROOT.glob("tests/*.py"),
+    ]
+
+    def having(pattern):
+        return sorted(
+            str(f.relative_to(ROOT)) for f in files if re.search(pattern, f.read_text())
+        )
+
+    assert having(r"SparkSession\s*\.\s*builder") == ["delta_data_pipelines_spark/session.py"]
+    assert having(r"ExplainMode\s*\.\s*fromString") == ["tools/dump_plans.py"]

@@ -70,6 +70,7 @@ def main() -> int:
     only = set(sys.argv[1:])
 
     import __spark_entry__ as entrymod
+    import bench
     from delta_data_pipelines_spark.session import get_spark
 
     spark = get_spark("check", extra_conf={"spark.ui.enabled": "false"})
@@ -97,12 +98,10 @@ def main() -> int:
             n_fail += 1
             continue
         finally:
-            # queries that stage multi-consumer frames (the
-            # classifier queries' labeled per-doc frame) rely on a
-            # session-level cache reset between queries — bench's
-            # _reset_session_state does this for bench; mirror it so a
-            # full-registry run doesn't accumulate cached relations
-            spark.catalog.clearCache()
+            # a staged frame that escapes in a query's lazy result is
+            # released only by the session reset the bench runs
+            # between queries; run the same one here
+            bench._reset_session_state(spark)
         if name not in oracles:
             print(f"SKIP {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
             n_skip += 1

@@ -59,18 +59,12 @@ def build_null_corpus(dst: str, every: int = 5) -> None:
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
+    from delta_data_pipelines_spark.session import get_spark
 
     prefixes = tuple(sys.argv[1:])
     dst = tempfile.mkdtemp(prefix="nullaudit_")
     build_null_corpus(dst)
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("null-audit")
-        .config("spark.sql.shuffle.partitions", "8")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("null-audit", master="local[8]", shuffle_partitions=8)
     import __spark_entry__ as entry
 
     fails: list[tuple[str, str]] = []

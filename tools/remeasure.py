@@ -51,23 +51,6 @@ def _wait_for_quiet(gate: float, timeout: float) -> bool:
     return False
 
 
-def _session(cpus: str):
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("delta-data-pipelines-spark-remeasure")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
-
-
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser()
     p.add_argument("old")
@@ -109,9 +92,12 @@ def main(argv: list[str] | None = None) -> int:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = _session(cpus)
     import bench as benchmod
     import __spark_entry__ as entrymod
+
+    spark = benchmod.build_session(
+        cpus, app_name="delta-data-pipelines-spark-remeasure"
+    )
 
     registry = entrymod.queries()
     # fresh probe vs the OLD record's: today's machine factor. The
@@ -136,24 +122,13 @@ def main(argv: list[str] | None = None) -> int:
             result["queries"][name] = {"verdict": "unmeasurable"}
             continue
         quiet = _wait_for_quiet(args.load_gate, args.load_timeout)
-        samples: list[float] = []
         try:
-            fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()  # untimed warmup
-            for _ in range(args.runs):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples.append(time.perf_counter() - t0)
+            samples = benchmod.time_query(spark, fn, sf_dir, args.runs)
         except Exception as exc:
             result["queries"][name] = {
                 "verdict": "error", "error": str(exc)[:200]
             }
             continue
-        finally:
-            benchmod._reset_session_state(spark)
         med = statistics.median(samples) / probe_ratio
         mn = min(samples) / probe_ratio
         noise = med <= old * args.band or mn <= old * 1.05

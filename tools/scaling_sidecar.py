@@ -37,7 +37,6 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -143,21 +142,12 @@ def time_queries(cpus: str, sf_dir: str, runs: int) -> dict:
     registry = entrymod.queries()
     out = {}
     for name in QUERIES:
-        fn = registry[name]
         try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            ts = []
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                ts.append(time.perf_counter() - t0)
+            ts = bench.time_query(spark, registry[name], sf_dir, runs)
             out[name] = round(statistics.median(ts), 3)
         except Exception as exc:
             out[name] = -1.0
             print(f"SIDECAR-FAIL {name}@{cpus}: {exc}", file=sys.stderr)
-        bench._reset_session_state(spark)
     spark.stop()
     return out
 

@@ -14,7 +14,6 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -34,7 +33,7 @@ def main() -> int:
     registry = entrymod.queries()
 
     probe_start, unstable, samples = bench._stable_start_probe(spark)
-    p1_start = bench._calibration_probe_1core(spark)
+    p1_start = bench._calibration_probe(spark, one_core=True)
     out: dict = {
         "sf_dir": sf_dir,
         "runs": runs,
@@ -45,21 +44,14 @@ def main() -> int:
         "queries": {},
     }
     for name in names:
-        fn = registry[name]
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        ts: list[float] = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            ts.append(time.perf_counter() - t0)
+        ts = bench.time_query(spark, registry[name], sf_dir, runs)
         out["queries"][name] = {
             "median": round(statistics.median(ts), 3),
             "min": round(min(ts), 3),
             "max": round(max(ts), 3),
         }
-        bench._reset_session_state(spark)
     out["probe_end"] = bench._calibration_probe(spark)
-    out["probe_1core_end"] = bench._calibration_probe_1core(spark)
+    out["probe_1core_end"] = bench._calibration_probe(spark, one_core=True)
     out["loadavg_end"] = round(os.getloadavg()[0], 2)
     print(json.dumps(out))
     return 0
