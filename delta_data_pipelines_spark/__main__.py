@@ -17,25 +17,28 @@ import json
 import os
 import sys
 
+# default --sf-dir of every subcommand that reads the fixture tables
+_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="delta_data_pipelines_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
     si = sub.add_parser("search-index", help="full search-index rebuild")
-    si.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    si.add_argument("--sf-dir", default=_SF_DIR)
     si.add_argument("--out", default=None, help="write result parquet here")
 
     inc = sub.add_parser("incremental-index", help="watermarked incremental index")
     inc.add_argument("--state", required=True, help="state directory (index + watermarks)")
-    inc.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    inc.add_argument("--sf-dir", default=_SF_DIR)
 
     pd_ = sub.add_parser("price-dataset", help="versioned ML dataset publish")
     pd_.add_argument("--listings", required=True, help="listings parquet dir")
     pd_.add_argument("--out", required=True, help="dataset table root")
 
     cc = sub.add_parser("curate-corpus", help="scrub + quality-gate + dedup + split publish")
-    cc.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    cc.add_argument("--sf-dir", default=_SF_DIR)
     cc.add_argument("--out", required=True, help="curated corpus table root")
     cc.add_argument("--no-scrub", action="store_true", help="skip PII redaction")
     cc.add_argument("--pack-ctx", type=int, default=None,
@@ -170,7 +173,7 @@ def main(argv: list[str] | None = None) -> int:
         help="print the corpus datasheet (doc/token/lang/source counts, "
         "dup ratio, mean quality/length) as one JSON line",
     )
-    cr.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    cr.add_argument("--sf-dir", default=_SF_DIR)
     cr.add_argument("--table", default=None, metavar="DIR",
                     help="report on a curated VersionedTable instead "
                     "of the sf-dir documents parquet")
@@ -207,7 +210,7 @@ def main(argv: list[str] | None = None) -> int:
         help="build/refresh the PQ ANN index (codes + codebook tables)",
     )
     pq.add_argument("--index", required=True, help="index store root")
-    pq.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    pq.add_argument("--sf-dir", default=_SF_DIR)
     pq.add_argument("--m", type=int, default=4, help="subspaces")
     pq.add_argument("--k", type=int, default=4, help="codewords per subspace")
     pq.add_argument("--n-iter", type=int, default=2, help="Lloyd rounds")
@@ -220,7 +223,7 @@ def main(argv: list[str] | None = None) -> int:
         "baseline (the refit signal)",
     )
     pa.add_argument("--index", required=True, help="index store root")
-    pa.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    pa.add_argument("--sf-dir", default=_SF_DIR)
 
     iv = sub.add_parser(
         "ivf-index",
@@ -228,7 +231,7 @@ def main(argv: list[str] | None = None) -> int:
         "corpus bucketed by cell id (probe-pruned serve reads)",
     )
     iv.add_argument("--index", required=True, help="index store root")
-    iv.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    iv.add_argument("--sf-dir", default=_SF_DIR)
     iv.add_argument("--n-cells", type=int, default=16)
     iv.add_argument("--n-iter", type=int, default=2,
                     help="k-means refinement rounds (0 = deterministic "
@@ -245,7 +248,7 @@ def main(argv: list[str] | None = None) -> int:
         "touched buckets only",
     )
     ia.add_argument("--index", required=True, help="index store root")
-    ia.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    ia.add_argument("--sf-dir", default=_SF_DIR)
 
     fm = sub.add_parser(
         "fit-curation-model",
@@ -254,7 +257,7 @@ def main(argv: list[str] | None = None) -> int:
         "corpus, heldout 13-gram set for decontamination",
     )
     fm.add_argument("--model", required=True, help="model store root")
-    fm.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    fm.add_argument("--sf-dir", default=_SF_DIR)
     fm.add_argument("--heldout", required=True,
                     help="parquet dir of heldout docs (doc_id/text)")
     fm.add_argument("--lm-drop", type=float, default=0.05)
@@ -316,7 +319,7 @@ def main(argv: list[str] | None = None) -> int:
         "stored log-ratio table, one JSON summary line",
     )
     dsc.add_argument("--model", required=True, help="model store root")
-    dsc.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    dsc.add_argument("--sf-dir", default=_SF_DIR)
     dsc.add_argument("--out", default=None, metavar="DIR",
                     help="also write the per-doc (doc_id, n_features, "
                     "dsir_weight) frame as parquet")
@@ -363,7 +366,7 @@ def main(argv: list[str] | None = None) -> int:
         "only when it fell > tolerance below the build baseline",
     )
     pg.add_argument("--index", required=True, help="PQ index store root")
-    pg.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    pg.add_argument("--sf-dir", default=_SF_DIR)
     pg.add_argument("--tolerance", type=float, default=0.05)
 
     sw = sub.add_parser(
@@ -386,7 +389,7 @@ def main(argv: list[str] | None = None) -> int:
         "artifact instead of refitting",
     )
     tk.add_argument("--store", required=True, help="tokenizer store root")
-    tk.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    tk.add_argument("--sf-dir", default=_SF_DIR)
     tk.add_argument("--family", choices=["unigram", "bpe"], default="unigram")
     tk.add_argument("--max-len", type=int, default=4,
                     help="unigram: max piece length")
@@ -404,7 +407,7 @@ def main(argv: list[str] | None = None) -> int:
         "materialized ctx-token windows",
     )
     tc.add_argument("--store", required=True, help="tokenizer store root")
-    tc.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
+    tc.add_argument("--sf-dir", default=_SF_DIR)
     tc.add_argument("--out", required=True, help="output parquet dir")
     tc.add_argument("--ctx", type=int, default=None,
                     help="window size; with --materialize writes the "
@@ -665,7 +668,7 @@ def main(argv: list[str] | None = None) -> int:
             "job": "replicate",
             "source": args.source,
             "replica": args.replica,
-            "applied_version": tail.applied_version(),
+            "applied_version": results[-1]["applied_to"],
             "rows_applied": sum(r["rows"] for r in results),
             "ticks": len(results),
         }))

@@ -14,9 +14,9 @@ CHANGE FEEDS of the source tables, so every mutation class converges:
 
     tick():
       1. read each source's version; diff against the versions the
-         index last absorbed (the watermark rides INSIDE the index
-         table's own apply_changes commit — same exactly-once shape
-         as storage.matview: deltas and watermark are one atomic CAS)
+         index last absorbed (the index table's watermark, see the
+         storage.table module doc: deltas and watermark are one atomic
+         CAS commit)
       2. derive AFFECTED FACT KEYS: changed fact rows by key, changed
          EAV (lineitem) rows by their fact FK, changed role (events)
          rows by user → the fact rows of those users
@@ -32,7 +32,10 @@ CHANGE FEEDS of the source tables, so every mutation class converges:
     full-scope recompute in that tick — the reference handles dims
     with the nightly full rebuild; here it is just the same tick with
     the affected-key prune removed, and stale ids are deleted by the
-    same diff.
+    same diff. Bootstrap (no watermark) is that full-scope path too:
+    on an empty index it writes every row, and on an index a foreign
+    write left unwatermarked it also deletes the ids that no longer
+    qualify.
 
 At-least-once ticks, exactly-once content: a crash before the commit
 leaves watermark and rows untouched (clean retry); the commit carries
@@ -110,17 +113,9 @@ class ContinuousSearchIndexer:
             fact_filter if fact_filter is not None else default_fact_filter()
         )
 
-    # ---- watermark (inside the index table's own history) -----------------
-
     def indexed_versions(self) -> dict[str, int] | None:
-        """Source versions the index last absorbed, from the most
-        recent tick commit's metrics."""
-        if not self.index.exists():
-            return None
-        for c in reversed(self.index.history()):
-            if "indexed_versions" in c.metrics:
-                return dict(c.metrics["indexed_versions"])
-        return None
+        """Source versions the index last absorbed: its watermark."""
+        return self.index.applied_versions() or None
 
     # ---- the tick -----------------------------------------------------------
 
@@ -219,26 +214,13 @@ class ContinuousSearchIndexer:
             return {"mode": "noop", "indexed_versions": latest}
         snaps = self._snapshots(latest)
 
-        if applied is None:
-            # bootstrap: full build, all-insert
-            feed = self._build(snaps, scope=None).withColumn(
-                "_change_type", F.lit("insert")
-            )
-            commit = self.index.apply_changes(
-                feed, keys=["id"], extra_metrics={"indexed_versions": latest}
-            )
-            return {
-                "mode": "bootstrap",
-                "version": commit.version,
-                "upserts": commit.metrics.get("upserts", 0),
-                "deletes": 0,
-                "indexed_versions": latest,
-            }
-
-        indexed = self.index.read().select(F.col("id").alias("o_orderkey"))
-        dims_moved = any(latest[d] != applied[d] for d in _DIMS)
-        if dims_moved:
-            # nightly-full fallback inside the same protocol: recompute
+        indexed = (
+            self.index.read().select(F.col("id").alias("o_orderkey"))
+            if self.index.exists() else None
+        )
+        full = applied is None or any(latest[d] != applied[d] for d in _DIMS)
+        if full:
+            # bootstrap and the nightly-full fallback: recompute
             # everything, delete index ids that no longer qualify
             scope = None
             stale_universe = indexed
@@ -249,28 +231,30 @@ class ContinuousSearchIndexer:
             stale_universe = scope.join(indexed, ["o_orderkey"], "left_semi")
         try:
             rebuilt = self._build(snaps, scope)
-            ups = rebuilt.withColumn("_change_type", F.lit("insert"))
-            # affected keys whose recompute produced no row: their fact
-            # row was deleted or disqualified -> delete from the index
-            dels = (
-                stale_universe.select(F.col("o_orderkey").alias("id"))
-                .join(rebuilt.select("id"), ["id"], "left_anti")
-                .withColumn("_change_type", F.lit("delete"))
-            )
-            feed = ups.unionByName(dels, allowMissingColumns=True)
+            feed = rebuilt.withColumn("_change_type", F.lit("insert"))
+            if stale_universe is not None:
+                # affected keys whose recompute produced no row: their
+                # fact row was deleted or disqualified -> delete them
+                dels = (
+                    stale_universe.select(F.col("o_orderkey").alias("id"))
+                    .join(rebuilt.select("id"), ["id"], "left_anti")
+                    .withColumn("_change_type", F.lit("delete"))
+                )
+                feed = feed.unionByName(dels, allowMissingColumns=True)
             # a full-scope feed upserts every index row: recording its
             # change rows would write the index twice more
             commit = self.index.apply_changes(
-                feed,
-                keys=["id"],
-                extra_metrics={"indexed_versions": latest},
-                record_changes=not dims_moved,
+                feed, keys=["id"], applied=latest, record_changes=not full,
             )
         finally:
             if scope is not None:
                 release_staged(scope)
+        if applied is None:
+            mode = "bootstrap"
+        else:
+            mode = "full" if full else "incremental"
         return {
-            "mode": "full" if dims_moved else "incremental",
+            "mode": mode,
             "version": commit.version,
             "upserts": commit.metrics.get("upserts", 0),
             "deletes": commit.metrics.get("deletes", 0),

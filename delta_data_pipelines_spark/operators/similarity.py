@@ -11,9 +11,6 @@ array<double>): JVM-side, no Python in the hot path.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf resolves the (stringified
-# by future-annotations) type hints against these globals
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -38,32 +35,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
 
 
-def cosine_pandas() -> "object":
-    """Arrow-batched numpy cosine — the fast path for wide vectors.
-
-    Spark evaluates higher-order-function lambdas interpreted (outside
-    codegen), so the ``aggregate(zip_with(...))`` fold pays per-element
-    interpreter cost; the vectorized numpy kernel over Arrow batches
-    measured ~2× faster at 64 dims on the sf0.1 corpus. Trade-off: the
-    summation order differs from the sequential fold, so pre-round
-    doubles can differ by ulps — keep the expression path wherever an
-    oracle recomputes the exact fold (the registry queries do)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        A = np.vstack(a.values)
-        B = np.vstack(b.values)
-        num = (A * B).sum(axis=1)
-        den = np.sqrt((A * A).sum(axis=1)) * np.sqrt((B * B).sum(axis=1))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = num / den
-        return pd.Series(out)
-
-    return _cos
-
-
 def _probe_frames(
     corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -86,34 +57,19 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    impl: str = "expr",
 ) -> DataFrame:
     """Exact cosine top-k: every query row against every corpus row.
 
     The query side is broadcast (top-k search is almost always a small
     probe set against a huge corpus); ranking is a per-query window.
     Deterministic tie-break: higher cosine first, then smaller id.
-
-    ``impl='expr'`` (default) scores with the JVM expression fold —
-    oracle-exact. ``impl='pandas'`` swaps in the Arrow-batched numpy
-    kernel (~2× faster for wide vectors; ulp-level summation-order
-    differences — see :func:`cosine_pandas`).
     """
-    if impl not in {"expr", "pandas"}:
-        raise ValueError(f"impl must be 'expr' or 'pandas', got {impl!r}")
     c, q = _probe_frames(corpus, queries, id_col, vec_col)
-    if impl == "expr":
-        score = cosine(F.col("_qv"), F.col("_cv"))
-    else:
-        raw = cosine_pandas()(F.col("_qv"), F.col("_cv"))
-        # zero-norm vectors: numpy 0/0 yields NaN, which Spark sorts
-        # ABOVE every real score on a descending order (it would rank
-        # first for every query); null matches the expr path's
-        # nullif-based behavior (sorted last)
-        score = F.when(~F.isnan(raw), raw)
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine_sim", F.round(score, 9))
+        .withColumn(
+            "cosine_sim", F.round(cosine(F.col("_qv"), F.col("_cv")), 9)
+        )
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id")

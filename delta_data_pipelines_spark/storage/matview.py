@@ -28,14 +28,12 @@ what lets the view cover MIN-per-key shapes (the reference's
 ``MinUserRole`` aggregate, SURVEY A2) incrementally.
 
 Exactly-once, structurally: additive deltas are NOT idempotent, so
-unlike :class:`~.replication.ChangeFeedTail` (whose ``apply_changes``
-replays are content-idempotent and can use a sidecar watermark) the
-applied-span watermark here rides INSIDE the view table's own commit
-entry (``extra_metrics`` on ``apply_changes``) — the delta
-application and the watermark advance are ONE atomic CAS commit.
-A crash can only land before the commit (nothing applied, watermark
-unchanged → clean retry) or after it (both applied and advanced);
-there is no window where a replay double-counts.
+the applied source version is the view table's own watermark
+(``storage.table`` module doc) — the delta application and the
+watermark advance are ONE atomic CAS commit. A crash can only land
+before the commit (nothing applied, watermark unchanged → clean
+retry) or after it (both applied and advanced); there is no window
+where a replay double-counts.
 
 Scale posture: a refresh aggregates the FEED (map-side partial
 combine on the group keys — cost follows change volume), reads only
@@ -57,6 +55,8 @@ from ..operators.staging import release_staged, stage
 from .table import VersionedTable
 
 _SUM_TYPE = "decimal(38,6)"
+# the view's watermark key: one source per view
+_SOURCE = "source"
 
 
 class IncrementalAggregate:
@@ -97,12 +97,8 @@ class IncrementalAggregate:
         return self.table.read()
 
     def applied_version(self) -> int | None:
-        """Last source version folded in, from the most recent
-        refresh commit's metrics — the watermark IS the commit."""
-        for c in reversed(self.table.history() if self.table.exists() else []):
-            if "applied_to" in c.metrics:
-                return c.metrics["applied_to"]
-        return None
+        """Last source version folded in: the view table's watermark."""
+        return self.table.applied_versions().get(_SOURCE)
 
     # ---- the delta algebra -------------------------------------------------
 
@@ -147,6 +143,8 @@ class IncrementalAggregate:
         CDC feed of new group rows + zero-count deletes →
         ``apply_changes`` carrying the watermark). Callers managing
         their own spans pass ``applied_to``; :meth:`tick` always does.
+        A refresh without it leaves the view unwatermarked, so a later
+        :meth:`tick` raises instead of folding that span a second time.
 
         ``base_reader`` (required when ``minmax_cols`` is set and the
         feed carries deletes that tie-or-beat a stored extremum) takes
@@ -307,9 +305,9 @@ class IncrementalAggregate:
                     F.lit("insert")
                 ),
             )
-            extra = {} if applied_to is None else {"applied_to": applied_to}
             commit = self.table.apply_changes(
-                out, keys=self.group_cols, extra_metrics=extra
+                out, keys=self.group_cols,
+                applied=None if applied_to is None else {_SOURCE: applied_to},
             )
         finally:
             release_staged(delta, staged_rows)
@@ -320,48 +318,6 @@ class IncrementalAggregate:
             "groups_recomputed": n_recomputed,
             "applied_to": applied_to,
         }
-
-    # ---- maintenance (watermark-preserving) --------------------------------
-
-    def restamp(self) -> None:
-        """Re-anchor the applied-span watermark at the history tail:
-        an EMPTY ``apply_changes`` commit carrying the current
-        ``applied_to`` (zero rows → zero touched buckets on a
-        bucketed table). Needed after maintenance commits, because
-        the watermark lives in refresh-commit metrics and ``vacuum``
-        prunes history — without it, routine compact+vacuum could
-        strand a consistent view in the unwatermarked state
-        :meth:`tick`'s guard refuses."""
-        applied = self.applied_version()
-        if applied is None:
-            return
-        empty = self.table.read().limit(0).withColumn(
-            "_change_type", F.lit("insert")
-        )
-        self.table.apply_changes(
-            empty, keys=self.group_cols, extra_metrics={"applied_to": applied}
-        )
-
-    def compact(self, *args: Any, **kwargs: Any):
-        """``table.compact`` + :meth:`restamp` — THE way to compact a
-        view table (a raw compact followed by a deep vacuum can prune
-        the only watermark-bearing commit)."""
-        applied = self.applied_version()
-        out = self.table.compact(*args, **kwargs)
-        if applied is not None and self.applied_version() is None:
-            self.restamp()
-        return out
-
-    def vacuum(self, keep_last: int = 3) -> list[int]:
-        """``table.vacuum`` with the watermark restamped FIRST when
-        the surviving window would otherwise lose it."""
-        applied = self.applied_version()
-        if applied is not None:
-            hist = self.table.history()
-            tail = hist[-keep_last:] if keep_last > 0 else []
-            if not any("applied_to" in c.metrics for c in tail):
-                self.restamp()
-        return self.table.vacuum(keep_last=keep_last)
 
     # ---- the tailing driver -------------------------------------------------
 
@@ -381,18 +337,17 @@ class IncrementalAggregate:
             return {"applied_from": applied, "applied_to": applied}
         if applied is None:
             if self.table.exists() and not self.table.read().isEmpty():
-                # a populated view with no watermark in its surviving
-                # history (pruned past the last refresh commit, or
-                # populated outside this class) must not be bootstrap-
+                # a populated view whose latest commit carries no
+                # watermark (a write outside tick: overwrite, merge, a
+                # refresh without applied_to) must not be bootstrap-
                 # folded: refresh MERGES onto stored rows, so an
                 # all-insert snapshot feed would silently DOUBLE every
                 # count and sum. Loud error over silent corruption.
                 raise ValueError(
                     "view has rows but no applied_to watermark in its "
-                    "history (raw compact+vacuum on the view table? "
-                    "use IncrementalAggregate.compact/vacuum — they "
-                    "restamp the watermark); drop the view table (or "
-                    "overwrite it empty) and re-tick to rebuild"
+                    "latest commit (written outside tick?); drop the "
+                    "view table (or overwrite it empty) and re-tick to "
+                    "rebuild"
                 )
             feed = source.read(latest).withColumn(
                 "_change_type", F.lit("insert")

@@ -16,17 +16,17 @@ INTO`` parity) — into a driver you can run forever:
 Consistency story (at-least-once ticks, exactly-once content):
 
 - The tail's own state is ONE number — the last source version whose
-  changes have been applied — persisted via atomic rename under the
-  replica root AFTER the apply commits. A crash between apply and
-  state write re-applies the same span next tick; ``apply_changes``
-  is content-idempotent, so the replica converges identically.
+  changes have been applied — kept as the replica's watermark under
+  ``source.root`` (``storage.table`` module doc): the apply and the
+  watermark advance are ONE CAS commit, so a crash leaves either both
+  or neither.
 - Each tick diffs ``changes(applied, latest)`` against the latest
   version it SAW; source writers can keep committing concurrently —
   new versions are simply picked up next tick (a snapshot-consistent
   span, never a torn read, because version manifests are immutable).
 - The replica is single-writer-per-tail: the CAS commit protocol
   turns a second concurrent tail into ``ConcurrentWriteError`` on one
-  side; the loser's watermark is untouched, so its retry converges.
+  side; the loser's commit never landed, so its retry converges.
 
 Scale posture: on bucketed tables BOTH halves follow churn, not table
 size — ``changes()`` reads only buckets whose manifest entry moved
@@ -39,20 +39,17 @@ contract); a tail lagging past retention must re-bootstrap.
 
 from __future__ import annotations
 
-import json
-import os
 from typing import Any
 
 from pyspark.sql import functions as F
 
-from .meta import atomic_json_write
-from .table import VersionedTable
+from .table import VersionedTable, snapshot_diff
 
 
 class ChangeFeedTail:
     """Tails ``source.changes()`` into ``replica`` via
     ``replica.apply_changes()``, tracking the applied source version
-    in ``<replica.root>/_replication.json``.
+    in the replica's watermark.
 
     ``keys`` identify rows across versions (the CDC key set); a
     bucketed replica needs its bucket key among them (the
@@ -69,45 +66,34 @@ class ChangeFeedTail:
         self.source = source
         self.replica = replica
         self.keys = list(keys)
-        self._state_path = os.path.join(replica.root, "_replication.json")
 
     # ---- state ----------------------------------------------------------
 
     def applied_version(self) -> int | None:
         """Last source version whose changes are applied, or None
         before bootstrap."""
-        if not os.path.exists(self._state_path):
-            return None
-        with open(self._state_path) as fh:
-            state = json.load(fh)
-        if state.get("source_root") != self.source.root:
+        applied = self.replica.applied_versions()
+        if applied and self.source.root not in applied:
             raise ValueError(
                 f"replica at {self.replica.root} tails "
-                f"{state.get('source_root')}, not {self.source.root}"
+                f"{', '.join(applied)}, not {self.source.root}"
             )
-        return state["applied_version"]
-
-    def _record(self, version: int) -> None:
-        atomic_json_write(
-            self._state_path,
-            {"source_root": self.source.root, "applied_version": version},
-        )
+        return applied.get(self.source.root)
 
     # ---- the tick -------------------------------------------------------
 
     def tick(self) -> dict[str, Any]:
         """Apply every source version committed since the last tick.
 
-        Bootstrap (no state yet): the source's latest snapshot lands
+        Bootstrap (no watermark): the source's latest snapshot lands
         through the SAME ``apply_changes`` path — as an all-insert
         feed onto an empty replica, or as a ``snapshot_diff`` against
-        a non-empty one (a crashed prior bootstrap may have applied a
-        snapshot the source has since deleted rows from; the diff
+        a non-empty one (a foreign write cleared the watermark and the
+        source may since have deleted rows the replica holds; the diff
         carries those deletes, so re-bootstrap converges exactly
         instead of stranding phantoms). Steady state: one
-        ``changes(applied, latest)`` span, one atomic apply commit,
-        then the watermark write — in that order, so a crash between
-        them replays an idempotent span instead of skipping one."""
+        ``changes(applied, latest)`` span. Either way the apply and
+        the watermark advance are one commit."""
         latest = self.source.latest_version()
         if latest is None:  # source not yet created
             return {"applied_from": None, "applied_to": None, "rows": 0}
@@ -117,22 +103,19 @@ class ChangeFeedTail:
         if applied is None:
             snap = self.source.read(latest)
             if self.replica.exists() and not self.replica.read().isEmpty():
-                # re-bootstrap over a partially-applied prior attempt
-                # (crash between apply and watermark): an all-insert
-                # feed could never DELETE a row the earlier snapshot
-                # carried and the source has since dropped — a phantom
-                # the steady-state spans would then never touch. Diff
-                # against what actually landed so the replica
-                # converges to the snapshot exactly.
-                from .table import snapshot_diff
-
+                # re-bootstrap over rows a foreign write left: an
+                # all-insert feed could never DELETE a row the source
+                # has dropped — a phantom the steady-state spans would
+                # then never touch. Diff against what the replica holds
+                # so it converges to the snapshot exactly.
                 feed = snapshot_diff(self.replica.read(), snap, self.keys)
             else:
                 feed = snap.withColumn("_change_type", F.lit("insert"))
         else:
             feed = self.source.changes(applied, latest, keys=self.keys)
-        commit = self.replica.apply_changes(feed, keys=self.keys)
-        self._record(latest)
+        commit = self.replica.apply_changes(
+            feed, keys=self.keys, applied={self.source.root: latest}
+        )
         m = commit.metrics
         return {
             "applied_from": applied,
@@ -146,7 +129,7 @@ class ChangeFeedTail:
         """The readStream-style driver: a rate-source heartbeat whose
         ``foreachBatch`` runs :meth:`tick` every ``poll_seconds``.
         The rate rows are only a clock — all real state lives in the
-        tables and the watermark file, so the stream can be stopped,
+        tables and the replica's watermark, so the stream can be stopped,
         its checkpoint discarded, and restarted anywhere without
         affecting replication correctness."""
         spark = self.replica.spark

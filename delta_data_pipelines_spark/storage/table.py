@@ -75,6 +75,20 @@ buckets whose manifest entry moved, which already follows the churn.
 The per-commit counts in ``metrics`` come from the written files
 (parquet footers, or the ``_change_type`` column of the change rows),
 not from extra count jobs.
+
+The applied-versions watermark (Delta's ``txn`` action): a CDC
+consumer that maintains this table from other tables' change feeds
+(the replica tail, the materialised view, the search indexer) records
+the source versions it has absorbed as ``{source: version}`` in the
+SAME commit as the rows they produced — ``apply_changes(applied=)``
+sets it, so data and watermark advance in one CAS commit. Only the
+latest commit's watermark counts, and :meth:`applied_versions` reads
+that one commit. ``compact`` copies it (the content is unchanged),
+``restore(v)`` copies version v's; every other commit (overwrite,
+append, merge, delete_where, an ``apply_changes`` without ``applied``)
+clears it, because it changed the content outside the consumer.
+``vacuum`` always keeps the latest commit, so maintenance can never
+lose the watermark.
 """
 
 from __future__ import annotations
@@ -296,6 +310,8 @@ def _quote(name: str) -> str:
 
 
 _CHANGE_DIR = "_change_data"
+# commit-metrics key of the applied-versions watermark (module doc)
+_APPLIED = "applied"
 # a table's first commit: every snapshot row is an insert
 _FIRST = {"kind": "snapshot"}
 _BEFORE = ("update_preimage", "delete")
@@ -324,6 +340,12 @@ def _footer_rows(*paths: str) -> int:
         pq.ParquetFile(f).metadata.num_rows
         for p in paths for f in _parquet_files(p)
     )
+
+
+def _watermark(metrics: dict[str, Any]) -> dict[str, Any]:
+    """The watermark entry of a commit's ``metrics``, for a commit that
+    carries it forward (compact, restore)."""
+    return {_APPLIED: metrics[_APPLIED]} if _APPLIED in metrics else {}
 
 
 def _rows_metric(data_dir: str) -> dict[str, int]:
@@ -532,6 +554,15 @@ class VersionedTable(CheckConstraints):
 
     def exists(self) -> bool:
         return self.latest_version() is not None
+
+    def applied_versions(self, version: int | None = None) -> dict[str, int]:
+        """The applied-versions watermark (module doc) of ``version``
+        (default: the latest commit) — that one commit, never a scan of
+        history. Empty when the commit carries none or the table has no
+        commits."""
+        if not self.exists():
+            return {}
+        return dict(self._entry(version).metrics.get(_APPLIED, {}))
 
     def _write_log_cache(self, entries: list[Commit]) -> None:
         # writer-unique tmp name: two concurrent cache refreshes must
@@ -951,14 +982,15 @@ class VersionedTable(CheckConstraints):
         hand-rolls with last-data/old-data object juggling
         (price_prediction_data_pipeline.py:228-268). A new commit
         pointing back at ``version``'s data: nothing is copied, history
-        is kept, and vacuum keeps the restored dirs alive."""
+        is kept, and vacuum keeps the restored dirs alive. The restored
+        version's watermark comes back with its content."""
         c = self._entry(version)
         history = self.history()
         return self._publish(history, Commit(
             version=history[-1].version + 1,
             action="restore",
             ts=time.time(),
-            metrics={"restored_from": version},
+            metrics={"restored_from": version, **_watermark(c.metrics)},
             data=self._manifest(c)["0"] if c.manifest is None else None,
             schema=c.schema,
             manifest=c.manifest,
@@ -968,7 +1000,7 @@ class VersionedTable(CheckConstraints):
         self,
         feed: DataFrame,
         keys: list[str],
-        extra_metrics: dict[str, Any] | None = None,
+        applied: dict[str, int] | None = None,
         record_changes: bool = True,
     ) -> Commit:
         """APPLY CHANGES INTO parity (the CDC consumer): apply a
@@ -1001,6 +1033,10 @@ class VersionedTable(CheckConstraints):
         span over it diffs full snapshots, as over an overwrite). A
         commit without change rows counts feed rows instead.
 
+        ``applied`` is the consumer's watermark (module doc): the source
+        versions this feed brings the table up to, published in the
+        same commit as the rows.
+
         The feed is STAGED once (``staging.stage``): a CDC feed is
         typically ``snapshot_diff`` — a full-snapshot join — and the
         change rows, the constraint aggregate and the commit write
@@ -1012,7 +1048,8 @@ class VersionedTable(CheckConstraints):
         self._check_keys(keys, "feed keys")
         staged = stage(feed, "apply_feed")
         try:
-            return self._apply(staged, keys, extra_metrics or {}, record_changes)
+            watermark = {_APPLIED: dict(applied)} if applied else {}
+            return self._apply(staged, keys, watermark, record_changes)
         finally:
             release_staged(staged)
 
@@ -1020,7 +1057,7 @@ class VersionedTable(CheckConstraints):
         self,
         feed: DataFrame,
         keys: list[str],
-        extra_metrics: dict[str, Any],
+        watermark: dict[str, Any],
         record_changes: bool,
     ) -> Commit:
         for k in keys:
@@ -1028,16 +1065,12 @@ class VersionedTable(CheckConstraints):
         ct = F.col("_change_type")
         ups = feed.where(ct.isin(*_AFTER)).drop("_change_type")
         dels = feed.where(ct == "delete").select(*keys)
-        # extra_metrics ride in the SAME atomic commit entry — the
-        # transactional side-channel consumers like the incremental
-        # aggregate use to bind an applied-span watermark to the data
-        # it produced (exactly-once under replay)
         if not self.exists():
             return self._commit(
                 "apply_changes",
                 ups,
                 lambda d: {"upserts": _footer_rows(d), "deletes": 0,
-                           **extra_metrics},
+                           **watermark},
                 change_data=_FIRST,
             )
         touched = self.bucket_ids_of(ups.select(*keys).unionByName(dels))
@@ -1074,11 +1107,11 @@ class VersionedTable(CheckConstraints):
             n = _recorded(data_dir)
             if n is None:
                 return {"upserts": ups.count(), "deletes": dels.count(),
-                        **extra_metrics}
+                        **watermark}
             return {
                 "upserts": n["insert"] + n["update_postimage"],
                 "deletes": n["delete"],
-                **extra_metrics,
+                **watermark,
             }
 
         return self._commit(
@@ -1213,6 +1246,8 @@ class VersionedTable(CheckConstraints):
         works until vacuum). Data content is identical (tests assert);
         only layout changes.
 
+        The commit carries the latest commit's watermark forward.
+
         Unbucketed, the rewrite is evenly-sized files. Every
         ``merge``/``append`` commit writes with the plan's own
         partitioning, so a table fed by a micro-batch stream accretes
@@ -1291,7 +1326,8 @@ class VersionedTable(CheckConstraints):
             out,
             {"rows": n, "files": n_files,
              **({"zorder_by": zorder_by, "zorder_method": zorder_method}
-                if zorder_by else {})},
+                if zorder_by else {}),
+             **_watermark(self._entry().metrics)},
             change_data={"kind": "empty"},
         )
 
@@ -1328,7 +1364,11 @@ class VersionedTable(CheckConstraints):
         its own), but only at versions ≤ the latest kept commit: a dir
         staged above it belongs to an in-flight writer. A merge spill
         is swept only when no merge of this process holds it and its
-        ``_LEASE`` (or, lacking one, the dir) is older than an hour."""
+        ``_LEASE`` (or, lacking one, the dir) is older than an hour.
+        The latest commit always survives: it carries the table's
+        watermark (module doc)."""
+        if keep_last < 1:
+            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         history = self.history()
         if len(history) <= keep_last:
             return []

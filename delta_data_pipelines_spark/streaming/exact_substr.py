@@ -82,8 +82,6 @@ def run_incremental_exact_substr(
     text_col: str = "text",
     min_len: int = 10,
     n_state_buckets: int = 64,
-    state_keep_last: int = 3,
-    state_max_generations: int | None = 16,
     drop_emptied: bool = True,
     prepare=None,
     broadcast_hash_limit: int = 2_000_000,
@@ -237,11 +235,10 @@ def run_incremental_exact_substr(
             # (maybe_compact's manifest check is metadata-only when it
             # doesn't fire), then vacuum releases unreferenced dirs — so
             # per-batch state read planning stays flat forever
-            if state_max_generations is not None:
-                gram_table.maybe_compact(state_max_generations)
-                dup_table.maybe_compact(state_max_generations)
-            gram_table.vacuum(keep_last=state_keep_last)
-            dup_table.vacuum(keep_last=state_keep_last)
+            gram_table.maybe_compact(16)
+            dup_table.maybe_compact(16)
+            gram_table.vacuum()
+            dup_table.vacuum()
         finally:
             release_staged(batch if prepare is not None else None, starts)
 

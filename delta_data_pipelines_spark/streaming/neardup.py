@@ -75,8 +75,6 @@ def run_incremental_neardup(
     threshold: float = 0.8,
     max_bucket: int = 1000,
     n_state_buckets: int = 64,
-    state_keep_last: int = 3,
-    state_max_generations: int | None = 16,
     prepare=None,
 ) -> StreamingQuery:
     """docs stream → in-batch collapse → vs-corpus LSH filter → MERGE.
@@ -243,11 +241,10 @@ def run_incremental_neardup(
             # first bounds ownership fan-out (generations), so the vacuums
             # can actually release old dirs and per-batch state reads stay
             # flat however long the stream runs
-            if state_max_generations is not None:
-                sig_table.maybe_compact(state_max_generations)
-                hs_table.maybe_compact(state_max_generations)
-            sig_table.vacuum(keep_last=state_keep_last)
-            hs_table.vacuum(keep_last=state_keep_last)
+            sig_table.maybe_compact(16)
+            hs_table.maybe_compact(16)
+            sig_table.vacuum()
+            hs_table.vacuum()
         finally:
             release_staged(*staged)
 

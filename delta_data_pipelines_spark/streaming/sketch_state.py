@@ -91,7 +91,6 @@ def run_incremental_vocab_sketch(
     group_col: str = "lang",
     text_col: str = "text",
     k: int = 64,
-    state_keep_last: int = 3,
 ) -> StreamingQuery:
     """Maintain per-``group_col`` distinct-token estimates over a
     document stream with O(groups·k) state."""
@@ -116,7 +115,7 @@ def run_incremental_vocab_sketch(
             release_staged(out)
         # one overwrite per micro-batch: prune superseded version dirs
         # (tiny, but a long-lived stream would leak one per batch)
-        state_table.vacuum(keep_last=state_keep_last)
+        state_table.vacuum()
 
     return (
         docs_stream.writeStream.foreachBatch(sink)
@@ -164,7 +163,6 @@ def run_incremental_heavy_hitters(
     checkpoint_dir: str,
     text_col: str = "text",
     k: int = 50,
-    state_keep_last: int = 3,
 ) -> StreamingQuery:
     """Maintain a corpus-wide heavy-hitter summary over a document
     stream with O(k) state: per batch, bounded per-partition MG
@@ -268,7 +266,7 @@ def run_incremental_heavy_hitters(
             state_table.overwrite(out)
         finally:
             release_staged(out)
-        state_table.vacuum(keep_last=state_keep_last)
+        state_table.vacuum()
 
     return (
         docs_stream.writeStream.foreachBatch(sink)
@@ -302,7 +300,6 @@ def run_incremental_cm(
     text_col: str = "text",
     d: int = 4,
     w: int = 256,
-    state_keep_last: int = 3,
 ) -> StreamingQuery:
     """Maintain a corpus-wide Count-Min frequency sketch over a
     document stream with O(d·w) state — the point-frequency axis of
@@ -371,7 +368,7 @@ def run_incremental_cm(
             state_table.overwrite(out)
         finally:
             release_staged(out)
-        state_table.vacuum(keep_last=state_keep_last)
+        state_table.vacuum()
 
     return (
         docs_stream.writeStream.foreachBatch(sink)
@@ -406,7 +403,6 @@ def run_incremental_hll(
     group_col: str = "lang",
     text_col: str = "text",
     m: int = 256,
-    state_keep_last: int = 3,
 ) -> StreamingQuery:
     """Maintain per-group HLL distinct-token registers over a document
     stream with O(groups·m) state; estimates at any moment via
@@ -432,7 +428,7 @@ def run_incremental_hll(
             state_table.overwrite(out)
         finally:
             release_staged(out)
-        state_table.vacuum(keep_last=state_keep_last)
+        state_table.vacuum()
 
     return (
         docs_stream.writeStream.foreachBatch(sink)

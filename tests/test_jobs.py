@@ -1504,6 +1504,71 @@ def test_curate_corpus_pack_bins_never_cross_splits(spark):
         assert v["tokens"] <= 64
 
 
+def _continuous_indexer(spark, tmp_path):
+    """The seven sf0.001 star-schema tables as versioned sources, an
+    index table not yet written, and the indexer over them."""
+    from delta_data_pipelines_spark.catalog import read_table
+    from delta_data_pipelines_spark.jobs.search_indexer import (
+        ContinuousSearchIndexer,
+    )
+    from delta_data_pipelines_spark.storage import VersionedTable
+
+    src = {}
+    for n in ("orders", "lineitem", "events", "customer", "nation",
+              "region", "part"):
+        t = VersionedTable(spark, str(tmp_path / n))
+        t.overwrite(read_table(spark, "/root/testdata/sf0.001", n))
+        src[n] = t
+    index = VersionedTable(spark, str(tmp_path / "search_index"))
+    return src, index, ContinuousSearchIndexer(spark, src, index)
+
+
+def _index_rows_and_rebuild(ix):
+    """(index rows, rows of a from-scratch build over the sources'
+    current snapshots), as sets."""
+    snaps = {n: t.read() for n, t in ix.sources.items()}
+    return (
+        {tuple(r) for r in ix.index.read().collect()},
+        {tuple(r) for r in ix._build(snaps, None).collect()},
+    )
+
+
+def test_search_indexer_watermark_survives_compact_and_vacuum(
+    spark, tmp_path
+):
+    """Raw maintenance of the index table (compact, then a vacuum that
+    keeps only the compact commit) keeps the indexer's watermark, so
+    the next tick stays incremental and deletes an order the source
+    dropped meanwhile instead of re-bootstrapping around a phantom."""
+    src, index, ix = _continuous_indexer(spark, tmp_path)
+    assert ix.tick()["mode"] == "bootstrap"
+    index.compact()
+    index.vacuum(keep_last=1)
+    gone = index.read().orderBy("id").first()["id"]
+    src["orders"].delete_where(F.col("o_orderkey") == gone)
+    r = ix.tick()
+    got, want = _index_rows_and_rebuild(ix)
+    assert got == want and gone not in {row[0] for row in got}
+    assert r["mode"] == "incremental"
+
+
+def test_search_indexer_unwatermarked_index_converges(spark, tmp_path):
+    """A populated index whose latest commit carries no watermark (a
+    foreign overwrite, older history vacuumed) re-bootstraps through
+    the full-scope path, whose stale universe is the ids the index
+    holds: an order the source deleted leaves the index."""
+    src, index, ix = _continuous_indexer(spark, tmp_path)
+    ix.tick()
+    index.overwrite(index.read())
+    index.vacuum(keep_last=1)
+    gone = index.read().orderBy("id").first()["id"]
+    src["orders"].delete_where(F.col("o_orderkey") == gone)
+    r = ix.tick()
+    assert r["mode"] == "bootstrap" and r["deletes"] >= 1
+    got, want = _index_rows_and_rebuild(ix)
+    assert got == want
+
+
 def test_continuous_search_indexer_converges(spark, tmp_path):
     """The CDC-driven always-on indexer (VERDICT r10 ask #6): after a
     bootstrap and a series of mutation ticks spanning every change
@@ -1514,28 +1579,10 @@ def test_continuous_search_indexer_converges(spark, tmp_path):
     affected keys (cost follows change volume)."""
     from pyspark.sql import functions as F
 
-    from delta_data_pipelines_spark.catalog import read_table
-    from delta_data_pipelines_spark.jobs.search_indexer import (
-        ContinuousSearchIndexer,
-    )
-    from delta_data_pipelines_spark.storage import VersionedTable
-
-    sf = "/root/testdata/sf0.001"
-    names = [
-        "orders", "lineitem", "events", "customer", "nation", "region",
-        "part",
-    ]
-    src = {}
-    for n in names:
-        t = VersionedTable(spark, str(tmp_path / n))
-        t.overwrite(read_table(spark, sf, n))
-        src[n] = t
-    index = VersionedTable(spark, str(tmp_path / "search_index"))
-    ix = ContinuousSearchIndexer(spark, src, index)
+    src, index, ix = _continuous_indexer(spark, tmp_path)
 
     def full():
-        snaps = {n: src[n].read() for n in names}
-        return {tuple(r) for r in ix._build(snaps, None).collect()}
+        return _index_rows_and_rebuild(ix)[1]
 
     def got():
         return {tuple(r) for r in index.read().collect()}

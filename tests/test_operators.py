@@ -1732,25 +1732,6 @@ def test_ivf_topk_with_fitted_kmeans_centroids(spark):
     assert hits / len(exact) >= 0.3  # single-digit-probe recall floor
 
 
-def test_brute_topk_pandas_impl_matches_expr(spark):
-    """The Arrow-batched numpy cosine path must produce the same
-    rounded top-k as the oracle-exact expression fold (ulp-level
-    summation differences vanish at 9-decimal rounding on this data),
-    and reject unknown impls loudly."""
-    from delta_data_pipelines_spark.catalog import read_table
-    from delta_data_pipelines_spark.operators.similarity import (
-        brute_force_topk,
-    )
-
-    e = read_table(spark, SF, "embeddings")
-    q = e.where(F.col("vec_id") < 8)
-    a = [tuple(r) for r in brute_force_topk(e, q, k=5).collect()]
-    b = [tuple(r) for r in brute_force_topk(e, q, k=5, impl="pandas").collect()]
-    assert a == b
-    with pytest.raises(ValueError, match="impl must be"):
-        brute_force_topk(e, q, impl="cuda")
-
-
 def test_weighted_sample_semantics(spark):
     """Efraimidis-Spirakis sample: deterministic across calls, without
     replacement, heavy weights dominate, zero/negative weights

@@ -1158,12 +1158,11 @@ def test_bucketed_apply_changes_roundtrip_and_bucket_scope(
 def test_change_feed_tail_converges_under_continued_writes(
     spark, table, tmp_path
 ):
-    """The CDC tail (changes() -> apply_changes() with a persisted
+    """The CDC tail (changes() -> apply_changes() carrying the
     source-version watermark): bootstrap clones the latest snapshot,
     each tick applies exactly the new span, writes committed BETWEEN
-    ticks are picked up by the next tick, and a crash between apply
-    and watermark write (simulated by rolling the watermark back)
-    replays an idempotent span."""
+    ticks are picked up by the next tick, and a watermark rolled back
+    behind the applied content replays an idempotent span."""
     from pyspark.sql import functions as F
 
     from delta_data_pipelines_spark.storage import (
@@ -1204,10 +1203,13 @@ def test_change_feed_tail_converges_under_continued_writes(
         map(tuple, src.read().collect())
     )
 
-    # crash window: apply committed but the watermark write was lost —
-    # the replayed span must be content-idempotent
+    # watermark behind the content (an empty apply commit stamping an
+    # older version): the replayed span must be content-idempotent
     applied = tail.applied_version()
-    tail._record(applied - 2)
+    replica.apply_changes(
+        replica.read().limit(0).withColumn("_change_type", F.lit("insert")),
+        keys=["content_url"], applied={src.root: applied - 2},
+    )
     tail.tick()
     assert tail.applied_version() == applied
     assert sorted(map(tuple, replica.read().collect())) == sorted(
@@ -1712,12 +1714,10 @@ def test_incremental_aggregate_minmax_only_losers_read_base(
 
 
 def test_change_feed_tail_rebootstrap_drops_phantoms(spark, table, tmp_path):
-    """Crash window at BOOTSTRAP: the snapshot applied but the
-    watermark never wrote, then the source deleted a row. The re-run
-    bootstrap must diff against what landed and DELETE the phantom —
-    an all-insert re-clone would strand it forever."""
-    import os
-
+    """A populated replica without a watermark (a foreign write cleared
+    it), then the source deleted a row. The re-run bootstrap must diff
+    against what the replica holds and DELETE the phantom — an
+    all-insert re-clone would strand it forever."""
     from pyspark.sql import functions as F
 
     from delta_data_pipelines_spark.storage import (
@@ -1730,7 +1730,7 @@ def test_change_feed_tail_rebootstrap_drops_phantoms(spark, table, tmp_path):
     replica = VersionedTable(spark, str(tmp_path / "cft_replica2"))
     tail = ChangeFeedTail(src, replica, keys=["content_url"])
     tail.tick()
-    os.remove(os.path.join(replica.root, "_replication.json"))  # crash
+    replica.overwrite(replica.read())  # foreign write: no watermark
     src.delete_where(F.col("content_url") == "u2")  # source moves on
     src.merge(rows(spark, [("u3", "c", 3)]), keys=["content_url"])
 
@@ -1781,10 +1781,11 @@ def test_incremental_aggregate_refuses_unwatermarked_view(
 def test_incremental_aggregate_maintenance_preserves_watermark(
     spark, table, tmp_path
 ):
-    """Routine view-table maintenance (compact then deep vacuum) must
-    not strand the watermark: the wrappers restamp applied_to so the
-    next tick stays incremental instead of hitting the unwatermarked
-    guard — and the restamped view keeps exact counts."""
+    """Routine view-table maintenance (compact then deep vacuum) on the
+    raw table must not strand the watermark: compact carries it forward
+    and vacuum keeps the latest commit, so the next tick stays
+    incremental instead of hitting the unwatermarked guard — and the
+    view keeps exact counts."""
     from delta_data_pipelines_spark.storage import (
         IncrementalAggregate,
         VersionedTable,
@@ -1798,9 +1799,9 @@ def test_incremental_aggregate_maintenance_preserves_watermark(
     applied0 = view.applied_version()
     assert applied0 is not None
 
-    view.compact()
-    view.vacuum(keep_last=1)  # would prune the refresh commit raw
-    assert view.applied_version() == applied0  # restamped, not lost
+    view_t.compact()
+    view_t.vacuum(keep_last=1)  # prunes the refresh commit
+    assert view.applied_version() == applied0  # carried, not lost
 
     # still incremental and exact after maintenance + new source writes
     src.merge(rows(spark, [("u4", "a", 4)]), keys=["content_url"])
@@ -1808,6 +1809,60 @@ def test_incremental_aggregate_maintenance_preserves_watermark(
     got = {r["title"]: (r["n_rows"], float(r["sum_price"]))
            for r in view.value().collect()}
     assert got == {"a": (3, 7.0), "b": (1, 3.0)}
+
+
+def test_incremental_aggregate_refresh_without_watermark_blocks_tick(
+    spark, table, tmp_path
+):
+    """A manual refresh without applied_to clears the view's watermark,
+    so the next tick raises instead of finding an older watermark and
+    folding the manually refreshed span a second time."""
+    from delta_data_pipelines_spark.storage import (
+        IncrementalAggregate,
+        VersionedTable,
+    )
+
+    src = table
+    src.overwrite(rows(spark, [("u1", "a", 1)]))
+    view = IncrementalAggregate(
+        VersionedTable(spark, str(tmp_path / "mv3")), ["title"],
+        sum_cols=["price"],
+    )
+    view.tick(src, ["content_url"])
+    applied = view.applied_version()
+    src.merge(rows(spark, [("u2", "a", 2)]), keys=["content_url"])
+    view.refresh(
+        src.changes(applied, src.latest_version(), keys=["content_url"])
+    )
+    assert _view_rows(view) == _full_agg(src.read())
+    with pytest.raises(ValueError, match="no applied_to watermark"):
+        view.tick(src, ["content_url"])
+    assert _view_rows(view) == _full_agg(src.read())
+
+
+def test_watermark_rides_the_latest_commit(spark, table):
+    """The applied-versions watermark lives in the latest commit only:
+    compact copies it, restore(v) brings back version v's, and every
+    other write clears it; vacuum keeps the latest commit."""
+    feed = rows(spark, [("u1", "a", 1)]).withColumn(
+        "_change_type", F.lit("insert")
+    )
+    assert table.applied_versions() == {}
+    table.apply_changes(feed, keys=["content_url"], applied={"s": 3})
+    assert table.applied_versions() == {"s": 3}
+    table.compact()
+    table.vacuum(keep_last=1)
+    assert table.applied_versions() == {"s": 3}
+    v = table.latest_version()
+    table.merge(rows(spark, [("u2", "b", 2)]), keys=["content_url"])
+    assert table.applied_versions() == {}
+    assert table.applied_versions(v) == {"s": 3}
+    table.restore(v)
+    assert table.applied_versions() == {"s": 3}
+    table.apply_changes(feed, keys=["content_url"])
+    assert table.applied_versions() == {}
+    with pytest.raises(ValueError, match="keep_last"):
+        table.vacuum(keep_last=0)
 
 
 # ---- commit-time change data ------------------------------------------------
