@@ -173,10 +173,9 @@ HEADLINE = [
     "txt_gopher_lines",
     "td_logreg_quality",
     # r13 shelf, promoted (unchanged code): the bigram KN LM
-    # (txt_kn3_logprob stays on the shelf one more round: its scorer
-    # kn_trigram_score_from_types was restructured in r14 for the
-    # lang_col branch, so its baseline re-seats per the changed-code
-    # rule)
+    # (txt_kn3_logprob stayed on the shelf one more round: its trigram
+    # scorer was restructured in r14 for the lang_col branch, so its
+    # baseline re-seated per the changed-code rule)
     "txt_kn_logprob",
     # r14 shelf, promoted (r14 verdict ask #8): the classifier audits,
     # the logreg PR sweep, the full KN ladder, and the calibrated

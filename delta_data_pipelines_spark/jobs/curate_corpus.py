@@ -388,92 +388,79 @@ def lm_filter_stage(
     lm: str = "unigram",
 ) -> DataFrame:
     """CCNet-style language-model filter: score every doc by its mean
-    unigram log-prob under the corpus's own unigram distribution and
-    drop the lowest ``drop_fraction`` — the statistical outlier cut
-    (mojibake, symbol soup, wrong-language fragments) that heuristic
-    gates miss. Runs AFTER the heuristic gate, as in CCNet.
+    log-prob under an LM fit on the corpus itself and drop the lowest
+    ``drop_fraction`` — the statistical outlier cut (mojibake, symbol
+    soup, wrong-language fragments) that heuristic gates miss. Runs
+    AFTER the heuristic gate, as in CCNet.
 
-    Scoring is ``textstats.unigram_logprob_scores`` — the SAME
-    definition the oracle-checked ``txt_unigram_logprob`` query uses,
-    so the job's cut can never drift from what the oracle checks. The
-    percentile threshold is a 1-row aggregate broadcast-cross-joined
-    in; the kept set re-enters as a LEFT SEMI join on ``id_col``, so
-    doc payloads never ride through the scoring shuffle. Ties AT the
-    threshold are kept.
+    ``lm="unigram"`` scores with ``textstats.unigram_logprob_scores``;
+    ``"kn"``, ``"kn3"`` and ``"kn4"`` with a self-fit interpolated
+    Kneser-Ney model of order 2, 3 or 4
+    (``textstats.kn_logprob_scores``). Both are the definitions the
+    oracle-checked ``txt_unigram_logprob`` / ``txt_kn*_logprob``
+    queries use, so the job's cut can never drift from what the
+    oracle checks. The percentile threshold is a 1-row aggregate
+    broadcast-cross-joined in, and the docs scored strictly below it
+    leave through a LEFT ANTI join on ``id_col``, so doc payloads
+    never ride through the scoring shuffle. Ties AT the threshold are
+    kept, and a doc the model cannot score (under the KN order's
+    minimum token count) is absent from the drop list and passes.
 
     The input is staged first: the scoring plan embeds it under four
-    separate scans (token freq, score join, percentile, semi-join
+    separate scans (token freq, score join, percentile, anti-join
     probe), and in the job that input is the full regex-heavy
     scrub+gate lineage — without staging it would re-run ~5×.
     """
     if not (0.0 <= drop_fraction < 1.0):
         raise ValueError(f"drop_fraction must be in [0, 1), got {drop_fraction}")
-    from ..operators.textstats import KN_SCORERS
+    from ..operators.textstats import (
+        KN_ORDERS,
+        kn_logprob_scores,
+        unigram_logprob_scores,
+    )
 
-    if lm != "unigram" and lm not in KN_SCORERS:
+    if lm != "unigram" and lm not in KN_ORDERS:
         raise ValueError(
             f"lm must be 'unigram', 'kn', 'kn3' or 'kn4', got {lm!r}"
         )
     if drop_fraction == 0.0:
         return docs
-    from ..operators.textstats import unigram_logprob_scores
 
     docs = stage(docs, "lm_filter_input")
     # NULL text/id rows cannot be scored (no tokens / no joinable key):
-    # pass them through explicitly, mirroring decontaminate_stage —
-    # without this the semi-join re-entry silently dropped them, which
-    # "drop the bottom fraction" does not imply
+    # pass them through explicitly, mirroring decontaminate_stage
     unscorable = F.col(id_col).isNull() | F.col(text_col).isNull()
     passthrough = docs.where(unscorable)
     scorable = docs.where(~unscorable)
     # score a line-break-normalized VIEW (id + normalized text only):
     # the LM explode splits on single spaces, and "end.\nstart" must
     # not score as one rare fused token; the published column re-
-    # enters untouched via the semi-join
+    # enters untouched via the anti-join
     normalized = scorable.select(
         id_col,
         F.translate(F.col(text_col), "\n", " ").alias(text_col),
     )
-    if lm in KN_SCORERS:
-        # self-fit interpolated Kneser-Ney — bigram at 'kn', trigram
-        # at 'kn3', 4-gram at 'kn4' (the batch pipeline derives every
-        # model from the corpus being curated, so the reference IS
-        # the corpus — no backoff fires, but the discount +
-        # continuation weighting reorders the tail vs raw unigram
-        # frequency: collocation-locked tokens stop inflating their
-        # documents' scores). Docs the model cannot score (under the
-        # order's minimum token count) are absent from the score
-        # frame and pass through via drop-list semantics — the
-        # frozen path's rule.
-        kn_scores_fn = KN_SCORERS[lm][2]
-        scores = kn_scores_fn(
-            normalized, normalized, id_col, text_col
-        ).select(id_col, F.col("avg_logprob").alias("_avg_lp"))
-        thr = scores.agg(
-            F.expr(f"percentile(_avg_lp, {drop_fraction})").alias("_thr")
+    if lm in KN_ORDERS:
+        # the batch pipeline derives every model from the corpus being
+        # curated, so the reference IS the corpus — no backoff fires,
+        # but the discount + continuation weighting reorders the tail
+        # vs raw unigram frequency: collocation-locked tokens stop
+        # inflating their documents' scores
+        scores = kn_logprob_scores(
+            normalized, normalized, KN_ORDERS[lm], id_col, text_col
         )
-        drop_ids = (
-            scores.crossJoin(F.broadcast(thr))
-            .where(F.col("_avg_lp") < F.col("_thr"))
-            .select(id_col)
-        )
-        return scorable.join(drop_ids, id_col, "left_anti").unionByName(
-            passthrough
-        )
-    scores = unigram_logprob_scores(
-        normalized,
-        id_col,
-        text_col,
-    ).select(id_col, F.col("avg_logprob").alias("_avg_lp"))
+    else:
+        scores = unigram_logprob_scores(normalized, id_col, text_col)
+    scores = scores.select(id_col, F.col("avg_logprob").alias("_avg_lp"))
     thr = scores.agg(
         F.expr(f"percentile(_avg_lp, {drop_fraction})").alias("_thr")
     )
-    kept_ids = (
+    drop_ids = (
         scores.crossJoin(F.broadcast(thr))
-        .where(F.col("_avg_lp") >= F.col("_thr"))
+        .where(F.col("_avg_lp") < F.col("_thr"))
         .select(id_col)
     )
-    return scorable.join(kept_ids, id_col, "left_semi").unionByName(passthrough)
+    return scorable.join(drop_ids, id_col, "left_anti").unionByName(passthrough)
 
 
 def compression_filter_stage(

@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from ..operators import langcurate as langcurate_mod
 from ..operators.dedup import shingles
 from ..operators.staging import release_staged, stage
+from ..operators.textstats import KN_ORDERS, kn_score_from_types, kn_types
 from ..storage import JsonMetaStore, VersionedTable
 from .curate_corpus import lang_quality_gate, quality_gate, scrub_stage
 
@@ -59,10 +60,15 @@ from .curate_corpus import lang_quality_gate, quality_gate, scrub_stage
 class FrozenCurationModel(JsonMetaStore):
     """The frozen artifacts under one root: unigram LM table
     (token, tf), heldout gram table (_gram), optional DSIR log-ratio
-    table (bucket, lr), optional linear-classifier weight table
-    (bucket, weight), and meta (total tokens, LM threshold, DSIR
-    threshold, classifier params, gate parameters, decontamination n)
-    — the shared atomic JSON-sidecar protocol (storage.meta)."""
+    table (bucket, lr), optional linear-classifier weight tables
+    (logreg: bucket, weight; nb), optional Kneser-Ney type table
+    (kn_types: [_kn_lang,] _w1.._wn, _cb — one table whatever the
+    order; ``textstats.KN_ORDERS[meta["lm"]]`` says which), and meta
+    (total tokens, LM threshold, DSIR threshold, classifier params,
+    gate parameters, decontamination n, one ``<table>_version`` pin
+    per table) — the shared atomic JSON-sidecar protocol
+    (storage.meta). A KN model stored with one table per order, the
+    earlier layout, is not read: refit it."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -74,15 +80,7 @@ class FrozenCurationModel(JsonMetaStore):
         self.dsir_lr = VersionedTable(spark, os.path.join(root, "dsir_lr"))
         self.logreg = VersionedTable(spark, os.path.join(root, "logreg"))
         self.nb = VersionedTable(spark, os.path.join(root, "nb"))
-        self.kn_bigrams = VersionedTable(
-            spark, os.path.join(root, "kn_bigrams")
-        )
-        self.kn_trigrams = VersionedTable(
-            spark, os.path.join(root, "kn_trigrams")
-        )
-        self.kn_quadgrams = VersionedTable(
-            spark, os.path.join(root, "kn_quadgrams")
-        )
+        self.kn_types = VersionedTable(spark, os.path.join(root, "kn_types"))
 
     def exists(self) -> bool:
         # dsir_lr is optional (fit with dsir_keep_fraction=None has no
@@ -179,7 +177,7 @@ def _kn_text_view(df: DataFrame, text_col: str, *keep: str) -> DataFrame:
     spaces, so "end.\\nstart" must not fit or score as one rare fused
     token. Only the columns the KN pair needs ride through (the
     published text column re-enters untouched downstream). Fit and
-    apply both route through this helper, so the frozen type tables
+    apply both route through this helper, so the frozen type table
     and every score see the same normalization."""
     return df.select(
         *keep, F.translate(F.col(text_col), "\n", " ").alias(text_col)
@@ -193,30 +191,9 @@ def _kn_text_view(df: DataFrame, text_col: str, *keep: str) -> DataFrame:
 _KN_NONEMPTY_SEEN: set[tuple[str, str]] = set()
 
 
-_KN_LMS = ("kn", "kn3", "kn4")
-
-
-def _kn_dispatch(model: "FrozenCurationModel", lm: str):
-    """(types_fn, score_fn, table, meta_version_key, label) for a KN
-    order — the estimator functions come from the shared
-    ``textstats.KN_SCORERS`` mapping (one source of truth with the
-    batch pipeline's self-fit cut); only the model-table/meta-key
-    layer lives here, so fit, batch apply, and the lang-aware paths
-    can never disagree on which table an order freezes to."""
-    from ..operators.textstats import KN_SCORERS
-
-    types_fn, score_fn, _ = KN_SCORERS[lm]
-    table, vkey, label = {
-        "kn": (model.kn_bigrams, "kn_bigrams_version", "KN bigram"),
-        "kn3": (model.kn_trigrams, "kn_trigrams_version", "KN trigram"),
-        "kn4": (model.kn_quadgrams, "kn_quadgrams_version", "KN 4-gram"),
-    }[lm]
-    return types_fn, score_fn, table, vkey, label
-
-
-def _read_nonempty_kn(table: VersionedTable, version, what: str) -> DataFrame:
-    """Read a stored KN type table, raising if it is empty — an empty
-    or corrupted artifact at apply time would otherwise yield a
+def _read_nonempty_kn(model: FrozenCurationModel, meta: dict) -> DataFrame:
+    """Read the model's pinned KN type table, raising if it is empty —
+    an empty or corrupted artifact at apply time would otherwise yield a
     0-row join, NULL avg_logprob for every doc, and a frozen LM cut
     that silently became a no-op (the fit-time guard only covers the
     fit path). The 1-row probe is memoized per (table, version): a
@@ -226,14 +203,15 @@ def _read_nonempty_kn(table: VersionedTable, version, what: str) -> DataFrame:
     that contract and NOT re-detected (restoring an artifact means
     committing a NEW version, which re-probes). An UNPINNED read
     (version None → latest) re-probes every call."""
+    table, version = model.kn_types, meta.get("kn_types_version")
     df = table.read(version)
     key = (table.root, str(version))
     if version is not None and key in _KN_NONEMPTY_SEEN:
         return df
     if df.limit(1).count() == 0:
         raise ValueError(
-            f"stored {what} type table is empty — the frozen KN cut "
-            "would silently become a no-op (every doc unscorable); "
+            f"stored KN type table ({meta['lm']}) is empty — the frozen "
+            "KN cut would silently become a no-op (every doc unscorable); "
             "refit with fit_reference_model or restore the artifact"
         )
     if version is not None:
@@ -297,7 +275,7 @@ def fit_reference_model(
     LM stage through unscored."""
     if not (0.0 <= drop_fraction < 1.0):
         raise ValueError(f"drop_fraction must be in [0, 1), got {drop_fraction}")
-    if lm != "unigram" and lm not in _KN_LMS:
+    if lm != "unigram" and lm not in KN_ORDERS:
         raise ValueError(
             f"lm must be 'unigram', 'kn', 'kn3' or 'kn4', got {lm!r}"
         )
@@ -355,7 +333,7 @@ def fit_reference_model(
             totals_df = model.spark.createDataFrame(
                 list(lang_totals.items()), "lang string, total long"
             )
-            if lm in _KN_LMS:
+            if lm in KN_ORDERS:
                 # per-language KN — CCNet's actual production shape (one
                 # KenLM per language, at any of the engine's three
                 # orders): the frozen artifact is the (lang, …grams) type
@@ -368,19 +346,19 @@ def fit_reference_model(
                 # the unseen-language invariant extended to calibration).
                 # The per-language unigram table above still freezes
                 # (drift + vocabulary artifact).
-                types_fn, score_fn, kn_table, kn_vkey, _ = _kn_dispatch(model, lm)
-                ckn = kn_table.overwrite(
-                    types_fn(
+                ckn = model.kn_types.overwrite(
+                    kn_types(
                         _kn_text_view(
                             clean.withColumn("_kn_lang", F.col(routed)),
                             text_col,
                             "_kn_lang",
                         ),
+                        KN_ORDERS[lm],
                         text_col,
                         lang_col="_kn_lang",
                     )
                 )
-                stored_kn = kn_table.read(ckn.version)
+                stored_kn = model.kn_types.read(ckn.version)
                 cal = lang_quality_gate(
                     scrub_stage(heldout_docs, text_col),
                     text_col,
@@ -389,7 +367,7 @@ def fit_reference_model(
                 ).where(
                     F.col(id_col).isNotNull() & F.col(text_col).isNotNull()
                 )
-                scores = score_fn(
+                scores = kn_score_from_types(
                     _kn_text_view(
                         cal.withColumn("_kn_lang", F.col(routed)),
                         text_col,
@@ -397,6 +375,7 @@ def fit_reference_model(
                         "_kn_lang",
                     ),
                     stored_kn,
+                    KN_ORDERS[lm],
                     id_col,
                     text_col,
                     lang_col="_kn_lang",
@@ -416,7 +395,7 @@ def fit_reference_model(
                 .collect()
                 if r["thr"] is not None
             }
-            if lm in _KN_LMS:
+            if lm in KN_ORDERS:
                 # held-out calibration must cover every language the
                 # reference froze a model for: a modeled language with no
                 # floor would silently make its LM stage a permanent
@@ -465,7 +444,7 @@ def fit_reference_model(
                     "reference corpus is empty after scrub+gate — no unigram "
                     "distribution to freeze; widen the gate or fix the input"
                 )
-            if lm in _KN_LMS:
+            if lm in KN_ORDERS:
                 # CCNet production parity: the LM cut scores under an
                 # interpolated Kneser-Ney model (the KenLM estimator —
                 # bigram at lm='kn', trigram at lm='kn3', 4-gram at
@@ -503,10 +482,13 @@ def fit_reference_model(
                     id_col,
                 )
                 fit_view = _kn_text_view(clean, text_col)
-                types_fn, score_fn, kn_table, kn_vkey, _ = _kn_dispatch(model, lm)
-                ckn = kn_table.overwrite(types_fn(fit_view, text_col))
-                stored_types = kn_table.read(ckn.version)
-                kn_scores = score_fn(cal, stored_types, id_col, text_col)
+                ckn = model.kn_types.overwrite(
+                    kn_types(fit_view, KN_ORDERS[lm], text_col)
+                )
+                stored_types = model.kn_types.read(ckn.version)
+                kn_scores = kn_score_from_types(
+                    cal, stored_types, KN_ORDERS[lm], id_col, text_col
+                )
                 if stored_types.limit(1).count() == 0:
                     raise ValueError(
                         "reference corpus has no n-grams at the requested "
@@ -549,15 +531,8 @@ def fit_reference_model(
             "unigram_version": c1.version,
             "heldout_grams_version": c2.version,
         }
-        if lm in _KN_LMS:
-            meta[kn_vkey] = ckn.version
-            # frozen KN inputs are line-break normalized (the
-            # lm_filter_stage rule) from this fit version on; the flag is
-            # the frozen-meta contract that keeps PRE-normalization
-            # artifacts replay-identical — curate_batch only normalizes
-            # when the model's own fit did, so a keep set can never shift
-            # under a code upgrade (the frozen-meta rule)
-            meta["kn_text_normalized"] = True
+        if lm in KN_ORDERS:
+            meta["kn_types_version"] = ckn.version
         if lang_aware:
             meta.update(
                 {
@@ -769,26 +744,21 @@ def curate_batch(
         thr_df = spark.createDataFrame(
             list(meta["lang_thresholds"].items()), "lang string, thr double"
         )
-        if meta.get("lm", "unigram") in _KN_LMS:
+        if meta.get("lm", "unigram") in KN_ORDERS:
             # per-language KN cut: marginals re-derive from the STORED
             # (lang, …grams) type table — one scoring definition with
             # the fit's calibration pass; docs in a language the table
             # never saw are absent from the score frame and pass
             # through via the drop-list anti-join
-            _, score_fn, kn_table, vkey, label = _kn_dispatch(
-                model, meta["lm"]
-            )
-            stored = _read_nonempty_kn(
-                kn_table, meta.get(vkey), f"per-language {label}"
-            )
-            kn_in = scorable.withColumn("_kn_lang", F.col(routed))
-            if meta.get("kn_text_normalized"):
-                # only normalize when the model's own fit did — a
-                # pre-normalization artifact must replay identically
-                kn_in = _kn_text_view(kn_in, text_col, id_col, "_kn_lang")
-            scores = score_fn(
-                kn_in,
-                stored,
+            scores = kn_score_from_types(
+                _kn_text_view(
+                    scorable.withColumn("_kn_lang", F.col(routed)),
+                    text_col,
+                    id_col,
+                    "_kn_lang",
+                ),
+                _read_nonempty_kn(model, meta),
+                KN_ORDERS[meta["lm"]],
                 id_col,
                 text_col,
                 lang_col="_kn_lang",
@@ -822,7 +792,7 @@ def curate_batch(
             scrub_stage(batch, text_col), text_col, **meta["gate_kwargs"]
         )
         thr = meta["lm_threshold"]
-        if thr is not None and meta.get("lm", "unigram") in _KN_LMS:
+        if thr is not None and meta.get("lm", "unigram") in KN_ORDERS:
             # frozen KN cut: marginals re-derive from the STORED type
             # table (deterministic — same scoring definition as the
             # fit's calibration pass). DROP-list semantics: a doc the
@@ -830,19 +800,16 @@ def curate_batch(
             # count — absent from the score table) passes through,
             # the unscorable-rows invariant the unigram path gets
             # from its explicit passthrough split.
-            kn_scorable = gated.where(
-                F.col(id_col).isNotNull() & F.col(text_col).isNotNull()
-            )
-            if meta.get("kn_text_normalized"):
-                # only normalize when the model's own fit did — a
-                # pre-normalization artifact must replay identically
-                kn_scorable = _kn_text_view(kn_scorable, text_col, id_col)
-            _, score_fn, kn_table, vkey, label = _kn_dispatch(
-                model, meta["lm"]
-            )
-            kn_scores = score_fn(
-                kn_scorable,
-                _read_nonempty_kn(kn_table, meta.get(vkey), label),
+            kn_scores = kn_score_from_types(
+                _kn_text_view(
+                    gated.where(
+                        F.col(id_col).isNotNull() & F.col(text_col).isNotNull()
+                    ),
+                    text_col,
+                    id_col,
+                ),
+                _read_nonempty_kn(model, meta),
+                KN_ORDERS[meta["lm"]],
                 id_col,
                 text_col,
             )

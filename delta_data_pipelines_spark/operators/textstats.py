@@ -664,7 +664,7 @@ def bigram_logprob_scores(
 
     Output: (id_col, n_bigrams, avg_logprob double, UNROUNDED).
     """
-    big = _word_pairs(df, text_col, id_col)
+    big = _word_ngrams(df, text_col, 2, id_col)
     bf = big.groupBy("_w1", "_w2").agg(F.count("*").alias("_cb"))
     toks = df.select(F.explode(F.split(F.col(text_col), " ")).alias("_tok"))
     uni = toks.groupBy("_tok").agg(F.count("*").alias("_c"))
@@ -692,167 +692,173 @@ def bigram_logprob_scores(
     )
 
 
-def kn_bigram_logprob_scores(
-    docs: DataFrame,
-    ref: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    discount: float = 0.75,
-) -> DataFrame:
-    """Per-doc mean INTERPOLATED KNESER-NEY bigram log-prob — the
-    published estimator behind the CCNet LM filter (KenLM, Heafield
-    2011; Kneser & Ney 1995; Chen & Goodman 1998 eq. 4.25), where
-    `bigram_logprob_scores` is the simpler λ-interpolated sibling.
-    Two differences matter and both are exercised here:
-
-    - ABSOLUTE DISCOUNTING with CONTINUATION counts: p(w2|w1) =
-      (max(c(w1,w2) − D, 0) + D·N1+(w1·)·p_cont(w2)) / c(w1), with
-      p_cont(w2) = N1+(·w2) / B — how many DISTINCT contexts a word
-      follows, not how often it occurs ("San Francisco" makes
-      "Francisco" frequent but a terrible novel continuation; KN is
-      the fix, λ-interpolation cannot express it).
-    - a TRAIN/SCORE SPLIT: the model is fit on ``ref`` and scores
-      ``docs``, so unseen pairs, contexts, and continuations actually
-      occur and the backoff path is exercised (a self-trained bigram
-      model never backs off — every scored pair is in its own table).
-
-    Backoff/OOV ladder (each rung deterministic and mirrored in the
-    oracle): pair unseen → the discount-mass term alone; context w1
-    unseen → p_cont(w2) directly (the standard unseen-context rule);
-    continuation w2 unseen → p_cont floor 1/B (an unseen word is at
-    most as surprising as a singleton continuation — the same
-    frequency-floor convention as the frozen unigram LM's OOV rule).
-
-    Float discipline (the unigram/bigram precedent): every count is
-    an exact BIGINT off the reference bigram-TYPE table (c(w1) and
-    N1+(w1·) are that table's own marginals, so a reference token
-    that never opens a bigram is correctly absent as a context);
-    D = 0.75 because it is exactly representable (the λ=0.75 rule);
-    p is composed in a fixed operation order (mirror it EXACTLY in
-    any oracle), ln is rounded to 9 dp and summed as DECIMAL.
-
-    Scale shape: one bigram explode over the reference → one
-    (w1, w2) partial-agg shuffle; contexts and continuations are
-    vocabulary-sized groupBys OF THE TYPE TABLE (not the corpus); B
-    broadcasts as one row; scoring is one corpus bigram explode +
-    three vocabulary joins (AQE broadcasts while they fit) + a
-    per-doc partial agg — linear in the corpus, no windows.
-
-    Docs with fewer than 2 tokens have no bigram and are absent from
-    the output (callers pass them through, as lm_filter_stage does
-    for unscorables). Output: (id_col, n_bigrams, avg_logprob double,
-    UNROUNDED).
-
-    Split into fit (`kn_bigram_types`) + score
-    (`kn_bigram_score_from_types`) so the frozen-curation lifecycle
-    can persist the TYPE table and score future batches through the
-    SAME definition — the marginals re-derive deterministically from
-    the frozen table, so only one artifact needs freezing.
-
-    The type table is localCheckpointed (eager): the scorer consumes
-    it through FOUR subtrees (pair join + two marginals + the total),
-    and Spark 4.1.2 does NOT reuse the identical exchanges — the
-    executed plan re-ran the reference explode once per consumer
-    (verified: 0 ReusedExchange, one scan per instance; the earlier
-    "AQE exchange reuse dedupes these" reading was wrong — the
-    recompute was merely hidden by concurrent stage execution at
-    bench scale). A CacheManager persist measured SLOWER at sf0.1 (1.18→1.85 s:
-    cache-manager materialization serializes what concurrency hid),
-    but the checkpoint truncates the re-planned subtree outright —
-    and it matches the production posture, where the type table is
-    the STORED artifact the frozen lifecycle reads back
-    (r14 optimization round)."""
-    return kn_bigram_score_from_types(
-        docs,
-        stage(kn_bigram_types(ref, text_col), "kn2_types"),
-        id_col,
-        text_col,
-        discount,
+def _word_ngrams(frame: DataFrame, text_col: str, n: int, *keep) -> DataFrame:
+    """One row per n-gram position of ``split(text_col, " ")``, the
+    words in ``_w1.._wn``, plus the ``keep`` columns. The word array
+    is STAGED in its own select and the transform lambda reads the
+    attribute (the passage_segments_from_words rule: lambda bodies get
+    no codegen subexpression elimination — an inline split(text)
+    would re-run once per element). The ``when`` guard keeps the
+    generated sequence ascending: for docs under n tokens
+    sequence(1, size-n+1) DESCENDS in Spark, it is not empty."""
+    staged = frame.select(*keep, F.split(F.col(text_col), " ").alias("_wd"))
+    w = F.col("_wd")
+    size = F.size(w)
+    names = [f"w{k}" for k in range(1, n + 1)]
+    grams = F.when(
+        size >= n,
+        F.transform(
+            F.sequence(F.lit(1), size - (n - 1)),
+            lambda i: F.struct(
+                *(
+                    F.element_at(w, i + k if k else i).alias(nm)
+                    for k, nm in enumerate(names)
+                )
+            ),
+        ),
+    ).otherwise(
+        F.array().cast(
+            "array<struct<" + ",".join(f"{nm}:string" for nm in names) + ">>"
+        )
+    )
+    return staged.select(*keep, F.explode(grams).alias("_g")).select(
+        *keep, *(F.col(f"_g.{nm}").alias(f"_{nm}") for nm in names)
     )
 
 
-def kn_bigram_types(
-    ref: DataFrame, text_col: str = "text", lang_col: str | None = None
+# lm name → Kneser-Ney order: the one place the batch cut
+# (curate_corpus.lm_filter_stage) and the frozen lifecycle
+# (incremental_curate) learn which KN models exist
+KN_ORDERS = {"kn": 2, "kn3": 3, "kn4": 4}
+
+# the per-doc n-gram count column each order reports
+_KN_COUNT_COL = {2: "n_bigrams", 3: "n_trigrams", 4: "n_quadgrams"}
+
+
+def _kn_words(order: int) -> list[str]:
+    """The word columns of an order-``order`` type table; an order the
+    estimator does not serve raises."""
+    if order not in _KN_COUNT_COL:
+        raise ValueError(
+            f"KN order must be one of {sorted(_KN_COUNT_COL)}, got {order!r}"
+        )
+    return [f"_w{k}" for k in range(1, order + 1)]
+
+
+def kn_types(
+    ref: DataFrame,
+    order: int,
+    text_col: str = "text",
+    lang_col: str | None = None,
 ) -> DataFrame:
-    """The KN model's ONE artifact: the reference bigram-TYPE table
-    (w1, w2, cb). Context totals, forward/backward continuation
-    counts, and the type total are all marginals of this table —
-    see kn_bigram_logprob_scores for the estimator. With ``lang_col``
-    the table is per-language ((lang, w1, w2, cb) — the CCNet
-    production shape: one KenLM per language) and every marginal
-    keys on the language too."""
+    """The order-``order`` KN model's ONE artifact: the reference
+    n-gram TYPE table (_w1.._wn, _cb). Every lower order is a marginal
+    of it (see :func:`kn_score_from_types`), so nothing else needs
+    freezing. With ``lang_col`` the table is per-language — one KenLM
+    per language, the CCNet production shape — and every marginal keys
+    on the language too."""
+    words = _kn_words(order)
     keys = [lang_col] if lang_col else []
     return (
-        _word_pairs(ref, text_col, *keys)
-        .groupBy(*keys, "_w1", "_w2")
+        _word_ngrams(ref, text_col, order, *keys)
+        .groupBy(*keys, *words)
         .agg(F.count("*").alias("_cb"))
     )
 
 
-def _word_pairs(frame: DataFrame, text_col: str, *keep) -> DataFrame:
-    w = F.split(F.col(text_col), " ")
-    pairs = F.zip_with(
-        w,
-        F.slice(w, 2, F.greatest(F.size(w) - 1, F.lit(1))),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    return (
-        frame.select(*keep, F.explode(pairs).alias("_p"))
-        .where(F.col("_p.w2").isNotNull())
-        .select(
-            *keep,
-            F.col("_p.w1").alias("_w1"),
-            F.col("_p.w2").alias("_w2"),
-        )
-    )
-
-
-def kn_bigram_score_from_types(
+def kn_score_from_types(
     docs: DataFrame,
-    bf: DataFrame,
+    types: DataFrame,
+    order: int,
     id_col: str = "doc_id",
     text_col: str = "text",
     discount: float = 0.75,
     lang_col: str | None = None,
 ) -> DataFrame:
-    """Score ``docs`` under a (possibly stored) KN bigram-type table —
-    the scoring half of kn_bigram_logprob_scores (see its docstring
-    for the estimator, the backoff ladder, and the float discipline).
+    """Per-doc mean INTERPOLATED KNESER-NEY log-prob of order 2, 3 or
+    4 under a (possibly stored) type table from :func:`kn_types` — the
+    published estimator behind the CCNet LM filter (KenLM, Heafield
+    2011; Kneser & Ney 1995; Chen & Goodman 1998 eq. 4.25 with one
+    constant D), where `bigram_logprob_scores` is the simpler
+    λ-interpolated sibling. The top level discounts RAW counts; every
+    lower level j discounts MODIFIED counts, N1+(·w), the number of
+    distinct words that precede its j-gram in level j+1; the base case
+    is the continuation distribution:
 
-    With ``lang_col`` (table fit per-language): every join keys on
-    the language too, the type total becomes an O(languages)
-    broadcast table, the output carries the language, and a doc in a
-    language the table has never seen is ABSENT from the output
-    (callers pass it through — the unigram lang path's
-    unseen-language invariant)."""
+        p_j(w | h) = (max(c_j(h w) − D, 0) + D·N1+(h ·)·p_{j−1}(w | h'))
+                     / c_j(h ·)                          j = order .. 2
+        p_1(w)     = N1+(· w) / B      B = distinct bigram types
+
+    where h' drops h's first word and c_j(h ·) sums level j over w.
+    Continuation counts are the KN point: "San Francisco" makes
+    "Francisco" frequent but a poor novel continuation, which raw
+    frequency interpolation cannot express.
+
+    Backoff ladder (each rung deterministic and mirrored in the
+    oracles): n-gram unseen under a seen context → the discount-mass
+    term alone; context h unseen at level j → p_{j−1} directly; word w
+    never seen as a continuation → the floor 1/B (an unseen word is at
+    most as surprising as a singleton continuation — the frozen
+    unigram LM's OOV convention).
+
+    Float discipline: every count is an exact BIGINT marginal of the
+    type table (a reference token that never opens an n-gram is
+    correctly absent as a context); D = 0.75 is exactly representable
+    (the λ=0.75 rule of bigram_logprob_scores); p is composed in a
+    fixed operation order — mirror it EXACTLY in any oracle; ln is
+    rounded to 9 dp and summed as DECIMAL, so the per-doc mean is
+    independent of partial-agg order.
+
+    Scale shape: one corpus n-gram explode, 2·(order−1)+1 vocabulary
+    joins (AQE broadcasts while they fit), B as one broadcast row, a
+    per-doc partial agg — linear in the corpus, no windows. The lower
+    levels are deliberately NOT staged: each consumer re-aggregates
+    them map-side from the type table, which callers materialise, and
+    staging the marginals measured flat-to-slower at sf0.1.
+
+    With ``lang_col`` (table fit per-language) every level and join
+    keys on the language, B is an O(languages) broadcast table, the
+    output carries the language, and a doc in a language the table
+    never saw is ABSENT from the output (callers pass it through).
+    Docs under ``order`` tokens have no n-gram and are absent too.
+    Output: (id_col, [lang_col,] n_bigrams | n_trigrams | n_quadgrams,
+    avg_logprob double, UNROUNDED)."""
+    words = _kn_words(order)
     D = F.lit(discount)
     kl = [lang_col] if lang_col else []
-    ctx = bf.groupBy(*kl, "_w1").agg(
-        F.sum("_cb").alias("_c1"),          # c(w1): context total
-        F.count("*").alias("_n1f"),         # N1+(w1·): distinct continuations
-    )
-    cont = bf.groupBy(*kl, "_w2").agg(
-        F.count("*").alias("_n1c")          # N1+(·w2)
-    )
-    # B: distinct bigram types (per language when routed)
+    # (table, join words) in join order: level n, ctx n, ..., level 2,
+    # ctx 2 — level j < n is level j+1 grouped by its last j words
+    tables = []
+    level, cnt = types, "_cb"
+    for j in range(order, 1, -1):
+        if j < order:
+            cnt = f"_c{j}"
+            level = level.groupBy(*kl, *words[-j:]).agg(F.count("*").alias(cnt))
+        ctx = level.groupBy(*kl, *words[-j:-1]).agg(
+            F.sum(cnt).alias(f"_ctx{j}"),   # c_j(h ·)
+            F.count("*").alias(f"_n1f{j}"),  # N1+(h ·)
+        )
+        tables += [(level, words[-j:]), (ctx, words[-j:-1])]
+    cont = level.groupBy(*kl, words[-1]).agg(F.count("*").alias("_n1c"))
     btot = (
-        bf.groupBy(*kl).agg(F.count("*").alias("_b"))
+        level.groupBy(*kl).agg(F.count("*").alias("_b"))
         if kl
-        else bf.agg(F.count("*").alias("_b"))
+        else level.agg(F.count("*").alias("_b"))
     )
 
-    big = _word_pairs(docs, text_col, id_col, *kl)
-    pc = F.coalesce(F.col("_n1c"), F.lit(1)).cast("double") / F.col("_b")
-    p_seen_ctx = (
-        F.greatest(F.coalesce(F.col("_cb"), F.lit(0)) - D, F.lit(0.0))
-        + D * F.col("_n1f") * pc
-    ) / F.col("_c1")
-    p = F.when(F.col("_c1").isNotNull(), p_seen_ctx).otherwise(pc)
-    joined = (
-        big.join(bf, kl + ["_w1", "_w2"], "left")
-        .join(ctx, kl + ["_w1"], "left")
-        .join(cont, kl + ["_w2"], "left")
-    )
+    p = F.coalesce(F.col("_n1c"), F.lit(1)).cast("double") / F.col("_b")
+    for j in range(2, order + 1):
+        c = "_cb" if j == order else f"_c{j}"
+        seen = (
+            F.greatest(F.coalesce(F.col(c), F.lit(0)) - D, F.lit(0.0))
+            + D * F.col(f"_n1f{j}") * p
+        ) / F.col(f"_ctx{j}")
+        p = F.when(F.col(f"_ctx{j}").isNotNull(), seen).otherwise(p)
+
+    joined = _word_ngrams(docs, text_col, order, id_col, *kl)
+    for table, on in tables:
+        joined = joined.join(table, kl + on, "left")
+    joined = joined.join(cont, kl + [words[-1]], "left")
     if kl:
         joined = joined.join(F.broadcast(btot), kl, "left").where(
             F.col("_b").isNotNull()  # unseen language: unscorable
@@ -860,420 +866,45 @@ def kn_bigram_score_from_types(
     else:
         joined = joined.crossJoin(F.broadcast(btot))
     return (
-        joined.withColumn(
-            "_lp", F.round(F.log(p), 9).cast("decimal(28,9)")
-        )
+        joined.withColumn("_lp", F.round(F.log(p), 9).cast("decimal(28,9)"))
         .groupBy(id_col, *kl)
         .agg(
-            F.count("*").alias("n_bigrams"),
+            F.count("*").alias(_KN_COUNT_COL[order]),
             (F.sum("_lp").cast("double") / F.count("*")).alias("avg_logprob"),
         )
     )
 
 
-def _word_triples(frame: DataFrame, text_col: str, *keep) -> DataFrame:
-    """One row per trigram position. The word array is STAGED in its
-    own select and the transform lambda reads the attribute (the
-    passage_segments_from_words rule: lambda bodies get no codegen
-    subexpression elimination — an inline split(text) would re-run
-    once per element). The ``when`` guard keeps the generated
-    sequence ascending: for under-3-token docs sequence(1, n-2)
-    DESCENDS in Spark, it is not empty."""
-    staged = frame.select(*keep, F.split(F.col(text_col), " ").alias("_wd"))
-    w = F.col("_wd")
-    n = F.size(w)
-    trips = F.when(
-        n >= 3,
-        F.transform(
-            F.sequence(F.lit(1), n - 2),
-            lambda i: F.struct(
-                F.element_at(w, i).alias("w1"),
-                F.element_at(w, i + 1).alias("w2"),
-                F.element_at(w, i + 2).alias("w3"),
-            ),
-        ),
-    ).otherwise(
-        F.array().cast("array<struct<w1:string,w2:string,w3:string>>")
-    )
-    return staged.select(*keep, F.explode(trips).alias("_t")).select(
-        *keep,
-        F.col("_t.w1").alias("_w1"),
-        F.col("_t.w2").alias("_w2"),
-        F.col("_t.w3").alias("_w3"),
-    )
-
-
-def kn_trigram_types(
-    ref: DataFrame, text_col: str = "text", lang_col: str | None = None
-) -> DataFrame:
-    """The trigram-KN model's ONE artifact: the reference trigram-TYPE
-    table (w1, w2, w3, cb). BOTH lower orders are marginals of this
-    table — the bigram level uses Chen & Goodman's MODIFIED counts
-    (how many distinct w1 precede each (w2, w3) = this table's row
-    count per (w2, w3)), so nothing else needs freezing. With
-    ``lang_col`` the table is per-language ((lang, w1, w2, w3, cb) —
-    one KenLM per language, the bigram table's CCNet production
-    shape at order 2) and every marginal keys on the language too."""
-    keys = [lang_col] if lang_col else []
-    return (
-        _word_triples(ref, text_col, *keys)
-        .groupBy(*keys, "_w1", "_w2", "_w3")
-        .agg(F.count("*").alias("_cb"))
-    )
-
-
-def kn_trigram_score_from_types(
-    docs: DataFrame,
-    bf3: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    discount: float = 0.75,
-    lang_col: str | None = None,
-) -> DataFrame:
-    """Per-doc mean interpolated KNESER-NEY TRIGRAM log-prob — the
-    order-2 extension of kn_bigram_logprob_scores showing the
-    estimator's recursion (Chen & Goodman 1998 eq. 4.25; KenLM runs
-    this to order 4): the trigram level discounts RAW counts, the
-    bigram level discounts MODIFIED (continuation) counts, and the
-    base case is the unigram continuation distribution —
-
-        p3(w3|w1,w2) = (max(c(w1w2w3) − D, 0)
-                        + D·N1+(w1w2·)·p2(w3|w2)) / c(w1w2)
-        p2(w3|w2)    = (max(N1+(·w2w3) − D, 0)
-                        + D·N1+(w2·*)·pc(w3)) / N1+(·w2·)
-        pc(w3)       = N1+(··w3-contexts) / |distinct (w2,w3) types|
-
-    Backoff ladder (each rung deterministic, mirrored in any oracle):
-    unseen (w1,w2) context → p2 directly; unseen w2 context at the
-    bigram level → pc directly; unseen w3 → pc floor 1/B2 (the
-    singleton-continuation convention of the bigram scorer).
-
-    Every model table is a marginal of the trigram TYPE table ``bf3``
-    (the one frozen artifact): ctx3 = its (w1,w2) sums/counts, the
-    modified bigram table bn = its (w2,w3) row counts, ctx2/cont =
-    bn's marginals, B2 = bn's row count. Scale shape: one corpus
-    trigram explode + five vocabulary joins (AQE broadcasts while
-    they fit) + one 1-row broadcast + a per-doc partial agg — linear,
-    no windows. Docs with fewer than 3 tokens have no trigram and are
-    absent from the output (callers pass them through). Output:
-    (id_col, n_trigrams, avg_logprob double, UNROUNDED).
-
-    With ``lang_col`` (table fit per-language): every marginal and
-    every join keys on the language too, B2 becomes an O(languages)
-    broadcast table, the output carries the language, and a doc in a
-    language the table has never seen is ABSENT from the output
-    (callers pass it through — the bigram scorer's unseen-language
-    invariant at order 2)."""
-    D = F.lit(discount)
-    kl = [lang_col] if lang_col else []
-    ctx3 = bf3.groupBy(*kl, "_w1", "_w2").agg(
-        F.sum("_cb").alias("_c12"),     # c(w1,w2): trigram-context total
-        F.count("*").alias("_n1f3"),    # N1+(w1,w2,·)
-    )
-    # modified bigram level: one row per (w2, w3) with its distinct-
-    # left-context count (bf3 rows are distinct types, so count(*)
-    # per (w2, w3) IS N1+(·,w2,w3)). bn feeds four consumers but is
-    # deliberately NOT staged: each consumer re-aggregates it from
-    # the type table — which callers materialize (localCheckpoint in
-    # the fit+score compositions; a STORED table in the frozen
-    # lifecycle) — so the recompute is one map-side partial agg per
-    # consumer, and staging bn itself measured slower at sf0.1
-    # (persist 2×; an extra eager checkpoint flat-to-slower — the
-    # kn4 marginal-ladder A/B, r14 optimization round)
-    bn = bf3.groupBy(*kl, "_w2", "_w3").agg(F.count("*").alias("_cn23"))
-    ctx2 = bn.groupBy(*kl, "_w2").agg(
-        F.sum("_cn23").alias("_c2n"),   # N1+(·,w2,·): bigram-level total
-        F.count("*").alias("_n1f2"),    # N1+(w2,·): distinct w3 after w2
-    )
-    cont = bn.groupBy(*kl, "_w3").agg(
-        F.count("*").alias("_n1c3")
-    )  # N1+(·w3)
-    # B2: distinct (w2,w3) types (per language when routed)
-    btot = (
-        bn.groupBy(*kl).agg(F.count("*").alias("_b2"))
-        if kl
-        else bn.agg(F.count("*").alias("_b2"))
-    )
-
-    trip = _word_triples(docs, text_col, id_col, *kl)
-    pc = F.coalesce(F.col("_n1c3"), F.lit(1)).cast("double") / F.col("_b2")
-    p2_seen = (
-        F.greatest(F.coalesce(F.col("_cn23"), F.lit(0)) - D, F.lit(0.0))
-        + D * F.col("_n1f2") * pc
-    ) / F.col("_c2n")
-    p2 = F.when(F.col("_c2n").isNotNull(), p2_seen).otherwise(pc)
-    p3_seen = (
-        F.greatest(F.coalesce(F.col("_cb"), F.lit(0)) - D, F.lit(0.0))
-        + D * F.col("_n1f3") * p2
-    ) / F.col("_c12")
-    p3 = F.when(F.col("_c12").isNotNull(), p3_seen).otherwise(p2)
-    joined = (
-        trip.join(bf3, kl + ["_w1", "_w2", "_w3"], "left")
-        .join(ctx3, kl + ["_w1", "_w2"], "left")
-        .join(bn, kl + ["_w2", "_w3"], "left")
-        .join(ctx2, kl + ["_w2"], "left")
-        .join(cont, kl + ["_w3"], "left")
-    )
-    if kl:
-        joined = joined.join(F.broadcast(btot), kl, "left").where(
-            F.col("_b2").isNotNull()  # unseen language: unscorable
-        )
-    else:
-        joined = joined.crossJoin(F.broadcast(btot))
-    return (
-        joined.withColumn(
-            "_lp", F.round(F.log(p3), 9).cast("decimal(28,9)")
-        )
-        .groupBy(id_col, *kl)
-        .agg(
-            F.count("*").alias("n_trigrams"),
-            (F.sum("_lp").cast("double") / F.count("*")).alias("avg_logprob"),
-        )
-    )
-
-
-def kn_trigram_logprob_scores(
+def kn_logprob_scores(
     docs: DataFrame,
     ref: DataFrame,
+    order: int,
     id_col: str = "doc_id",
     text_col: str = "text",
     discount: float = 0.75,
 ) -> DataFrame:
-    """Fit-on-ref + score-docs composition of the trigram KN pair —
-    the train/score split that makes every backoff rung reachable
-    (see kn_trigram_score_from_types for the estimator). The type
-    table is localCheckpointed (eager): Spark 4.1.2 does not reuse
-    the identical exchanges, so an unstaged table re-runs the
-    reference explode once per consuming subtree (see
-    kn_bigram_logprob_scores for the verified account — a CacheManager persist
-    measured slower here, the checkpoint does not)."""
-    return kn_trigram_score_from_types(
+    """Fit on ``ref``, score ``docs``: the train/score split that makes
+    every backoff rung reachable (a self-trained model never backs
+    off). See :func:`kn_score_from_types` for the estimator.
+
+    The type table is staged: the scorer consumes it through
+    2·(order−1)+2 subtrees, and Spark 4.1.2 does NOT reuse the
+    identical exchanges — unstaged, the executed plan re-ran the
+    reference explode once per consumer (18 scans for one 4-gram
+    query; 0 ReusedExchange). Staging measured 3.9 → 3.1 s for the
+    4-gram query at sf0.1, where a CacheManager persist measured
+    SLOWER (1.18 → 1.85 s for the bigram: cache-manager
+    materialisation serialises what concurrent stages hid). It is also
+    the production posture: the frozen lifecycle reads the type table
+    back as a STORED artifact."""
+    return kn_score_from_types(
         docs,
-        stage(kn_trigram_types(ref, text_col), "kn3_types"),
+        stage(kn_types(ref, order, text_col), f"kn{order}_types"),
+        order,
         id_col,
         text_col,
         discount,
     )
-
-
-def _word_quads(frame: DataFrame, text_col: str, *keep) -> DataFrame:
-    """One row per 4-gram position — the `_word_triples` stager one
-    order up (staged array attribute into the transform lambda; the
-    `when` guard keeps sequence(1, n-3) from descending on short
-    docs)."""
-    staged = frame.select(*keep, F.split(F.col(text_col), " ").alias("_wd"))
-    w = F.col("_wd")
-    n = F.size(w)
-    quads = F.when(
-        n >= 4,
-        F.transform(
-            F.sequence(F.lit(1), n - 3),
-            lambda i: F.struct(
-                F.element_at(w, i).alias("w1"),
-                F.element_at(w, i + 1).alias("w2"),
-                F.element_at(w, i + 2).alias("w3"),
-                F.element_at(w, i + 3).alias("w4"),
-            ),
-        ),
-    ).otherwise(
-        F.array().cast(
-            "array<struct<w1:string,w2:string,w3:string,w4:string>>"
-        )
-    )
-    return staged.select(*keep, F.explode(quads).alias("_q")).select(
-        *keep,
-        F.col("_q.w1").alias("_w1"),
-        F.col("_q.w2").alias("_w2"),
-        F.col("_q.w3").alias("_w3"),
-        F.col("_q.w4").alias("_w4"),
-    )
-
-
-def kn_quadgram_types(
-    ref: DataFrame, text_col: str = "text", lang_col: str | None = None
-) -> DataFrame:
-    """The 4-gram-KN model's ONE artifact: the reference 4-gram-TYPE
-    table (w1, w2, w3, w4, cb). ALL three lower orders are marginals
-    of this table (Chen & Goodman's modified counts at every level
-    below the top), so nothing else needs freezing. With ``lang_col``
-    the table and every marginal key on the language."""
-    keys = [lang_col] if lang_col else []
-    return (
-        _word_quads(ref, text_col, *keys)
-        .groupBy(*keys, "_w1", "_w2", "_w3", "_w4")
-        .agg(F.count("*").alias("_cb"))
-    )
-
-
-def kn_quadgram_score_from_types(
-    docs: DataFrame,
-    bf4: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    discount: float = 0.75,
-    lang_col: str | None = None,
-) -> DataFrame:
-    """Per-doc mean interpolated KNESER-NEY 4-GRAM log-prob — the
-    order-3 member completing the engine's KenLM ladder (KenLM's
-    production default order for the CCNet filter; Chen & Goodman
-    1998 eq. 4.25 with constant D, the kn2/kn3 convention), showing
-    the recursion at full depth: the 4-gram level discounts RAW
-    counts and every lower level discounts the next level's MODIFIED
-    (distinct-left-context) counts —
-
-        p4(w4|w1w2w3) = (max(c(w1..w4) − D, 0)
-                         + D·N1+(w1w2w3·)·p3'(w4|w2w3)) / c(w1w2w3)
-        p3'(w4|w2w3)  = (max(N1+(·w2w3w4) − D, 0)
-                         + D·N1+(w2w3·*)·p2'(w4|w3)) / N1+(·w2w3·)
-        p2'(w4|w3)    = (max(N1+(··w3w4) − D, 0)
-                         + D·N1+(w3·**)·pc(w4)) / N1+(··w3·)
-        pc(w4)        = N1+(···w4-contexts) / |distinct (w3,w4) types|
-
-    Backoff ladder (each rung deterministic, mirrored in any oracle):
-    unseen (w1,w2,w3) context → p3' directly; unseen (w2,w3) → p2';
-    unseen w3 → pc; unseen w4 → pc floor 1/B3 (the singleton-
-    continuation convention of the lower-order scorers).
-
-    Every model table is a marginal of the 4-gram TYPE table ``bf4``
-    (the one frozen artifact): ctx4 = its (w1,w2,w3) sums/counts,
-    bn3 = its (w2,w3,w4) row counts (N1+(·w2w3w4)), ctx3/bn2/ctx2/
-    cont = bn3's cascading marginals, B3 = bn2's row count. Scale
-    shape: one corpus 4-gram explode + seven vocabulary joins (AQE
-    broadcasts while they fit) + one broadcast total + a per-doc
-    partial agg — linear, window-free. Docs with fewer than 4 tokens
-    have no 4-gram and are absent from the output (callers pass them
-    through). With ``lang_col``: every marginal and join keys on the
-    language, B3 is an O(languages) broadcast, unseen-language docs
-    are absent (the family's unseen-language invariant). Output:
-    (id_col, n_quadgrams, avg_logprob double, UNROUNDED)."""
-    D = F.lit(discount)
-    kl = [lang_col] if lang_col else []
-    ctx4 = bf4.groupBy(*kl, "_w1", "_w2", "_w3").agg(
-        F.sum("_cb").alias("_c123"),    # c(w1,w2,w3): 4-gram-context total
-        F.count("*").alias("_n1f4"),    # N1+(w1,w2,w3,·)
-    )
-    # modified trigram level: one row per (w2,w3,w4) with its
-    # distinct-left-context count (bf4 rows are distinct types).
-    # bn3/bn2 feed multiple consumers but are deliberately NOT
-    # staged: each consumer re-aggregates them from the type table —
-    # which callers materialize (localCheckpoint in the fit+score
-    # composition; a STORED table in the frozen lifecycle) — so the
-    # recompute is map-side partial aggs per consumer, and staging
-    # the marginals themselves measured flat-to-slower at sf0.1
-    # (the kn4 marginal-ladder A/B, r14 optimization round)
-    bn3 = bf4.groupBy(*kl, "_w2", "_w3", "_w4").agg(
-        F.count("*").alias("_cn234")
-    )
-    ctx3 = bn3.groupBy(*kl, "_w2", "_w3").agg(
-        F.sum("_cn234").alias("_c23n"),  # N1+(·,w2,w3,·)
-        F.count("*").alias("_n1f3n"),    # N1+(w2,w3,·): distinct w4
-    )
-    # modified bigram level: distinct (w2) contexts per (w3,w4)
-    bn2 = bn3.groupBy(*kl, "_w3", "_w4").agg(
-        F.count("*").alias("_cn34")
-    )
-    ctx2 = bn2.groupBy(*kl, "_w3").agg(
-        F.sum("_cn34").alias("_c3n"),    # N1+(·,·,w3,·)
-        F.count("*").alias("_n1f2n"),    # N1+(w3,·): distinct w4 after w3
-    )
-    cont = bn2.groupBy(*kl, "_w4").agg(
-        F.count("*").alias("_n1c4")      # N1+(··,·w4)
-    )
-    # B3: distinct (w3,w4) types (per language when routed)
-    btot = (
-        bn2.groupBy(*kl).agg(F.count("*").alias("_b3"))
-        if kl
-        else bn2.agg(F.count("*").alias("_b3"))
-    )
-
-    quad = _word_quads(docs, text_col, id_col, *kl)
-    pc = F.coalesce(F.col("_n1c4"), F.lit(1)).cast("double") / F.col("_b3")
-    p2_seen = (
-        F.greatest(F.coalesce(F.col("_cn34"), F.lit(0)) - D, F.lit(0.0))
-        + D * F.col("_n1f2n") * pc
-    ) / F.col("_c3n")
-    p2 = F.when(F.col("_c3n").isNotNull(), p2_seen).otherwise(pc)
-    p3_seen = (
-        F.greatest(F.coalesce(F.col("_cn234"), F.lit(0)) - D, F.lit(0.0))
-        + D * F.col("_n1f3n") * p2
-    ) / F.col("_c23n")
-    p3 = F.when(F.col("_c23n").isNotNull(), p3_seen).otherwise(p2)
-    p4_seen = (
-        F.greatest(F.coalesce(F.col("_cb"), F.lit(0)) - D, F.lit(0.0))
-        + D * F.col("_n1f4") * p3
-    ) / F.col("_c123")
-    p4 = F.when(F.col("_c123").isNotNull(), p4_seen).otherwise(p3)
-    joined = (
-        quad.join(bf4, kl + ["_w1", "_w2", "_w3", "_w4"], "left")
-        .join(ctx4, kl + ["_w1", "_w2", "_w3"], "left")
-        .join(bn3, kl + ["_w2", "_w3", "_w4"], "left")
-        .join(ctx3, kl + ["_w2", "_w3"], "left")
-        .join(bn2, kl + ["_w3", "_w4"], "left")
-        .join(ctx2, kl + ["_w3"], "left")
-        .join(cont, kl + ["_w4"], "left")
-    )
-    if kl:
-        joined = joined.join(F.broadcast(btot), kl, "left").where(
-            F.col("_b3").isNotNull()  # unseen language: unscorable
-        )
-    else:
-        joined = joined.crossJoin(F.broadcast(btot))
-    return (
-        joined.withColumn(
-            "_lp", F.round(F.log(p4), 9).cast("decimal(28,9)")
-        )
-        .groupBy(id_col, *kl)
-        .agg(
-            F.count("*").alias("n_quadgrams"),
-            (F.sum("_lp").cast("double") / F.count("*")).alias("avg_logprob"),
-        )
-    )
-
-
-def kn_quadgram_logprob_scores(
-    docs: DataFrame,
-    ref: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    discount: float = 0.75,
-) -> DataFrame:
-    """Fit-on-ref + score-docs composition of the 4-gram KN pair —
-    the train/score split that makes every backoff rung reachable
-    (see kn_quadgram_score_from_types for the estimator). The type
-    table is localCheckpointed (eager): at order 3 the scorer
-    consumes it through EIGHT subtrees (the bn3/bn2 cascade), and
-    Spark 4.1.2 does not reuse the identical exchanges — the
-    unstaged plan executed 18 scans / 18 explodes for one query
-    (verified, 0 ReusedExchange). The checkpoint measured 3.9 → 3.1 s
-    at sf0.1 AND removes seven reference-corpus re-explodes at scale;
-    a CacheManager persist had measured slower (see kn_bigram_logprob_scores
-    for the corrected account). Checkpointing the bn3/bn2 marginals
-    TOO measured flat-to-slower (their recompute off the materialized
-    type table is map-side cheap; each extra eager job costs more
-    than it saves)."""
-    return kn_quadgram_score_from_types(
-        docs,
-        stage(kn_quadgram_types(ref, text_col), "kn4_types"),
-        id_col,
-        text_col,
-        discount,
-    )
-
-
-# lm-name → (types_fn, score_from_types_fn, logprob_scores_fn) — the
-# ONE place the KN order names map to their estimator functions.
-# curate_corpus.lm_filter_stage (self-fit cut) and
-# incremental_curate._kn_dispatch (frozen lifecycle, which layers the
-# model-table/meta-key mapping on top) both read this, so the batch
-# and frozen pipelines can never disagree on supported orders.
-KN_SCORERS = {
-    "kn": (kn_bigram_types, kn_bigram_score_from_types,
-           kn_bigram_logprob_scores),
-    "kn3": (kn_trigram_types, kn_trigram_score_from_types,
-            kn_trigram_logprob_scores),
-    "kn4": (kn_quadgram_types, kn_quadgram_score_from_types,
-            kn_quadgram_logprob_scores),
-}
 
 
 def classifier_features(

@@ -1871,38 +1871,36 @@ def txt_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def txt_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpolated KNESER-NEY bigram LM score per document — the
-    published estimator the CCNet LM filter actually uses (KenLM;
-    Kneser & Ney 1995), completing the perplexity-proxy ladder:
-    txt_unigram_logprob (order 0) → txt_bigram_logprob (order 1,
-    λ-interpolated, self-trained) → THIS (order 1, absolute
-    discounting + continuation-probability backoff, fit on the even
-    doc_id half and scoring the FULL corpus so unseen pairs/contexts/
-    continuations exercise every backoff rung — a self-trained bigram
-    model never backs off). Continuation counts are the KN point:
-    a word frequent only inside one collocation gets a low novel-
-    continuation probability that raw frequency interpolation cannot
-    express. One scoring definition
-    (textstats.kn_bigram_logprob_scores); docs under 2 tokens have no
-    bigram and are excluded here (the harness corpus has none).
+def _kn_logprob_query(
+    spark: SparkSession, sf_dir: str, order: int, lang_col: str | None = None
+) -> DataFrame:
+    """The body of every txt_kn* query: KN order ``order`` fit on the
+    even doc_id half and scoring the FULL corpus, so unseen n-grams,
+    contexts and continuations exercise every backoff rung (a
+    self-trained model never backs off). With ``lang_col`` the type
+    table and every marginal are per-language (routed by the fixture's
+    real ``lang`` column, deterministic in both engines) and each
+    document scores only under its own language's model.
 
     Fixture-liveness device (the td_dedup_sentence_spans family —
     derive the signal deterministically in BOTH engines): the shared
     fixture vocabulary leaves the backoff ladder nearly dead (6 unseen
     pairs, 1 unseen context, 0 unseen continuations in 26k positions
-    at sf0.01), so the query appends ' tok<doc_id> kn' to every
-    non-NULL doc — odd doc_ids then inject a context AND a
-    continuation the even-half model has never seen, firing every
-    rung hundreds of times. NULL text stays NULL (Spark `when`
-    mirrors SQL's NULL-propagating ||)."""
-    # _spread: the corpus-side gram explode + vocabulary joins +
-    # partial agg are all map-side work on the scan partitioning, and
-    # the sf parquet is ONE split — unspread, the whole scoring chain
-    # ran on one core (kn3 3.47→3.10, kn4 4.30→3.81 s interleaved
-    # A/B at sf0.1; r14 round, the txt_gopher_repetition lesson)
+    at sf0.01), so ' tok<doc_id> kn' is appended to every non-NULL doc
+    — odd doc_ids then inject a context AND a continuation the
+    even-half model has never seen, firing every rung hundreds of
+    times, and every non-NULL doc has at least 3 tokens. NULL text
+    stays NULL (Spark `when` mirrors SQL's NULL-propagating ||) and is
+    absent from the output.
+
+    _spread: the corpus-side gram explode + vocabulary joins + partial
+    agg are all map-side work on the scan partitioning, and the sf
+    parquet is ONE split — unspread, the whole scoring chain ran on
+    one core (kn3 3.47→3.10, kn4 4.30→3.81 s interleaved A/B at sf0.1;
+    the txt_gopher_repetition lesson)."""
     d = dedup._spread(read_table(spark, sf_dir, "documents")).select(
         "doc_id",
+        *([lang_col] if lang_col else []),
         F.when(
             F.col("text").isNotNull(),
             F.concat(
@@ -1911,10 +1909,35 @@ def txt_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     ref = d.where(F.col("doc_id") % 2 == 0)
-    s = textstats.kn_bigram_logprob_scores(d, ref, "doc_id", "text")
+    # the type table is staged for kn_logprob_scores' reason: the
+    # scorer reads it through every level, ctx, cont and B subtree
+    types = textstats.kn_types(ref, order, "text", lang_col)
+    s = textstats.kn_score_from_types(
+        d,
+        staging.stage(types, f"kn{order}_types"),
+        order,
+        "doc_id",
+        "text",
+        lang_col=lang_col,
+    )
     return s.select(
-        "doc_id", "n_bigrams", F.round("avg_logprob", 6).alias("avg_logprob")
+        *s.columns[:-1], F.round("avg_logprob", 6).alias("avg_logprob")
     ).orderBy("doc_id")
+
+
+def txt_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Interpolated KNESER-NEY bigram LM score per document — the
+    published estimator the CCNet LM filter actually uses (KenLM;
+    Kneser & Ney 1995), completing the perplexity-proxy ladder:
+    txt_unigram_logprob (order 0) → txt_bigram_logprob (order 1,
+    λ-interpolated, self-trained) → THIS (order 1, absolute
+    discounting + continuation-probability backoff). Continuation
+    counts are the KN point: a word frequent only inside one
+    collocation gets a low novel-continuation probability that raw
+    frequency interpolation cannot express. One scoring definition
+    (textstats.kn_score_from_types at order 2; the train/score split
+    and the fixture device are _kn_logprob_query's)."""
+    return _kn_logprob_query(spark, sf_dir, 2)
 
 
 def txt_kn3_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1923,141 +1946,35 @@ def txt_kn3_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     showing the estimator's recursion the way KenLM runs it: the
     trigram level discounts raw counts, the bigram level discounts
     MODIFIED (distinct-left-context) counts, the base case is the
-    continuation distribution. Same train/score split (fit on even
-    doc_ids) and the same tok<doc_id> liveness augmentation, so every
-    rung of the two-level backoff ladder fires on the fixture. One
-    scoring definition (textstats.kn_trigram_logprob_scores); docs
-    under 3 tokens have no trigram and are excluded (the augmentation
-    guarantees 3+ tokens for every non-NULL doc, so only NULL text is
-    actually absent here)."""
-    # _spread: the corpus-side gram explode + vocabulary joins +
-    # partial agg are all map-side work on the scan partitioning, and
-    # the sf parquet is ONE split — unspread, the whole scoring chain
-    # ran on one core (kn3 3.47→3.10, kn4 4.30→3.81 s interleaved
-    # A/B at sf0.1; r14 round, the txt_gopher_repetition lesson)
-    d = dedup._spread(read_table(spark, sf_dir, "documents")).select(
-        "doc_id",
-        F.when(
-            F.col("text").isNotNull(),
-            F.concat(
-                F.col("text"), F.lit(" tok"), F.col("doc_id"), F.lit(" kn")
-            ),
-        ).alias("text"),
-    )
-    ref = d.where(F.col("doc_id") % 2 == 0)
-    s = textstats.kn_trigram_logprob_scores(d, ref, "doc_id", "text")
-    return s.select(
-        "doc_id", "n_trigrams", F.round("avg_logprob", 6).alias("avg_logprob")
-    ).orderBy("doc_id")
+    continuation distribution. Same train/score split and liveness
+    device as txt_kn_logprob, so every rung of the two-level backoff
+    ladder fires on the fixture."""
+    return _kn_logprob_query(spark, sf_dir, 3)
 
 
 def txt_kn_lang_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PER-LANGUAGE interpolated Kneser-Ney bigram LM score — the
     CCNet production shape (one KenLM per language) made
-    driver-checkable: the bigram-TYPE table is fit per language on
-    the even doc_id half (textstats.kn_bigram_types(lang_col=...)),
-    every marginal — context totals, continuation counts, the type
-    total B — keys on the language, and each document scores ONLY
-    under its own language's model. The fixture's real ``lang``
-    column routes (deterministic in both engines — no lang-id
-    heuristic in the oracle path), and the tok<doc_id> liveness
-    augmentation fires every backoff rung within every language
-    (per-language models are smaller, so unseen pairs/contexts are
-    even more frequent than in the global txt_kn_logprob).
-
-    Scale shape: the per-language type total becomes an O(languages)
-    broadcast instead of a global 1-row cross join; everything else
-    is the global scorer's linear shape with the language added to
-    each join key. Output: (doc_id, lang, n_bigrams, avg_logprob)."""
-    # _spread: see txt_kn_logprob — the single-split scan serializes
-    # the per-language scoring chain onto one core otherwise
-    d = dedup._spread(read_table(spark, sf_dir, "documents")).select(
-        "doc_id",
-        "lang",
-        F.when(
-            F.col("text").isNotNull(),
-            F.concat(
-                F.col("text"), F.lit(" tok"), F.col("doc_id"), F.lit(" kn")
-            ),
-        ).alias("text"),
-    )
-    ref = d.where(F.col("doc_id") % 2 == 0)
-    # the type table feeds every marginal the scorer derives, and
-    # Spark 4.1.2 does NOT reuse the identical exchanges (verified:
-    # 0 ReusedExchange; each consumer re-ran the reference explode —
-    # the earlier "AQE dedupes these" reading was wrong, the
-    # recompute was hidden by concurrent stages at bench scale), so
-    # it is localCheckpointed — the production posture too, where
-    # the per-language table is the frozen STORED artifact.
-    # a CacheManager persist had measured slower (1.17→2.03 s: cache-manager
-    # materialization serializes what concurrency hid).
-    s = textstats.kn_bigram_score_from_types(
-        d,
-        textstats.kn_bigram_types(ref, "text", lang_col="lang")
-        .transform(staging.stage, "staged"),
-        "doc_id",
-        "text",
-        lang_col="lang",
-    )
-    return s.select(
-        "doc_id",
-        "lang",
-        "n_bigrams",
-        F.round("avg_logprob", 6).alias("avg_logprob"),
-    ).orderBy("doc_id")
+    driver-checkable: the type table is fit per language, every
+    marginal — context totals, continuation counts, the type total B —
+    keys on the language, and B becomes an O(languages) broadcast.
+    Per-language models are smaller, so unseen pairs/contexts are even
+    more frequent than in the global txt_kn_logprob. Output: (doc_id,
+    lang, n_bigrams, avg_logprob)."""
+    return _kn_logprob_query(spark, sf_dir, 2, lang_col="lang")
 
 
 def txt_kn3_lang_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PER-LANGUAGE interpolated Kneser-Ney TRIGRAM LM score — the
     order-2 member of the per-language family (txt_kn_lang_logprob is
     order 1): one KenLM per language with the FULL two-level
-    recursion, every marginal — trigram contexts, the MODIFIED
-    distinct-left-context bigram table, its contexts/continuations,
-    the type total B2 — keyed on the language. The fixture's real
-    ``lang`` column routes and the tok<doc_id> augmentation fires all
-    five backoff rungs within every language (per-language trigram
-    models are the sparsest in the family, so the ladder is livelier
-    than anywhere else). Matches `fit_reference_model(lm="kn3",
+    recursion, every marginal keyed on the language; per-language
+    trigram models are the sparsest in the family, so the ladder is
+    livelier than anywhere else. Matches `fit_reference_model(lm="kn3",
     lang_aware=True)`'s scoring definition exactly — this query is
-    the driver-checkable twin of that production path.
-
-    Scale shape: the global kn3 scorer's linear shape (one corpus
-    trigram explode + five vocabulary joins + per-doc partial agg)
-    with the language in every join key and B2 as an O(languages)
-    broadcast. Output: (doc_id, lang, n_trigrams, avg_logprob)."""
-    # _spread: see txt_kn_logprob — the single-split scan serializes
-    # the per-language scoring chain onto one core otherwise
-    d = dedup._spread(read_table(spark, sf_dir, "documents")).select(
-        "doc_id",
-        "lang",
-        F.when(
-            F.col("text").isNotNull(),
-            F.concat(
-                F.col("text"), F.lit(" tok"), F.col("doc_id"), F.lit(" kn")
-            ),
-        ).alias("text"),
-    )
-    ref = d.where(F.col("doc_id") % 2 == 0)
-    # like the bigram lang query, the type table is localCheckpointed:
-    # Spark 4.1.2 does not reuse the identical exchanges, so unstaged
-    # it re-runs the reference explode once per consuming subtree
-    # (see txt_kn_lang_logprob for the verified account; a CacheManager persist
-    # had measured slower — 1.89→2.68 s — because cache-manager
-    # materialization serializes what concurrent stages hid)
-    s = textstats.kn_trigram_score_from_types(
-        d,
-        textstats.kn_trigram_types(ref, "text", lang_col="lang")
-        .transform(staging.stage, "staged"),
-        "doc_id",
-        "text",
-        lang_col="lang",
-    )
-    return s.select(
-        "doc_id",
-        "lang",
-        "n_trigrams",
-        F.round("avg_logprob", 6).alias("avg_logprob"),
-    ).orderBy("doc_id")
+    the driver-checkable twin of that production path. Output:
+    (doc_id, lang, n_trigrams, avg_logprob)."""
+    return _kn_logprob_query(spark, sf_dir, 3, lang_col="lang")
 
 
 def txt_kn4_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2067,35 +1984,9 @@ def txt_kn4_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     order for the CCNet filter: the 4-gram level discounts raw
     counts and EVERY lower level discounts the next level's MODIFIED
     (distinct-left-context) counts, three levels deep. Same
-    train/score split (fit on even doc_ids) and the same tok<doc_id>
-    liveness augmentation — at order 3 the fixture's ladder is the
-    liveliest in the family (most positions back off at least one
-    level). One scoring definition
-    (textstats.kn_quadgram_logprob_scores); docs under 4 tokens have
-    no 4-gram and are excluded (the augmentation guarantees 4+
-    tokens for every non-NULL doc with 2+ original tokens; only NULL
-    text is actually absent on the fixture)."""
-    # _spread: the corpus-side gram explode + vocabulary joins +
-    # partial agg are all map-side work on the scan partitioning, and
-    # the sf parquet is ONE split — unspread, the whole scoring chain
-    # ran on one core (kn3 3.47→3.10, kn4 4.30→3.81 s interleaved
-    # A/B at sf0.1; r14 round, the txt_gopher_repetition lesson)
-    d = dedup._spread(read_table(spark, sf_dir, "documents")).select(
-        "doc_id",
-        F.when(
-            F.col("text").isNotNull(),
-            F.concat(
-                F.col("text"), F.lit(" tok"), F.col("doc_id"), F.lit(" kn")
-            ),
-        ).alias("text"),
-    )
-    ref = d.where(F.col("doc_id") % 2 == 0)
-    s = textstats.kn_quadgram_logprob_scores(d, ref, "doc_id", "text")
-    return s.select(
-        "doc_id",
-        "n_quadgrams",
-        F.round("avg_logprob", 6).alias("avg_logprob"),
-    ).orderBy("doc_id")
+    train/score split and liveness device as txt_kn_logprob — at
+    order 3 the fixture's ladder is the liveliest in the family."""
+    return _kn_logprob_query(spark, sf_dir, 4)
 
 
 def td_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4261,8 +4152,8 @@ _LANG_GATE_SQL = f"""
 # the 4-gram KN probability ladder, composed bottom-up so each level
 # appears ONCE in source (the expansion inlines P2 four times and P3
 # twice — exactly the nesting the Spark scorer's `when` chain builds);
-# every cast and operation order mirrors kn_quadgram_score_from_types
-# term by term
+# every cast and operation order mirrors kn_score_from_types at order
+# 4, term by term
 _KN4_PC = "CAST(COALESCE(cont.n1c4, 1) AS DOUBLE) / b3"
 _KN4_P2 = f"""CASE WHEN ctx2.c3n IS NOT NULL THEN
                   (GREATEST(CAST(COALESCE(bn2.cn34, 0) - 0.75

@@ -57,10 +57,23 @@ def pytest_collection_modifyitems(config, items):
             matched |= hit
             item.add_marker(skip)
     collected_files = {item.nodeid.split("::")[0] for item in items}
+    # a file named with ::<test> on the command line was collected only
+    # in part, so its other tier entries are not stale
+    root = str(config.rootpath)
+    partial = {
+        os.path.relpath(
+            os.path.join(str(config.invocation_params.dir), a.split("::")[0]),
+            root,
+        )
+        for a in config.args
+        if "::" in a
+    }
     for n in sorted(slow - matched):
         path = n.split("::")[0]
+        if path in partial:
+            continue
         if path in collected_files or not os.path.exists(
-            os.path.join(str(config.rootpath), path)
+            os.path.join(root, path)
         ):
             warnings.warn(
                 pytest.PytestWarning(

@@ -1992,7 +1992,7 @@ def test_frozen_kn_lm_filter(spark, tmp_path):
     reference bigram-type table — and calibrates the LM floor on KN
     scores; curate_batch recomputes the marginals from the STORED
     table and drops strictly-below-floor docs: replays identical,
-    the dropped set matches a direct kn_bigram_score_from_types
+    the dropped set matches a direct kn_score_from_types
     threshold on the same gated frame, a gate-surviving doc the
     model cannot score (under 2 tokens) passes the LM stage through
     (exercised with a min_tokens=1 gate), the unigram table still
@@ -2013,7 +2013,7 @@ def test_frozen_kn_lm_filter(spark, tmp_path):
         fit_reference_model,
     )
     from delta_data_pipelines_spark.operators.textstats import (
-        kn_bigram_score_from_types,
+        kn_score_from_types,
     )
 
     docs = read_table(spark, "/root/testdata/sf0.001", "documents").select(
@@ -2027,7 +2027,7 @@ def test_frozen_kn_lm_filter(spark, tmp_path):
     )
     assert meta["lm"] == "kn"
     assert meta["lm_threshold"] is not None
-    assert model.kn_bigrams.exists() and model.unigram.exists()
+    assert model.kn_types.exists() and model.unigram.exists()
 
     batch = docs.where(F.col("doc_id") % 2 == 1)
     out1 = sorted(r["doc_id"] for r in curate_batch(batch, model).collect())
@@ -2039,8 +2039,8 @@ def test_frozen_kn_lm_filter(spark, tmp_path):
     gated = quality_gate(scrub_stage(batch, "text"), "text")
     below = {
         r["doc_id"]
-        for r in kn_bigram_score_from_types(
-            gated, model.kn_bigrams.read(), "doc_id", "text"
+        for r in kn_score_from_types(
+            gated, model.kn_types.read(), 2, "doc_id", "text"
         )
         .where(F.col("avg_logprob") < F.lit(meta["lm_threshold"]))
         .collect()
@@ -2075,15 +2075,11 @@ def test_frozen_kn_lm_filter(spark, tmp_path):
     # kn3: the trigram artifact freezes and applies with the same
     # drop-list semantics; the dropped set matches the direct
     # stored-table threshold
-    from delta_data_pipelines_spark.operators.textstats import (
-        kn_trigram_score_from_types,
-    )
-
     model3 = FrozenCurationModel(spark, str(tmp_path / "fzkn3"))
     meta3 = fit_reference_model(
         model3, ref, heldout, lm="kn3", drop_fraction=0.2
     )
-    assert meta3["lm"] == "kn3" and model3.kn_trigrams.exists()
+    assert meta3["lm"] == "kn3" and model3.kn_types.exists()
     out3a = sorted(
         r["doc_id"] for r in curate_batch(batch, model3).collect()
     )
@@ -2093,8 +2089,8 @@ def test_frozen_kn_lm_filter(spark, tmp_path):
     assert out3a == out3b and out3a
     below3 = {
         r["doc_id"]
-        for r in kn_trigram_score_from_types(
-            gated, model3.kn_trigrams.read(), "doc_id", "text"
+        for r in kn_score_from_types(
+            gated, model3.kn_types.read(), 3, "doc_id", "text"
         )
         .where(F.col("avg_logprob") < F.lit(meta3["lm_threshold"]))
         .collect()
@@ -2102,17 +2098,13 @@ def test_frozen_kn_lm_filter(spark, tmp_path):
     assert below3 and not (set(out3a) & below3)
 
     # kn4: the 4-gram artifact freezes and applies with the same
-    # drop-list semantics through the shared _kn_dispatch seam
-    from delta_data_pipelines_spark.operators.textstats import (
-        kn_quadgram_score_from_types,
-    )
-
+    # drop-list semantics through the same order-n scorer
     model4 = FrozenCurationModel(spark, str(tmp_path / "fzkn4"))
     meta4 = fit_reference_model(
         model4, ref, heldout, lm="kn4", drop_fraction=0.2
     )
-    assert meta4["lm"] == "kn4" and model4.kn_quadgrams.exists()
-    assert "kn_quadgrams_version" in meta4
+    assert meta4["lm"] == "kn4" and model4.kn_types.exists()
+    assert "kn_types_version" in meta4
     out4a = sorted(
         r["doc_id"] for r in curate_batch(batch, model4).collect()
     )
@@ -2122,8 +2114,8 @@ def test_frozen_kn_lm_filter(spark, tmp_path):
     assert out4a == out4b and out4a
     below4 = {
         r["doc_id"]
-        for r in kn_quadgram_score_from_types(
-            gated, model4.kn_quadgrams.read(), "doc_id", "text"
+        for r in kn_score_from_types(
+            gated, model4.kn_types.read(), 4, "doc_id", "text"
         )
         .where(F.col("avg_logprob") < F.lit(meta4["lm_threshold"]))
         .collect()
@@ -2183,7 +2175,7 @@ def test_frozen_lang_aware_kn_lm_filter(spark, tmp_path):
     )
     assert meta["lm"] == "kn" and meta["lang_aware"] is True
     assert set(meta["lang_thresholds"]) == {"en", "es"}
-    assert set(model.kn_bigrams.read().columns) == {
+    assert set(model.kn_types.read().columns) == {
         "_kn_lang", "_w1", "_w2", "_cb"
     }
 
@@ -2249,8 +2241,8 @@ def test_frozen_lang_aware_kn3_lm_filter(spark, tmp_path):
     )
     assert meta["lm"] == "kn3" and meta["lang_aware"] is True
     assert set(meta["lang_thresholds"]) == {"en", "es"}
-    assert "kn_trigrams_version" in meta
-    assert set(model.kn_trigrams.read().columns) == {
+    assert "kn_types_version" in meta
+    assert set(model.kn_types.read().columns) == {
         "_kn_lang", "_w1", "_w2", "_w3", "_cb"
     }
 
@@ -2373,7 +2365,7 @@ def test_frozen_kn_newline_normalization(spark, tmp_path):
         fit_reference_model,
     )
     from delta_data_pipelines_spark.operators.textstats import (
-        kn_bigram_score_from_types,
+        kn_score_from_types,
     )
 
     stops = ["the", "of", "and", "to", "a", "in", "is", "it"]
@@ -2403,7 +2395,7 @@ def test_frozen_kn_newline_normalization(spark, tmp_path):
     )
     assert meta["lm_threshold"] is not None
     fused = (
-        model.kn_bigrams.read()
+        model.kn_types.read()
         .where(
             F.col("_w1").contains("\n") | F.col("_w2").contains("\n")
         )
@@ -2420,30 +2412,24 @@ def test_frozen_kn_newline_normalization(spark, tmp_path):
     )
     scores = {
         r["doc_id"]: r["avg_logprob"]
-        for r in kn_bigram_score_from_types(
+        for r in kn_score_from_types(
             _kn_text_view(pair, "text", "doc_id"),
-            model.kn_bigrams.read(),
+            model.kn_types.read(),
+            2,
             "doc_id",
             "text",
         ).collect()
     }
     assert scores[1] == scores[2]
 
-    # frozen-meta contract: the fit records that it normalized, and a
-    # PRE-normalization artifact (flag absent/false) must replay
-    # UN-normalized — curate_batch only normalizes when the model's
-    # own fit did, so a code upgrade can never shift a frozen model's
-    # keep set. With the flag stripped, the newline variant's fused
-    # tokens are all-unseen bigrams and fall under the floor, while
-    # the space variant (all bigrams seen) stays above it.
+    # curate_batch scores through the same normalized view: with a
+    # newline INSIDE each (stop, word) pair, an unnormalized
+    # space-split would fuse the pair into one token and leave 31
+    # all-unseen bigrams under the floor
     from delta_data_pipelines_spark.jobs.incremental_curate import (
         curate_batch,
     )
 
-    assert model.meta()["kn_text_normalized"] is True
-    # newline INSIDE each (stop, word) pair: unnormalized space-split
-    # fuses the pair into one token, leaving 31 all-unseen bigrams
-    # (a full replace would yield ONE token → no bigram → passthrough)
     text_nl = " ".join(f"{stops[j % 8]}\nw1_{j}" for j in range(32))
     pair_batch = spark.createDataFrame(
         [(9101, text_sp), (9102, text_nl)],
@@ -2453,14 +2439,6 @@ def test_frozen_kn_newline_normalization(spark, tmp_path):
         r["doc_id"] for r in curate_batch(pair_batch, model).collect()
     }
     assert kept_norm == {9101, 9102}  # normalized: identical scores
-    legacy = model.meta()
-    legacy["kn_text_normalized"] = False
-    model._write_meta(legacy)
-    kept_legacy = {
-        r["doc_id"] for r in curate_batch(pair_batch, model).collect()
-    }
-    assert 9101 in kept_legacy
-    assert 9102 not in kept_legacy  # fused tokens, scored as fit them
 
 
 def test_frozen_kn_empty_stored_table_raises(spark, tmp_path):
@@ -2485,10 +2463,10 @@ def test_frozen_kn_empty_stored_table_raises(spark, tmp_path):
     fit_reference_model(model, ref, heldout, lm="kn", drop_fraction=0.2)
     # corrupt the artifact: overwrite with a 0-row table of the same
     # schema (a failed upstream write's shape)
-    empty = model.kn_bigrams.read().limit(0)
-    model.kn_bigrams.overwrite(empty)
+    empty = model.kn_types.read().limit(0)
+    model.kn_types.overwrite(empty)
     meta = model.meta()
-    meta["kn_bigrams_version"] = None  # read latest (the empty one)
+    meta["kn_types_version"] = None  # read latest (the empty one)
     model._write_meta(meta)
     batch = docs.where(F.col("doc_id") % 2 == 1)
     with _pytest.raises(ValueError, match="empty"):

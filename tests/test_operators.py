@@ -3369,8 +3369,8 @@ def test_kn_bigram_logprob_hand_computed(spark):
     )
     out = {
         r["doc_id"]: (r["n_bigrams"], r["avg_logprob"])
-        for r in textstats.kn_bigram_logprob_scores(
-            docs, ref, "doc_id", "text"
+        for r in textstats.kn_logprob_scores(
+            docs, ref, 2, "doc_id", "text"
         ).collect()
     }
     # model tables from ref: bf {(a,b):2,(b,a):1,(b,c):2,(c,d):1}, B=4
@@ -3415,8 +3415,8 @@ def test_kn_trigram_logprob_hand_computed(spark):
     )
     out = {
         r["doc_id"]: (r["n_trigrams"], r["avg_logprob"])
-        for r in textstats.kn_trigram_logprob_scores(
-            docs, ref, "doc_id", "text"
+        for r in textstats.kn_logprob_scores(
+            docs, ref, 3, "doc_id", "text"
         ).collect()
     }
 
@@ -3470,8 +3470,8 @@ def test_kn_quadgram_hand_computed(spark):
     )
     out = {
         r["doc_id"]: (r["n_quadgrams"], r["avg_logprob"])
-        for r in textstats.kn_quadgram_logprob_scores(
-            docs, ref, "doc_id", "text"
+        for r in textstats.kn_logprob_scores(
+            docs, ref, 4, "doc_id", "text"
         ).collect()
     }
 
@@ -3515,3 +3515,7 @@ def test_kn_quadgram_hand_computed(spark):
 
     # exclusions: under 4 tokens / NULL text -> absent
     assert 5 not in out and 7 not in out
+
+    # orders 2-4 only: a 5-gram model is refused, not silently fit
+    with pytest.raises(ValueError, match="KN order"):
+        textstats.kn_types(ref, 5)

@@ -967,9 +967,7 @@ def test_kn_bigram_matches_python_model(spark, texts):
     import math
     from collections import Counter
 
-    from delta_data_pipelines_spark.operators.textstats import (
-        kn_bigram_logprob_scores,
-    )
+    from delta_data_pipelines_spark.operators.textstats import kn_logprob_scores
 
     texts = ["a b c"] + texts  # pinned at index 0 (even -> always in ref)
     rows = [(i, t) for i, t in enumerate(texts)]
@@ -1008,7 +1006,7 @@ def test_kn_bigram_matches_python_model(spark, texts):
 
     got = {
         r["doc_id"]: (r["n_bigrams"], r["avg_logprob"])
-        for r in kn_bigram_logprob_scores(docs, ref, "doc_id", "text").collect()
+        for r in kn_logprob_scores(docs, ref, 2, "doc_id", "text").collect()
     }
     assert set(got) == set(expect)
     for i, (n, lp) in expect.items():
@@ -1032,9 +1030,7 @@ def test_kn_trigram_matches_python_model(spark, texts):
     import math
     from collections import Counter
 
-    from delta_data_pipelines_spark.operators.textstats import (
-        kn_trigram_logprob_scores,
-    )
+    from delta_data_pipelines_spark.operators.textstats import kn_logprob_scores
 
     texts = ["a b c d"] + texts  # pinned at index 0 -> ref never empty
     rows = [(i, t) for i, t in enumerate(texts)]
@@ -1086,7 +1082,7 @@ def test_kn_trigram_matches_python_model(spark, texts):
 
     got = {
         r["doc_id"]: (r["n_trigrams"], r["avg_logprob"])
-        for r in kn_trigram_logprob_scores(docs, ref, "doc_id", "text").collect()
+        for r in kn_logprob_scores(docs, ref, 3, "doc_id", "text").collect()
     }
     assert set(got) == set(expect)
     for i, (n, lp) in expect.items():
@@ -1112,9 +1108,7 @@ def test_kn_quadgram_matches_python_model(spark, texts):
     import math
     from collections import Counter
 
-    from delta_data_pipelines_spark.operators.textstats import (
-        kn_quadgram_logprob_scores,
-    )
+    from delta_data_pipelines_spark.operators.textstats import kn_logprob_scores
 
     texts = ["a b c d a"] + texts  # pinned at index 0 -> ref never empty
     rows = [(i, t) for i, t in enumerate(texts)]
@@ -1181,9 +1175,7 @@ def test_kn_quadgram_matches_python_model(spark, texts):
 
     got = {
         r["doc_id"]: (r["n_quadgrams"], r["avg_logprob"])
-        for r in kn_quadgram_logprob_scores(
-            docs, ref, "doc_id", "text"
-        ).collect()
+        for r in kn_logprob_scores(docs, ref, 4, "doc_id", "text").collect()
     }
     assert set(got) == set(expect)
     for i, (n, lp) in expect.items():
